@@ -7,6 +7,12 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All real logic lives in ``solana_etl_pipeline_spark``; this module is
 just the adapter over its query registry.
+
+The session belongs to the caller, so the engine's shared posture
+(``apply_runtime_confs``) leaves its shuffle-partition count alone.
+The wrappers set that count themselves, to the session's
+``defaultParallelism``: one partition per core, the same rule
+``build_session`` uses (32 at ``local[32]``).
 """
 
 from __future__ import annotations
@@ -21,9 +27,17 @@ from solana_etl_pipeline_spark.session import apply_runtime_confs
 _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
+def _prepare(spark: SparkSession) -> None:
+    apply_runtime_confs(spark)
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(spark.sparkContext.defaultParallelism),
+    )
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    apply_runtime_confs(spark)
+    _prepare(spark)
     return QUERIES["risk_scores_topk"].spark(spark, _SMOKE_SF_DIR)
 
 
@@ -32,7 +46,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            apply_runtime_confs(spark)
+            _prepare(spark)
             return fn(spark, sf_dir)
 
         return run

@@ -18,7 +18,6 @@ behavior needs multi-batch orchestration no single SQL string models.
 from __future__ import annotations
 
 import atexit
-import contextlib
 import shutil
 import tempfile
 
@@ -76,28 +75,6 @@ def _landing_dir(sf_dir: str, key: str, write) -> str:
     return _LANDING_CACHE[k]
 
 
-@contextlib.contextmanager
-def _state_partitions(spark: SparkSession, n: int):
-    """Pin the stateful operators' partition count for a stream start.
-
-    A stateful stage instantiates one state store per shuffle
-    partition, and the checkpoint pins that count for the stream's
-    lifetime — so it should be SIZED TO THE STATE VOLUME, not
-    inherited from the generic shuffle default (the per-store
-    open/commit overhead dominates a small-state drain: measured
-    4.3 s → 2.0 s at sf0.1 going 32 → 8). At production scale you'd
-    size it up-front to keyspace × state row size; these single-batch
-    drains carry ~100 k dedup keys. The conf is restored afterwards —
-    it only matters at stream start, where the checkpoint captures it.
-    """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Land → stream → dedup → tumbling window, drained availableNow."""
     ev = load_table(spark, sf_dir, "events")
@@ -130,12 +107,11 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    with _state_partitions(spark, 8):
-        table = run_available_now(
-            windowed,
-            checkpoint_dir=f"{work}/checkpoint",
-            output_mode="complete",
-        )
+    table = run_available_now(
+        windowed,
+        checkpoint_dir=f"{work}/checkpoint",
+        output_mode="complete",
+    )
     return spark.table(table)
 
 
@@ -155,12 +131,11 @@ def streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = landing_stream(spark, landing, EVENTS, max_files_per_trigger=None)
     windowed = sliding_window_counts(stream, size="1 hour", slide="30 minutes")
-    with _state_partitions(spark, 8):
-        table = run_available_now(
-            windowed,
-            checkpoint_dir=f"{work}/checkpoint",
-            output_mode="complete",
-        )
+    table = run_available_now(
+        windowed,
+        checkpoint_dir=f"{work}/checkpoint",
+        output_mode="complete",
+    )
     return spark.table(table)
 
 
@@ -186,10 +161,9 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     sess = session_window_counts(
         stream, key="user_id", ts_col="ts", gap="30 minutes"
     )
-    with _state_partitions(spark, 8):
-        table = run_available_now(
-            sess, checkpoint_dir=f"{work}/checkpoint", output_mode="complete"
-        )
+    table = run_available_now(
+        sess, checkpoint_dir=f"{work}/checkpoint", output_mode="complete"
+    )
     return spark.table(table)
 
 
@@ -252,12 +226,11 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # unix_timestamp would disagree with exact subtraction)
         (F.unix_millis("p_ts") - F.unix_millis("ts")).alias("millis_after"),
     )
-    with _state_partitions(spark, 8):
-        table = run_available_now(
-            joined,
-            checkpoint_dir=f"{work}/checkpoint",
-            output_mode="append",
-        )
+    table = run_available_now(
+        joined,
+        checkpoint_dir=f"{work}/checkpoint",
+        output_mode="append",
+    )
     return spark.table(table)
 
 
@@ -368,12 +341,11 @@ def streaming_interval_join_outer(
             ),
         )
     )
-    with _state_partitions(spark, 8):
-        table = run_available_now(
-            joined,
-            checkpoint_dir=f"{work}/checkpoint",
-            output_mode="append",
-        )
+    table = run_available_now(
+        joined,
+        checkpoint_dir=f"{work}/checkpoint",
+        output_mode="append",
+    )
     return spark.table(table).filter(F.col("user_id") >= 0)
 
 

@@ -12,6 +12,14 @@ settings:
 - UTC session timezone: timestamps are stored/compared as UTC instants;
   PST rendering (reference ``clean_data.py:27-34``) is a display-edge
   concern handled by ``functions.timestamps``.
+
+Partition counts are not part of that shared posture. The session's
+shuffle-partition count is set where the session is built: the
+``build_session`` argument, else the machine's core count (the
+reference sizes its worker pool from the CPU count). A session the
+engine did not build keeps its owner's count; ``apply_runtime_confs``
+never touches it. Stateful stream starts size their own state
+partitions (``streaming.ingest.state_partitions``).
 """
 
 from __future__ import annotations
@@ -20,11 +28,15 @@ import functools
 import os
 import re
 import subprocess
+import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs applied to *any* session the engine touches
 # (including a driver-owned session handed to `__spark_entry__.queries`).
+# Only semantics and planner posture live here; sizing (the shuffle
+# partition count) belongs to whoever owns the session.
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.ansi.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
@@ -53,10 +65,6 @@ RUNTIME_CONFS: dict[str, str] = {
     # this back to true and force SHJ per-join via SHUFFLE_HASH hints
     # where measured.
     "spark.sql.join.preferSortMergeJoin": "false",
-    # Local/driver-session sizing: 32 shuffle partitions matches the
-    # local[32] core budget (AQE coalesces further). On a cluster,
-    # override to ~2-3x total executor cores at session build time.
-    "spark.sql.shuffle.partitions": "32",
 }
 
 
@@ -65,6 +73,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
 
     Safe and idempotent; used on sessions we did not build (driver
     contract) so correctness-critical semantics (ANSI off, UTC) hold.
+    The session's shuffle-partition count is left as its owner set it.
     """
     for key, value in RUNTIME_CONFS.items():
         try:
@@ -233,21 +242,37 @@ def build_session(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``)
     for test/bench runs; on a real cluster, leave it unset and let
-    spark-submit own deployment. ``shuffle_partitions`` defaults to the
-    local core count for small scale factors — at 100 TB you would size
-    this to ~2-3x total executor cores (AQE coalesces the excess).
+    spark-submit own deployment.
+
+    ``shuffle_partitions`` sets ``spark.sql.shuffle.partitions``. Left
+    unset, it is the core count: ``$SPARK_GRAFT_CPUS``, or
+    ``os.cpu_count()`` when that is unset or ``*``. At 100 TB you
+    would pass ~2-3x total executor cores (AQE coalesces the excess).
+    The count applies to an existing session too, as do the other
+    runtime confs.
+
+    Static confs (JVM options and heap size, the codegen cache size,
+    ``extra_confs`` such as the warehouse dir) only take effect when
+    this call starts the SparkContext. When one is already running and
+    its value differs from the one asked for, a ``RuntimeWarning``
+    names the conf. ``$SPARK_GRAFT_CODEGEN_CACHE`` must be an integer;
+    anything else raises ``ValueError``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or (32 if cpus == "*" else int(cpus))),
-        )
+    cores = (os.cpu_count() or 1) if cpus == "*" else int(cpus)
+    codegen_cache = os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000")
+    try:
+        codegen_cache_entries = int(codegen_cache)
+    except ValueError:
+        raise ValueError(
+            "SPARK_GRAFT_CODEGEN_CACHE must be an integer entry count, "
+            f"got {codegen_cache!r}"
+        ) from None
+    confs = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or cores),
         # Local-mode niceties; harmless on a cluster.
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         # G1 + JNI-critical (Arrow) interplay: under heavy concurrent
         # Arrow traffic the GCLocker can starve multi-MB allocations
         # into retry failure, and at the default 4 MB G1 region size
@@ -264,20 +289,16 @@ def build_session(
         # later extra_confs entry for the same key — callers carrying
         # their own spark-defaults extraJavaOptions must merge by
         # hand.
-        .config(
-            "spark.driver.extraJavaOptions",
+        "spark.driver.extraJavaOptions":
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", gc_java_opts()),
-        )
         # Mirror into executor JVMs: in local mode executors live in
         # the driver JVM and this is inert, but on a real cluster the
         # Arrow/GCLocker allocation pressure happens in EXECUTOR JVMs
         # — without the mirror the OOM-class fix would silently not
         # apply where it matters (ADVICE r11).
-        .config(
-            "spark.executor.extraJavaOptions",
+        "spark.executor.extraJavaOptions":
             os.environ.get("SPARK_EXECUTOR_JAVA_OPTS", gc_java_opts()),
-        )
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
+        "spark.sql.files.maxPartitionBytes": "134217728",
         # r17 (guide §1 "empirical loop" + VERDICT r16 item 5): Spark's
         # whole-stage-codegen class cache is a STATIC conf defaulting
         # to 100 entries; a session serving this engine's 173-query
@@ -293,14 +314,42 @@ def build_session(
         # objects (~100 KB/unit worst case); size to the distinct
         # query count × ~10 units. Overridable for small-heap
         # deployments via SPARK_GRAFT_CODEGEN_CACHE.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
-        )
+        "spark.sql.codegen.cache.maxEntries": str(codegen_cache_entries),
+        **RUNTIME_CONFS,
+        **(extra_confs or {}),
+    }
+    builder = SparkSession.builder.appName(app_name).master(
+        master or f"local[{cpus}]"
     )
-    for key, value in RUNTIME_CONFS.items():
+    for key, value in confs.items():
         builder = builder.config(key, value)
-    for key, value in (extra_confs or {}).items():
-        builder = builder.config(key, value)
+    live_context = SparkContext._active_spark_context is not None
     spark = builder.getOrCreate()
+    if live_context:
+        _warn_unapplied_static_confs(spark, confs)
     return apply_runtime_confs(spark)
+
+
+def _warn_unapplied_static_confs(
+    spark: SparkSession, confs: dict[str, str]
+) -> None:
+    """``getOrCreate`` on a live SparkContext applies only runtime
+    confs; a static one keeps the value the context was started with.
+    Warn for each static conf in ``confs`` that differs from it."""
+    started_with = spark.sparkContext.getConf()
+    for key, value in confs.items():
+        if spark.conf.isModifiable(key):
+            continue
+        live = started_with.get(key)
+        # Spark qualifies paths with a scheme ("file:/...") and
+        # prepends its own flags to the JVM options
+        if live is not None and (
+            live == value or live.endswith((f":{value}", f" {value}"))
+        ):
+            continue
+        warnings.warn(
+            f"{key}={value!r} not applied: the live session has {live!r} "
+            "and the conf is static",
+            RuntimeWarning,
+            stacklevel=3,
+        )

@@ -26,10 +26,12 @@ the state store, so throughput scales with the cluster, not the driver.
 
 from __future__ import annotations
 
+import contextlib
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 
@@ -313,6 +315,40 @@ def stateful_running_totals_tws(stream: DataFrame) -> DataFrame:
     )
 
 
+#: Cap on the state partitions of a stream this module starts. A
+#: stateful stage opens and commits one state store per shuffle
+#: partition on every micro-batch, and the checkpoint fixes that count
+#: for the query's lifetime, so small-state drains pay for every extra
+#: partition in fixed per-batch cost: the registry's single-batch
+#: drains went from 4.3 s to 2.0 s at sf0.1 going from 32 partitions
+#: to 8.
+MAX_STATE_PARTITIONS = 8
+
+
+@contextlib.contextmanager
+def state_partitions(spark: SparkSession):
+    """Size the state partitions of queries started inside the block
+    to ``min(defaultParallelism, MAX_STATE_PARTITIONS)``.
+
+    The shuffle-partition count is read when a streaming query starts
+    and written to its checkpoint; the session's previous value is
+    restored on exit. A query restarted from an existing checkpoint
+    keeps the checkpoint's count whatever is set here. A stream whose
+    state outgrows a few partitions is started outside these helpers,
+    under a count sized to its keyspace.
+    """
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(
+        key,
+        str(min(spark.sparkContext.defaultParallelism, MAX_STATE_PARTITIONS)),
+    )
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 def _await_drain(query, timeout_sec: int) -> None:
     """awaitTermination(timeout) returns False WITHOUT stopping the
     query when the drain outruns the timeout — callers would then read
@@ -346,14 +382,15 @@ def run_available_now(
     (T5); this helper is for single-shot in-memory assertions only.
     """
     name = query_name or f"q_{uuid.uuid4().hex[:12]}"
-    query = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    with state_partitions(result.sparkSession):
+        query = (
+            result.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
     _await_drain(query, timeout_sec)
     return name
 
@@ -370,12 +407,13 @@ def foreach_batch_refresh(
     with exactly-once replay protection from the checkpoint (a retried
     batch re-invokes refresh with the same batch_id — make it
     idempotent on that id)."""
-    query = (
-        stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    with state_partitions(stream.sparkSession):
+        query = (
+            stream.writeStream.foreachBatch(refresh)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
     _await_drain(query, timeout_sec)
 
 
@@ -398,20 +436,23 @@ def run_available_now_to_parquet(
     output_dir: str,
     checkpoint_dir: str,
     timeout_sec: int = 300,
-) -> None:
-    """Drain to a parquet sink (append mode) with a checkpoint.
+) -> StreamingQuery:
+    """Drain to a parquet sink (append mode) with a checkpoint and
+    return the terminated query (its ``recentProgress`` stays readable).
 
     Unlike the memory sink, the file sink is fault-tolerant: restarting
     with the same checkpoint resumes from committed offsets (T5) — the
     harness for idempotence/restart tests and the real bronze→silver
     landing pattern.
     """
-    query = (
-        result.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    with state_partitions(result.sparkSession):
+        query = (
+            result.writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", output_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
     _await_drain(query, timeout_sec)
+    return query

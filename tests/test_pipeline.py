@@ -325,6 +325,7 @@ def test_full_pipeline_soak(spark, tmp_path):
     from solana_etl_pipeline_spark.serving import Dashboard
     from solana_etl_pipeline_spark.streaming.ingest import (
         deduplicated_within_watermark,
+        state_partitions,
     )
     from tests.test_live_socket import _ingest, _msg
 
@@ -334,7 +335,6 @@ def test_full_pipeline_soak(spark, tmp_path):
     silver = str(tmp_path / "silver")
     os.makedirs(bronze)
 
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         # stage A: landing text -> bronze parquet (raw preserved)
         q_bronze = (
@@ -359,7 +359,7 @@ def test_full_pipeline_soak(spark, tmp_path):
             normalize_websocket_messages(raw, json_col="value")
             .withColumn("ingest_ts", F.current_timestamp())
         )
-        q_silver = (
+        silver_writer = (
             deduplicated_within_watermark(
                 silver_stream,
                 keys=["mint", "signature"],
@@ -377,8 +377,9 @@ def test_full_pipeline_soak(spark, tmp_path):
             .option("path", silver)
             .option("checkpointLocation", str(tmp_path / "ckptB"))
             .trigger(processingTime="500 milliseconds")
-            .start()
         )
+        with state_partitions(spark):
+            q_silver = silver_writer.start()
 
         def silver_mints() -> set:
             try:
@@ -462,7 +463,6 @@ def test_full_pipeline_soak(spark, tmp_path):
     finally:
         for q in spark.streams.active:
             q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
 
 
 def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
@@ -498,6 +498,7 @@ def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
     from solana_etl_pipeline_spark.streaming.ingest import (
         deduplicated,
         deduplicated_within_watermark,
+        state_partitions,
     )
     from tests.test_live_socket import _msg
 
@@ -550,15 +551,16 @@ def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
 
     def drain(dedup_fn, name: str):
         out = str(tmp_path / f"out_{name}")
-        q = (
-            stream(dedup_fn)
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
+        with state_partitions(spark):
+            q = (
+                stream(dedup_fn)
+                .writeStream.format("parquet")
+                .outputMode("append")
+                .option("path", out)
+                .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+                .trigger(availableNow=True)
+                .start()
+            )
         if not q.awaitTermination(300):
             q.stop()
             raise AssertionError(f"drain({name}) exceeded 300s")
@@ -569,7 +571,6 @@ def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
         ]
         return spark.read.parquet(out), ops
 
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         fixed, ops = drain(deduplicated_within_watermark, "fix")
         per_mint = {
@@ -615,7 +616,6 @@ def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
     finally:
         for q in spark.streams.active:
             q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
 
 
 def test_write_silver_dedup_against_existing(spark, tmp_path):

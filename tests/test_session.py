@@ -4,7 +4,26 @@ pinning) — an unrecognized -XX option aborts JVM startup, so the
 default driver/executor opts must gate it on the probed java major
 version (ADVICE r11)."""
 
+import contextlib
+import warnings
+
+import pytest
+
 from solana_etl_pipeline_spark import session
+
+_PARTITIONS = "spark.sql.shuffle.partitions"
+_CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+
+
+@contextlib.contextmanager
+def _session_partitions(spark, n: str):
+    """Set the shared session's partition count for one test only."""
+    old = spark.conf.get(_PARTITIONS)
+    spark.conf.set(_PARTITIONS, n)
+    try:
+        yield
+    finally:
+        spark.conf.set(_PARTITIONS, old)
 
 
 def test_gclocker_flag_present_through_jdk21(monkeypatch):
@@ -76,3 +95,63 @@ def test_rocksdb_confs_snapshot_cadence():
         "minDeltasForSnapshot" in k
         for k in session.rocksdb_state_store_confs()
     )
+
+
+def test_session_reports_the_partition_count_it_asked_for(spark):
+    # conftest builds its session with shuffle_partitions=4
+    assert spark.conf.get(_PARTITIONS) == "4"
+    assert _PARTITIONS not in session.RUNTIME_CONFS
+
+
+def test_apply_runtime_confs_keeps_the_owners_partition_count(spark):
+    with _session_partitions(spark, "7"):
+        session.apply_runtime_confs(spark)
+        assert spark.conf.get(_PARTITIONS) == "7"
+
+
+def test_spark_entry_wrappers_size_partitions_to_default_parallelism(
+    spark, sf_dir
+):
+    import __spark_entry__
+
+    with _session_partitions(spark, "7"):
+        __spark_entry__.queries()["events_hourly_rollup"](spark, sf_dir)
+        assert spark.conf.get(_PARTITIONS) == str(
+            spark.sparkContext.defaultParallelism
+        )
+
+
+def test_static_conf_on_live_session_warns(spark):
+    partitions = int(spark.conf.get(_PARTITIONS))
+    live = spark.conf.get(_CODEGEN_CACHE)
+    asked = str(int(live) + 1)
+    with pytest.warns(RuntimeWarning, match=_CODEGEN_CACHE):
+        same = session.build_session(
+            master="local[4]",
+            shuffle_partitions=partitions,
+            extra_confs={_CODEGEN_CACHE: asked},
+        )
+    assert same is spark
+    assert spark.conf.get(_CODEGEN_CACHE) == live
+
+
+def test_matching_static_confs_on_live_session_do_not_warn(spark):
+    # the JVM options and the warehouse dir come back rewritten by
+    # Spark (flags prepended, "file:" scheme added) and still match
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    assert warehouse.startswith("file:")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        session.build_session(
+            master="local[4]",
+            shuffle_partitions=int(spark.conf.get(_PARTITIONS)),
+            extra_confs={
+                "spark.sql.warehouse.dir": warehouse.removeprefix("file:"),
+            },
+        )
+
+
+def test_codegen_cache_env_must_be_an_integer(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", "5k")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CODEGEN_CACHE"):
+        session.build_session()

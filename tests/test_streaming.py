@@ -24,6 +24,7 @@ from solana_etl_pipeline_spark.streaming.ingest import (
     sliding_window_counts,
     stateful_running_totals,
 )
+from tests.test_session import _session_partitions
 
 
 def _write_landing_file(path: str, rows: list[dict], mtime: float) -> None:
@@ -161,6 +162,105 @@ def test_deduplicated_within_watermark_drops_cross_batch_retry(spark, tmp_path):
     assert sorted(
         r.event_id for r in spark.read.parquet(out2).collect()
     ) == [7, 7, 8]
+
+
+def _silver_dedup_stream(spark, landing: str):
+    """Websocket landing text → normalized rows deduplicated on
+    (mint, signature), the silver write chain's dedup stage."""
+    from solana_etl_pipeline_spark.pipelines.normalize import (
+        normalize_websocket_messages,
+    )
+    from solana_etl_pipeline_spark.streaming.ingest import (
+        deduplicated_within_watermark,
+    )
+
+    raw = spark.readStream.option("maxFilesPerTrigger", 1).text(landing)
+    rows = normalize_websocket_messages(raw, json_col="value").withColumn(
+        "event_time", F.lit("2024-01-01 00:00:00").cast("timestamp")
+    )
+    return deduplicated_within_watermark(
+        rows, ["mint", "signature"], ts_col="event_time"
+    ).drop("event_time")
+
+
+def _land_messages(landing, name: str, msgs: list[dict], mtime: float) -> None:
+    path = landing / f"{name}.txt"
+    path.write_text("".join(json.dumps(m) + "\n" for m in msgs))
+    os.utime(path, (mtime, mtime))
+
+
+def _state_partition_counts(query) -> set[int]:
+    return {
+        op["numShufflePartitions"]
+        for p in query.recentProgress
+        for op in p["stateOperators"]
+    }
+
+
+def test_drain_helper_sizes_state_stores(spark, tmp_path):
+    """A stateful stream started by the package gets
+    min(defaultParallelism, MAX_STATE_PARTITIONS) state partitions,
+    and the session's own count is back afterwards."""
+    from solana_etl_pipeline_spark.streaming.ingest import (
+        MAX_STATE_PARTITIONS,
+    )
+    from tests.test_live_socket import _msg
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _land_messages(landing, "a", [_msg(i) for i in range(3)], time.time())
+    with _session_partitions(spark, "7"):
+        query = run_available_now_to_parquet(
+            _silver_dedup_stream(spark, str(landing)),
+            str(tmp_path / "out"),
+            str(tmp_path / "ckpt"),
+        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    assert _state_partition_counts(query) == {
+        min(spark.sparkContext.defaultParallelism, MAX_STATE_PARTITIONS)
+    }
+
+
+def test_checkpoint_written_under_32_partitions_restarts(spark, tmp_path):
+    """Checkpoints from versions that pinned 32 shuffle partitions
+    restart under the sized default: Spark keeps the checkpoint's 32
+    state partitions, and redeliveries across the restart are still
+    dropped — no (mint, signature) row lost or duplicated."""
+    from tests.test_live_socket import _msg
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    out, ckpt = str(tmp_path / "silver"), str(tmp_path / "ckpt")
+    now = time.time()
+    msgs = [_msg(i) for i in range(9)]
+    _land_messages(landing, "a", msgs[0:4], now - 30)
+    _land_messages(landing, "b", msgs[2:6], now - 20)
+
+    with _session_partitions(spark, "32"):
+        first = (
+            _silver_dedup_stream(spark, str(landing))
+            .writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+    assert first.awaitTermination(300)
+    assert _state_partition_counts(first) == {32}
+
+    # redeliveries of both earlier files, a repeat within one file,
+    # and new messages
+    _land_messages(landing, "c", msgs[0:2] + msgs[6:8] + [msgs[6]], now - 10)
+    _land_messages(landing, "d", msgs[4:6] + msgs[8:9], now)
+    restarted = run_available_now_to_parquet(
+        _silver_dedup_stream(spark, str(landing)), out, ckpt
+    )
+    assert _state_partition_counts(restarted) == {32}
+
+    rows = spark.read.parquet(out).select("mint", "signature").collect()
+    assert len(rows) == len(set(rows))
+    assert sorted(r.mint for r in rows) == sorted(m["mint"] for m in msgs)
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):

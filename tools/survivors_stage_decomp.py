@@ -2,9 +2,9 @@
 
 The r11 clean-window re-pin (COVERAGE convention 7) measured the full
 pipeline at x8.44 wall for x5 data (2 M -> 10 M docs) while substring
-dedup stayed sublinear, and the partition ABA
-(`tools/survivors_partition_ab.py`) ruled OUT shuffle-partition count
-(32 -> 256 is ~6% SLOWER; the 32 default is right on this box). This
+dedup stayed sublinear, and the partition ABA recorded in COVERAGE.md
+round 11 ruled OUT shuffle-partition count (32 -> 256 -> 32:
+680.5 / 723.4 / 683.7 s, so 256 is ~6% SLOWER at 10 M docs). This
 harness times each pipeline stage separately at both sizes — same
 session, materialization barriers between stages, intermediates
 persisted so later stages don't recompute earlier ones — to localize
