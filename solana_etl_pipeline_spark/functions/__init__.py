@@ -6,7 +6,6 @@ WholeStageCodegen at 100 TB.
 """
 
 from solana_etl_pipeline_spark.functions.banding import risk_band
-from solana_etl_pipeline_spark.functions.coercion import coerce_double, coerce_long
 from solana_etl_pipeline_spark.functions.jsonf import json_str
 from solana_etl_pipeline_spark.functions.strings import (
     basename,
@@ -23,8 +22,6 @@ from solana_etl_pipeline_spark.functions.timestamps import (
 
 __all__ = [
     "basename",
-    "coerce_double",
-    "coerce_long",
     "epoch_to_zoned_string",
     "format_ts",
     "is_timestamp_prefixed",

@@ -97,12 +97,12 @@ def pagerank(
     # ``und`` first restores single execution AND keeps the edge set
     # unshuffled: degree aggregates over the materialized partitions
     # and broadcast-joins back map-side. Interleaved 5-rep A/B at
-    # cpus=32 (tools/pagerank_ab.py, tools/logs/r17_pagerank_ab.out):
-    # r15 shuffle min 2.64 / med 3.00, r16 broadcast min 2.06 / med
-    # 2.65, this form min 2.07 / med 2.52 — locally equal to r16's,
-    # and at 100 TB it removes a full second scan+distinct of the
-    # edge table (the duplicate subtree grows with data; the extra
-    # checkpoint barrier does not).
+    # cpus=32 (``git show 232a0f9:tools/pagerank_ab.py``,
+    # tools/logs/r17_pagerank_ab.out): r15 shuffle min 2.64 / med 3.00,
+    # r16 broadcast min 2.06 / med 2.65, this form min 2.07 / med 2.52
+    # — locally equal to r16's, and at 100 TB it removes a full second
+    # scan+distinct of the edge table (the duplicate subtree grows with
+    # data; the extra checkpoint barrier does not).
     if broadcast_ranks:
         record_pre_checkpoint("pagerank:und", und)
         und = und.localCheckpoint(eager=True)

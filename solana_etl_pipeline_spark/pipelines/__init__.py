@@ -17,8 +17,6 @@ from solana_etl_pipeline_spark.pipelines.gold import (
 from solana_etl_pipeline_spark.pipelines.maintenance import compact_parquet
 from solana_etl_pipeline_spark.pipelines.normalize import (
     dispatch_and_flatten,
-    flatten_bare_transactions,
-    flatten_wrapped_documents,
     normalize_websocket_messages,
 )
 
@@ -27,8 +25,6 @@ __all__ = [
     "build_silver",
     "compact_parquet",
     "dispatch_and_flatten",
-    "flatten_bare_transactions",
-    "flatten_wrapped_documents",
     "normalize_websocket_messages",
     "read_silver",
     "refresh_gold",

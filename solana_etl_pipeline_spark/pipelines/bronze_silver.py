@@ -31,11 +31,6 @@ from solana_etl_pipeline_spark.sources.sinks import (
     read_parquet_merged,
     write_parquet,
 )
-from pyspark.sql.types import StringType, StructField, StructType
-
-#: Raw landing rows are one JSON document per line under a single
-#: ``raw`` column (the file *is* the message, SURVEY §1.4).
-RAW_SCHEMA = StructType([StructField("raw", StringType())])
 
 
 def build_silver(

@@ -50,7 +50,7 @@ def _flatten_one_transaction(
     mint_fallback: Column,
     source_label: Column,
 ) -> list[Column]:
-    """Shared flatten of one (transaction struct, exploded transfer) pair.
+    """Flatten one (transaction struct, exploded transfer) pair.
 
     Expects columns ``tx`` (HELIUS_TRANSACTION struct) and ``transfer``
     (exploded TOKEN_TRANSFER struct, possibly null) to be in scope.
@@ -86,64 +86,6 @@ def _flatten_one_transaction(
         _s(F.coalesce(transfer["mint"], mint_fallback)).alias("mint"),
         _s(transfer["tokenStandard"]).alias("token_standard"),
     ]
-
-
-def flatten_bare_transactions(raw: DataFrame, json_col: str = "raw") -> DataFrame:
-    """Shape B2: a JSON *array* of bare Helius transactions per document
-    (``clean_data.py:124-128``) → one row per token transfer.
-
-    ``explode_outer`` on both levels preserves the reference's padding:
-    a doc with no transactions, or a transaction with an empty/absent
-    ``tokenTransfers``, still emits one null-padded row
-    (``clean_data.py:62-71``).
-    """
-    parsed = raw.withColumn(
-        "doc", F.from_json(F.col(json_col), ArrayType(HELIUS_TRANSACTION))
-    )
-    exploded = parsed.select(
-        F.explode_outer("doc").alias("tx")
-    ).select("tx", F.explode_outer(F.col("tx")["tokenTransfers"]).alias("transfer"))
-    tx = F.col("tx")
-    return exploded.select(
-        *_flatten_one_transaction(
-            tx,
-            token_name=F.lit(None),
-            token_symbol=F.lit(None),
-            mint_fallback=F.lit(None),
-            source_label=_s(tx["source"]),
-        )
-    )
-
-
-def flatten_wrapped_documents(raw: DataFrame, json_col: str = "raw") -> DataFrame:
-    """Shape B3: ``{"metadata": {...}, "transactions": [...]}``
-    (``clean_data.py:84-123``): every output row inherits the document's
-    metadata struct (J3) — a select carrying the struct through the
-    explode, not a join."""
-    parsed = raw.withColumn("doc", F.from_json(F.col(json_col), HELIUS_WRAPPED))
-    doc = F.col("doc")
-    exploded = parsed.select(
-        doc["metadata"].alias("md"),
-        F.explode_outer(doc["transactions"]).alias("tx"),
-    ).select(
-        "md", "tx", F.explode_outer(F.col("tx")["tokenTransfers"]).alias("transfer")
-    )
-    md, tx = F.col("md"), F.col("tx")
-    # same label rule as dispatch_and_flatten: 'Helius' only when the
-    # metadata struct actually parsed; an object doc WITHOUT metadata
-    # keeps its transactions' own source field — the two exported
-    # paths must not produce different silver rows for one input
-    # (review r15)
-    source = F.when(md.isNotNull(), F.lit("Helius")).otherwise(_s(tx["source"]))
-    return exploded.select(
-        *_flatten_one_transaction(
-            tx,
-            token_name=md["token_name"],
-            token_symbol=md["token_symbol"],
-            mint_fallback=md["mint"],
-            source_label=source,
-        )
-    )
 
 
 def dispatch_and_flatten(raw: DataFrame, json_col: str = "raw") -> DataFrame:

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import contextlib
 import contextvars
-import re
 import threading
 
 from pyspark.sql import DataFrame
@@ -108,24 +107,6 @@ def formatted_explain(df: DataFrame) -> str:
     return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-
-
-def physical_operators(df: DataFrame) -> list[str]:
-    """Physical operator names in plan order (dedup'd detail noise)."""
-    ops = []
-    for line in formatted_explain(df).splitlines():
-        m = re.match(r"^\s*[*()+\-:\d\s]*\s*([A-Za-z][A-Za-z0-9]+)", line)
-        if not m:
-            continue
-        if line.lstrip().startswith(("Output", "Input", "Arguments", "Keys",
-                                     "Functions", "Aggregate", "Results",
-                                     "Condition", "Join", "Location",
-                                     "ReadSchema", "PushedFilters")):
-            continue
-        ops.append(m.group(1))
-        if line.strip() == "":
-            break
-    return ops
 
 
 def scan_info(df: DataFrame) -> list[dict[str, str]]:

@@ -21,8 +21,6 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     DoubleType,
-    FloatType,
-    IntegerType,
     LongType,
     MapType,
     StringType,
@@ -134,20 +132,6 @@ CLEANED_TRANSACTIONS = StructType(
     ]
 )
 
-#: Per-token risk scores (the flagship analytics output) —
-#: reference ``streamlit 1.3.txt:105-113``.
-RISK_SCORES = StructType(
-    [
-        StructField("mint", StringType()),
-        StructField("token_name", StringType()),
-        StructField("safety_score", DoubleType()),
-        StructField("ownership_risk", DoubleType()),
-        StructField("liquidity_risk", DoubleType()),
-        StructField("txn_concentration", DoubleType()),
-        StructField("jeet_risk_score", DoubleType()),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Fixture schemas (TESTDATA.md / FIXTURES.md §A) — declared so readers can
 # enforce them instead of trusting inference.
@@ -164,24 +148,6 @@ EVENTS = StructType(
     ]
 )
 
-DOCUMENTS = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
-
-EMBEDDINGS = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(FloatType())),
-        StructField("label", IntegerType()),
-    ]
-)
-
 #: Multimodal column convention: payload is an opaque binary blob; typed
 #: metadata travels alongside so partition pruning / filtering never has to
 #: touch bytes. See ``llm/multimodal.py``.
@@ -193,17 +159,4 @@ MULTIMODAL_ASSET = StructType(
         StructField("payload", BinaryType()),
         StructField("meta", MapType(StringType(), StringType())),
     ]
-)
-
-FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
 )

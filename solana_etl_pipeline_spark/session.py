@@ -52,7 +52,8 @@ RUNTIME_CONFS: dict[str, str] = {
     # applies to both, and join RESULTS are strategy-independent.
     # r17 validation at the driver's core count (VERDICT r16 item 2):
     # interleaved 5-pair A/B at cpus=32 over 14 SMJ-bearing queries
-    # (dsir, q9, q16, q2, q11, hll overlap, simhash… — tools/conf_ab.py,
+    # (dsir, q9, q16, q2, q11, hll overlap, simhash… — harness
+    # ``git show 232a0f9:tools/conf_ab.py``, log
     # tools/logs/r17_smj_ab.json): geomean min-ratio false/true = 0.982,
     # worst single query +7.7% (within that session's noise band), so
     # the posture KEEPS. Robustness trade (ADVICE r16): SHJ builds an
@@ -305,13 +306,13 @@ def build_session(
         # registry emits far more than 100 distinct codegen units per
         # sweep, so the default evicts everything before any query
         # repeats and every execution pays Janino compile + fresh JIT
-        # again. Measured (tools/codegen_cache_probe.py, cpus=32,
-        # 40-query subset, 3 sweeps in one session): warm sweeps
-        # 31.6-33.8 s at 100 entries vs 24.2-24.5 s at 5000 (−23%,
-        # ~0.19 s/query of recompilation). This caches COMPILED CODE,
-        # never data or results — every execution still computes from
-        # the parquet inputs. Memory cost is metaspace-resident class
-        # objects (~100 KB/unit worst case); size to the distinct
+        # again. Measured (cpus=32, 40-query subset, 3 sweeps in one
+        # session, ``git show 232a0f9:tools/codegen_cache_probe.py``):
+        # warm sweeps 31.6-33.8 s at 100 entries vs 24.2-24.5 s at 5000
+        # (−23%, ~0.19 s/query of recompilation). This caches COMPILED
+        # CODE, never data or results — every execution still computes
+        # from the parquet inputs. Memory cost is metaspace-resident
+        # class objects (~100 KB/unit worst case); size to the distinct
         # query count × ~10 units. Overridable for small-heap
         # deployments via SPARK_GRAFT_CODEGEN_CACHE.
         "spark.sql.codegen.cache.maxEntries": str(codegen_cache_entries),

@@ -7,12 +7,11 @@ from solana_etl_pipeline_spark.sources.state_reader import (
     read_state_metadata,
     read_state_store,
 )
-from solana_etl_pipeline_spark.sources.tables import load_table, load_tables
+from solana_etl_pipeline_spark.sources.tables import load_table
 
 __all__ = [
     "dedup_state_keys",
     "load_table",
-    "load_tables",
     "read_state_changes",
     "read_state_metadata",
     "read_state_store",

@@ -19,8 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from solana_etl_pipeline_spark.schemas import FIXTURE_TABLES
-
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
@@ -61,10 +59,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 pass
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = FIXTURE_TABLES
-) -> dict[str, DataFrame]:
-    """Load several fixture tables; returns {name: DataFrame}."""
-    return {name: load_table(spark, sf_dir, name) for name in names}

@@ -4,6 +4,9 @@ dedup caches, and compaction over the incremental signature store."""
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -153,7 +156,6 @@ def test_correctness_witnesses_not_stale():
     tools/staleness.py). A missed rotation trips this test one round
     later instead of silently aging the evidence."""
     import sys
-    from pathlib import Path
 
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     try:
@@ -179,6 +181,41 @@ def test_correctness_witnesses_not_stale():
         f"correctness witnesses older than the invariant bound "
         f"(staleness <= {bound} = ceil({len(names)}/50); regenerate "
         f"_PRIORITY with `python tools/staleness.py`): {over}"
+    )
+
+
+# ------------------------------------------------ tools/ citations
+
+# ``tools/<name>.py`` paths and ``tools.<name>`` imports. A citation in
+# git-object form (``<sha>:tools/<name>.py``) names a deleted script's
+# last version and is exempt, hence the ``:`` in the lookbehind.
+_TOOLS_CITATION = re.compile(
+    r"(?<![\w:.-])tools/(\w+)\.py|\b(?:from|import) tools\.(\w+)"
+)
+
+
+def test_no_dangling_tools_citations():
+    """Every script under ``tools/`` that the package, the tests, the
+    other tools, the README or the verify skill cite must exist, so
+    deleting a script cannot leave a citation behind."""
+    root = Path(__file__).resolve().parent.parent
+    files = [root / "README.md"]
+    for top in ("solana_etl_pipeline_spark", "tests", "tools",
+                ".claude/skills"):
+        files += sorted(
+            p for p in (root / top).rglob("*") if p.suffix in (".py", ".md")
+        )
+    dangling = []
+    for path in files:
+        text = path.read_text(encoding="utf-8")
+        for lineno, line in enumerate(text.splitlines(), 1):
+            for m in _TOOLS_CITATION.finditer(line):
+                name = m.group(1) or m.group(2)
+                if not (root / "tools" / f"{name}.py").is_file():
+                    rel = path.relative_to(root)
+                    dangling.append(f"{rel}:{lineno}: tools/{name}.py")
+    assert not dangling, "citations of missing tools/ scripts:\n" + "\n".join(
+        dangling
     )
 
 

@@ -11,8 +11,6 @@ from pyspark.sql import Row
 
 from solana_etl_pipeline_spark.pipelines.normalize import (
     dispatch_and_flatten,
-    flatten_bare_transactions,
-    flatten_wrapped_documents,
     normalize_websocket_messages,
 )
 
@@ -89,7 +87,7 @@ def _raw_df(spark, docs):
 
 
 def test_bare_flatten_explodes_and_pads(spark):
-    out = flatten_bare_transactions(_raw_df(spark, [BARE_DOC]))
+    out = dispatch_and_flatten(_raw_df(spark, [BARE_DOC]))
     rows = {(r.signature, r.from_account): r for r in out.collect()}
     # 2 real transfers + 1 padded for sigB + 1 padded for sigC
     assert len(rows) == 4
@@ -111,7 +109,7 @@ def test_bare_flatten_explodes_and_pads(spark):
 
 
 def test_wrapped_flatten_carries_metadata(spark):
-    out = flatten_wrapped_documents(_raw_df(spark, [WRAPPED_DOC]))
+    out = dispatch_and_flatten(_raw_df(spark, [WRAPPED_DOC]))
     [row] = out.collect()
     assert row.token_name == "TokName"
     assert row.token_symbol == "TOK"

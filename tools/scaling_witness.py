@@ -3,12 +3,12 @@ join-heavy TPC-H plans at a scale where shuffle bytes, not per-job
 dispatch, dominate — so the 8-vs-32-core ratio actually measures the
 engine's parallelism rather than the fixture-scale job floor.
 
-Data: the tpch_decade replication scheme (10× key-offset replicas →
-sf1) generalized to N replicas; default 100 → "sf10" (~60 M lineitem,
-~1.5 GB parquet). Every distribution/selectivity is preserved exactly
-(N disconnected self-similar sub-universes), so wall time growing
-super-linearly in rows exposes a plan problem, not a data-shape
-change.
+Data: the replication scheme of ``git show 232a0f9:tools/tpch_decade.py``
+(10× key-offset replicas → sf1) generalized to N replicas; default 100
+→ "sf10" (~60 M lineitem, ~1.5 GB parquet). Every
+distribution/selectivity is preserved exactly (N disconnected
+self-similar sub-universes), so wall time growing super-linearly in
+rows exposes a plan problem, not a data-shape change.
 
 Run (one core count per process; compare two runs)::
 

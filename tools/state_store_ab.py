@@ -5,8 +5,8 @@ for streaming state — the default provider keeps every live key in
 executor HEAP, so at large state the choice is forced regardless of
 fixture-scale speed. This harness measures what the choice COSTS at
 measurable scale, the same discipline as the substring JVM-vs-Arrow
-A/B (``tools/substring_ab.py``): a deliberately accepted trade still
-gets a number, not a guess.
+A/B (``git show 232a0f9:tools/substring_ab.py``): a deliberately
+accepted trade still gets a number, not a guess.
 
 Shape: one landing corpus of JSON events (≈90 % distinct
 ``(user_id, event_id)`` keys, all event times inside the watermark
