@@ -20,11 +20,17 @@ Surface parity with the reference:
 
 Everything data-shaped stays a DataFrame until the final ``collect()``
 of a ≤100-row display page — the driver never holds the working set.
+Each display page is collected once per snapshot and kept with it
+(:class:`Snapshot`): the page's top-10 and newest-100 tables while the
+snapshot loads, a token card on its first request. Requests between
+reloads start no Spark job for a page already collected.
 """
 
 from __future__ import annotations
 
+import functools
 import html
+import logging
 import threading
 import time
 from collections.abc import Callable
@@ -39,6 +45,14 @@ from solana_etl_pipeline_spark.pipelines.gold import (
     build_risk_gold,
     top_tokens,
 )
+
+#: Collected view results one snapshot keeps, least recently used
+#: dropped first. The page's two tables plus the cards of the tokens
+#: looked at within one reload fit many times over; a client naming
+#: ever new (e.g. unknown) mints cannot grow the memo past it.
+MEMO_ENTRIES = 256
+
+_log = logging.getLogger(__name__)
 
 
 class TTLCache:
@@ -137,12 +151,85 @@ class TTLCache:
                 self._loaded_at = float("-inf")
 
 
+class Snapshot:
+    """One load of silver: the persisted ``recent`` working set and
+    ``gold`` table (``snap["recent"]``, ``snap["gold"]``), plus a memo
+    of the ``Row``s each view collected from them.
+
+    The frames cannot change until the next reload, so neither can a
+    view's result. ``rows(view, *args)`` is :func:`_collect` behind a
+    ``functools.lru_cache`` of at most :data:`MEMO_ENTRIES` results
+    (thread-safe; a miss collects outside the cache's lock).
+    """
+
+    def __init__(self, recent: DataFrame, gold: DataFrame):
+        self.frames = {"recent": recent, "gold": gold}
+        self.rows = functools.lru_cache(maxsize=MEMO_ENTRIES)(
+            functools.partial(_collect, recent, gold)
+        )
+
+    def __getitem__(self, name: str) -> DataFrame:
+        return self.frames[name]
+
+    def release(self) -> None:
+        """Drop the memo, then unpersist the frames."""
+        self.rows.cache_clear()
+        for df in self.frames.values():
+            df.unpersist()
+
+
+def _collect(recent: DataFrame, gold: DataFrame, view: str, *args):
+    """The display rows of ``("top", k)``, ``("recent", n)`` or
+    ``("detail", mint, n_txns)``; a detail is (card rows, txn rows)."""
+    if view == "top":
+        (k,) = args
+        return top_tokens(gold, k=k).collect()
+    if view == "recent":
+        (n,) = args
+        return (
+            recent.select("ts", "mint", "token_name", "type", "token_amount",
+                          "from_account", "to_account")
+            .limit(n)  # already ts-descending
+            .collect()
+        )
+    mint, n_txns = args
+    card = (
+        gold.filter(F.col("mint") == mint)
+        .select(
+            "mint",
+            "token_name",
+            "safety_score",
+            "jeet_risk_score",
+            risk_band(F.col("jeet_risk_score")).alias("risk_verdict"),
+            risk_band(F.col("ownership_risk")).alias("ownership_verdict"),
+            risk_band(F.col("liquidity_risk")).alias("liquidity_verdict"),
+            risk_band(F.col("txn_concentration")).alias(
+                "concentration_verdict"
+            ),
+        )
+        .collect()
+    )
+    txns = (
+        recent.filter(F.col("mint") == mint)
+        .select("ts", "type", "token_amount", "from_account", "to_account")
+        .limit(n_txns)
+        .collect()
+    )
+    return card, txns
+
+
 class Dashboard:
     """The read-side app: silver in, display pages out.
 
     ``working_set_rows`` is the reference's tail-100k memory guard —
     but expressed as ``orderBy(desc(ts)).limit(n)`` (a TakeOrdered
     heap-merge), so "most recent" is defined by data, not file order.
+
+    Display pages are collected once per snapshot and kept with it
+    (:class:`Snapshot`): a reload collects the page's top-10 and
+    newest-100 tables before readers can see the new snapshot, and a
+    token card is collected on its first request. Every view returns
+    fresh dicts, so a caller may mutate its result.
     """
 
     def __init__(
@@ -158,18 +245,11 @@ class Dashboard:
         self.silver_path = silver_path
         self.token_names = token_names
         self.working_set_rows = working_set_rows
-        self._cache = TTLCache(
-            data_ttl_sec, clock, releaser=self._release_snapshot
-        )
-
-    @staticmethod
-    def _release_snapshot(snap) -> None:
-        for df in snap.values():
-            df.unpersist()
+        self._cache = TTLCache(data_ttl_sec, clock, releaser=Snapshot.release)
 
     # -- data ----------------------------------------------------------
 
-    def _load(self) -> dict[str, DataFrame]:
+    def _load(self) -> Snapshot:
         silver = read_silver(self.spark, self.silver_path)
         recent = (
             silver.filter(~F.col("mint").isin(EXCLUDED_MINTS))
@@ -180,9 +260,19 @@ class Dashboard:
         # it once (the reference's 300 s parquet cache)
         recent = recent.persist()
         gold = build_risk_gold(recent, token_names=self.token_names)
-        return {"recent": recent, "gold": gold.persist()}
+        snap = Snapshot(recent, gold.persist())
+        # the page's two tables, collected before the cache installs
+        # the snapshot (the loader runs outside the cache's lock, so
+        # readers keep the previous snapshot meanwhile)
+        try:
+            snap.rows("top", 10)
+            snap.rows("recent", 100)
+        except BaseException:
+            snap.release()
+            raise
+        return snap
 
-    def _snapshot(self) -> dict[str, DataFrame]:
+    def _snapshot(self) -> Snapshot:
         return self._cache.get(self._load)
 
     def refresh(self) -> None:
@@ -192,50 +282,18 @@ class Dashboard:
         be rendering from it)."""
         self._cache.invalidate()
 
-    # -- views (each collects ≤ display-page rows) ---------------------
+    # -- views (each collects ≤ display-page rows once per snapshot) --
 
     def recent_transactions(self, n: int = 100) -> list[dict]:
-        rows = (
-            self._snapshot()["recent"]
-            .select("ts", "mint", "token_name", "type", "token_amount",
-                    "from_account", "to_account")
-            .limit(n)  # already ts-descending
-            .collect()
-        )
-        return [r.asDict() for r in rows]
+        return [r.asDict() for r in self._snapshot().rows("recent", n)]
 
     def top_safest(self, k: int = 10) -> list[dict]:
-        rows = top_tokens(self._snapshot()["gold"], k=k).collect()
-        return [r.asDict() for r in rows]
+        return [r.asDict() for r in self._snapshot().rows("top", k)]
 
     def token_detail(self, mint: str, n_txns: int = 20) -> dict:
         """Banded verdict card + recent transactions for one token
         (``streamlit 1.3.txt:115-151,170-181``)."""
-        snap = self._snapshot()
-        card = (
-            snap["gold"]
-            .filter(F.col("mint") == mint)
-            .select(
-                "mint",
-                "token_name",
-                "safety_score",
-                "jeet_risk_score",
-                risk_band(F.col("jeet_risk_score")).alias("risk_verdict"),
-                risk_band(F.col("ownership_risk")).alias("ownership_verdict"),
-                risk_band(F.col("liquidity_risk")).alias("liquidity_verdict"),
-                risk_band(F.col("txn_concentration")).alias(
-                    "concentration_verdict"
-                ),
-            )
-            .collect()
-        )
-        txns = (
-            snap["recent"]
-            .filter(F.col("mint") == mint)
-            .select("ts", "type", "token_amount", "from_account", "to_account")
-            .limit(n_txns)
-            .collect()
-        )
+        card, txns = self._snapshot().rows("detail", mint, n_txns)
         return {
             "card": card[0].asDict() if card else None,
             "transactions": [r.asDict() for r in txns],
@@ -254,7 +312,8 @@ class Dashboard:
             )
         out.append("")
         out.append("== Recent transactions ==")
-        for r in self.recent_transactions(25):
+        # the first 25 of the newest-100 page the snapshot already holds
+        for r in self.recent_transactions(100)[:25]:
             out.append(
                 f"{r['ts']} {str(r['type']):<10} {str(r['mint'])[:12]:<14} "
                 f"amount {r['token_amount']}"
@@ -316,7 +375,17 @@ def serve_http(
                 self.send_response(404)
                 self.end_headers()
                 return
-            body = dashboard.overview_html(refresh_sec).encode()
+            try:
+                body = dashboard.overview_html(refresh_sec).encode()
+            except Exception:
+                # the server keeps serving: record the failure and tell
+                # the client, instead of dropping its connection
+                _log.exception("rendering the overview failed")
+                self.send_response(500)
+                self.send_header("Content-Type", "text/plain; charset=utf-8")
+                self.end_headers()
+                self.wfile.write(b"500: the overview could not be rendered\n")
+                return
             self.send_response(200)
             self.send_header("Content-Type", "text/html; charset=utf-8")
             self.end_headers()

@@ -303,3 +303,105 @@ def test_serve_http_404_for_non_root(spark, tmp_path):
             assert e.code == 404
     finally:
         server.shutdown()
+
+
+def test_serve_http_answers_500_when_overview_fails(spark, tmp_path):
+    """A view that raises answers HTTP 500 with a plain-text body
+    instead of dropping the connection."""
+    import urllib.error
+
+    dash = Dashboard(spark, str(tmp_path / "no-such-silver"))
+    server = serve_http(dash, port=0)
+    try:
+        host, port = server.server_address
+        try:
+            urllib.request.urlopen(f"http://{host}:{port}/", timeout=30)
+            raise AssertionError("GET / should answer 500")
+        except urllib.error.HTTPError as e:
+            assert e.code == 500
+            assert e.headers.get_content_type() == "text/plain"
+            assert e.read()
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def test_views_collect_once_per_snapshot(spark, tmp_path):
+    """A second request of every view within one snapshot starts no
+    Spark job and returns what the first did; after refresh() the
+    views show rows written since, so no memo outlives its
+    snapshot."""
+    silver_path = _silver_fixture(spark, tmp_path)
+    dash = Dashboard(spark, silver_path, working_set_rows=1000)
+
+    def views():
+        return (
+            dash.top_safest(),
+            dash.recent_transactions(),
+            dash.token_detail("mintConc"),
+            dash.token_detail("no-such-mint"),
+            dash.overview_text(),
+            dash.overview_html(),
+        )
+
+    first = views()
+    sc = spark.sparkContext
+    sc.setJobGroup("probe", "second request of every view")
+    try:
+        second = views()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("probe")) == []
+    assert second == first
+
+    new_doc = _wrapped_doc(
+        "mintNew", [f"n{i}" for i in range(3)],
+        [(f"nb{i}", f"nh{i}") for i in range(3)],
+    )
+    helius_raw = spark.createDataFrame([Row(raw=new_doc)])
+    ws_raw = spark.createDataFrame([], "raw string")
+    write_silver(build_silver(helius_raw, ws_raw), silver_path, mode="append")
+    dash.refresh()
+    assert "mintNew" in {r["mint"] for r in dash.top_safest()}
+    recent = dash.recent_transactions()
+    assert len(recent) == len(first[1]) + 3
+    assert "mintNew" in {r["mint"] for r in recent}
+
+
+def test_memo_is_bounded_released_and_copied(spark, tmp_path, monkeypatch):
+    """Unknown mints cannot grow a snapshot's memo past its bound, a
+    released snapshot holds no memo, and mutating a view's result does
+    not change the next one."""
+    from solana_etl_pipeline_spark import serving
+
+    monkeypatch.setattr(serving, "MEMO_ENTRIES", 3)
+    silver_path = _silver_fixture(spark, tmp_path)
+    dash = Dashboard(spark, silver_path, working_set_rows=1000)
+    snap = dash._snapshot()
+    for i in range(6):
+        assert dash.token_detail(f"unknown{i}") == {
+            "card": None, "transactions": [],
+        }
+        assert snap.rows.cache_info().currsize <= 3
+
+    top, detail = dash.top_safest(), dash.token_detail("mintConc")
+    want_top = [dict(r) for r in top]
+    want_detail = {
+        "card": dict(detail["card"]),
+        "transactions": [dict(t) for t in detail["transactions"]],
+    }
+    top[0]["mint"] = "mutated"
+    top.clear()
+    detail["card"]["safety_score"] = -1.0
+    detail["transactions"][0]["type"] = "mutated"
+    assert dash.top_safest() == want_top
+    assert dash.token_detail("mintConc") == want_detail
+
+    # the cache releases a replaced snapshot one generation late
+    dash.refresh()
+    dash._snapshot()
+    assert snap.rows.cache_info().currsize
+    dash.refresh()
+    dash._snapshot()
+    assert snap.rows.cache_info().currsize == 0
+
