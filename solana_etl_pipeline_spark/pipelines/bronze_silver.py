@@ -19,6 +19,7 @@ signature) — the only wide stage in the job.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,10 +28,7 @@ from solana_etl_pipeline_spark.pipelines.normalize import (
     normalize_websocket_messages,
 )
 from solana_etl_pipeline_spark.schemas import CLEANED_TRANSACTIONS
-from solana_etl_pipeline_spark.sources.sinks import (
-    read_parquet_merged,
-    write_parquet,
-)
+from solana_etl_pipeline_spark.sources.sinks import write_parquet
 
 
 def build_silver(
@@ -62,7 +60,9 @@ def write_silver(
     replays a message or an export re-fetches a transaction (review
     r15). ``dedup_against_existing=True`` closes the cross-run hole
     with a left-anti join against the keys already in ``path``
-    (needs ``spark``; a missing/empty table is treated as no keys).
+    (needs ``spark``; a missing table is treated as no keys, and any
+    other failure to read the existing keys raises rather than
+    appending unchecked).
     The probe reads ONLY the key columns (column-pruned scan) and is
     the batch twin of the streaming path's watermarked dedup state —
     use the streaming path when the feed is continuous; this flag
@@ -77,9 +77,11 @@ def write_silver(
         keys = list(dedup_keys)
         try:
             existing = read_silver(spark, path).select(*keys)
-        except Exception:
-            existing = None  # first write: nothing to dedup against
-        if existing is not None:
+        except AnalysisException as exc:
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
+            # first write: nothing to dedup against
+        else:
             silver = silver.join(existing, keys, "left_anti")
     write_parquet(
         silver.withColumn("event_date", F.to_date("ts")),
@@ -90,9 +92,14 @@ def write_silver(
 
 
 def read_silver(spark: SparkSession, path: str) -> DataFrame:
-    """Read the silver table (merged schema, partition pruning on
-    ``event_date`` predicates)."""
-    return read_parquet_merged(spark, path)
+    """Read the silver table by its declared schema
+    (``schemas.CLEANED_TRANSACTIONS``) plus the discovered
+    ``event_date`` partition column, with partition pruning on
+    ``event_date`` predicates. No footer is opened to plan the read,
+    so it starts no Spark job; a file written without one of the
+    declared columns reads it as null. A missing path raises
+    ``PATH_NOT_FOUND``; an empty directory reads as no rows."""
+    return spark.read.schema(CLEANED_TRANSACTIONS).parquet(path)
 
 
 def silver_schema_columns() -> list[str]:

@@ -5,9 +5,9 @@ transactions columns.
 ``queries/reference.py`` exercises the same operators against the
 ``events`` fixture for the oracle harness; this module is the
 production wiring: silver (15-col) in → per-mint risk scores + token
-names out, written as a partitioned gold table a dashboard polls
+names out, written in one pass as a gold table a dashboard polls
 (replacing the reference's 300 s cache TTL with plain re-read of a
-small table).
+small table); AQE sizes its files.
 """
 
 from __future__ import annotations
@@ -83,28 +83,16 @@ def top_tokens(gold: DataFrame, k: int = 10) -> DataFrame:
     return top_k_by_safety(gold, key="mint", k=k)
 
 
-def write_gold(
-    gold: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    target_rows_per_file: int = 1_000_000,
-) -> None:
+def write_gold(gold: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Gold is one row per mint — small at sf0.1, but the mint
     dimension is exactly what grows with the corpus, so a fixed
     ``coalesce(1)`` would funnel the whole refresh through one task at
-    100× scale. Size the file count from the actual row count instead:
-    the table is persisted for the count + write pair (the count is the
-    cheap side; re-running the risk aggregation twice is not), and the
-    dashboard reads the directory either way."""
-    import math
-
-    gold = gold.persist()
-    try:
-        n_rows = gold.count()
-        n_files = max(1, math.ceil(n_rows / target_rows_per_file))
-        write_parquet(gold.repartition(n_files), path, mode=mode)
-    finally:
-        gold.unpersist()
+    100× scale. The ``rebalance`` hint hands the file count to AQE
+    (on in every engine session, ``session.RUNTIME_CONFS``), which
+    sizes the write partitions from the shuffled bytes: one file for a
+    small table, more as it grows. One write, with nothing persisted
+    or counted first; the dashboard reads the directory either way."""
+    write_parquet(gold.hint("rebalance"), path, mode=mode)
 
 
 def refresh_gold(
@@ -116,11 +104,10 @@ def refresh_gold(
     """One dashboard refresh cycle: read silver, score, write gold.
 
     Returns a read of the just-written gold table, NOT the build
-    plan: the build was unpersisted after the write, so returning it
-    would make every caller use (``.collect()``, a dashboard render)
-    re-run the full silver scan + risk aggregation — the small
-    freshly-written table serves the same rows from disk (review
-    r15)."""
+    plan: nothing is persisted, so returning the build would make
+    every caller use (``.collect()``, a dashboard render) re-run the
+    full silver scan + risk aggregation — the small freshly-written
+    table serves the same rows from disk."""
     from solana_etl_pipeline_spark.pipelines.bronze_silver import read_silver
 
     gold = build_risk_gold(read_silver(spark, silver_path), token_names)

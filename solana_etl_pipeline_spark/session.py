@@ -75,13 +75,18 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     Safe and idempotent; used on sessions we did not build (driver
     contract) so correctness-critical semantics (ANSI off, UTC) hold.
     The session's shuffle-partition count is left as its owner set it.
+    A conf the session refuses keeps its existing value and raises a
+    ``RuntimeWarning`` naming it; the rest are still applied.
     """
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            # Non-runtime conf on this build — leave builder-time value.
-            pass
+        except Exception as exc:
+            warnings.warn(
+                f"{key}={value} was not applied to this session: {exc}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     return spark
 
 

@@ -118,9 +118,11 @@ def write_parquet(
 ) -> None:
     """S10: table sink (parquet default, delta via the format seam —
     see :func:`resolve_sink_format`). Appends with a widened schema are
-    legal — the read side harmonizes (see :func:`read_parquet_merged`),
-    which replaces the reference's null-fill/reorder writer loop
-    (``clean_data.py:340-349``)."""
+    legal — the read side harmonizes, which replaces the reference's
+    null-fill/reorder writer loop (``clean_data.py:340-349``): a table
+    with a declared schema (silver, ``schemas.CLEANED_TRANSACTIONS``)
+    reads by it and null-fills the columns a file lacks; an undeclared
+    one merges its footers (:func:`read_parquet_merged`)."""
     writer = df.write.mode(mode).format(resolve_sink_format(format))
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)

@@ -18,7 +18,6 @@ from solana_etl_pipeline_spark.streaming.ingest import (
     stateful_running_totals,
     stateful_running_totals_tws,
     stream_interval_join,
-    with_observed_metrics,
 )
 
 __all__ = [
@@ -34,5 +33,4 @@ __all__ = [
     "stateful_running_totals",
     "stateful_running_totals_tws",
     "stream_interval_join",
-    "with_observed_metrics",
 ]

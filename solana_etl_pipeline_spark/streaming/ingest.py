@@ -417,20 +417,6 @@ def foreach_batch_refresh(
     _await_drain(query, timeout_sec)
 
 
-def with_observed_metrics(stream: DataFrame, name: str = "metrics") -> DataFrame:
-    """``observe()``: in-flight data-quality counters (rows, null keys,
-    value total) collected per micro-batch via QueryProgress — metrics
-    without a second pass over the data."""
-    return stream.observe(
-        name,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col("user_id").isNull(), 1).otherwise(0)).alias(
-            "null_keys"
-        ),
-        F.round(F.sum("value"), 4).alias("value_total"),
-    )
-
-
 def run_available_now_to_parquet(
     result: DataFrame,
     output_dir: str,

@@ -43,15 +43,20 @@ def _fake_gold(spark, n: int):
 
 def test_write_gold_sizes_files_from_rows(spark, tmp_path):
     """The mint dimension grows with the corpus: the gold writer must
-    fan out above the per-file target instead of funnelling through a
-    single coalesced task."""
-    path = tmp_path / "gold_multi"
-    write_gold(_fake_gold(spark, 250), str(path), target_rows_per_file=100)
-    files = list(path.glob("*.parquet"))
-    assert len(files) == 3  # ceil(250 / 100)
+    fan out once the table outgrows AQE's advisory partition size
+    instead of funnelling through a single coalesced task."""
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(advisory)
+    spark.conf.set(advisory, "1k")
+    try:
+        path = tmp_path / "gold_multi"
+        write_gold(_fake_gold(spark, 5000), str(path))
+    finally:
+        spark.conf.set(advisory, old)
+    assert len(list(path.glob("*.parquet"))) > 1
     got = spark.read.parquet(str(path))
-    assert got.count() == 250
-    assert got.select(F.countDistinct("mint")).collect()[0][0] == 250
+    assert got.count() == 5000
+    assert got.select(F.countDistinct("mint")).collect()[0][0] == 5000
 
 
 def test_write_gold_small_table_single_file(spark, tmp_path):

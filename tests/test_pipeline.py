@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -646,3 +647,82 @@ def test_write_silver_dedup_against_existing(spark, tmp_path):
     # without the flag the replay WOULD duplicate (hazard stays visible)
     write_silver(build_silver(empty, ws1), path)
     assert read_silver(spark, path).count() == 3
+
+
+def _parquet_files(path: str) -> list[str]:
+    return sorted(
+        os.path.join(root, name)
+        for root, _, names in os.walk(path)
+        for name in names
+        if name.endswith(".parquet")
+    )
+
+
+def test_write_silver_dedup_fails_loudly_on_unreadable_table(spark, tmp_path):
+    """Only a missing table means "no keys yet": when the existing keys
+    cannot be read, the dedup write raises instead of appending the
+    replay unchecked."""
+    ws = spark.createDataFrame([Row(raw=WS_MSG)])
+    empty = spark.createDataFrame([], "raw string")
+    path = str(tmp_path / "silver")
+    write_silver(build_silver(empty, ws), path,
+                 dedup_against_existing=True, spark=spark)
+    leaf = os.path.dirname(_parquet_files(path)[0])
+    with open(os.path.join(leaf, "part-99999-garbage.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    before = _parquet_files(path)
+
+    with pytest.raises(Exception, match="part-99999-garbage"):
+        write_silver(build_silver(empty, ws), path,
+                     dedup_against_existing=True, spark=spark)
+    assert _parquet_files(path) == before
+
+
+def _partitioned_silver(spark, tmp_path) -> str:
+    out = str(tmp_path / "silver")
+    silver = build_silver(
+        spark.createDataFrame([Row(raw=WRAPPED)]),
+        spark.createDataFrame([Row(raw=WS_MSG)]),
+    )
+    write_silver(silver, out, mode="overwrite")
+    return out
+
+
+def test_read_silver_starts_no_spark_job(spark, tmp_path):
+    """The declared schema plans the read: no footer merge job."""
+    out = _partitioned_silver(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("probe:read_silver", "plan a silver read")
+    try:
+        read_silver(spark, out).schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("probe:read_silver")) == []
+
+
+def test_read_silver_has_declared_columns_and_partition(spark, tmp_path):
+    back = read_silver(spark, _partitioned_silver(spark, tmp_path))
+    assert back.columns == silver_schema_columns() + ["event_date"]
+    assert back.schema["event_date"].dataType.simpleString() == "date"
+    assert back.count() == 3
+
+
+def test_read_silver_null_fills_a_missing_column(spark, tmp_path):
+    """A file written before a column existed reads it as null."""
+    out = _partitioned_silver(spark, tmp_path)
+    src = (
+        read_silver(spark, out)
+        .filter(F.col("signature") == "sig2")
+        .drop("token_standard", "event_date")
+        .withColumn("signature", F.lit("sig-old"))
+    )
+    old = spark.createDataFrame(src.collect(), src.schema)
+    write_parquet(
+        old.withColumn("event_date", F.to_date("ts")), out,
+        partition_cols=["event_date"], mode="append",
+    )
+    back = read_silver(spark, out)
+    rows = {r.signature: r for r in back.collect()}
+    assert rows["sig-old"].token_standard is None
+    assert rows["sig2"].token_standard == "Fungible"
+    assert back.count() == 4

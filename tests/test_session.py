@@ -5,6 +5,7 @@ default driver/executor opts must gate it on the probed java major
 version (ADVICE r11)."""
 
 import contextlib
+import types
 import warnings
 
 import pytest
@@ -155,3 +156,24 @@ def test_codegen_cache_env_must_be_an_integer(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", "5k")
     with pytest.raises(ValueError, match="SPARK_GRAFT_CODEGEN_CACHE"):
         session.build_session()
+
+
+def test_apply_runtime_confs_warns_for_a_refused_conf():
+    """A conf the session refuses warns by name; the rest still apply."""
+    refused = "spark.sql.session.timeZone"
+
+    class _Conf:
+        def __init__(self):
+            self.values = {}
+
+        def set(self, key, value):
+            if key == refused:
+                raise RuntimeError("cannot modify")
+            self.values[key] = value
+
+    stub = types.SimpleNamespace(conf=_Conf())
+    with pytest.warns(RuntimeWarning, match=refused):
+        assert session.apply_runtime_confs(stub) is stub
+    assert stub.conf.values == {
+        k: v for k, v in session.RUNTIME_CONFS.items() if k != refused
+    }

@@ -473,47 +473,6 @@ def test_foreach_batch_gold_refresh(spark, tmp_path):
     assert totals == {1: 6.0, 2: 3.0}
 
 
-def test_observed_metrics_per_batch(spark, tmp_path):
-    """observe(): quality counters arrive via StreamingQueryProgress
-    without a second scan."""
-    from solana_etl_pipeline_spark.streaming.ingest import with_observed_metrics
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    _write_landing_file(
-        str(landing / "f1.json"),
-        [_event(1, 1, "2024-01-01T10:00:00.000Z", 2.5),
-         _event(2, 2, "2024-01-01T10:01:00.000Z", 1.5)],
-        time.time() - 5,
-    )
-    stream = with_observed_metrics(
-        landing_stream(spark, str(landing), EVENTS)
-    )
-    query = (
-        stream.writeStream.format("noop")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(120)
-    observed = [
-        p.observedMetrics["metrics"]
-        for p in [query.lastProgress]
-        if p and "metrics" in (p.observedMetrics or {})
-    ]
-    if not observed:  # progress objects can rotate; check recentProgress
-        observed = [
-            p.observedMetrics["metrics"]
-            for p in query.recentProgress
-            if "metrics" in (p.observedMetrics or {})
-        ]
-    assert observed, "no observed metrics in query progress"
-    m = observed[-1]
-    assert m["n_rows"] == 2
-    assert m["null_keys"] == 0
-    assert m["value_total"] == 4.0
-
-
 def test_stateful_running_totals_across_batches(spark, tmp_path):
     """applyInPandasWithState: state carries across micro-batches; the
     final update per user equals the batch aggregate."""
