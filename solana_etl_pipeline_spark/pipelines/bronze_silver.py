@@ -48,7 +48,6 @@ def write_silver(
     path: str,
     mode: str = "append",
     dedup_against_existing: bool = False,
-    spark: "SparkSession | None" = None,
     dedup_keys: tuple[str, str] = ("mint", "signature"),
 ) -> None:
     """Materialize the silver table partitioned by event date (null
@@ -59,10 +58,13 @@ def write_silver(
     re-introduce ``(mint, signature)`` duplicates when a later run
     replays a message or an export re-fetches a transaction (review
     r15). ``dedup_against_existing=True`` closes the cross-run hole
-    with a left-anti join against the keys already in ``path``
-    (needs ``spark``; a missing table is treated as no keys, and any
-    other failure to read the existing keys raises rather than
-    appending unchecked).
+    with a left-anti join against the keys already in ``path`` (read
+    with ``silver``'s session; a missing table is treated as no keys,
+    and any other failure to read the existing keys raises rather than
+    appending unchecked). It applies to appends only: an overwrite
+    would first delete the very keys the new batch was filtered
+    against, so any other ``mode`` raises ``ValueError`` before
+    anything is read or written.
     The probe reads ONLY the key columns (column-pruned scan) and is
     the batch twin of the streaming path's watermarked dedup state —
     use the streaming path when the feed is continuous; this flag
@@ -70,13 +72,14 @@ def write_silver(
     callers (non-overlapping exports) shouldn't pay a key scan.
     """
     if dedup_against_existing:
-        if spark is None:
+        if mode != "append":
             raise ValueError(
-                "dedup_against_existing=True requires the spark session"
+                "dedup_against_existing=True needs mode='append', "
+                f"got {mode!r}"
             )
         keys = list(dedup_keys)
         try:
-            existing = read_silver(spark, path).select(*keys)
+            existing = read_silver(silver.sparkSession, path).select(*keys)
         except AnalysisException as exc:
             if exc.getCondition() != "PATH_NOT_FOUND":
                 raise

@@ -18,24 +18,25 @@ Surface parity with the reference:
 - periodic refresh loop (``:183-185``) via :func:`serve_http`'s
   meta-refresh, or any caller polling :meth:`Dashboard.overview`.
 
-Everything data-shaped stays a DataFrame until the final ``collect()``
-of a ≤100-row display page — the driver never holds the working set.
-Each display page is collected once per snapshot and kept with it
-(:class:`Snapshot`): the page's top-10 and newest-100 tables while the
-snapshot loads, a token card on its first request. Requests between
-reloads start no Spark job for a page already collected.
+Like the reference's pandas frame, a snapshot is the working set's
+answers held in memory: a reload collects everything a view can return
+into a :class:`Snapshot` of plain Python rows and unpersists the
+working set before it returns, so no view starts a Spark job. The
+driver holds at most the gold table (one row per mint) plus
+:data:`CARD_TXNS` rows per mint; both are bounded by the working set's
+size, ``Dashboard(working_set_rows=)``, as the reference's pandas
+tail-100k is.
 """
 
 from __future__ import annotations
 
-import functools
 import html
 import logging
 import threading
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.functions.banding import risk_band
@@ -46,11 +47,11 @@ from solana_etl_pipeline_spark.pipelines.gold import (
     top_tokens,
 )
 
-#: Collected view results one snapshot keeps, least recently used
-#: dropped first. The page's two tables plus the cards of the tokens
-#: looked at within one reload fit many times over; a client naming
-#: ever new (e.g. unknown) mints cannot grow the memo past it.
-MEMO_ENTRIES = 256
+#: Rows of the newest-transactions page (``streamlit 1.3.txt:162``),
+#: the most :meth:`Dashboard.recent_transactions` can return.
+RECENT_ROWS = 100
+#: Newest transactions listed on a token card.
+CARD_TXNS = 20
 
 _log = logging.getLogger(__name__)
 
@@ -59,37 +60,23 @@ class TTLCache:
     """``st.cache_data(ttl=...)`` parity: memoize a zero-arg loader for
     ``ttl_sec`` (monotonic clock injectable for tests).
 
-    Thread-safe (the HTTP server is a ThreadingHTTPServer — two
-    requests straddling an expiry must not both run the loader), and
-    an optional ``releaser`` is called with each RETIRED value so
-    holders of persisted DataFrames can unpersist them — without it a
-    long-running dashboard leaks one persisted snapshot per TTL cycle.
-
-    Two refresh-latency properties (ADVICE r5):
-
-    * The loader runs OUTSIDE the lock — readers arriving during a
-      refresh are served the previous (stale-by-under-one-poll)
-      snapshot instead of queueing behind the reload; only the very
-      first load (nothing to serve yet) blocks peers.
-    * Release is deferred ONE generation: a replaced snapshot is
-      retired, and released only when the NEXT refresh retires its
-      successor — so a reader that fetched the old value just before
-      expiry has a full TTL cycle to finish rendering from it before
-      it is unpersisted. Steady-state memory cost: one extra snapshot.
+    Thread-safe: the HTTP server is a ThreadingHTTPServer, and two
+    requests straddling an expiry must not both run the loader. The
+    loader runs OUTSIDE the lock (ADVICE r5): readers arriving during
+    a refresh are served the previous (stale-by-under-one-poll) value
+    instead of queueing behind the reload; only the very first load
+    (nothing to serve yet) blocks peers. A replaced value is dropped,
+    not closed: a reader still rendering from it holds its own
+    reference.
     """
 
     def __init__(
-        self,
-        ttl_sec: float,
-        clock: Callable[[], float] = time.monotonic,
-        releaser: "Callable[[object], None] | None" = None,
+        self, ttl_sec: float, clock: Callable[[], float] = time.monotonic
     ):
         self.ttl_sec = ttl_sec
         self.clock = clock
-        self.releaser = releaser
         self._value = None
         self._loaded_at: float | None = None
-        self._retired = None
         self._loading = False
         self._gen = 0  # bumped by invalidate(); loads install against it
         self._cond = threading.Condition(threading.Lock())
@@ -122,8 +109,6 @@ class TTLCache:
                 self._cond.notify_all()
             raise
         with self._cond:
-            to_release = self._retired
-            self._retired = self._value
             self._value = value
             # An invalidate() that raced this load must not be
             # swallowed: the loader may have read pre-invalidation
@@ -135,8 +120,6 @@ class TTLCache:
             )
             self._loading = False
             self._cond.notify_all()
-        if to_release is not None and self.releaser is not None:
-            self.releaser(to_release)
         return value
 
     def invalidate(self) -> None:
@@ -152,70 +135,30 @@ class TTLCache:
 
 
 class Snapshot:
-    """One load of silver: the persisted ``recent`` working set and
-    ``gold`` table (``snap["recent"]``, ``snap["gold"]``), plus a memo
-    of the ``Row``s each view collected from them.
+    """One load of silver as plain Python rows (dicts), which every
+    view reads:
 
-    The frames cannot change until the next reload, so neither can a
-    view's result. ``rows(view, *args)`` is :func:`_collect` behind a
-    ``functools.lru_cache`` of at most :data:`MEMO_ENTRIES` results
-    (thread-safe; a miss collects outside the cache's lock).
+    - ``gold``: every mint of the working set, safest first, with its
+      four ``*_verdict`` bands — the top-k table, and each token's
+      card (``cards``, by mint);
+    - ``recent``: the newest :data:`RECENT_ROWS` rows, ts-descending;
+    - ``txns``: each mint's newest :data:`CARD_TXNS` rows,
+      ts-descending.
+
+    Nothing in it changes after the load, so concurrent readers share
+    it without a lock; views hand out copies.
     """
 
-    def __init__(self, recent: DataFrame, gold: DataFrame):
-        self.frames = {"recent": recent, "gold": gold}
-        self.rows = functools.lru_cache(maxsize=MEMO_ENTRIES)(
-            functools.partial(_collect, recent, gold)
-        )
-
-    def __getitem__(self, name: str) -> DataFrame:
-        return self.frames[name]
-
-    def release(self) -> None:
-        """Drop the memo, then unpersist the frames."""
-        self.rows.cache_clear()
-        for df in self.frames.values():
-            df.unpersist()
-
-
-def _collect(recent: DataFrame, gold: DataFrame, view: str, *args):
-    """The display rows of ``("top", k)``, ``("recent", n)`` or
-    ``("detail", mint, n_txns)``; a detail is (card rows, txn rows)."""
-    if view == "top":
-        (k,) = args
-        return top_tokens(gold, k=k).collect()
-    if view == "recent":
-        (n,) = args
-        return (
-            recent.select("ts", "mint", "token_name", "type", "token_amount",
-                          "from_account", "to_account")
-            .limit(n)  # already ts-descending
-            .collect()
-        )
-    mint, n_txns = args
-    card = (
-        gold.filter(F.col("mint") == mint)
-        .select(
-            "mint",
-            "token_name",
-            "safety_score",
-            "jeet_risk_score",
-            risk_band(F.col("jeet_risk_score")).alias("risk_verdict"),
-            risk_band(F.col("ownership_risk")).alias("ownership_verdict"),
-            risk_band(F.col("liquidity_risk")).alias("liquidity_verdict"),
-            risk_band(F.col("txn_concentration")).alias(
-                "concentration_verdict"
-            ),
-        )
-        .collect()
-    )
-    txns = (
-        recent.filter(F.col("mint") == mint)
-        .select("ts", "type", "token_amount", "from_account", "to_account")
-        .limit(n_txns)
-        .collect()
-    )
-    return card, txns
+    def __init__(
+        self,
+        gold: list[dict],
+        recent: list[dict],
+        txns: dict[str, list[dict]],
+    ):
+        self.gold = gold
+        self.cards = {r["mint"]: r for r in gold}
+        self.recent = recent
+        self.txns = txns
 
 
 class Dashboard:
@@ -225,11 +168,10 @@ class Dashboard:
     but expressed as ``orderBy(desc(ts)).limit(n)`` (a TakeOrdered
     heap-merge), so "most recent" is defined by data, not file order.
 
-    Display pages are collected once per snapshot and kept with it
-    (:class:`Snapshot`): a reload collects the page's top-10 and
-    newest-100 tables before readers can see the new snapshot, and a
-    token card is collected on its first request. Every view returns
-    fresh dicts, so a caller may mutate its result.
+    A reload collects every page and card into a :class:`Snapshot`
+    before readers can see it; views read that snapshot and start no
+    Spark job, and an overview page reads one snapshot throughout.
+    Every view returns fresh dicts, so a caller may mutate its result.
     """
 
     def __init__(
@@ -245,66 +187,103 @@ class Dashboard:
         self.silver_path = silver_path
         self.token_names = token_names
         self.working_set_rows = working_set_rows
-        self._cache = TTLCache(data_ttl_sec, clock, releaser=Snapshot.release)
+        self._cache = TTLCache(data_ttl_sec, clock)
 
     # -- data ----------------------------------------------------------
 
     def _load(self) -> Snapshot:
         silver = read_silver(self.spark, self.silver_path)
+        # the working set feeds all three collects below; it is
+        # persisted for their duration only
         recent = (
             silver.filter(~F.col("mint").isin(EXCLUDED_MINTS))
             .orderBy(F.desc("ts"))
             .limit(self.working_set_rows)
+            .persist()
         )
-        # the working set feeds every view of a refresh cycle — persist
-        # it once (the reference's 300 s parquet cache)
-        recent = recent.persist()
-        gold = build_risk_gold(recent, token_names=self.token_names)
-        snap = Snapshot(recent, gold.persist())
-        # the page's two tables, collected before the cache installs
-        # the snapshot (the loader runs outside the cache's lock, so
-        # readers keep the previous snapshot meanwhile)
+        txn_cols = ("ts", "type", "token_amount", "from_account", "to_account")
         try:
-            snap.rows("top", 10)
-            snap.rows("recent", 100)
-        except BaseException:
-            snap.release()
-            raise
-        return snap
+            gold = build_risk_gold(recent, token_names=self.token_names)
+            # a working set of N rows has at most N mints: all of gold
+            gold_rows = top_tokens(
+                gold.withColumns({
+                    "risk_verdict": risk_band(F.col("jeet_risk_score")),
+                    "ownership_verdict": risk_band(F.col("ownership_risk")),
+                    "liquidity_verdict": risk_band(F.col("liquidity_risk")),
+                    "concentration_verdict": risk_band(
+                        F.col("txn_concentration")
+                    ),
+                }),
+                k=self.working_set_rows,
+            ).collect()
+            recent_rows = (
+                recent.select("ts", "mint", "token_name", "type",
+                              "token_amount", "from_account", "to_account")
+                .limit(RECENT_ROWS)  # already ts-descending
+                .collect()
+            )
+            newest = Window.partitionBy("mint").orderBy(F.desc("ts"))
+            txn_rows = (
+                recent.withColumn("rank", F.row_number().over(newest))
+                .filter(F.col("rank") <= CARD_TXNS)
+                .select("mint", "rank", *txn_cols)
+                .collect()
+            )
+        finally:
+            recent.unpersist()
+        txns: dict[str, list[dict]] = {}
+        for r in sorted(txn_rows, key=lambda r: r["rank"]):
+            txns.setdefault(r["mint"], []).append({c: r[c] for c in txn_cols})
+        return Snapshot(
+            [r.asDict() for r in gold_rows],
+            [r.asDict() for r in recent_rows],
+            txns,
+        )
 
     def _snapshot(self) -> Snapshot:
         return self._cache.get(self._load)
 
     def refresh(self) -> None:
-        """Invalidate so the next view re-reads silver. The replaced
-        snapshot is released by the cache's one-generation retirement
-        (NOT unpersisted here — a concurrent request thread may still
-        be rendering from it)."""
+        """Invalidate so the next view re-reads silver; a request still
+        rendering the replaced snapshot keeps it until it finishes."""
         self._cache.invalidate()
 
-    # -- views (each collects ≤ display-page rows once per snapshot) --
+    # -- views (each reads the snapshot; no Spark job) -----------------
 
-    def recent_transactions(self, n: int = 100) -> list[dict]:
-        return [r.asDict() for r in self._snapshot().rows("recent", n)]
+    def recent_transactions(self, n: int = RECENT_ROWS) -> list[dict]:
+        """The newest ``n`` rows, ts-descending. A snapshot holds
+        :data:`RECENT_ROWS`, so ``n`` outside ``0..RECENT_ROWS`` raises
+        ``ValueError``."""
+        if not 0 <= n <= RECENT_ROWS:
+            raise ValueError(f"n must be in 0..{RECENT_ROWS}, got {n}")
+        return [dict(r) for r in self._snapshot().recent[:n]]
 
     def top_safest(self, k: int = 10) -> list[dict]:
-        return [r.asDict() for r in self._snapshot().rows("top", k)]
+        """The ``k`` safest tokens with their verdicts; every token
+        when ``k`` exceeds their number. A negative ``k`` raises
+        ``ValueError``."""
+        if k < 0:
+            raise ValueError(f"k must not be negative, got {k}")
+        return [dict(r) for r in self._snapshot().gold[:k]]
 
-    def token_detail(self, mint: str, n_txns: int = 20) -> dict:
-        """Banded verdict card + recent transactions for one token
-        (``streamlit 1.3.txt:115-151,170-181``)."""
-        card, txns = self._snapshot().rows("detail", mint, n_txns)
+    def token_detail(self, mint: str) -> dict:
+        """Banded verdict card + the :data:`CARD_TXNS` newest
+        transactions for one token (``streamlit 1.3.txt:115-151,
+        170-181``); an unknown mint has no card and no rows."""
+        snap = self._snapshot()
+        card = snap.cards.get(mint)
         return {
-            "card": card[0].asDict() if card else None,
-            "transactions": [r.asDict() for r in txns],
+            "card": None if card is None else dict(card),
+            "transactions": [dict(t) for t in snap.txns.get(mint, ())],
         }
 
-    # -- rendering -----------------------------------------------------
+    # -- rendering (one snapshot per page) -----------------------------
 
     def overview_text(self) -> str:
         """Plain-text overview: top-10 safest + top-25 recent txns."""
+        snap = self._snapshot()
         out = ["== Top 10 safest tokens =="]
-        for r in self.top_safest():
+        for r in snap.gold[:10]:
             out.append(
                 f"{r['mint'][:12]:<14} {str(r.get('token_name'))[:16]:<18} "
                 f"safety {r['safety_score']:>7.2f}  holders "
@@ -312,8 +291,7 @@ class Dashboard:
             )
         out.append("")
         out.append("== Recent transactions ==")
-        # the first 25 of the newest-100 page the snapshot already holds
-        for r in self.recent_transactions(100)[:25]:
+        for r in snap.recent[:25]:
             out.append(
                 f"{r['ts']} {str(r['type']):<10} {str(r['mint'])[:12]:<14} "
                 f"amount {r['token_amount']}"
@@ -323,6 +301,7 @@ class Dashboard:
     def overview_html(self, refresh_sec: int = 60) -> str:
         """Minimal HTML page with meta-refresh — the reference's rerun
         slider (``streamlit 1.3.txt:183-185``)."""
+        snap = self._snapshot()
 
         def table(rows: list[dict]) -> str:
             if not rows:
@@ -347,9 +326,9 @@ class Dashboard:
             f'<meta http-equiv="refresh" content="{refresh_sec}">'
             "<title>token risk</title></head><body>"
             "<h2>Top 10 safest tokens</h2>"
-            + table(self.top_safest())
+            + table(snap.gold[:10])
             + "<h2>Recent transactions</h2>"
-            + table(self.recent_transactions(100))
+            + table(snap.recent)
             + "</body></html>"
         )
 

@@ -421,14 +421,14 @@ def test_full_pipeline_soak(spark, tmp_path):
                     spark, silver, working_set_rows=10_000,
                     data_ttl_sec=3600.0,
                 )
-                stale_gold = dash._snapshot()["gold"].count()
+                stale_gold = len(dash._snapshot().gold)
             else:
                 # freshness contract: within TTL the dashboard still
                 # serves LAST tick's snapshot until refresh()
-                stale_gold = dash._snapshot()["gold"].count()
+                stale_gold = len(dash._snapshot().gold)
                 assert stale_gold == gold_counts[-1]
             dash.refresh()
-            fresh_gold = dash._snapshot()["gold"].count()
+            fresh_gold = len(dash._snapshot().gold)
             assert fresh_gold == len(expected)
             gold_counts.append(fresh_gold)
             # advance past the watermark horizon (5 s): a tick's dedup
@@ -631,7 +631,7 @@ def test_write_silver_dedup_against_existing(spark, tmp_path):
     from solana_etl_pipeline_spark.pipelines.bronze_silver import build_silver
 
     write_silver(build_silver(empty, ws1), path,
-                 dedup_against_existing=True, spark=spark)
+                 dedup_against_existing=True)
     # run 2: exact redelivery of the same message + one new message
     ws2 = spark.createDataFrame(
         [Row(raw=WS_MSG),
@@ -640,12 +640,30 @@ def test_write_silver_dedup_against_existing(spark, tmp_path):
                              "symbol": "Q"}))]
     )
     write_silver(build_silver(empty, ws2), path,
-                 dedup_against_existing=True, spark=spark)
+                 dedup_against_existing=True)
     back = read_silver(spark, path)
     assert back.count() == 2  # replay NOT duplicated
     assert back.select("mint", "signature").distinct().count() == 2
     # without the flag the replay WOULD duplicate (hazard stays visible)
     write_silver(build_silver(empty, ws1), path)
+    assert read_silver(spark, path).count() == 3
+
+
+def test_write_silver_dedup_rejects_overwrite(spark, tmp_path):
+    """Overwrite with dedup anti-joined the batch against the keys it
+    was about to delete, so silver was silently left empty. Dedup now
+    needs mode='append' and raises before anything is read or
+    written."""
+    ws = spark.createDataFrame([
+        Row(raw=json.dumps({"mint": f"mint{i}", "txType": "buy"}))
+        for i in range(3)
+    ])
+    silver = build_silver(spark.createDataFrame([], "raw string"), ws)
+    path = str(tmp_path / "silver")
+    write_silver(silver, path)
+    with pytest.raises(ValueError, match="mode='append'"):
+        write_silver(silver, path, mode="overwrite",
+                     dedup_against_existing=True)
     assert read_silver(spark, path).count() == 3
 
 
@@ -666,7 +684,7 @@ def test_write_silver_dedup_fails_loudly_on_unreadable_table(spark, tmp_path):
     empty = spark.createDataFrame([], "raw string")
     path = str(tmp_path / "silver")
     write_silver(build_silver(empty, ws), path,
-                 dedup_against_existing=True, spark=spark)
+                 dedup_against_existing=True)
     leaf = os.path.dirname(_parquet_files(path)[0])
     with open(os.path.join(leaf, "part-99999-garbage.parquet"), "wb") as f:
         f.write(b"not a parquet file")
@@ -674,7 +692,7 @@ def test_write_silver_dedup_fails_loudly_on_unreadable_table(spark, tmp_path):
 
     with pytest.raises(Exception, match="part-99999-garbage"):
         write_silver(build_silver(empty, ws), path,
-                     dedup_against_existing=True, spark=spark)
+                     dedup_against_existing=True)
     assert _parquet_files(path) == before
 
 

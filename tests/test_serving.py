@@ -5,17 +5,25 @@ HTTP refresh page)."""
 from __future__ import annotations
 
 import datetime
+import itertools
 import json
 import time
 import urllib.request
 
+import pytest
 from pyspark.sql import Row
 
 from solana_etl_pipeline_spark.pipelines.bronze_silver import (
     build_silver,
     write_silver,
 )
-from solana_etl_pipeline_spark.serving import Dashboard, TTLCache, serve_http
+from solana_etl_pipeline_spark.serving import (
+    CARD_TXNS,
+    RECENT_ROWS,
+    Dashboard,
+    TTLCache,
+    serve_http,
+)
 from tests.test_gold import _wrapped_doc
 
 
@@ -108,37 +116,30 @@ def test_serve_http_renders_overview(spark, tmp_path):
         server.server_close()
 
 
-def test_ttl_cache_releases_one_generation_late_and_is_thread_safe():
-    """Expiry retires the REPLACED value and releases it one refresh
-    LATER (a reader that fetched it just before expiry gets a full TTL
-    cycle to render from it — ADVICE r5), and concurrent gets at
-    expiry run the loader exactly once."""
+def test_ttl_cache_reloads_once_under_concurrent_gets():
+    """Concurrent gets at expiry run the loader exactly once."""
     import threading
 
     now = [0.0]
-    released, loads = [], [0]
-    cache = TTLCache(
-        ttl_sec=10.0, clock=lambda: now[0], releaser=released.append
-    )
+    loads = [0]
+    cache = TTLCache(ttl_sec=10.0, clock=lambda: now[0])
 
     def loader():
         loads[0] += 1
         return f"snap{loads[0]}"
 
     assert cache.get(loader) == "snap1"
-    now[0] = 20.0  # expired: next get reloads; snap1 retires (held)
+    now[0] = 20.0  # expired: the next get reloads
     threads = [
         threading.Thread(target=cache.get, args=(loader,)) for _ in range(8)
     ]
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
+        t.join(timeout=30)
+        assert not t.is_alive()
     assert loads[0] == 2  # one reload total, not one per thread
-    assert released == []  # snap1 retired, still renderable
-    now[0] = 40.0  # second expiry: snap2 retires, snap1 releases
-    assert cache.get(loader) == "snap3"
-    assert released == ["snap1"]
+    assert cache.get(loader) == "snap2"
 
 
 def test_ttl_cache_serves_stale_value_during_refresh():
@@ -368,40 +369,120 @@ def test_views_collect_once_per_snapshot(spark, tmp_path):
     assert "mintNew" in {r["mint"] for r in recent}
 
 
-def test_memo_is_bounded_released_and_copied(spark, tmp_path, monkeypatch):
-    """Unknown mints cannot grow a snapshot's memo past its bound, a
-    released snapshot holds no memo, and mutating a view's result does
-    not change the next one."""
-    from solana_etl_pipeline_spark import serving
-
-    monkeypatch.setattr(serving, "MEMO_ENTRIES", 3)
+def test_unknown_mint_is_empty_and_results_are_copies(spark, tmp_path):
+    """An unknown mint has no card and no rows, and mutating a view's
+    result does not change the next one."""
     silver_path = _silver_fixture(spark, tmp_path)
     dash = Dashboard(spark, silver_path, working_set_rows=1000)
-    snap = dash._snapshot()
     for i in range(6):
         assert dash.token_detail(f"unknown{i}") == {
             "card": None, "transactions": [],
         }
-        assert snap.rows.cache_info().currsize <= 3
 
     top, detail = dash.top_safest(), dash.token_detail("mintConc")
+    recent = dash.recent_transactions()
     want_top = [dict(r) for r in top]
     want_detail = {
         "card": dict(detail["card"]),
         "transactions": [dict(t) for t in detail["transactions"]],
     }
+    want_recent = [dict(r) for r in recent]
     top[0]["mint"] = "mutated"
     top.clear()
     detail["card"]["safety_score"] = -1.0
     detail["transactions"][0]["type"] = "mutated"
+    recent[0]["type"] = "mutated"
     assert dash.top_safest() == want_top
     assert dash.token_detail("mintConc") == want_detail
+    assert dash.recent_transactions() == want_recent
 
-    # the cache releases a replaced snapshot one generation late
-    dash.refresh()
-    dash._snapshot()
-    assert snap.rows.cache_info().currsize
-    dash.refresh()
-    dash._snapshot()
-    assert snap.rows.cache_info().currsize == 0
 
+def test_token_detail_of_a_new_mint_starts_no_spark_job(spark, tmp_path):
+    """Every card is collected in the load: a mint asked for the first
+    time after it is a lookup, not a Spark job."""
+    silver_path = _silver_fixture(spark, tmp_path)
+    dash = Dashboard(spark, silver_path, working_set_rows=1000)
+    dash._snapshot()
+    sc = spark.sparkContext
+    sc.setJobGroup("probe", "first request of each card")
+    try:
+        cards = [dash.token_detail(m) for m in ("mintDiverse", "mintWs")]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("probe")) == []
+    assert [c["card"]["mint"] for c in cards] == ["mintDiverse", "mintWs"]
+
+
+def test_load_leaves_nothing_persisted(spark, tmp_path):
+    """The working set is unpersisted before the load returns; a
+    snapshot holds Python rows only."""
+    silver_path = _silver_fixture(spark, tmp_path)
+    jsc = spark.sparkContext._jsc.sc()
+    before = len(jsc.getRDDStorageInfo())
+    snap = Dashboard(spark, silver_path, working_set_rows=1000)._snapshot()
+    assert len(jsc.getRDDStorageInfo()) == before
+    assert {r["mint"] for r in snap.gold} == {
+        "mintDiverse", "mintConc", "mintWs",
+    }
+
+
+def test_view_depth_limits(spark, tmp_path):
+    """top_safest takes any k (every token when k exceeds their
+    number); recent_transactions serves at most RECENT_ROWS rows."""
+    silver_path = _silver_fixture(spark, tmp_path)
+    dash = Dashboard(spark, silver_path, working_set_rows=1000)
+    assert len(dash.top_safest(k=1000)) == 3
+    assert len(dash.recent_transactions(RECENT_ROWS)) == 9
+    with pytest.raises(ValueError):
+        dash.recent_transactions(RECENT_ROWS + 1)
+    with pytest.raises(ValueError):
+        dash.top_safest(k=-1)
+
+
+def test_card_lists_newest_transactions(spark, tmp_path):
+    """A card lists min(CARD_TXNS, events) of the token's rows, the
+    newest first."""
+    events = {"mintMany": 25, "mintFew": 3}
+    silver = spark.createDataFrame(
+        [
+            Row(
+                description="", type="buy", source="websocket", fee=0,
+                fee_payer="", signature=f"{mint}-{i}", slot=0,
+                ts=datetime.datetime(2024, 1, 1, 0, i),
+                token_name="T", token_symbol="T",
+                from_account=f"a{i}", to_account=f"b{i}",
+                token_amount=float(i), mint=mint, token_standard="",
+            )
+            for mint, n in events.items()
+            for i in range(n)
+        ]
+    )
+    path = str(tmp_path / "silver")
+    write_silver(silver, path, mode="overwrite")
+    dash = Dashboard(spark, path, working_set_rows=1000)
+    for mint, n in events.items():
+        txns = dash.token_detail(mint)["transactions"]
+        stamps = sorted(
+            (datetime.datetime(2024, 1, 1, 0, i) for i in range(n)),
+            reverse=True,
+        )
+        assert len(txns) == min(CARD_TXNS, n)
+        assert [t["ts"] for t in txns] == stamps[:CARD_TXNS]
+
+
+def test_overview_reads_one_snapshot(spark, tmp_path, monkeypatch):
+    """An overview page renders both tables from one load, even when
+    the snapshot expires between them."""
+    silver_path = _silver_fixture(spark, tmp_path)
+    ticks = itertools.count(step=1000.0)
+    dash = Dashboard(
+        spark, silver_path, working_set_rows=1000,
+        data_ttl_sec=1.0, clock=lambda: next(ticks),
+    )
+    loads = []
+    load = dash._load
+    monkeypatch.setattr(dash, "_load", lambda: loads.append(1) or load())
+    dash.overview_html()
+    assert len(loads) == 1
+    dash.overview_text()
+    assert len(loads) == 2
