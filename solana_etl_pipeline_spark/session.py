@@ -18,8 +18,10 @@ shuffle-partition count is set where the session is built: the
 ``build_session`` argument, else the machine's core count (the
 reference sizes its worker pool from the CPU count). A session the
 engine did not build keeps its owner's count; ``apply_runtime_confs``
-never touches it. Stateful stream starts size their own state
-partitions (``streaming.ingest.state_partitions``).
+never touches it. The package's stateful stream starts size their
+own state partitions from the plan they start
+(``streaming.ingest.state_partitions``): 1 for a stream whose only
+state is dedup keys, ``min(defaultParallelism, 8)`` otherwise.
 """
 
 from __future__ import annotations
@@ -136,8 +138,10 @@ def rocksdb_state_store_confs(
     on top of the latest snapshot. None leaves the build default.
 
     **Checkpoint-bytes capacity guidance** (measured at the 4 M-event
-    churn point, 24 micro-batches, ``tools/state_store_cadence.py``,
-    log ``tools/logs/state_store_cadence_r15.log``, 2026-08-16):
+    churn point, 24 micro-batches, probe
+    ``git show 049cff9:tools/state_store_cadence.py``, log
+    ``git show dfebfb1:tools/logs/state_store_cadence_r15.log``,
+    2026-08-16):
     within the retention window (``minBatchesToRetain``, default 100
     versions) checkpoint bytes decompose as
 

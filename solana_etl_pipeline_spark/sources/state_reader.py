@@ -25,7 +25,7 @@ At 100 TB this is the ops layer the capacity model needs:
 * ``read_state_changes`` — the change feed (inserts/updates/deletes
   per batch) when the checkpoint was written with RocksDB changelog
   checkpointing: the eviction-tombstone flow measured by
-  ``tools/state_store_cadence.py``, queryable per batch.
+  ``git show 049cff9:tools/state_store_cadence.py``, queryable per batch.
 
 Provider-transparent: the same reads work on HDFS-backed and RocksDB
 checkpoints (pinned by ``tests/test_state_reader.py``); the change
@@ -94,7 +94,8 @@ def read_state_changes(
     changelog checkpointing (the engine's posture —
     :func:`~solana_etl_pipeline_spark.session.rocksdb_state_store_confs`);
     per-batch deletes are the watermark-eviction tombstones whose
-    checkpoint cost ``tools/state_store_cadence.py`` measures.
+    checkpoint cost ``git show 049cff9:tools/state_store_cadence.py``
+    measured.
     """
     reader = (
         spark.read.format("statestore")

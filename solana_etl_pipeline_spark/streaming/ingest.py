@@ -22,6 +22,8 @@ windows and an ``applyInPandasWithState`` custom stateful operator.
 Scale posture: streaming state (dedup keys, open windows) is bounded by
 the watermark horizon; keys are hash-partitioned across executors by
 the state store, so throughput scales with the cluster, not the driver.
+The drain helpers size that partitioning from the plan they start
+(:func:`state_partitions`): a dedup-only stream gets one partition.
 """
 
 from __future__ import annotations
@@ -315,34 +317,72 @@ def stateful_running_totals_tws(stream: DataFrame) -> DataFrame:
     )
 
 
-#: Cap on the state partitions of a stream this module starts. A
-#: stateful stage opens and commits one state store per shuffle
-#: partition on every micro-batch, and the checkpoint fixes that count
-#: for the query's lifetime, so small-state drains pay for every extra
-#: partition in fixed per-batch cost: the registry's single-batch
-#: drains went from 4.3 s to 2.0 s at sf0.1 going from 32 partitions
-#: to 8.
+#: Cap on the state partitions of a stream this module starts whose
+#: plan keeps keyed state other than dedup keys. A stateful stage opens
+#: and commits one state store per shuffle partition on every
+#: micro-batch, and the checkpoint fixes that count for the query's
+#: lifetime, so small-state drains pay for every extra partition in
+#: fixed per-batch cost. Aggregating drains keep more than one because
+#: merging their state is compute-bound: at sf0.1 on local[4], warm,
+#: the registry's session-window drain (95k sessions) took 1.60-1.93 s
+#: at 4 partitions and 1.87-2.08 s at 1.
+#:
+#: A dedup-only stream gets 1 partition. Its state commit is then about
+#: 30 ms per micro-batch instead of about 300 ms at 4, and 1 partition
+#: stays the cheaper choice, in batch time and core-seconds, up to about
+#: 2e5 state rows per partition (1,000-row micro-batches, local[4]). At
+#: 4e5 rows its batches take 450-660 ms against 420-445 ms at 4
+#: partitions, and at 1.6e6 rows 1.45 s against 0.82 s, though it still
+#: uses fewer core-seconds (2.25 against 2.62 per batch).
 MAX_STATE_PARTITIONS = 8
+
+# Analyzed-plan nodes of streaming dedup, and the markers of every other
+# operator that keeps keyed state (aggregates and session windows,
+# stream-stream joins, the *WithState / TransformWithState* families).
+_DEDUP_NODES = frozenset({"Deduplicate", "DeduplicateWithinWatermark"})
+_KEYED_STATE_NODES = frozenset({"Aggregate", "Join"})
+
+
+def _state_partition_count(df: DataFrame) -> int:
+    names, stack = set(), [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        names.add(node.nodeName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    if names & _DEDUP_NODES and not any(
+        n in _KEYED_STATE_NODES or "WithState" in n for n in names
+    ):
+        return 1
+    return min(df.sparkSession.sparkContext.defaultParallelism,
+               MAX_STATE_PARTITIONS)
 
 
 @contextlib.contextmanager
-def state_partitions(spark: SparkSession):
-    """Size the state partitions of queries started inside the block
-    to ``min(defaultParallelism, MAX_STATE_PARTITIONS)``.
+def state_partitions(df: DataFrame):
+    """Size the state partitions of the query that starts ``df`` inside
+    the block, from ``df``'s analyzed plan.
+
+    A plan whose only stateful operators are streaming dedup
+    (``Deduplicate`` / ``DeduplicateWithinWatermark``) gets 1 state
+    partition; any other plan gets
+    ``min(defaultParallelism, MAX_STATE_PARTITIONS)``.
 
     The shuffle-partition count is read when a streaming query starts
-    and written to its checkpoint; the session's previous value is
-    restored on exit. A query restarted from an existing checkpoint
-    keeps the checkpoint's count whatever is set here. A stream whose
-    state outgrows a few partitions is started outside these helpers,
-    under a count sized to its keyspace.
+    and written to its checkpoint. It is set session-wide for the
+    duration of the block, so a query that another thread starts on the
+    same session in that window gets it too; the session's previous
+    value is restored on exit, also when ``start()`` raises. A query
+    restarted from an existing checkpoint keeps the checkpoint's count
+    whatever is set here. A stream whose state outgrows a few
+    partitions, or a dedup stream expected to hold more than about
+    2e5 keys (see ``MAX_STATE_PARTITIONS``), is started outside these
+    helpers, under a count sized to its keyspace.
     """
+    spark = df.sparkSession
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    spark.conf.set(
-        key,
-        str(min(spark.sparkContext.defaultParallelism, MAX_STATE_PARTITIONS)),
-    )
+    spark.conf.set(key, str(_state_partition_count(df)))
     try:
         yield
     finally:
@@ -382,7 +422,7 @@ def run_available_now(
     (T5); this helper is for single-shot in-memory assertions only.
     """
     name = query_name or f"q_{uuid.uuid4().hex[:12]}"
-    with state_partitions(result.sparkSession):
+    with state_partitions(result):
         query = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -407,7 +447,7 @@ def foreach_batch_refresh(
     with exactly-once replay protection from the checkpoint (a retried
     batch re-invokes refresh with the same batch_id — make it
     idempotent on that id)."""
-    with state_partitions(stream.sparkSession):
+    with state_partitions(stream):
         query = (
             stream.writeStream.foreachBatch(refresh)
             .option("checkpointLocation", checkpoint_dir)
@@ -431,7 +471,7 @@ def run_available_now_to_parquet(
     harness for idempotence/restart tests and the real bronze→silver
     landing pattern.
     """
-    with state_partitions(result.sparkSession):
+    with state_partitions(result):
         query = (
             result.writeStream.format("parquet")
             .outputMode("append")

@@ -360,27 +360,26 @@ def test_full_pipeline_soak(spark, tmp_path):
             normalize_websocket_messages(raw, json_col="value")
             .withColumn("ingest_ts", F.current_timestamp())
         )
-        silver_writer = (
-            deduplicated_within_watermark(
-                silver_stream,
-                keys=["mint", "signature"],
-                ts_col="ingest_ts",
-                # 5 s horizon: wide enough that only a >10 s stall
-                # between the two copies' micro-batches could expire
-                # the first copy's dedup state before the redelivery
-                # arrives (at 2 s a ~4 s GC pause sufficed), narrow
-                # enough that eviction still happens within the soak
-                watermark="5 seconds",
+        deduped = deduplicated_within_watermark(
+            silver_stream,
+            keys=["mint", "signature"],
+            ts_col="ingest_ts",
+            # 5 s horizon: wide enough that only a >10 s stall
+            # between the two copies' micro-batches could expire
+            # the first copy's dedup state before the redelivery
+            # arrives (at 2 s a ~4 s GC pause sufficed), narrow
+            # enough that eviction still happens within the soak
+            watermark="5 seconds",
+        ).drop("ingest_ts")
+        with state_partitions(deduped):
+            q_silver = (
+                deduped.writeStream.format("parquet")
+                .outputMode("append")
+                .option("path", silver)
+                .option("checkpointLocation", str(tmp_path / "ckptB"))
+                .trigger(processingTime="500 milliseconds")
+                .start()
             )
-            .drop("ingest_ts")
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", silver)
-            .option("checkpointLocation", str(tmp_path / "ckptB"))
-            .trigger(processingTime="500 milliseconds")
-        )
-        with state_partitions(spark):
-            q_silver = silver_writer.start()
 
         def silver_mints() -> set:
             try:
@@ -552,10 +551,10 @@ def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
 
     def drain(dedup_fn, name: str):
         out = str(tmp_path / f"out_{name}")
-        with state_partitions(spark):
+        deduped = stream(dedup_fn)
+        with state_partitions(deduped):
             q = (
-                stream(dedup_fn)
-                .writeStream.format("parquet")
+                deduped.writeStream.format("parquet")
                 .outputMode("append")
                 .option("path", out)
                 .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))

@@ -160,7 +160,7 @@ def test_state_reader_provider_transparent(spark, tmp_path):
 def test_state_change_feed_shows_inserts_and_evictions(spark, tmp_path):
     """RocksDB + changelog checkpointing: the change feed exposes the
     per-batch inserts AND the watermark-eviction tombstones (the churn
-    cost `tools/state_store_cadence.py` prices)."""
+    cost `git show 049cff9:tools/state_store_cadence.py` priced)."""
     landing = str(tmp_path / "landing")
     os.makedirs(landing)
     # batch 0: two keys at hour 0; batch 1: one key 3 hours later —

@@ -198,12 +198,9 @@ def _state_partition_counts(query) -> set[int]:
 
 
 def test_drain_helper_sizes_state_stores(spark, tmp_path):
-    """A stateful stream started by the package gets
-    min(defaultParallelism, MAX_STATE_PARTITIONS) state partitions,
-    and the session's own count is back afterwards."""
-    from solana_etl_pipeline_spark.streaming.ingest import (
-        MAX_STATE_PARTITIONS,
-    )
+    """A stream whose only stateful operator is streaming dedup gets 1
+    state partition from the package's drain helpers, and the
+    session's own count is back afterwards."""
     from tests.test_live_socket import _msg
 
     landing = tmp_path / "landing"
@@ -216,9 +213,105 @@ def test_drain_helper_sizes_state_stores(spark, tmp_path):
             str(tmp_path / "ckpt"),
         )
         assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-    assert _state_partition_counts(query) == {
+    assert _state_partition_counts(query) == {1}
+
+
+def test_drain_helper_keeps_aggregate_state_partitions(spark, tmp_path):
+    """A stream that aggregates after its dedup keeps
+    min(defaultParallelism, MAX_STATE_PARTITIONS) state partitions for
+    both of its stateful operators."""
+    from solana_etl_pipeline_spark.sources.state_reader import (
+        read_state_metadata,
+    )
+    from solana_etl_pipeline_spark.streaming.ingest import (
+        MAX_STATE_PARTITIONS,
+    )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    rows = [_event(i, i % 3, f"2024-01-01T10:{i:02d}:00.000Z") for i in range(6)]
+    _write_landing_file(str(landing / "f1.json"), rows, time.time() - 5)
+    ckpt = str(tmp_path / "ckpt")
+    with _session_partitions(spark, "7"):
+        run_available_now(
+            hourly_window_counts(
+                deduplicated(
+                    landing_stream(spark, str(landing), EVENTS),
+                    ["user_id", "event_id"],
+                )
+            ),
+            ckpt,
+            "complete",
+        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    meta = read_state_metadata(spark, ckpt).collect()
+    assert {r.operatorName for r in meta} >= {"dedupe"}
+    assert len({r.operatorId for r in meta}) == 2
+    assert {r.numPartitions for r in meta} == {
         min(spark.sparkContext.defaultParallelism, MAX_STATE_PARTITIONS)
     }
+
+
+def test_state_partition_count_follows_the_plan(spark, tmp_path):
+    """Only a plan whose stateful operators are all streaming dedup gets
+    1 state partition; aggregates, joins, *WithState operators and
+    stateless plans keep the capped core count."""
+    from solana_etl_pipeline_spark.streaming.ingest import (
+        MAX_STATE_PARTITIONS,
+        _state_partition_count,
+        deduplicated_within_watermark,
+    )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    stream = landing_stream(spark, str(landing), EVENTS)
+    dedup = deduplicated(stream, ["user_id", "event_id"])
+    other = stream.select("event_id", F.col("value").alias("v2"))
+    capped = min(spark.sparkContext.defaultParallelism, MAX_STATE_PARTITIONS)
+    plans = {
+        "dedup": (dedup, 1),
+        "dedup within watermark, union": (
+            deduplicated_within_watermark(stream.unionByName(stream),
+                                          ["user_id", "event_id"]),
+            1,
+        ),
+        "dedup + aggregate": (hourly_window_counts(dedup), capped),
+        "dedup + join": (dedup.join(other, "event_id"), capped),
+        "dedup + WithState": (stateful_running_totals(dedup), capped),
+        "stateless": (stream.filter("value > 0"), capped),
+    }
+    got = {name: _state_partition_count(df) for name, (df, _) in plans.items()}
+    assert got == {name: n for name, (_, n) in plans.items()}
+
+
+def test_state_partitions_restored_when_start_fails(spark, tmp_path):
+    """The session's partition count comes back when ``start()`` raises:
+    a memory-sink drain restarted on an existing checkpoint is refused
+    by Spark at start."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _write_landing_file(
+        str(landing / "f1.json"),
+        [_event(1, 1, "2024-01-01T10:00:00.000Z")],
+        time.time() - 5,
+    )
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        return run_available_now(
+            deduplicated(
+                landing_stream(spark, str(landing), EVENTS),
+                ["user_id", "event_id"],
+            ),
+            ckpt,
+            "append",
+        )
+
+    with _session_partitions(spark, "7"):
+        drain()
+        with pytest.raises(Exception, match="recover"):
+            drain()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
 
 
 def test_checkpoint_written_under_32_partitions_restarts(spark, tmp_path):
