@@ -2,6 +2,10 @@
 
 Re-expresses the reference's 374-line ``clean_data.py`` transform layer
 as declarative DataFrame compositions (SURVEY.md §3.3, §7 Step 5).
+``write_silver`` replaces the silver table with a batch; only the
+streaming drain (``streaming.ingest``) appends to it, and its dedup
+state is silver's one cross-run dedup. Compaction is
+``sources.sinks.compact_parquet_dir``.
 """
 
 from solana_etl_pipeline_spark.pipelines.bronze_silver import (
@@ -14,7 +18,6 @@ from solana_etl_pipeline_spark.pipelines.gold import (
     refresh_gold,
     top_tokens,
 )
-from solana_etl_pipeline_spark.pipelines.maintenance import compact_parquet
 from solana_etl_pipeline_spark.pipelines.normalize import (
     dispatch_and_flatten,
     normalize_websocket_messages,
@@ -23,7 +26,6 @@ from solana_etl_pipeline_spark.pipelines.normalize import (
 __all__ = [
     "build_risk_gold",
     "build_silver",
-    "compact_parquet",
     "dispatch_and_flatten",
     "normalize_websocket_messages",
     "read_silver",

@@ -1,74 +1,14 @@
-"""Table maintenance: small-file compaction.
+"""Table maintenance: restating closed day partitions.
 
-Streaming sinks write one file per micro-batch per partition; at a 5 s
-trigger that is ~17k files/day/partition — the classic small-files
-problem that degrades every downstream scan (footer reads dominate).
-Compaction rewrites a table's files at a target size; run it as a
-periodic job against closed partitions (the reference's purge loop,
-``cleandata1.py:70-72``, reborn as maintenance instead of data loss).
+A corrected or late-arriving day is re-materialized in place of the
+old one, never appended next to it (the reference's delete-then-
+reupload loop, ``cleandata1.py:62-77``). Small-file compaction is
+``sources.sinks.compact_parquet_dir``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def plan_target_files(
-    spark: SparkSession, path: str, target_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """Estimate the post-compaction file count from the table's total
-    on-disk size (≥1)."""
-    # Hadoop FS API via the JVM: works for any supported filesystem
-    jvm = spark._jvm
-    jsc = spark._jsc
-    conf = jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    total = fs.getContentSummary(p).getLength()
-    return max(1, int(total // target_bytes) + (1 if total % target_bytes else 0))
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    partition_cols: list[str] | None = None,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite ``path`` into ``out_path`` with ~``target_bytes`` files.
-
-    Writes to a NEW location then lets the caller swap directories —
-    never compacts in place (a failed in-place rewrite loses data).
-    Returns the target file count used.
-    """
-    n = plan_target_files(spark, path, target_bytes)
-    df = spark.read.parquet(path)
-    if not partition_cols:
-        df.repartition(n).write.mode("overwrite").parquet(out_path)
-        return n
-    # Partitioned: hash-partitioning on ONLY the partition columns
-    # would collapse each partition value into a single task/file —
-    # one 50 GB day rewritten by one task, target_bytes ignored
-    # (review r15). Spread each partition value over
-    # ceil(n / n_partition_values) deterministic shards instead, so
-    # total files ≈ n and every value's rewrite parallelizes. (Sizing
-    # is by the GLOBAL average — per-leaf byte sizing is
-    # sinks.compact_parquet_dir's job.)
-    pcols = [F.col(c) for c in partition_cols]
-    n_values = max(1, df.select(*pcols).distinct().count())
-    shards = max(1, -(-n // n_values))  # ceil
-    sharded = df.withColumn(
-        "_shard", F.pmod(F.xxhash64(*df.columns), F.lit(shards))
-    )
-    (
-        sharded.repartition(n, *pcols, F.col("_shard"))
-        .drop("_shard")
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .parquet(out_path)
-    )
-    return n
 
 
 def overwrite_day_partitions(

@@ -245,45 +245,73 @@ def compact_parquet_dir(
     rewrites in one job: ``repartition(n)`` for plain compaction or a
     ``repartitionByRange`` + ``sortWithinPartitions`` when ``sort_cols``
     is given, laying rows out for min/max row-group skipping on those
-    columns.
+    columns. Listing, sizing, renames and deletes go through the
+    path's Hadoop ``FileSystem``, so any filesystem Spark writes to
+    (a ``file://`` URI included) compacts the same way.
 
     Hive-partitioned layouts (``col=value`` subdirectories) are
     compacted leaf-by-leaf, preserving the partition tree (so
     ``sort_cols`` must name data columns, not partition columns).
     Each leaf rewrite lands in a sibling temp dir and swaps in via
-    rename; a failed swap restores the original directory. The
+    rename; a failed rewrite or swap leaves the original directory in
+    place, and a rename or delete that reports failure raises. The
     two-rename window is small but NOT atomic for concurrent
     readers — run this in the table's maintenance window; true
     reader-transparent compaction needs a table format whose commit
     is a metadata pointer swap, which plain parquet dirs don't have.
+
+    A streaming file sink's output (``<path>/_spark_metadata`` exists)
+    raises ``ValueError`` before anything is written: the sink's log
+    names every file it committed, so a rewrite outside the stream
+    cannot be made consistent with it, and the table would fail to
+    read after the stream's next commit.
     Returns the output file count (0 for an empty directory).
     """
     import math
-    import shutil
     import uuid
-    from pathlib import Path
 
+    Path = spark._jvm.org.apache.hadoop.fs.Path
     src = Path(path)
-    # skip dot/underscore-prefixed siblings: those are this function's
-    # own in-flight temp/backup dirs (plus Spark markers like
-    # _SUCCESS), which Spark's file listing and partition discovery
-    # ignore — recursing into one would re-compact half-swapped state
+    fs = src.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(Path(src, "_spark_metadata")):
+        raise ValueError(
+            f"{path} is a streaming file sink's output: its "
+            "_spark_metadata log names every file, so compacting it "
+            "outside the stream would make the table unreadable"
+        )
+
+    def listing(dirs: bool) -> dict:
+        # name -> status, skipping dot/underscore-prefixed names: this
+        # function's own in-flight temp/backup dirs (plus Spark markers
+        # like _SUCCESS), which Spark's file listing and partition
+        # discovery ignore — recursing into one would re-compact
+        # half-swapped state
+        out = {}
+        for st in fs.listStatus(src):
+            name = st.getPath().getName()
+            if st.isDirectory() == dirs and name[0] not in "._":
+                out[name] = st
+        return out
+
     part_dirs = sorted(
-        d
-        for d in src.iterdir()
-        if d.is_dir() and "=" in d.name and d.name[0] not in "._"
+        st.getPath().toString()
+        for name, st in listing(dirs=True).items()
+        if "=" in name
     )
     if part_dirs:
         return sum(
-            compact_parquet_dir(spark, str(d), target_file_bytes, sort_cols)
+            compact_parquet_dir(spark, d, target_file_bytes, sort_cols)
             for d in part_dirs
         )
-    files = list(src.glob("*.parquet"))
-    if not files:
+    sizes = [
+        st.getLen()
+        for name, st in listing(dirs=False).items()
+        if name.endswith(".parquet")
+    ]
+    if not sizes:
         return 0
-    total = sum(f.stat().st_size for f in files)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(str(src))
+    n_out = max(1, math.ceil(sum(sizes) / target_file_bytes))
+    df = spark.read.parquet(src.toString())
     if sort_cols:
         df = df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
             *sort_cols
@@ -295,31 +323,37 @@ def compact_parquet_dir(
     # crash mid-swap can never be read as data or parsed as a phantom
     # hive partition (for a leaf like 'p=0', a visible sibling
     # 'p=0.precompact-x' would register as partition value
-    # '0.precompact-x' and silently duplicate the leaf's rows)
+    # '0.precompact-x' and silently duplicate the leaf's rows). The
+    # run id makes the backup name unique: a stale backup from a
+    # crashed run can never collide with (and so never block) a later
+    # compaction.
     run_id = uuid.uuid4().hex[:8]
-    tmp = src.with_name(f".{src.name}.compact-{run_id}")
+    tmp = Path(src.getParent(), f".{src.getName()}.compact-{run_id}")
+    backup = Path(src.getParent(), f".{src.getName()}.precompact-{run_id}")
     try:
-        df.write.mode("overwrite").parquet(str(tmp))
-        # unique backup name: a stale backup from a crashed run can
-        # never collide with (and so never block) a later compaction
-        backup = src.with_name(f".{src.name}.precompact-{run_id}")
-        src.rename(backup)
+        df.write.mode("overwrite").parquet(tmp.toString())
+        _rename(fs, src, backup)
         try:
-            tmp.rename(src)
+            _rename(fs, tmp, src)
         except BaseException:
-            backup.rename(src)  # restore the original table
+            _rename(fs, backup, src)  # restore the original table
             raise
     except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
+        fs.delete(tmp, True)  # False when the rewrite never created it
         raise
-    try:
-        shutil.rmtree(backup)
-    except OSError as exc:  # pragma: no cover - environment-dependent
+    if not fs.delete(backup, True):
         # data already swapped in and the leftover is invisible to
         # Spark (dot prefix) — but leaking disk silently is how stores
-        # fill up, so surface it instead of ignore_errors
+        # fill up, so surface it
         raise RuntimeError(
             f"compaction swapped in successfully but could not remove "
-            f"the backup {backup}; remove it manually"
-        ) from exc
-    return len(list(src.glob("*.parquet")))
+            f"the backup {backup.toString()}; remove it manually"
+        )
+    return sum(name.endswith(".parquet") for name in listing(dirs=False))
+
+
+def _rename(fs, src, dst) -> None:
+    """Hadoop ``FileSystem.rename`` reports most failures by returning
+    false, not by throwing; turn that into an error."""
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src.toString()} to {dst.toString()}")

@@ -1,19 +1,16 @@
-"""Gold-layer and maintenance tests: the full medallion path
-bronze → silver → gold over reference-true columns, plus small-file
-compaction and malformed-record tolerance.
+"""Gold-layer tests: the full medallion path bronze → silver → gold
+over reference-true columns, plus malformed-record tolerance.
 """
 
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.pipelines.bronze_silver import (
     build_silver,
-    silver_schema_columns,
     write_silver,
 )
 from solana_etl_pipeline_spark.pipelines.gold import (
@@ -21,8 +18,7 @@ from solana_etl_pipeline_spark.pipelines.gold import (
     refresh_gold,
     top_tokens,
 )
-from solana_etl_pipeline_spark.pipelines.maintenance import compact_parquet
-from solana_etl_pipeline_spark.schemas import EVENTS
+from solana_etl_pipeline_spark.schemas import CLEANED_TRANSACTIONS, EVENTS
 from solana_etl_pipeline_spark.sources.sinks import read_json_dir
 
 
@@ -72,7 +68,7 @@ def test_bronze_to_gold_end_to_end(spark, tmp_path):
     )
     silver = build_silver(helius_raw, ws_raw)
     silver_path = str(tmp_path / "silver")
-    write_silver(silver, silver_path, mode="overwrite")
+    write_silver(silver, silver_path)
 
     gold_path = str(tmp_path / "gold")
     gold = refresh_gold(spark, silver_path, gold_path)
@@ -101,27 +97,6 @@ def test_gold_token_name_enrichment(spark):
     assert rows["zz"] == "Unknown"  # dim miss -> default (J1)
 
 
-def test_compact_parquet(spark, tmp_path):
-    src = str(tmp_path / "src")
-    # 40 tiny files
-    spark.range(4000).withColumn("v", F.col("id") * 2).repartition(
-        40
-    ).write.parquet(src)
-    n_before = len(
-        [f for f in os.listdir(src) if f.endswith(".parquet")]
-    )
-    assert n_before >= 30
-    out = str(tmp_path / "compacted")
-    compact_parquet(spark, src, out, target_bytes=64 * 1024 * 1024)
-    n_after = len([f for f in os.listdir(out) if f.endswith(".parquet")])
-    assert n_after <= 2
-    assert spark.read.parquet(out).count() == 4000
-    assert (
-        spark.read.parquet(out).agg(F.sum("v")).collect()[0][0]
-        == spark.read.parquet(src).agg(F.sum("v")).collect()[0][0]
-    )
-
-
 def test_dropmalformed_json_rows(spark, tmp_path):
     """P12: corrupt records drop instead of crashing the batch."""
     landing = tmp_path / "landing"
@@ -144,7 +119,7 @@ def test_gold_prefers_real_name_over_empty_pad(spark):
     "" from a lexicographically smaller signature)."""
     import datetime as _dt
 
-    cols = silver_schema_columns()
+    cols = CLEANED_TRANSACTIONS.fieldNames()
 
     def row(sig, name, ts):
         base = {c: "" for c in cols}
@@ -164,43 +139,3 @@ def test_gold_prefers_real_name_over_empty_pad(spark):
     )
     gold = build_risk_gold(silver)
     assert {r.token_name for r in gold.collect()} == {"RealName"}
-
-
-def test_compact_parquet_partitioned_parallelizes_each_value(
-    spark, tmp_path
-):
-    """Review r15: with partition_cols, hash-partitioning on only the
-    partition columns collapsed each value to ONE task/file; each
-    value must instead spread over multiple shards when the byte
-    target asks for more files than there are values."""
-    src = str(tmp_path / "psrc")
-    (
-        spark.range(20000)
-        .withColumn("day", (F.col("id") % 2).cast("string"))
-        .withColumn("v", F.col("id") * 2)
-        .repartition(16)
-        .write.partitionBy("day")
-        .parquet(src)
-    )
-    out = str(tmp_path / "pout")
-    # tiny target -> many files; 2 partition values must not cap the
-    # output at 2 files
-    n = compact_parquet(
-        spark, src, out, partition_cols=["day"], target_bytes=16 * 1024
-    )
-    assert n > 2
-    per_day = {}
-    for day in ("0", "1"):
-        files = [
-            f
-            for f in os.listdir(os.path.join(out, f"day={day}"))
-            if f.endswith(".parquet")
-        ]
-        per_day[day] = len(files)
-    assert all(c > 1 for c in per_day.values()), per_day
-    back = spark.read.parquet(out)
-    assert back.count() == 20000
-    assert (
-        back.agg(F.sum("v")).collect()[0][0]
-        == spark.read.parquet(src).agg(F.sum("v")).collect()[0][0]
-    )

@@ -14,9 +14,9 @@ from pyspark.sql import functions as F
 from solana_etl_pipeline_spark.pipelines.bronze_silver import (
     build_silver,
     read_silver,
-    silver_schema_columns,
     write_silver,
 )
+from solana_etl_pipeline_spark.schemas import CLEANED_TRANSACTIONS
 from solana_etl_pipeline_spark.sources.sinks import (
     read_parquet_merged,
     write_parquet,
@@ -74,7 +74,7 @@ def test_build_silver_merges_and_dedups(spark):
     # websocket rows carry a content-derived signature so the
     # (mint, signature) dedup cannot collapse distinct ws events
     assert sigs[2].startswith("ws:") and len(sigs[2]) == 3 + 64
-    assert silver.columns == silver_schema_columns()
+    assert silver.columns == CLEANED_TRANSACTIONS.fieldNames()
 
 
 def test_write_silver_partitions_and_prunes(spark, tmp_path):
@@ -82,7 +82,7 @@ def test_write_silver_partitions_and_prunes(spark, tmp_path):
     ws_raw = spark.createDataFrame([Row(raw=WS_MSG)])
     silver = build_silver(helius_raw, ws_raw)
     out = str(tmp_path / "silver")
-    write_silver(silver, out, mode="overwrite")
+    write_silver(silver, out)
 
     back = read_silver(spark, out)
     assert back.count() == 3
@@ -147,9 +147,23 @@ def test_broadcast_enrich_defaults(spark):
     assert out == {"a": "Alpha", "b": "Unknown"}
 
 
+def _parquet_files(path: str) -> list[str]:
+    return sorted(
+        os.path.join(root, name)
+        for root, _, names in os.walk(path)
+        for name in names
+        if name.endswith(".parquet")
+    )
+
+
+def _file_bytes(directory) -> dict:
+    return {f.name: f.read_bytes() for f in directory.iterdir()}
+
+
 def test_compact_parquet_dir_reduces_files_keeps_rows(spark, tmp_path):
     """Small-files compaction: 32 tiny files -> few sized files, rows
-    and values identical, swap is atomic (no .compact-* residue)."""
+    and values identical, and no temp or backup sibling
+    (``.many.compact-<id>`` / ``.many.precompact-<id>``) left."""
     from solana_etl_pipeline_spark.sources.sinks import compact_parquet_dir
 
     out = str(tmp_path / "many")
@@ -163,8 +177,7 @@ def test_compact_parquet_dir_reduces_files_keeps_rows(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == 2000
     assert back.agg(F.sum("v")).collect()[0][0] == 2000 * 1999
-    assert not list(tmp_path.glob("many.compact-*"))
-    assert not list(tmp_path.glob("many.precompact"))
+    assert not list(tmp_path.glob(".many.*"))
 
 
 def test_compact_parquet_dir_sorted_layout(spark, tmp_path):
@@ -198,28 +211,148 @@ def test_compact_parquet_dir_sorted_layout(spark, tmp_path):
 
 def test_compact_parquet_dir_preserves_partition_tree(spark, tmp_path):
     """Hive layouts compact leaf-by-leaf: partition dirs survive, each
-    leaf collapses to one file, values round-trip."""
+    leaf is sized from its own bytes, values round-trip. Three inputs:
+    a large target (one file per leaf); a small target (several files
+    in every leaf, so no partition value is rewritten by one task);
+    and the tree named by a ``file://`` URI, which the Hadoop
+    FileSystem lists and renames like a plain path."""
     from solana_etl_pipeline_spark.sources.sinks import compact_parquet_dir
 
-    out = str(tmp_path / "part")
-    df = spark.range(0, 1000).withColumn("p", F.col("id") % 3)
-    df.repartition(8).write.partitionBy("p").parquet(out)
-    assert all(
-        len(list(d.glob("*.parquet"))) > 1
-        for d in (tmp_path / "part").glob("p=*")
-    )
+    def leaf_files(out) -> dict:
+        return {
+            d.name: list(d.glob("*.parquet")) for d in sorted(out.glob("p=*"))
+        }
 
-    n_after = compact_parquet_dir(spark, out, target_file_bytes=1 << 30)
-    assert n_after == 3  # one file per leaf
-    leaves = sorted(d.name for d in (tmp_path / "part").glob("p=*"))
-    assert leaves == ["p=0", "p=1", "p=2"]
-    back = spark.read.parquet(out)
-    assert back.count() == 1000
-    assert back.select("p").distinct().count() == 3
+    def tree(name: str):
+        out = tmp_path / name
+        (
+            spark.range(0, 20000)
+            .withColumn("p", F.col("id") % 3)
+            .withColumn("v", F.col("id") * 2)
+            .repartition(8)
+            .write.partitionBy("p")
+            .parquet(str(out))
+        )
+        assert all(len(f) > 1 for f in leaf_files(out).values())
+        return out
+
+    def assert_round_trip(out):
+        assert list(leaf_files(out)) == ["p=0", "p=1", "p=2"]
+        assert not list(out.glob(".p=*"))
+        back = spark.read.parquet(str(out))
+        got = back.agg(F.count("*"), F.sum("v"), F.countDistinct("p")).first()
+        assert tuple(got) == (20000, 20000 * 19999, 3)
+
+    big = tree("big")
+    assert compact_parquet_dir(spark, str(big), target_file_bytes=1 << 30) == 3
+    assert all(len(f) == 1 for f in leaf_files(big).values())
+    assert_round_trip(big)
+
+    small = tree("small")
+    n_small = compact_parquet_dir(
+        spark, str(small), target_file_bytes=16 * 1024
+    )
+    per_leaf = [len(f) for f in leaf_files(small).values()]
+    assert all(n > 1 for n in per_leaf), per_leaf
+    assert n_small == sum(per_leaf)
+    assert_round_trip(small)
+
+    uri = tree("uri")
+    assert uri.as_uri().startswith("file://")
+    n_uri = compact_parquet_dir(
+        spark, uri.as_uri(), target_file_bytes=1 << 30
+    )
+    assert n_uri == 3
+    assert_round_trip(uri)
+
     # empty dir: no-op, returns 0
     empty = tmp_path / "empty"
     empty.mkdir()
     assert compact_parquet_dir(spark, str(empty)) == 0
+
+
+def test_compact_parquet_dir_failed_rewrite_keeps_the_leaf(spark, tmp_path):
+    """A leaf whose rewrite fails (a corrupt part file) raises, keeps
+    its files byte-for-byte, and leaves no temp or backup sibling."""
+    from solana_etl_pipeline_spark.sources.sinks import compact_parquet_dir
+
+    out = tmp_path / "part"
+    (
+        spark.range(0, 1000)
+        .withColumn("p", F.col("id") % 2)
+        .repartition(4)
+        .write.partitionBy("p")
+        .parquet(str(out))
+    )
+    leaf = out / "p=1"
+    (leaf / "part-99999-garbage.parquet").write_bytes(b"not a parquet file")
+    before = _file_bytes(leaf)
+
+    with pytest.raises(Exception, match="part-99999-garbage"):
+        compact_parquet_dir(spark, str(out), target_file_bytes=1 << 30)
+    assert _file_bytes(leaf) == before
+    assert not list(out.glob(".p=*"))
+
+
+def test_compact_parquet_dir_failed_swap_restores_the_leaf(
+    spark, tmp_path, monkeypatch
+):
+    """When renaming the rewrite into place fails, the original
+    directory is renamed back byte-for-byte and the rewrite is
+    deleted."""
+    from solana_etl_pipeline_spark.sources import sinks
+
+    out = tmp_path / "flat"
+    spark.range(0, 1000).repartition(4).write.parquet(str(out))
+    before = _file_bytes(out)
+    real_rename = sinks._rename
+
+    def rename(fs, src, dst):
+        if ".compact-" in src.getName():
+            raise OSError("injected swap failure")
+        real_rename(fs, src, dst)
+
+    monkeypatch.setattr(sinks, "_rename", rename)
+    with pytest.raises(OSError, match="injected swap failure"):
+        sinks.compact_parquet_dir(spark, str(out), target_file_bytes=1 << 30)
+    assert _file_bytes(out) == before
+    assert not list(tmp_path.glob(".flat.*"))
+
+
+def test_compact_parquet_dir_refuses_a_streaming_sink(spark, tmp_path):
+    """A file sink's ``_spark_metadata`` log names every file it
+    committed. Compacting its table outside the stream dropped the log,
+    and every read after the stream's next commit then failed. The
+    compaction now raises before writing, and the next drain reads
+    every row."""
+    from solana_etl_pipeline_spark.schemas import WEBSOCKET_MESSAGE
+    from solana_etl_pipeline_spark.sources.sinks import compact_parquet_dir
+    from solana_etl_pipeline_spark.streaming.ingest import (
+        landing_stream,
+        run_available_now_to_parquet,
+    )
+    from tests.test_live_socket import _msg
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    silver = str(tmp_path / "silver")
+
+    def drain(name: str, ids: range) -> int:
+        (landing / name).write_text(
+            "".join(json.dumps(_msg(i)) + "\n" for i in ids)
+        )
+        stream = landing_stream(
+            spark, str(landing), WEBSOCKET_MESSAGE, max_files_per_trigger=None
+        )
+        run_available_now_to_parquet(stream, silver, str(tmp_path / "ckpt"))
+        return spark.read.parquet(silver).count()
+
+    assert drain("a.json", range(40)) == 40
+    before = _parquet_files(silver)
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        compact_parquet_dir(spark, silver, target_file_bytes=1 << 30)
+    assert _parquet_files(silver) == before
+    assert drain("b.json", range(40, 50)) == 50
 
 
 def test_zorder_key_matches_python_interleave(spark):
@@ -618,90 +751,13 @@ def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
             q.stop()
 
 
-def test_write_silver_dedup_against_existing(spark, tmp_path):
-    """Review r15: build_silver dedups only within a batch, so a
-    second run appending a replayed message duplicated its
-    (mint, signature) in silver. dedup_against_existing anti-joins
-    the new batch against keys already on disk."""
-    ws1 = spark.createDataFrame([Row(raw=WS_MSG)])
-    empty = spark.createDataFrame([], "raw string")
-    path = str(tmp_path / "silver")
-
-    from solana_etl_pipeline_spark.pipelines.bronze_silver import build_silver
-
-    write_silver(build_silver(empty, ws1), path,
-                 dedup_against_existing=True)
-    # run 2: exact redelivery of the same message + one new message
-    ws2 = spark.createDataFrame(
-        [Row(raw=WS_MSG),
-         Row(raw=json.dumps({"mint": "mintQ", "txType": "buy",
-                             "solAmount": 2.0, "name": "Q",
-                             "symbol": "Q"}))]
-    )
-    write_silver(build_silver(empty, ws2), path,
-                 dedup_against_existing=True)
-    back = read_silver(spark, path)
-    assert back.count() == 2  # replay NOT duplicated
-    assert back.select("mint", "signature").distinct().count() == 2
-    # without the flag the replay WOULD duplicate (hazard stays visible)
-    write_silver(build_silver(empty, ws1), path)
-    assert read_silver(spark, path).count() == 3
-
-
-def test_write_silver_dedup_rejects_overwrite(spark, tmp_path):
-    """Overwrite with dedup anti-joined the batch against the keys it
-    was about to delete, so silver was silently left empty. Dedup now
-    needs mode='append' and raises before anything is read or
-    written."""
-    ws = spark.createDataFrame([
-        Row(raw=json.dumps({"mint": f"mint{i}", "txType": "buy"}))
-        for i in range(3)
-    ])
-    silver = build_silver(spark.createDataFrame([], "raw string"), ws)
-    path = str(tmp_path / "silver")
-    write_silver(silver, path)
-    with pytest.raises(ValueError, match="mode='append'"):
-        write_silver(silver, path, mode="overwrite",
-                     dedup_against_existing=True)
-    assert read_silver(spark, path).count() == 3
-
-
-def _parquet_files(path: str) -> list[str]:
-    return sorted(
-        os.path.join(root, name)
-        for root, _, names in os.walk(path)
-        for name in names
-        if name.endswith(".parquet")
-    )
-
-
-def test_write_silver_dedup_fails_loudly_on_unreadable_table(spark, tmp_path):
-    """Only a missing table means "no keys yet": when the existing keys
-    cannot be read, the dedup write raises instead of appending the
-    replay unchecked."""
-    ws = spark.createDataFrame([Row(raw=WS_MSG)])
-    empty = spark.createDataFrame([], "raw string")
-    path = str(tmp_path / "silver")
-    write_silver(build_silver(empty, ws), path,
-                 dedup_against_existing=True)
-    leaf = os.path.dirname(_parquet_files(path)[0])
-    with open(os.path.join(leaf, "part-99999-garbage.parquet"), "wb") as f:
-        f.write(b"not a parquet file")
-    before = _parquet_files(path)
-
-    with pytest.raises(Exception, match="part-99999-garbage"):
-        write_silver(build_silver(empty, ws), path,
-                     dedup_against_existing=True)
-    assert _parquet_files(path) == before
-
-
 def _partitioned_silver(spark, tmp_path) -> str:
     out = str(tmp_path / "silver")
     silver = build_silver(
         spark.createDataFrame([Row(raw=WRAPPED)]),
         spark.createDataFrame([Row(raw=WS_MSG)]),
     )
-    write_silver(silver, out, mode="overwrite")
+    write_silver(silver, out)
     return out
 
 
@@ -719,7 +775,7 @@ def test_read_silver_starts_no_spark_job(spark, tmp_path):
 
 def test_read_silver_has_declared_columns_and_partition(spark, tmp_path):
     back = read_silver(spark, _partitioned_silver(spark, tmp_path))
-    assert back.columns == silver_schema_columns() + ["event_date"]
+    assert back.columns == CLEANED_TRANSACTIONS.fieldNames() + ["event_date"]
     assert back.schema["event_date"].dataType.simpleString() == "date"
     assert back.count() == 3
 

@@ -27,7 +27,9 @@ from solana_etl_pipeline_spark.serving import (
 from tests.test_gold import _wrapped_doc
 
 
-def _silver_fixture(spark, tmp_path) -> str:
+def _silver_fixture(spark, tmp_path, extra_docs=()) -> str:
+    """Write (or rewrite) silver at ``tmp_path/silver`` from two
+    wrapped documents, a websocket message and ``extra_docs``."""
     docs = [
         _wrapped_doc(
             "mintDiverse",
@@ -37,13 +39,14 @@ def _silver_fixture(spark, tmp_path) -> str:
         _wrapped_doc(
             "mintConc", [f"c{i}" for i in range(4)], [("whale", "whale")] * 4
         ),
+        *extra_docs,
     ]
     helius_raw = spark.createDataFrame([Row(raw=d) for d in docs])
     ws_raw = spark.createDataFrame(
         [Row(raw=json.dumps({"mint": "mintWs", "txType": "create"}))]
     )
     path = str(tmp_path / "silver")
-    write_silver(build_silver(helius_raw, ws_raw), path, mode="overwrite")
+    write_silver(build_silver(helius_raw, ws_raw), path)
     return path
 
 
@@ -273,7 +276,7 @@ def test_overview_html_escapes_hostile_token_names(spark, tmp_path):
         ]
     )
     path = str(tmp_path / "silver")
-    write_silver(silver, path, mode="overwrite")
+    write_silver(silver, path)
     dash = Dashboard(spark, path, working_set_rows=100)
     page = dash.overview_html()
     assert "<script>" not in page
@@ -359,9 +362,7 @@ def test_views_collect_once_per_snapshot(spark, tmp_path):
         "mintNew", [f"n{i}" for i in range(3)],
         [(f"nb{i}", f"nh{i}") for i in range(3)],
     )
-    helius_raw = spark.createDataFrame([Row(raw=new_doc)])
-    ws_raw = spark.createDataFrame([], "raw string")
-    write_silver(build_silver(helius_raw, ws_raw), silver_path, mode="append")
+    _silver_fixture(spark, tmp_path, [new_doc])  # rewrites silver_path
     dash.refresh()
     assert "mintNew" in {r["mint"] for r in dash.top_safest()}
     recent = dash.recent_transactions()
@@ -458,7 +459,7 @@ def test_card_lists_newest_transactions(spark, tmp_path):
         ]
     )
     path = str(tmp_path / "silver")
-    write_silver(silver, path, mode="overwrite")
+    write_silver(silver, path)
     dash = Dashboard(spark, path, working_set_rows=1000)
     for mint, n in events.items():
         txns = dash.token_detail(mint)["transactions"]
