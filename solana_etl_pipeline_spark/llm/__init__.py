@@ -10,7 +10,6 @@ only where bytes must cross into Python.
 
 from solana_etl_pipeline_spark.llm.cluster import (
     canonical_keep,
-    canonical_keep_by,
     connected_components,
     near_dup_dedup,
 )

@@ -144,43 +144,6 @@ def canonical_keep(
     )
 
 
-def canonical_keep_by(
-    corpus: DataFrame,
-    components: DataFrame,
-    id_col: str,
-    order_col: str,
-) -> DataFrame:
-    """One survivor per component, chosen by highest ``order_col``
-    (quality score, length, recency), ties broken deterministically by
-    largest id — what a curation pipeline actually wants (keep the
-    *best* copy, not the lowest-numbered one).
-
-    Plan: label the corpus (left join), pick each component's winner
-    with one ``max_by`` hash aggregate over the (small) labeled subset,
-    then left-anti-like filter via a second join — shuffles scale with
-    |clustered docs|, not corpus.
-    """
-    labeled = corpus.join(
-        components.withColumnRenamed("id", id_col), id_col, "left"
-    )
-    winners = (
-        labeled.filter(F.col("component").isNotNull())
-        .groupBy("component")
-        .agg(
-            F.max_by(
-                F.col(id_col), F.struct(F.col(order_col), F.col(id_col))
-            ).alias("_winner")
-        )
-    )
-    return (
-        labeled.join(winners, "component", "left")
-        .filter(
-            F.col("component").isNull() | (F.col(id_col) == F.col("_winner"))
-        )
-        .drop("component", "_winner")
-    )
-
-
 def near_dup_dedup(
     corpus: DataFrame,
     pairs: DataFrame,

@@ -1,9 +1,10 @@
-"""Training-set assembly: corpus filtering funnel and shard export.
+"""Training-set assembly: corpus filtering funnel, shard and split
+assignment.
 
 The last mile of an LLM data pipeline (SURVEY §2.11 surface; no
 reference counterpart): take a curated corpus, keep only
-training-worthy documents, and lay them out as deterministic shards a
-trainer can stream.
+training-worthy documents, and give each a deterministic shard and
+split.
 
 - **Corpus filter**: language gate (predicted, not labeled — labels
   lie at scale) + quality floor + exact-dedup survivor selection, all
@@ -21,10 +22,6 @@ trainer can stream.
   trap — for power-of-two shard counts any odd K is ≡ some small
   residue, e.g. Knuth's 2654435761 ≡ 1 (mod 8), collapsing the
   "hash" to ``id mod n_shards`` and the order to plain id order.
-- **Shard writer**: one parquet directory partitioned by ``shard`` —
-  at scale each shard is written by the tasks that own its partition
-  after a single hash shuffle, and trainers read ``shard=K/``
-  directories independently.
 """
 
 from __future__ import annotations
@@ -150,21 +147,3 @@ def assign_splits(
         .otherwise(F.lit("train"))
     )
     return df.withColumn("split", split)
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    n_shards: int = 8,
-) -> None:
-    """Materialize shards as ``shard=K`` parquet partitions, rows laid
-    down in ``shard_pos`` order within each file."""
-    out = assign_shards(df, id_col, n_shards)
-    (
-        out.repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "shard_pos")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )

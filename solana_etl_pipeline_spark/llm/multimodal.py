@@ -3,15 +3,15 @@
 Convention (``schemas.MULTIMODAL_ASSET``): media travels as a
 ``BinaryType`` payload column with modality/MIME/metadata columns
 alongside, so filtering, partitioning, and routing never deserialize
-bytes. Byte-touching work (decode, resize, frame-sample, featurize)
+bytes. Byte-touching work (header decode, featurize)
 runs in Arrow-batched ``mapInPandas`` stages — Python sees columnar
 batches, Spark keeps the plan distributed, and the UDF's batch shape is
 (partition → iterator of pandas DataFrames).
 
-The container has no image/audio codecs, so the *decode* stages are
-stubbed exactly as the interface demands (NotImplementedError or a
-deterministic fake) — the Spark-side schema, partitioning, and batch
-plumbing are real and tested.
+No image/audio codec is used: decode parses container headers with
+``struct``, and featurization is a deterministic fake — the Spark-side
+schema, partitioning, and batch plumbing are real and tested. Pixel,
+sample and frame decode need a codec and are not implemented.
 """
 
 from __future__ import annotations
@@ -94,43 +94,6 @@ def featurize_assets(assets: DataFrame, dims: int = 4) -> DataFrame:
             )
 
     return assets.mapInPandas(featurize, schema=FEATURE_SCHEMA)
-
-
-def resize_assets(assets: DataFrame, max_bytes: int = 1024) -> DataFrame:
-    """Downscale oversized payloads, pass small ones through unchanged —
-    the resize/transcode stage with its Spark-side plumbing real and
-    only the codec faked.
-
-    The deterministic fake "resize" truncates the payload to
-    ``max_bytes`` and records original/new sizes in ``meta`` (a real
-    pipeline swaps in PIL's ``thumbnail`` here; schema, batching, and
-    the metadata contract stay identical). Arrow-batched mapInPandas:
-    payload bytes cross into Python once per batch, never per row.
-    """
-
-    def resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            orig = [
-                len(p) if p is not None else None for p in pdf["payload"]
-            ]
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                p[:max_bytes] if p is not None else None
-                for p in pdf["payload"]
-            ]
-            pdf["meta"] = [
-                {
-                    **(dict(m) if m is not None else {}),
-                    "orig_bytes": str(o),
-                    "resized": (
-                        "true" if o is not None and o > max_bytes else "false"
-                    ),
-                }
-                for m, o in zip(pdf["meta"], orig)
-            ]
-            yield pdf
-
-    return assets.mapInPandas(resize, schema=assets.schema)
 
 
 #: Output schema of :func:`decode_image` (header-level decode).
@@ -407,9 +370,6 @@ def decode_image(assets: DataFrame) -> DataFrame:
     whose payload is not a recognizable image decode to NULL columns
     (the row survives for routing/quarantine, mirroring the
     malformed-input convention elsewhere in the package).
-
-    Full PIXEL decode stays environment-blocked — see
-    :func:`decode_image_pixels`.
     """
 
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -443,21 +403,6 @@ def decode_image(assets: DataFrame) -> DataFrame:
     return assets.mapInPandas(decode, schema=IMAGE_HEADER_SCHEMA)
 
 
-def decode_image_pixels(assets: DataFrame) -> DataFrame:
-    """Decode image payloads to pixel arrays.
-
-    STUB: requires an image codec (PIL/opencv), not present in this
-    environment (re-probed per round — see COVERAGE). The
-    header-level metadata path is REAL (:func:`decode_image`); only
-    the pixel plane needs a codec. Swap the body for a real decoder
-    in a codec-equipped image.
-    """
-    raise NotImplementedError(
-        "image pixel decode requires a codec library (e.g. PIL); "
-        "not available in this environment"
-    )
-
-
 #: Output schema of :func:`decode_media` (header-level decode).
 MEDIA_HEADER_SCHEMA = (
     "asset_id bigint, format string, channels int, sample_rate int, "
@@ -470,8 +415,7 @@ def decode_media(assets: DataFrame) -> DataFrame:
     sample_rate, bit_depth, duration_ms, n_tracks) from WAV RIFF /
     MP4 box headers — pure ``struct``, no codec, same map-only Arrow
     shape as :func:`decode_image`. Non-media payloads decode to NULL
-    columns; actual sample/frame decode stays environment-blocked
-    (:func:`frame_sample`)."""
+    columns."""
 
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -747,16 +691,4 @@ def synthesize_image_assets(docs: DataFrame) -> DataFrame:
 
     return docs.select("doc_id", "text").mapInPandas(
         synth, schema=IMAGE_ASSET_SCHEMA
-    )
-
-
-def frame_sample(assets: DataFrame, every_n: int = 30) -> DataFrame:
-    """Sample every-nth video frame as image assets.
-
-    STUB: requires a video demuxer (pyav/ffmpeg); see
-    :func:`decode_image` for the stubbing convention.
-    """
-    raise NotImplementedError(
-        "video frame sampling requires a demuxer (e.g. pyav); "
-        "not available in this environment"
     )

@@ -21,13 +21,14 @@ Metric semantics (reference lines cited inline):
 - ``safety_score``     — max(0, 100 - jeet)                (:103)
 
 At 100 TB: exact COUNT(DISTINCT) per group is a full shuffle of
-(key, account) pairs; pass ``approximate=True`` to switch to
-``approx_count_distinct`` (HLL++, map-side combinable, one pass).
+(key, account) pairs; the registry query ``risk_scores_topk_approx``
+(``queries/reference.py``) shows the ``approx_count_distinct`` (HLL++,
+map-side combinable, one pass) form next to the exact counts.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -39,10 +40,9 @@ def risk_scores(
     buy_type_col: str,
     buy_type_value: str,
     excluded_keys: list | None = None,
-    approximate: bool = False,
-    round_to: int | None = 6,
 ) -> DataFrame:
-    """Per-``key`` risk metrics; returns one row per key.
+    """Per-``key`` risk metrics; returns one row per key, the five
+    scores rounded to 6 places.
 
     ``excluded_keys`` mirrors the reference's NOT-IN filter on
     wSOL/USDT/USDC (``streamlit 1.3.txt:17-21,53``).
@@ -50,14 +50,9 @@ def risk_scores(
     if excluded_keys:
         df = df.filter(~F.col(key).isin(excluded_keys))
 
-    def _distinct(c: Column) -> Column:
-        return (
-            F.approx_count_distinct(c) if approximate else F.count_distinct(c)
-        )
-
     agg = df.groupBy(key).agg(
-        _distinct(F.col(holder_col)).alias("unique_holders"),
-        _distinct(
+        F.count_distinct(F.col(holder_col)).alias("unique_holders"),
+        F.count_distinct(
             F.when(F.col(buy_type_col) == buy_type_value, F.col(buyer_col))
         ).alias("unique_buyers"),
         F.count(F.lit(1)).alias("total_events"),
@@ -87,15 +82,14 @@ def risk_scores(
         "safety_score", F.greatest(F.lit(0.0), F.lit(100.0) - F.col("jeet_risk_score"))
     )
 
-    if round_to is not None:
-        for c in (
-            "ownership_risk",
-            "liquidity_risk",
-            "txn_concentration",
-            "jeet_risk_score",
-            "safety_score",
-        ):
-            scored = scored.withColumn(c, F.round(F.col(c), round_to))
+    for c in (
+        "ownership_risk",
+        "liquidity_risk",
+        "txn_concentration",
+        "jeet_risk_score",
+        "safety_score",
+    ):
+        scored = scored.withColumn(c, F.round(F.col(c), 6))
     return scored
 
 

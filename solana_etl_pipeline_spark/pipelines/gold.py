@@ -31,7 +31,6 @@ EXCLUDED_MINTS = [
 def build_risk_gold(
     silver: DataFrame,
     token_names: DataFrame | None = None,
-    approximate: bool = False,
 ) -> DataFrame:
     """Per-mint risk table from the silver transactions table.
 
@@ -49,7 +48,6 @@ def build_risk_gold(
         buy_type_col="type",
         buy_type_value="SWAP",
         excluded_keys=EXCLUDED_MINTS,
-        approximate=approximate,
     )
     if token_names is not None:
         # the dim wins outright — don't build (and shuffle) the
@@ -83,7 +81,7 @@ def top_tokens(gold: DataFrame, k: int = 10) -> DataFrame:
     return top_k_by_safety(gold, key="mint", k=k)
 
 
-def write_gold(gold: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_gold(gold: DataFrame, path: str) -> None:
     """Gold is one row per mint — small at sf0.1, but the mint
     dimension is exactly what grows with the corpus, so a fixed
     ``coalesce(1)`` would funnel the whole refresh through one task at
@@ -91,8 +89,9 @@ def write_gold(gold: DataFrame, path: str, mode: str = "overwrite") -> None:
     (on in every engine session, ``session.RUNTIME_CONFS``), which
     sizes the write partitions from the shuffled bytes: one file for a
     small table, more as it grows. One write, with nothing persisted
-    or counted first; the dashboard reads the directory either way."""
-    write_parquet(gold.hint("rebalance"), path, mode=mode)
+    or counted first; the dashboard reads the directory either way.
+    The table is replaced on every refresh."""
+    write_parquet(gold.hint("rebalance"), path, mode="overwrite")
 
 
 def refresh_gold(

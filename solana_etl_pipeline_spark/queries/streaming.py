@@ -6,8 +6,9 @@ tumbling-window aggregate → ``availableNow`` drain into a memory sink.
 Processed in one batch (single landing file), nothing is late, so the
 result must equal the batch twin — the same oracle SQL as
 ``events_hourly_rollup`` minus the distinct-user metric (distinct
-aggregation is unsupported in streaming; the streaming variant carries
-``approx_count_distinct`` instead, exercised in tests).
+aggregation is unsupported in streaming; ``hourly_window_counts``
+carries ``approx_count_distinct`` instead, dropped here and exercised
+in tests).
 
 The richer streaming surface (sliding/session windows, stateful
 applyInPandasWithState, checkpoint idempotence, watermark late-drop,
@@ -29,6 +30,7 @@ from solana_etl_pipeline_spark.schemas import EVENTS
 from solana_etl_pipeline_spark.sources import load_table
 from solana_etl_pipeline_spark.streaming.ingest import (
     deduplicated,
+    hourly_window_counts,
     landing_stream,
     run_available_now,
     session_window_counts,
@@ -95,18 +97,9 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = deduplicated(
         stream, keys=["user_id", "event_id"], watermark="24 hours"
     )
-    windowed = (
-        deduped.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    # the oracle has no distinct-user column; Catalyst prunes the
+    # dropped HLL aggregate, so the stream computes only count and sum
+    windowed = hourly_window_counts(deduped).drop("approx_users")
     table = run_available_now(
         windowed,
         checkpoint_dir=f"{work}/checkpoint",

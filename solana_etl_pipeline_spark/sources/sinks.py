@@ -5,7 +5,8 @@ listings (S5/S9), one-object-per-record JSON puts (S4), StringIO CSV
 round-trips (S7/S8), and a 60-line incremental Parquet writer with
 manual schema harmonization (S10, ``clean_data.py:305-365``). Each maps
 to one Spark reader/writer call; the harmonize dance is
-``mergeSchema``/``unionByName``.
+``mergeSchema``/``unionByName``. Table sinks write plain parquet
+directories.
 
 Scale posture: writers take explicit ``partition_cols`` — at 100 TB the
 silver tables are partitioned by event date so per-day queries prune to
@@ -86,47 +87,22 @@ def read_orc_dir(
     return reader.orc(path)
 
 
-def resolve_sink_format(fmt: str) -> str:
-    """Validate a table-sink format name (the BASELINE north star is
-    "Parquet/Delta Lake sinks"). ``parquet`` always works; ``delta``
-    resolves only when the ``delta-spark`` package is importable, so
-    on clusters with Delta configured the same pipeline code writes
-    transactional tables with no further changes — and on this
-    container (no delta in the dependency set) the error is immediate
-    and actionable instead of a JVM ClassNotFound at write time."""
-    if fmt == "parquet":
-        return fmt
-    if fmt == "delta":
-        try:
-            import delta  # noqa: F401
-        except ImportError as exc:
-            raise ImportError(
-                "format='delta' needs the delta-spark package (and the "
-                "DeltaCatalog/extension session configs); it is not "
-                "installed in this environment — use format='parquet'"
-            ) from exc
-        return fmt
-    raise ValueError(f"unsupported sink format: {fmt!r} (parquet|delta)")
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
     partition_cols: list[str] | None = None,
     mode: str = "append",
-    format: str = "parquet",
 ) -> None:
-    """S10: table sink (parquet default, delta via the format seam —
-    see :func:`resolve_sink_format`). Appends with a widened schema are
+    """S10: parquet table sink. Appends with a widened schema are
     legal — the read side harmonizes, which replaces the reference's
     null-fill/reorder writer loop (``clean_data.py:340-349``): a table
     with a declared schema (silver, ``schemas.CLEANED_TRANSACTIONS``)
     reads by it and null-fills the columns a file lacks; an undeclared
     one merges its footers (:func:`read_parquet_merged`)."""
-    writer = df.write.mode(mode).format(resolve_sink_format(format))
+    writer = df.write.mode(mode)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    writer.save(path)
+    writer.parquet(path)
 
 
 def read_parquet_merged(spark: SparkSession, path: str) -> DataFrame:
@@ -194,7 +170,6 @@ def write_zordered(
     y_col: str,
     n_files: int,
     bits: int = 16,
-    format: str = "parquet",
 ) -> None:
     """Write ``df`` as ``n_files`` parquet files range-partitioned and
     sorted by the two-column z-order key, so per-file min/max bound a
@@ -222,8 +197,7 @@ def write_zordered(
         .sortWithinPartitions("_zkey")
         .drop("_zkey", "_xmin", "_xmax", "_ymin", "_ymax")
         .write.mode("overwrite")
-        .format(resolve_sink_format(format))
-        .save(path)
+        .parquet(path)
     )
 
 
@@ -260,11 +234,12 @@ def compact_parquet_dir(
     reader-transparent compaction needs a table format whose commit
     is a metadata pointer swap, which plain parquet dirs don't have.
 
-    A streaming file sink's output (``<path>/_spark_metadata`` exists)
-    raises ``ValueError`` before anything is written: the sink's log
-    names every file it committed, so a rewrite outside the stream
-    cannot be made consistent with it, and the table would fail to
-    read after the stream's next commit.
+    A streaming file sink's output raises ``ValueError`` before
+    anything is written: ``_spark_metadata`` in ``path`` or in any
+    directory above it (a leaf such as ``silver/mint=M0`` of a
+    partitioned sink). The sink's log names every file it committed,
+    so a rewrite outside the stream cannot be made consistent with it,
+    and the table would fail to read after the stream's next commit.
     Returns the output file count (0 for an empty directory).
     """
     import math
@@ -273,12 +248,16 @@ def compact_parquet_dir(
     Path = spark._jvm.org.apache.hadoop.fs.Path
     src = Path(path)
     fs = src.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(Path(src, "_spark_metadata")):
-        raise ValueError(
-            f"{path} is a streaming file sink's output: its "
-            "_spark_metadata log names every file, so compacting it "
-            "outside the stream would make the table unreadable"
-        )
+    table = fs.makeQualified(src)
+    while table is not None:
+        if fs.exists(Path(table, "_spark_metadata")):
+            raise ValueError(
+                f"{path} is a streaming file sink's output: the "
+                f"_spark_metadata log of {table.toString()} names every "
+                "file, so compacting it outside the stream would make "
+                "the table unreadable"
+            )
+        table = table.getParent()
 
     def listing(dirs: bool) -> dict:
         # name -> status, skipping dot/underscore-prefixed names: this

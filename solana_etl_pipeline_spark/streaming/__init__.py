@@ -8,7 +8,6 @@ checkpointed streaming queries; see ``ingest`` for the mapping.
 from solana_etl_pipeline_spark.streaming.ingest import (
     deduplicated,
     deduplicated_within_watermark,
-    foreach_batch_refresh,
     hourly_window_counts,
     landing_stream,
     run_available_now,
@@ -16,14 +15,12 @@ from solana_etl_pipeline_spark.streaming.ingest import (
     session_window_counts,
     sliding_window_counts,
     stateful_running_totals,
-    stateful_running_totals_tws,
     stream_interval_join,
 )
 
 __all__ = [
     "deduplicated",
     "deduplicated_within_watermark",
-    "foreach_batch_refresh",
     "hourly_window_counts",
     "landing_stream",
     "run_available_now",
@@ -31,6 +28,5 @@ __all__ = [
     "session_window_counts",
     "sliding_window_counts",
     "stateful_running_totals",
-    "stateful_running_totals_tws",
     "stream_interval_join",
 ]

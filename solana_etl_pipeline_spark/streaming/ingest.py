@@ -250,73 +250,6 @@ def stateful_running_totals(stream: DataFrame) -> DataFrame:
     )
 
 
-def stateful_running_totals_tws(stream: DataFrame) -> DataFrame:
-    """The same per-user running totals on Spark 4's
-    ``transformWithStateInPandas`` (the ``StatefulProcessor`` API that
-    succeeds ``applyInPandasWithState``): typed named state variables
-    (value/list/map, optional TTL), timers, and initial-state
-    bootstrap are first-class instead of one state tuple + a timeout
-    enum. Semantics pinned equal to :func:`stateful_running_totals`
-    by ``tests/test_streaming_rocksdb.py``.
-
-    OSS Spark implements transformWithState ONLY on the RocksDB
-    state-store provider — apply
-    :func:`~solana_etl_pipeline_spark.session.rocksdb_state_store_confs`
-    before starting the query; under the default HDFS-backed provider
-    the query fails at start. That makes this the natural API tier
-    for 100 TB streaming state: choosing it forces the off-heap
-    provider this engine already standardizes on.
-
-    Runtime dependency: the TWS state-server protocol is
-    protobuf-based (``pyspark/sql/streaming/proto/StateMessage_pb2``
-    requires the protobuf >= 6.33 runtime), so query START needs
-    ``google.protobuf`` importable in the driver-side Python worker.
-    ENVIRONMENT-BLOCKED in this container (probe 2026-08-16:
-    ``google`` absent, pypi DNS-unresolvable; the driver worker exits
-    -2 with "cannot import name 'descriptor' from 'google.protobuf'")
-    — same class as the delta/PIL seams. Plan construction and the
-    output contract are testable without it
-    (``tests/test_streaming_rocksdb.py``); the functional parity test
-    auto-unskips wherever protobuf exists.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n bigint, total double"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            prior = self._totals.get() if self._totals.exists() else None
-            n, total = prior if prior is not None else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 4)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        _RunningTotals(),
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 #: Cap on the state partitions of a stream this module starts whose
 #: plan keeps keyed state other than dedup keys. A stateful stage opens
 #: and commits one state store per shuffle partition on every
@@ -433,28 +366,6 @@ def run_available_now(
         )
     _await_drain(query, timeout_sec)
     return name
-
-
-def foreach_batch_refresh(
-    stream: DataFrame,
-    refresh,
-    checkpoint_dir: str,
-    timeout_sec: int = 300,
-):
-    """``foreachBatch`` — the sink-to-anything escape hatch: per
-    micro-batch, ``refresh(batch_df, batch_id)`` runs arbitrary batch
-    logic (merge into a gold table, upsert a store, call a service)
-    with exactly-once replay protection from the checkpoint (a retried
-    batch re-invokes refresh with the same batch_id — make it
-    idempotent on that id)."""
-    with state_partitions(stream):
-        query = (
-            stream.writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_drain(query, timeout_sec)
 
 
 def run_available_now_to_parquet(

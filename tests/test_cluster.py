@@ -83,30 +83,6 @@ def test_end_to_end_near_dup_dedup_planted(spark):
     assert ids == [1, 4]
 
 
-def test_canonical_keep_by_quality(spark):
-    """Quality-aware survivor choice: the best-scored member survives,
-    ties break to the largest id, unclustered docs pass through."""
-    from solana_etl_pipeline_spark.llm.cluster import canonical_keep_by
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "a", 0.2),
-            (2, "a copy", 0.9),   # best of {1,2,3} → survives
-            (3, "a copy2", 0.5),
-            (5, "b", 0.4),
-            (6, "b copy", 0.4),   # tie with 5 → larger id 6 survives
-            (9, "solo", 0.1),
-        ],
-        ["doc_id", "text", "quality"],
-    )
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], ["id_a", "id_b"])
-    kept = canonical_keep_by(
-        corpus, connected_components(pairs), "doc_id", "quality"
-    )
-    assert sorted(r["doc_id"] for r in kept.collect()) == [2, 6, 9]
-    assert kept.columns == corpus.columns
-
-
 def test_connected_components_single_pass_over_pairs(spark):
     """The edge symmetrization must execute the upstream pair plan
     ONCE (r11: ``pairs.union(pairs.reversed)`` ran the expensive,

@@ -1,5 +1,5 @@
 """Unit tests for training-set assembly: corpus filter funnel,
-deterministic sharding, and the shard writer's on-disk layout.
+deterministic sharding and split assignment.
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from solana_etl_pipeline_spark.llm.export import (
     assign_shards,
     corpus_filter,
     shard_key,
-    write_training_shards,
 )
 
 
@@ -76,21 +75,6 @@ def test_assign_shards_positions_are_dense_and_ordered(spark):
         ids = [r.doc_id for r in rows]
         decorrelated = decorrelated or ids != sorted(ids)
     assert decorrelated
-
-
-def test_write_training_shards_layout(spark, tmp_path):
-    df = spark.range(0, 200).select(
-        F.col("id").alias("doc_id"), F.lit("t").alias("text")
-    )
-    out = str(tmp_path / "shards")
-    write_training_shards(df, out, "doc_id", n_shards=4)
-    dirs = sorted(p.name for p in (tmp_path / "shards").glob("shard=*"))
-    assert dirs == ["shard=0", "shard=1", "shard=2", "shard=3"]
-    back = spark.read.parquet(out)
-    assert back.count() == 200
-    # shard column survives via partition dir and matches the formula
-    bad = back.filter(F.col("shard") != shard_key(F.col("doc_id"), 4))
-    assert bad.count() == 0
 
 
 def test_assign_splits_disjoint_exhaustive_stable(spark):

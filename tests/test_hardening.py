@@ -1,10 +1,12 @@
 """Round-5 hardening contracts: scale-aware gold writes, the
-parquet/delta sink seam, the brute-force query-side guard, scoped
+parquet table sink, the brute-force query-side guard, scoped
 dedup caches, and compaction over the incremental signature store."""
 
 from __future__ import annotations
 
+import ast
 import re
+from collections import defaultdict
 from pathlib import Path
 
 import pytest
@@ -26,7 +28,6 @@ from solana_etl_pipeline_spark.llm.similarity import cosine_topk
 from solana_etl_pipeline_spark.pipelines.gold import write_gold
 from solana_etl_pipeline_spark.sources.sinks import (
     compact_parquet_dir,
-    resolve_sink_format,
     write_parquet,
 )
 
@@ -67,7 +68,7 @@ def test_write_gold_small_table_single_file(spark, tmp_path):
     assert spark.read.parquet(str(path)).count() == 50
 
 
-# ------------------------------------------------------ sink format seam
+# ----------------------------------------------------------- parquet sink
 
 
 def test_sink_format_seam_parquet_roundtrip(spark, tmp_path):
@@ -75,78 +76,10 @@ def test_sink_format_seam_parquet_roundtrip(spark, tmp_path):
     df = spark.range(10).select(
         F.col("id"), (F.col("id") % 2).alias("p")
     )
-    write_parquet(df, path, partition_cols=["p"], mode="overwrite",
-                  format="parquet")
+    write_parquet(df, path, partition_cols=["p"], mode="overwrite")
     got = spark.read.parquet(path)
     assert got.count() == 10
     assert {r.p for r in got.select("p").distinct().collect()} == {0, 1}
-
-
-def test_sink_format_seam_rejects_unknown(spark):
-    with pytest.raises(ValueError, match="unsupported sink format"):
-        resolve_sink_format("orc-ish")
-
-
-def test_sink_format_seam_delta_needs_package():
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="delta-spark"):
-            resolve_sink_format("delta")
-    else:  # pragma: no cover - not this container
-        assert resolve_sink_format("delta") == "delta"
-
-
-def test_sink_format_seam_delta_writer_wiring(spark, monkeypatch, tmp_path):
-    """Exercise the delta BRANCH of the seam without delta-spark: with
-    an importable ``delta`` module faked in, ``write_parquet(...,
-    format='delta')`` must thread ``delta`` through
-    ``resolve_sink_format`` into the DataFrameWriter's ``.format()``
-    call with mode/partitioning intact. The real ``.save()`` stays
-    env-gated (no Delta JVM classes here), so it is intercepted and
-    recorded instead of executed."""
-    import sys
-    import types
-
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    monkeypatch.setitem(sys.modules, "delta", types.ModuleType("delta"))
-    assert resolve_sink_format("delta") == "delta"
-
-    calls: dict[str, object] = {}
-    orig_format = DataFrameWriter.format
-    orig_partition_by = DataFrameWriter.partitionBy
-    orig_mode = DataFrameWriter.mode
-
-    def rec_format(self, source):
-        calls["format"] = source
-        return orig_format(self, "parquet" if source == "delta" else source)
-
-    def rec_partition_by(self, *cols):
-        calls["partitionBy"] = cols
-        return orig_partition_by(self, *cols)
-
-    def rec_mode(self, saveMode):
-        calls["mode"] = saveMode
-        return orig_mode(self, saveMode)
-
-    def rec_save(self, path=None, **kw):
-        calls["save_path"] = path
-
-    monkeypatch.setattr(DataFrameWriter, "format", rec_format)
-    monkeypatch.setattr(DataFrameWriter, "partitionBy", rec_partition_by)
-    monkeypatch.setattr(DataFrameWriter, "mode", rec_mode)
-    monkeypatch.setattr(DataFrameWriter, "save", rec_save)
-
-    df = spark.range(4).select(F.col("id"), (F.col("id") % 2).alias("p"))
-    path = str(tmp_path / "delta_seam")
-    write_parquet(df, path, partition_cols=["p"], mode="overwrite",
-                  format="delta")
-
-    assert calls["format"] == "delta"
-    assert calls["partitionBy"] == ("p",)
-    assert calls["mode"] == "overwrite"
-    assert calls["save_path"] == path
 
 
 # -------------------------------------------- witness-staleness gate
@@ -221,6 +154,88 @@ def test_no_dangling_tools_citations():
                     dangling.append(f"{rel}:{lineno}: tools/{name}.py")
     assert not dangling, "citations of missing tools/ scripts:\n" + "\n".join(
         dangling
+    )
+
+
+# ------------------------------------------- write-chain caller guard
+
+
+#: Write-chain modules whose public functions and classes need a caller.
+_CALLER_SCANNED = (
+    "streaming",
+    "pipelines",
+    "sources/sinks.py",
+    "serving.py",
+    "session.py",
+)
+
+#: Public names kept without a caller, each with its reason.
+_CALLER_ALLOWLIST = {
+    "build_silver": "batch write chain, ROADMAP item 3",
+    "write_silver": "batch write chain, ROADMAP item 3",
+    "compact_parquet_dir": "SURVEY §2.11 surface",
+    "stateful_running_totals": "SURVEY §2.11 surface",
+}
+
+
+def _references(tree) -> list[tuple[str | None, str]]:
+    """``(owner, name)`` for every name or attribute a module uses;
+    ``owner`` is the top-level def or class whose body holds it, else
+    None. Import aliases and ``__all__`` strings are not references."""
+    def names(node):
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Name):
+                yield sub.id
+            elif isinstance(sub, ast.Attribute):
+                yield sub.attr
+
+    out = []
+    for node in tree.body:
+        owner = (
+            node.name
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef))
+            else None
+        )
+        out += [(owner, n) for n in names(node)]
+    return out
+
+
+def test_write_chain_functions_have_a_caller():
+    """Every public top-level function or class of the write chain is
+    referenced, outside its own body, from the package,
+    ``__spark_entry__.py``, ``perfbench/`` or ``tools/``; a function
+    only tests reach is deleted, or named in the allowlist with its
+    reason."""
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "solana_etl_pipeline_spark"
+    callers = [root / "__spark_entry__.py"] + [
+        p
+        for top in (pkg, root / "perfbench", root / "tools")
+        for p in sorted(top.rglob("*.py"))
+        if "tests" not in p.relative_to(root).parts
+    ]
+    sites = defaultdict(set)  # name -> {(file, owner)} that load it
+    for path in callers:
+        for owner, name in _references(ast.parse(path.read_text("utf-8"))):
+            sites[name].add((path, owner))
+    scanned = []
+    for entry in _CALLER_SCANNED:
+        target = pkg / entry
+        scanned += sorted(target.rglob("*.py")) if target.is_dir() else [target]
+    uncalled = []
+    for path in scanned:
+        for node in ast.parse(path.read_text("utf-8")).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) or node.name.startswith("_"):
+                continue
+            if node.name in _CALLER_ALLOWLIST:
+                continue
+            if not sites[node.name] - {(path, node.name)}:
+                uncalled.append(f"{path.relative_to(root)}::{node.name}")
+    assert not uncalled, "public write-chain names no caller reaches:\n" + (
+        "\n".join(uncalled)
     )
 
 

@@ -476,52 +476,6 @@ def test_multimodal_featurize_roundtrip(spark, planted_docs):
     assert rows[0].feat[0] == int(expected[:2], 16) / 255.0
 
 
-def test_multimodal_codec_stubs_raise(spark, planted_docs):
-    """The two genuinely codec-requiring stages stay env-blocked
-    (header-level decode_image is REAL — tests/test_multimodal.py)."""
-    from solana_etl_pipeline_spark.llm.multimodal import (
-        decode_image_pixels,
-        frame_sample,
-    )
-
-    docs = planted_docs.withColumn("lang", F.lit("en")).withColumn(
-        "source", F.lit("test")
-    )
-    with pytest.raises(NotImplementedError):
-        decode_image_pixels(documents_as_assets(docs))
-    with pytest.raises(NotImplementedError):
-        frame_sample(documents_as_assets(docs))
-
-
-def test_multimodal_resize_plumbing(spark, planted_docs):
-    """resize_assets: payloads cap at max_bytes, small ones pass
-    through byte-identical, meta records the decision, schema stable."""
-    from solana_etl_pipeline_spark.llm.multimodal import (
-        documents_as_assets,
-        resize_assets,
-    )
-
-    docs = planted_docs.withColumn("lang", F.lit("en")).withColumn(
-        "source", F.lit("test")
-    )
-    assets = documents_as_assets(docs)
-    out = resize_assets(assets, max_bytes=40)
-    assert out.schema == assets.schema
-    rows = {r["asset_id"]: r for r in out.collect()}
-    src = {r["asset_id"]: r for r in assets.collect()}
-    assert rows.keys() == src.keys()
-    for aid, r in rows.items():
-        orig = src[aid]["payload"]
-        assert len(r["payload"]) <= 40
-        assert r["meta"]["orig_bytes"] == str(len(orig))
-        if len(orig) <= 40:
-            assert bytes(r["payload"]) == bytes(orig)
-            assert r["meta"]["resized"] == "false"
-        else:
-            assert bytes(r["payload"]) == bytes(orig)[:40]
-            assert r["meta"]["resized"] == "true"
-
-
 def test_null_text_docs_never_pair(spark):
     """Null-text docs must be excluded from signature-based pairing:
     split(NULL) is NULL and xxhash64(NULL) returns the seed, so without
@@ -792,11 +746,9 @@ def test_kmeans_fit_dim_vote_survives_corrupt_first_seed(spark):
 
 
 def test_multimodal_null_payload_survives(spark):
-    """A null payload (e.g. a null-text document) features and resizes
-    as NULLs instead of crashing the Arrow batch (sha256(None))."""
+    """A null payload (e.g. a null-text document) features as NULLs
+    instead of crashing the Arrow batch (sha256(None))."""
     from pyspark.sql import Row
-
-    from solana_etl_pipeline_spark.llm.multimodal import resize_assets
 
     docs = spark.createDataFrame(
         [
@@ -809,10 +761,6 @@ def test_multimodal_null_payload_survives(spark):
     assert feats[1].digest is not None and feats[1].n_bytes > 0
     assert feats[2].digest is None and feats[2].n_bytes is None
     assert feats[2].feat is None
-    resized = {r.asset_id: r for r in resize_assets(assets, 4).collect()}
-    assert resized[1].payload == b"real"
-    assert resized[2].payload is None
-    assert resized[2].meta["resized"] == "false"
 
 
 # --------------------------------------------------- product quantization

@@ -355,6 +355,48 @@ def test_compact_parquet_dir_refuses_a_streaming_sink(spark, tmp_path):
     assert drain("b.json", range(40, 50)) == 50
 
 
+def test_compact_parquet_dir_refuses_a_partitioned_sink_leaf(spark, tmp_path):
+    """A leaf of a partitioned file sink (``silver/txType=buy``) holds
+    no ``_spark_metadata`` of its own, but the table's log names its
+    files too. Compacting the leaf raises before writing, and the next
+    drain still reads every row."""
+    from solana_etl_pipeline_spark.schemas import WEBSOCKET_MESSAGE
+    from solana_etl_pipeline_spark.sources.sinks import compact_parquet_dir
+    from solana_etl_pipeline_spark.streaming.ingest import landing_stream
+    from tests.test_live_socket import _msg
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    silver = str(tmp_path / "silver")
+
+    def drain(name: str, ids: range) -> int:
+        (landing / name).write_text(
+            "".join(json.dumps(_msg(i)) + "\n" for i in ids)
+        )
+        stream = landing_stream(
+            spark, str(landing), WEBSOCKET_MESSAGE, max_files_per_trigger=None
+        )
+        query = (
+            stream.writeStream.format("parquet")
+            .partitionBy("txType")
+            .option("path", silver)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert query.awaitTermination(300)
+        return spark.read.parquet(silver).count()
+
+    assert drain("a.json", range(40)) == 40
+    leaf = os.path.join(silver, "txType=buy")
+    before = _parquet_files(leaf)
+    assert before
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        compact_parquet_dir(spark, leaf, target_file_bytes=1 << 30)
+    assert _parquet_files(leaf) == before
+    assert drain("b.json", range(40, 50)) == 50
+
+
 def test_zorder_key_matches_python_interleave(spark):
     """The Morton key must equal the reference bit-interleave of the
     quantized coordinates."""

@@ -229,10 +229,7 @@ def test_streaming_cdc_foreach_batch_upsert(spark, tmp_path):
     from pyspark.sql import types as T
 
     from solana_etl_pipeline_spark.operators.cdc import apply_changes
-    from solana_etl_pipeline_spark.streaming.ingest import (
-        foreach_batch_refresh,
-        landing_stream,
-    )
+    from solana_etl_pipeline_spark.streaming.ingest import landing_stream
 
     feed_schema = T.StructType(
         [
@@ -287,10 +284,19 @@ def test_streaming_cdc_foreach_batch_upsert(spark, tmp_path):
         nxt.write.mode("overwrite").parquet(f"{snap_root}/v={batch_id + 1}")
         state["version"] = batch_id + 1
 
-    stream = landing_stream(
-        spark, str(landing), feed_schema, max_files_per_trigger=1
-    )
-    foreach_batch_refresh(stream, upsert, str(tmp_path / "ckpt"))
+    def drain():
+        stream = landing_stream(
+            spark, str(landing), feed_schema, max_files_per_trigger=1
+        )
+        query = (
+            stream.writeStream.foreachBatch(upsert)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert query.awaitTermination(300)
+
+    drain()
     final = {
         r.doc_id: r.text
         for r in spark.read.parquet(
@@ -304,10 +310,7 @@ def test_streaming_cdc_foreach_batch_upsert(spark, tmp_path):
     # checkpoint replay: a second drain sees no new files and leaves
     # the snapshot version untouched
     v_before = state["version"]
-    stream2 = landing_stream(
-        spark, str(landing), feed_schema, max_files_per_trigger=1
-    )
-    foreach_batch_refresh(stream2, upsert, str(tmp_path / "ckpt"))
+    drain()
     assert state["version"] == v_before
 
 

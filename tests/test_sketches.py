@@ -1,5 +1,4 @@
-"""HLL sketch-rollup tests (``operators/sketches.py``) and the
-dynamic-partition-overwrite maintenance primitive.
+"""HLL sketch-rollup tests (``operators/sketches.py``).
 
 The sketch estimate has no SQL oracle; what IS exactly checkable:
 merging per-day sketches gives the *identical* estimate to sketching
@@ -14,9 +13,6 @@ from pyspark.sql import functions as F
 from solana_etl_pipeline_spark.operators.sketches import (
     hll_daily_user_sketches,
     hll_range_estimate,
-)
-from solana_etl_pipeline_spark.pipelines.maintenance import (
-    overwrite_day_partitions,
 )
 from solana_etl_pipeline_spark.sources import load_table
 
@@ -60,40 +56,6 @@ def test_range_filter_scopes_days(spark, sf_dir):
         assert first["n_events"] + rest["n_events"] == ev.count()
     finally:
         daily.unpersist()
-
-
-def test_overwrite_day_partitions_is_scoped_and_idempotent(spark, tmp_path):
-    """Dynamic overwrite replaces exactly the restated day's partition:
-    other days' bytes are untouched, and a rerun converges (no
-    append-duplication)."""
-    path = str(tmp_path / "by_day")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").withColumn(
-        "day", F.to_date("ts")
-    )
-    overwrite_day_partitions(spark, ev, path)
-    days = sorted(r["day"] for r in ev.select("day").distinct().collect())
-    target = str(days[0])
-    restated = ev.filter(F.col("day") == target).withColumn(
-        "value", F.col("value") * 2
-    )
-    overwrite_day_partitions(spark, restated, path)
-    overwrite_day_partitions(spark, restated, path)  # idempotent rerun
-    out = spark.read.parquet(path)
-    assert out.count() == ev.count()
-    doubled = out.filter(F.col("day") == F.lit(target)).agg(
-        F.sum("value").alias("s")
-    ).collect()[0]["s"]
-    original = ev.filter(F.col("day") == F.lit(target)).agg(
-        F.sum("value").alias("s")
-    ).collect()[0]["s"]
-    assert abs(doubled - 2 * original) < 1e-6
-    untouched = out.filter(F.col("day") != F.lit(target)).agg(
-        F.sum("value").alias("s")
-    ).collect()[0]["s"]
-    untouched_src = ev.filter(F.col("day") != F.lit(target)).agg(
-        F.sum("value").alias("s")
-    ).collect()[0]["s"]
-    assert abs(untouched - untouched_src) < 1e-6
 
 
 def test_approx_top_k_under_pressure_keeps_dominant_item(spark):

@@ -531,41 +531,6 @@ def test_chained_streaming_queries(spark, tmp_path):
     assert got == {"2024-01-01 10:00:00": 10, "2024-01-01 11:00:00": 10}
 
 
-def test_foreach_batch_gold_refresh(spark, tmp_path):
-    """foreachBatch: each micro-batch merges into a per-user totals
-    table idempotently — the streaming → gold upsert pattern."""
-    from solana_etl_pipeline_spark.streaming.ingest import foreach_batch_refresh
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    now = time.time()
-    _write_landing_file(
-        str(landing / "f1.json"),
-        [_event(1, 1, "2024-01-01T10:00:00.000Z", 2.0),
-         _event(2, 2, "2024-01-01T10:01:00.000Z", 3.0)],
-        now - 20,
-    )
-    _write_landing_file(
-        str(landing / "f2.json"),
-        [_event(3, 1, "2024-01-01T10:02:00.000Z", 4.0)],
-        now - 10,
-    )
-    gold = str(tmp_path / "gold")
-
-    def refresh(batch_df, batch_id):
-        # idempotent on batch_id: one output dir per batch
-        (batch_df.groupBy("user_id")
-         .agg(F.sum("value").alias("batch_total"))
-         .write.mode("overwrite").parquet(f"{gold}/batch={batch_id}"))
-
-    stream = landing_stream(spark, str(landing), EVENTS, max_files_per_trigger=1)
-    foreach_batch_refresh(stream, refresh, str(tmp_path / "ckpt"))
-    merged = (spark.read.option("basePath", gold).parquet(gold)
-              .groupBy("user_id").agg(F.sum("batch_total").alias("total")))
-    totals = {r.user_id: r.total for r in merged.collect()}
-    assert totals == {1: 6.0, 2: 3.0}
-
-
 def test_stateful_running_totals_across_batches(spark, tmp_path):
     """applyInPandasWithState: state carries across micro-batches; the
     final update per user equals the batch aggregate."""

@@ -28,8 +28,6 @@ from __future__ import annotations
 import os
 import time
 
-import pytest
-
 from solana_etl_pipeline_spark.schemas import EVENTS
 from solana_etl_pipeline_spark.session import rocksdb_state_store_confs
 from solana_etl_pipeline_spark.streaming.ingest import (
@@ -263,122 +261,3 @@ def test_rocksdb_bounded_memory_with_custom_stateful_op(spark, tmp_path):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def test_transform_with_state_plan_and_contract(spark):
-    """``stateful_running_totals_tws`` (transformWithStateInPandas)
-    builds the TransformWithStateInPySpark plan node with the declared
-    output contract — testable without the protobuf runtime the
-    state-server protocol needs at query START (absent in this
-    container; see the operator docstring)."""
-    from solana_etl_pipeline_spark.streaming.ingest import (
-        stateful_running_totals_tws,
-    )
-
-    stream = (
-        spark.readStream.format("rate").load()
-        .selectExpr(
-            "value % 3 as user_id",
-            "cast(value as double) as value",
-        )
-    )
-    out = stateful_running_totals_tws(stream)
-    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
-        ("user_id", "bigint"),
-        ("n_events", "bigint"),
-        ("total_value", "double"),
-    ]
-    assert "TransformWithStateInPySpark" in out._jdf.queryExecution().analyzed().toString()
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState's driver-side state-server protocol "
-    "requires google.protobuf (>= 6.33 per pyspark's generated "
-    "StateMessage_pb2); absent in this container and pypi is "
-    "DNS-unresolvable — probed 2026-08-16",
-)
-def test_transform_with_state_parity_and_provider_requirement(
-    spark, tmp_path
-):
-    """``stateful_running_totals_tws`` (transformWithStateInPandas,
-    the StatefulProcessor successor API) produces the same final
-    per-user totals as the ``applyInPandasWithState`` twin on the
-    same landing data — and pins the platform constraint that makes
-    it this engine's natural stateful tier: OSS Spark implements
-    transformWithState only on the RocksDB provider, so the query
-    FAILS AT START under the default HDFS-backed provider."""
-    from pyspark.errors import PySparkException
-
-    from solana_etl_pipeline_spark.streaming.ingest import (
-        stateful_running_totals_tws,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    now = time.time()
-    _write_landing_file(
-        str(landing / "f1.json"),
-        [
-            _event(1, 1, "2024-01-01T10:00:00.000Z", 10.0),
-            _event(2, 2, "2024-01-01T10:01:00.000Z", 5.0),
-        ],
-        now - 20,
-    )
-    _write_landing_file(
-        str(landing / "f2.json"),
-        [_event(3, 1, "2024-01-01T10:02:00.000Z", 7.5)],
-        now - 10,
-    )
-
-    def final_totals(op, ckpt_name):
-        stream = landing_stream(
-            spark, str(landing), EVENTS, max_files_per_trigger=1
-        )
-        t = run_available_now(
-            op(stream), str(tmp_path / ckpt_name), "update"
-        )
-        final = {}
-        for r in spark.table(t).collect():
-            cur = final.get(r.user_id)
-            if cur is None or r.n_events > cur[0]:
-                final[r.user_id] = (r.n_events, r.total_value)
-        return final
-
-    confs = rocksdb_state_store_confs()
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        tws = final_totals(stateful_running_totals_tws, "ckpt_tws")
-        # user 1's +7.5 second-batch update proves the ValueState
-        # carried across micro-batches under RocksDB
-        assert tws == {1: (2, 17.5), 2: (1, 5.0)}
-        twin = final_totals(stateful_running_totals, "ckpt_twin")
-        assert tws == twin
-        # changelog artifacts: the provider (not a fallback) ran it
-        files = _state_files(str(tmp_path / "ckpt_tws"))
-        assert any(f.endswith(".changelog") for f in files)
-        assert not any(f.endswith(".delta") for f in files)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-    # provider requirement: under the default HDFS-backed provider the
-    # operator is rejected at query start, not silently degraded
-    with pytest.raises((PySparkException, Exception)) as exc:
-        final_totals(stateful_running_totals_tws, "ckpt_hdfs")
-    assert "RocksDB" in str(exc.value) or "transformWithState" in str(
-        exc.value
-    ) or "STATE_STORE" in str(exc.value)
