@@ -26,13 +26,17 @@ state is dedup keys, ``min(defaultParallelism, 8)`` otherwise.
 
 from __future__ import annotations
 
+import contextlib
 import functools
+import hashlib
 import os
 import re
 import subprocess
 import warnings
+from typing import NamedTuple
 
 from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs applied to *any* session the engine touches
@@ -201,9 +205,9 @@ def rocksdb_state_store_confs(
 
 
 @functools.lru_cache(maxsize=1)
-def _java_major_version() -> int | None:
-    """Major version of the JVM Spark will launch, or None if the
-    probe fails (no java on PATH/JAVA_HOME, unparseable banner)."""
+def _java_version() -> str | None:
+    """The ``java -version`` banner of the JVM Spark will launch, or
+    None if the probe fails (no java on PATH/JAVA_HOME)."""
     java_home = os.environ.get("JAVA_HOME", "")
     java = os.path.join(java_home, "bin", "java") if java_home else "java"
     try:
@@ -212,7 +216,13 @@ def _java_major_version() -> int | None:
         )
     except Exception:
         return None
-    m = re.search(r'version "(\d+)', (out.stderr or "") + (out.stdout or ""))
+    return (out.stderr or "") + (out.stdout or "")
+
+
+def _java_major_version() -> int | None:
+    """Major version of the JVM Spark will launch, or None if the
+    probe fails or its banner does not parse."""
+    m = re.search(r'version "(\d+)', _java_version() or "")
     return int(m.group(1)) if m else None
 
 
@@ -242,6 +252,158 @@ def gc_java_opts() -> str:
     return " ".join(opts)
 
 
+_DRIVER_OPTS = "spark.driver.extraJavaOptions"
+
+#: The archive flags this process's driver JVM was launched with ("" if
+#: none): a live session's JVM options end with them.
+_archive_flags = ""
+
+
+class _Launch(NamedTuple):
+    """What a driver JVM launch adds for its class-data-sharing archive:
+    flags for its options, the ``SPARK_CONF_DIR`` to launch it with and
+    the archive whose mapping to check once it runs."""
+
+    flags: str = ""
+    conf_dir: str | None = None
+    check: str | None = None
+
+
+def _listdir(path: str) -> list[str]:
+    try:
+        return sorted(os.listdir(path))
+    except OSError:
+        return []
+
+
+def _archive_path() -> str | None:
+    """Where this machine's driver archive lives, keyed by the JDK's full
+    version and Spark's classpath (``$SPARK_HOME`` and the names and
+    sizes of its jars); None when ``java -version`` fails."""
+    banner = _java_version()
+    if banner is None:
+        return None
+    spark_home = os.path.realpath(_find_spark_home())
+    jars = os.path.join(spark_home, "jars")
+    key = "\n".join([
+        banner,
+        spark_home,
+        *(f"{n} {os.path.getsize(os.path.join(jars, n))}"
+          for n in _listdir(jars)),
+    ])
+    return os.path.join(
+        os.path.expanduser("~"), ".cache", "solana_etl_pipeline_spark",
+        "cds", hashlib.sha256(key.encode()).hexdigest()[:16] + ".jsa",
+    )
+
+
+def _cds_log(archive: str) -> str:
+    return f"{archive.removesuffix('.jsa')}.{os.getpid()}.log"
+
+
+def _archive_launch(java_opts: str) -> _Launch:
+    """Start the driver JVM from a dynamic class-data-sharing archive
+    (JEP 350) when this call launches it.
+
+    The first launch writes the archive as its JVM exits
+    (``-XX:ArchiveClassesAtExit``); later ones map it
+    (``-XX:SharedArchiveFile``) and log the mapping for
+    :func:`_check_archive`. The JVM's own cds lines (hundreds of
+    "Skipping" warnings while it writes) stay off the driver's stdout.
+    ``java_opts`` that already choose class-data sharing are left alone
+    (``-Xshare:off`` with ``-XX:ArchiveClassesAtExit`` aborts JVM
+    start-up).
+
+    The JVM neither writes nor maps an archive while a directory on its
+    classpath holds a file, and the launcher always puts the Spark conf
+    directory there. One that is missing or holds only ``*.template``
+    files, which Spark never reads, is swapped for an empty one for the
+    launch. One holding real files, a non-empty ``HADOOP_CONF_DIR`` or
+    ``YARN_CONF_DIR``, or a cache directory that cannot be written
+    skips the archive with a ``RuntimeWarning``.
+    """
+    if (
+        SparkContext._gateway is not None
+        or "PYSPARK_GATEWAY_PORT" in os.environ
+        or re.search(r"SharedArchiveFile|ArchiveClassesAtExit|-Xshare",
+                     java_opts)
+    ):
+        return _Launch()
+
+    def skip(reason: str) -> _Launch:
+        warnings.warn(
+            "starting the driver JVM without a class-data-sharing archive: "
+            + reason,
+            RuntimeWarning,
+            stacklevel=4,
+        )
+        return _Launch()
+
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        _find_spark_home(), "conf")
+    held = [os.path.join(conf_dir, n) for n in _listdir(conf_dir)
+            if not n.endswith(".template")]
+    for var in ("HADOOP_CONF_DIR", "YARN_CONF_DIR"):
+        path = os.environ.get(var, "")
+        held += [os.path.join(path, n) for n in _listdir(path)]
+    if held:
+        return skip(f"{held[0]} is on its classpath")
+    archive = _archive_path()
+    if archive is None:
+        return skip("`java -version` failed")
+    cds_dir = os.path.dirname(archive)
+    empty_conf = os.path.join(cds_dir, "empty-conf")
+    try:
+        os.makedirs(empty_conf, exist_ok=True)
+        writable = os.access(cds_dir, os.W_OK)
+    except OSError:
+        writable = False
+    if not writable:
+        return skip(f"{cds_dir} is not a writable directory")
+    if not os.path.exists(archive):
+        return _Launch(
+            f"-XX:ArchiveClassesAtExit={archive} -Xlog:cds*=off", empty_conf)
+    return _Launch(
+        f"-XX:SharedArchiveFile={archive} -Xlog:cds*=off "
+        f"-Xlog:cds*=info:file={_cds_log(archive)}:none",
+        empty_conf,
+        archive,
+    )
+
+
+def _check_archive(archive: str) -> None:
+    """Warn and delete ``archive`` unless the running driver JVM's cds
+    log shows it mapped, so the next launch writes a new one.
+
+    An archive written on another classpath is mapped, then unmapped
+    with "Unable to use shared archive", while the JDK's base archive
+    stays mapped, so ``java.vm.info`` says "sharing" and cannot tell. A
+    truncated or foreign file is never mapped.
+    """
+    log = _cds_log(archive)
+    try:
+        with open(log) as fh:
+            text = fh.read()
+        os.remove(log)
+    except OSError:
+        text = ""
+    if ("Mapped dynamic region" in text
+            and "Unable to use shared archive" not in text):
+        return
+    reasons = [line.removeprefix("UseSharedSpaces: ")
+               for line in text.splitlines()
+               if line.startswith("UseSharedSpaces: ")]
+    with contextlib.suppress(OSError):
+        os.remove(archive)
+    warnings.warn(
+        f"the driver JVM did not use the class-data-sharing archive "
+        f"{archive} ({' '.join(reasons) or 'no cds log'}); deleted it so "
+        "the next session writes a new one",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+
+
 def build_session(
     app_name: str = "solana-etl-pipeline-spark",
     master: str | None = None,
@@ -267,7 +429,18 @@ def build_session(
     its value differs from the one asked for, a ``RuntimeWarning``
     names the conf. ``$SPARK_GRAFT_CODEGEN_CACHE`` must be an integer;
     anything else raises ``ValueError``.
+
+    A call that launches the driver JVM starts it from a dynamic
+    class-data-sharing archive in ``~/.cache/solana_etl_pipeline_spark/
+    cds/``, keyed by JDK and Spark classpath, which about halves the
+    session's build time. The first such launch writes the
+    archive when its JVM exits. The archive flags go after the driver's
+    JVM options, ``$SPARK_DRIVER_JAVA_OPTS`` included. An archive the
+    JVM rejects is deleted with a ``RuntimeWarning``, and a conf
+    directory holding real files skips the archive with one (see
+    ``_archive_launch``). Executor options are never touched.
     """
+    global _archive_flags
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     cores = (os.cpu_count() or 1) if cpus == "*" else int(cpus)
     codegen_cache = os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000")
@@ -299,7 +472,7 @@ def build_session(
         # later extra_confs entry for the same key — callers carrying
         # their own spark-defaults extraJavaOptions must merge by
         # hand.
-        "spark.driver.extraJavaOptions":
+        _DRIVER_OPTS:
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", gc_java_opts()),
         # Mirror into executor JVMs: in local mode executors live in
         # the driver JVM and this is inert, but on a real cluster the
@@ -328,13 +501,29 @@ def build_session(
         **RUNTIME_CONFS,
         **(extra_confs or {}),
     }
+    launch = _archive_launch(confs[_DRIVER_OPTS])
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )
     for key, value in confs.items():
+        if key == _DRIVER_OPTS and launch.flags:
+            value = f"{value} {launch.flags}"
         builder = builder.config(key, value)
     live_context = SparkContext._active_spark_context is not None
-    spark = builder.getOrCreate()
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if launch.conf_dir:
+        os.environ["SPARK_CONF_DIR"] = launch.conf_dir
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if conf_dir is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = conf_dir
+    if launch.flags:
+        _archive_flags = launch.flags
+    if launch.check:
+        _check_archive(launch.check)
     if live_context:
         _warn_unapplied_static_confs(spark, confs)
     return apply_runtime_confs(spark)
@@ -351,6 +540,8 @@ def _warn_unapplied_static_confs(
         if spark.conf.isModifiable(key):
             continue
         live = started_with.get(key)
+        if key == _DRIVER_OPTS and live and _archive_flags:
+            live = live.removesuffix(f" {_archive_flags}")
         # Spark qualifies paths with a scheme ("file:/...") and
         # prepends its own flags to the JVM options
         if live is not None and (
