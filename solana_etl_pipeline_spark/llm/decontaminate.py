@@ -10,11 +10,10 @@ and PaLM data cards (13-gram / 8-gram overlap filters).
 
 Shape at scale:
 
-- Per-document distinct n-grams come from the same Arrow-batched
-  shingle pass the MinHash pipeline shares
-  (``llm.dedup.shingle_sets`` — measured 4× over the
-  expression-twin; ~3× on this whole operator at sf0.1, and the gap
-  grows with document length).
+- Per-document distinct n-grams come from the shingler the MinHash
+  pipeline shares (``llm.dedup.shingle_sets``): one JVM regex per
+  document, computed once per row on each side (``explode_outer``,
+  see below), so the operator starts no Python worker.
 - The eval-side n-gram set is built once and is SMALL by nature —
   eval suites are thousands of documents, not billions — so it
   broadcasts and the overlap probe is a broadcast left join: the
@@ -43,9 +42,10 @@ def eval_ngram_hashes(
 ) -> DataFrame:
     """Distinct 64-bit hashes of every n-gram in the eval set — the
     (small) probe side of the decontamination join."""
+    # explode_outer: see decontaminate
     return (
         shingle_sets(eval_df, text_col, text_col, n)
-        .select(F.explode("_sh").alias("_g"))
+        .select(F.explode_outer("_sh").alias("_g"))
         .select(F.xxhash64("_g").alias("_h"))
         .distinct()
     )
@@ -81,10 +81,14 @@ def decontaminate(
     # size() sibling of the explode() re-reads an array length per
     # output row instead of re-deriving the gram construction (the
     # sibling-of-generator trap — see repetition_report's docstring).
+    # explode_outer, not explode: InferFiltersFromGenerate turns inner
+    # explode into a Filter(size(_sh)>0) pushed below the shingle
+    # projection, which computes the whole set a second time per row.
+    # ``_sh`` always holds at least one gram, so outer ≡ inner here.
     exploded = shingle_sets(train, id_col, text_col, n).select(
         "_id",
         F.size("_sh").cast("bigint").alias("n_grams"),
-        F.explode("_sh").alias("_g"),
+        F.explode_outer("_sh").alias("_g"),
     ).withColumn("_h", F.xxhash64("_g"))
     per_doc = (
         exploded.join(evals, "_h", "left")

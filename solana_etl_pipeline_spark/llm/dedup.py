@@ -89,7 +89,8 @@ def _scoped_persist(df: DataFrame, eager: bool = False) -> DataFrame:
     interleaved sf0.1 A/B on `llm_minhash_near_dup` measured eager on
     ALL four of its persists at min 2.80 s vs 2.45 s lazy (+14%).
     Set eager only where the cached plan is itself expensive (the
-    Arrow shingle/signature UDFs, the embedding sign projections) —
+    shingle regex, the Arrow signature UDFs, the embedding sign
+    projections) —
     cheap tables derived from an already-warm cache (band
     projections, the broadcast-tagged split) stay lazy: a racing
     stage recomputing them re-reads the warm upstream cache, which
@@ -195,44 +196,14 @@ def exact_dedup_groups(
     )
 
 
-def _word_shingles(text: Column, shingle_len: int) -> Column:
-    """Word n-gram shingle set (distinct, lowercase).
-
-    Prefer :func:`shingle_sets` for DataFrame-level use: referencing
-    this expression directly re-inlines the ``split`` into every
-    lambda position (Catalyst only de-duplicates it across a project
-    boundary), recomputing the tokenization once per shingle — a
-    measured ~7× slowdown on the documents fixture.
-    """
-    words = tokenize.words(text)
-    n = F.size(words)
-    idx = F.sequence(F.lit(1), F.greatest(n - shingle_len + 1, F.lit(1)))
-    return F.array_distinct(
-        F.transform(
-            idx, lambda i: F.concat_ws(" ", F.slice(words, i, shingle_len))
-        )
-    )
-
-
-def _word_tokens(t: "str | None") -> list[str]:
-    """The Python tokenization convention, shared by every Arrow text
-    path (shingles here, n-grams in ``llm.textstats``). The actual
-    convention — collapse whitespace runs, trim, literal-space split,
-    None → ``['']`` — lives in :mod:`llm.tokenize` alongside its
-    Spark-expression and DuckDB-oracle twins, so a convention change
-    lands in all three engines at once."""
-    return tokenize.py_words(t)
-
-
 def _shingle_list(t: "str | None", shingle_len: int) -> list[str]:
-    """Plain-Python shingle builder shared by the Arrow stages, pinned
-    semantically identical to the expression twin
-    (:func:`shingle_sets_expr`): tokenization via :func:`_word_tokens`
-    (the conventions live there); ``dict.fromkeys`` keeps
-    ``array_distinct``'s first-occurrence order; null text renders the
-    single degenerate ``''`` shingle (greatest(NULL,1)=1 +
-    concat_ws-over-NULL-slice)."""
-    words = _word_tokens(t)
+    """Plain-Python shingle builder for the Arrow signature stage and
+    the reference the tests pin :func:`shingle_sets` to: tokenization
+    via :func:`tokenize.py_words` (the conventions live there);
+    ``dict.fromkeys`` keeps ``array_distinct``'s first-occurrence
+    order; a document of at most ``shingle_len`` words (null text
+    included) is one whole-text shingle."""
+    words = tokenize.py_words(t)
     n = len(words)
     if n <= shingle_len:
         return [" ".join(words)]
@@ -249,53 +220,35 @@ def shingle_sets(
 ) -> DataFrame:
     """(_id, _sh: array<string>) — distinct word n-gram shingles.
 
-    Arrow-batched ``pandas_udf``: per-position shingle construction is
-    one of the few places built-in expressions genuinely lose — the
-    higher-order ``transform``+``slice``+``concat_ws`` twin
-    (:func:`shingle_sets_expr`) evaluates interpreted closures per
-    shingle position and measures 4× slower on the documents fixture
-    (2.4 s vs 0.6 s for 5k docs), a gap that grows with document
-    length. Semantics are pinned identical to the expression twin by
-    ``tests/test_hardening.py``.
+    One JVM regex over :func:`tokenize.normalized` text, whose words
+    are joined by single spaces: at each word start a lookahead
+    captures the next ``shingle_len`` words, so overlapping grams come
+    out of one ``regexp_extract_all``. A document of at most
+    ``shingle_len`` words is one whole-text shingle. No Python worker
+    and no per-position lambda. For 5k documents at n=5 on 4 cores it
+    measured 0.7–1.3 core-s against 1.9–4.1 for the former Arrow
+    ``pandas_udf`` at 10–99 words, and 4.4–6.0 against 5.4–6.5 at
+    100–999 words. Pinned to :func:`_shingle_list` by
+    ``tests/test_hardening.py`` and ``tests/test_properties.py``.
+
+    The normalized text is its own projection so that every reference
+    below reads it instead of re-deriving it. Explode ``_sh`` with
+    ``explode_outer``: it is never empty, and an inner ``explode``
+    infers a ``size(_sh) > 0`` filter that computes the set again.
     """
-    from pyspark.sql.types import ArrayType, StringType
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _sh(texts: pd.Series) -> pd.Series:
-        return pd.Series([_shingle_list(t, shingle_len) for t in texts])
-
-    return df.select(
-        F.col(id_col).alias("_id"), _sh(F.col(text_col)).alias("_sh")
-    )
-
-
-def shingle_sets_expr(
-    df: DataFrame, id_col: str, text_col: str, shingle_len: int
-) -> DataFrame:
-    """Pure-expression twin of :func:`shingle_sets` (JVM-side, no
-    Python workers) — kept as the parity reference and for clusters
-    where Python worker startup outweighs the interpreted-closure cost.
-
-    Two projections on purpose: the word split materializes once per
-    row in the first, and the shingle lambda then reads the ``words``
-    attribute instead of re-evaluating ``split(lower(trim(text)))``
-    per shingle position (Catalyst's CollapseProject keeps multiply-
-    referenced non-cheap aliases in their own project)."""
-    words_df = df.select(
+    norm = df.select(
         F.col(id_col).alias("_id"),
-        tokenize.words(F.col(text_col)).alias("_words"),
+        tokenize.normalized(F.col(text_col)).alias("_s"),
     )
-    w = F.col("_words")
-    idx = F.sequence(
-        F.lit(1), F.greatest(F.size(w) - shingle_len + 1, F.lit(1))
-    )
-    return words_df.select(
+    s = F.col("_s")
+    n_words = F.length(s) - F.length(F.replace(s, F.lit(" "), F.lit(""))) + 1
+    gram = f"(?:^| )(?=([^ ]+(?: [^ ]+){{{shingle_len - 1}}}))"
+    grams = F.regexp_extract_all(s, F.lit(gram), F.lit(1))
+    return norm.select(
         "_id",
-        F.array_distinct(
-            F.transform(
-                idx, lambda i: F.concat_ws(" ", F.slice(w, i, shingle_len))
-            )
-        ).alias("_sh"),
+        F.when(n_words <= shingle_len, F.array(s))
+        .otherwise(F.array_distinct(grams))
+        .alias("_sh"),
     )
 
 
@@ -413,8 +366,8 @@ def minhash_signatures_agg(
     # explode_outer, not explode: InferFiltersFromGenerate turns inner
     # explode into a Filter(size(expr)>0) that re-inlines the whole
     # shingle expression (split included) per row — measured ~8× on
-    # this step. The shingle array is never empty (greatest(...,1)
-    # index floor), so outer ≡ inner here.
+    # this step. The shingle array is never empty (a short document
+    # is one whole-text shingle), so outer ≡ inner here.
     shingle_df = (
         shingles
         if shingles is not None

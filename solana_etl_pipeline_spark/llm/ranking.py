@@ -309,7 +309,13 @@ def pmi_bigrams(
     ``(w1, w2)`` tie-break.
     """
     ws = df.select(tokenize.words(F.col(text_col)).alias("ws"))
-    toks = ws.select(F.explode("ws").alias("w")).filter(F.col("w") != "")
+    # explode_outer, not explode: InferFiltersFromGenerate turns inner
+    # explode into a Filter(size(ws)>0) pushed below the projection,
+    # which tokenizes every row a second time. ``ws`` always holds at
+    # least one word, so outer ≡ inner here.
+    toks = ws.select(F.explode_outer("ws").alias("w")).filter(
+        F.col("w") != ""
+    )
     n1 = F.greatest(F.size("ws") - 1, F.lit(0))
     pair_arr = F.zip_with(
         F.slice("ws", 1, n1),

@@ -49,7 +49,7 @@ def word_ngrams(text: Column, n: int) -> Column:
     Tokenization matches :func:`_words` (the ``llm.tokenize``
     convention). Documents shorter than ``n`` words yield one
     whole-text gram (``slice`` truncates past the end) — the same
-    short-doc convention as ``llm.dedup._word_shingles``.
+    short-doc convention as ``llm.dedup.shingle_sets``.
     """
     words = _words(text)
     idx = F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1)))
@@ -82,11 +82,9 @@ def _py_word_ngrams(t: "str | None", n: int) -> list[str]:
     """Plain-Python twin of :func:`word_ngrams` (ordered, with
     duplicates; whole-text gram for short/None docs — the
     ``_shingle_list`` conventions minus the distinct). Tokenization is
-    SHARED with the dedup family (``llm.dedup._word_tokens``) so a
-    convention fix lands in every Arrow text path at once."""
-    from solana_etl_pipeline_spark.llm.dedup import _word_tokens
-
-    words = _word_tokens(t)
+    SHARED with every Python text path (``llm.tokenize.py_words``) so a
+    convention fix lands in all of them at once."""
+    words = tokenize.py_words(t)
     if len(words) <= n:
         return [" ".join(words)]
     return [

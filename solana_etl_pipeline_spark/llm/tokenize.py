@@ -2,9 +2,12 @@
 
 One convention, three implementations, pinned to each other:
 
-* :func:`words` — the Spark expression (JVM codegen),
+* :func:`words` — the Spark expression (JVM codegen), a split of
+  :func:`normalized` (which the regex shingler in ``llm.dedup`` reads
+  directly),
 * :func:`py_words` — the Python twin for the Arrow/pandas-UDF paths
-  (shingles, MinHash/SimHash signatures, n-gram reports),
+  (MinHash/SimHash signatures, n-gram reports) and the plain-Python
+  shingle reference,
 * :func:`words_sql` — the DuckDB snippet every oracle embeds.
 
 Convention: ``lowercase → collapse ASCII whitespace runs
@@ -69,12 +72,17 @@ WS_RUN = "[ \\t\\n\\r\\f]+"
 _WS_RUN_RE = re.compile("[ \t\n\r\f]+")
 
 
+def normalized(text: Column) -> Column:
+    """The text :func:`words` splits: lowercased, whitespace runs
+    collapsed to one space, trimmed — words joined by single spaces."""
+    return F.trim(
+        F.regexp_replace(F.lower(F.coalesce(text, F.lit(""))), WS_RUN, " ")
+    )
+
+
 def words(text: Column) -> Column:
     """Canonical token array for a text column (see module doc)."""
-    collapsed = F.regexp_replace(
-        F.lower(F.coalesce(text, F.lit(""))), WS_RUN, " "
-    )
-    return F.split(F.trim(collapsed), " ")
+    return F.split(normalized(text), " ")
 
 
 def py_words(t: "str | None") -> list[str]:

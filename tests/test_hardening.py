@@ -398,19 +398,18 @@ def test_incremental_store_survives_compaction(spark, tmp_path):
     assert (700, 99, "index") in got and (700, 600, "index") in got
 
 
-# ------------------------------------------- shingle twin parity
+# --------------------------------------- shingle reference parity
 
 
-def test_shingle_sets_pandas_matches_expression_twin(spark):
-    """The Arrow-batched shingler is the hot path; the pure-expression
-    twin is the semantic reference. Pin them identical on every edge:
-    null text, empty, whitespace runs/tabs, fewer words than the
-    shingle length, exactly the length, repeats (dedup order), case."""
-    from solana_etl_pipeline_spark.llm.dedup import (
-        shingle_sets,
-        shingle_sets_expr,
-    )
+def test_shingle_sets_matches_python_reference(spark):
+    """The regex shingler equals the plain-Python reference
+    ``_shingle_list`` on every edge: null text, empty, whitespace runs
+    and tabs, fewer words than the shingle length, exactly that length
+    and one more, repeats (dedup order), case, and the characters the
+    convention keeps as word characters (VT, NBSP, U+3000)."""
+    from solana_etl_pipeline_spark.llm.dedup import _shingle_list, shingle_sets
 
+    lengths = (1, 2, 3, 5, 8)
     texts = [
         None,
         "",
@@ -422,15 +421,21 @@ def test_shingle_sets_pandas_matches_expression_twin(spark):
         "a b a b a b a b",  # repeated shingles: dedup keeps first
         "Tabs\tand\nnewlines   collapse  the same",
         "MiXeD CaSe LoWeRs",
+        "vt\x0bjoins words\x0b here",
+        "nb\u00a0sp stays in\u00a0a word",
+        "ideo\u3000graphic space\u3000too ",
+        " lead and trail\t",
     ]
+    for n in lengths:
+        exact = " ".join(f"w{i}" for i in range(n))
+        texts += [exact, exact + " tail", "\t" + exact.upper() + "  "]
     df = spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
+        [Row(doc_id=i, text=t) for i, t in enumerate(texts)],
+        schema="doc_id long, text string",
     )
-    for n in (2, 3):
-        fast = shingle_sets(df, "doc_id", "text", n).collect()
-        ref = shingle_sets_expr(df, "doc_id", "text", n).collect()
-        got = {r._id: r._sh for r in fast}
-        want = {r._id: r._sh for r in ref}
+    for n in lengths:
+        got = {r._id: r._sh for r in shingle_sets(df, "doc_id", "text", n).collect()}
+        want = {i: _shingle_list(t, n) for i, t in enumerate(texts)}
         assert got == want, f"shingle_len={n}: {got} != {want}"
 
 

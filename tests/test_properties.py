@@ -177,15 +177,16 @@ def test_pack_sequences_conserves_docs_and_tokens(spark, texts):
     )
 
 
-# ASCII-ish text with whitespace runs, tabs/newlines, repeats, and the
-# odd non-ASCII char — the input space where the vectorized shingler
-# and the expression twin could drift apart.
+# ASCII-ish text with whitespace runs, tabs/newlines, repeats, the odd
+# non-ASCII letter and the whitespace the convention keeps as word
+# characters (VT, NBSP, U+3000) — the input space where a JVM text
+# path and its plain-Python reference could drift apart.
 _texts = st.lists(
     st.one_of(
         st.none(),
         st.text(
             alphabet=st.sampled_from(
-                list("abc XY1.\t\n  ") + ["é"]
+                list("abc XY1.\t\n  ") + ["é", "\x0b", "\u00a0", "\u3000"]
             ),
             max_size=40,
         ),
@@ -197,24 +198,33 @@ _texts = st.lists(
 
 @_SETTINGS
 @given(texts=_texts)
-def test_shingle_twins_agree_on_arbitrary_text(spark, texts):
-    """The Arrow shingler must equal the pure-expression twin on
-    arbitrary text — null handling, whitespace runs, short docs,
-    repeated shingles, case, and non-ASCII letters included (Java \\s
-    and re.ASCII \\s are both ASCII-only, so 'é' is a word char in
-    both)."""
-    from solana_etl_pipeline_spark.llm.dedup import (
-        shingle_sets,
-        shingle_sets_expr,
-    )
+def test_shingle_sets_match_python_reference_on_arbitrary_text(spark, texts):
+    """The regex shingler must equal the plain-Python reference
+    ``_shingle_list`` on arbitrary text and every shingle length —
+    null handling, whitespace runs, short docs, repeated shingles,
+    case, and non-ASCII letters included (Java \\s and re.ASCII \\s
+    are both ASCII-only, so 'é' is a word char in both)."""
+    from functools import reduce
 
+    from solana_etl_pipeline_spark.llm.dedup import _shingle_list, shingle_sets
+
+    lengths = (1, 2, 3, 5, 8)
     df = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in enumerate(texts)],
         schema="doc_id long, text string",
     )
-    fast = {r._id: r._sh for r in shingle_sets(df, "doc_id", "text", 3).collect()}
-    ref = {r._id: r._sh for r in shingle_sets_expr(df, "doc_id", "text", 3).collect()}
-    assert fast == ref
+    sets = reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            shingle_sets(df, "doc_id", "text", n).withColumn("n", F.lit(n))
+            for n in lengths
+        ],
+    )
+    got = {(r.n, r._id): r._sh for r in sets.collect()}
+    want = {
+        (n, i): _shingle_list(t, n) for n in lengths for i, t in enumerate(texts)
+    }
+    assert got == want
 
 
 @_SETTINGS

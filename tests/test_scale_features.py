@@ -5,6 +5,8 @@ elimination), persist/cache reuse (T9/X6), and plan-shape audits
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -415,6 +417,12 @@ def test_hygiene_family_plan_shapes(spark, sf_dir):
     plan = _executed_plan(QUERIES["llm_decontaminate"].spark(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+    # the shingler is one JVM regex, computed once per document on
+    # each side: no Python worker, and no inferred size() filter that
+    # would evaluate the shingle set a second time
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert plan.count("regexp_extract_all") == 2, plan
+    assert not re.search(r"Filter[^\n]*size\(", plan), plan
     # LM scoring: vocab probe broadcasts too
     plan = _executed_plan(QUERIES["llm_lm_quality_score"].spark(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
