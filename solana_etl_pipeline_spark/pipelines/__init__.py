@@ -16,7 +16,6 @@ from solana_etl_pipeline_spark.pipelines.bronze_silver import (
 from solana_etl_pipeline_spark.pipelines.gold import (
     build_risk_gold,
     refresh_gold,
-    top_tokens,
 )
 from solana_etl_pipeline_spark.pipelines.normalize import (
     dispatch_and_flatten,
@@ -30,6 +29,5 @@ __all__ = [
     "normalize_websocket_messages",
     "read_silver",
     "refresh_gold",
-    "top_tokens",
     "write_silver",
 ]

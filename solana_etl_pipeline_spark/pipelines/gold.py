@@ -5,18 +5,34 @@ transactions columns.
 ``queries/reference.py`` exercises the same operators against the
 ``events`` fixture for the oracle harness; this module is the
 production wiring: silver (15-col) in → per-mint risk scores + token
-names out, written in one pass as a gold table a dashboard polls
-(replacing the reference's 300 s cache TTL with plain re-read of a
-small table); AQE sizes its files.
+names out, written in one pass; AQE sizes its files. This is the one
+place risk is scored: the dashboard (``serving.Dashboard``) serves the
+gold table a refresh publishes instead of the reference's re-scoring
+on every cache expiry.
+
+Publishing follows a sink's atomic commit rather than a directory being
+written: each refresh writes a new version directory under the gold
+path, then publishes a one-line pointer file of its own,
+``<silver>/_gold.v<time_ns>-<id>``, by a rename to a name no file has;
+the greatest pointer names the published version. Readers resolve it
+(:func:`published_gold`) and, with :func:`gold_committed`, never keep
+a missing or partial table. The pointers live in silver so that a
+reader needs only the silver path; Spark's file listing skips
+``_``-prefixed names, and ``write_silver``'s overwrite drops them, so
+gold built from an older silver is never served.
 """
 
 from __future__ import annotations
 
+import time
+import uuid
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.operators.enrich import broadcast_enrich
-from solana_etl_pipeline_spark.operators.risk import risk_scores, top_k_by_safety
+from solana_etl_pipeline_spark.operators.risk import risk_scores
 from solana_etl_pipeline_spark.sources.sinks import write_parquet
 
 #: The reference's excluded quote mints (wSOL/USDT/USDC,
@@ -26,6 +42,9 @@ EXCLUDED_MINTS = [
     "Es9vMFrzaCERmJfrF4H2FYD4KCoNkY11McCe8BenwNYB",
     "EPjFWdd5AufqSSqeM2qN1xzybapC8G4wEGGkZwyTDt1v",
 ]
+#: Name prefix of the pointer files in silver, ``_gold.<version>``,
+#: that name the published gold versions.
+GOLD_POINTER = "_gold"
 
 
 def build_risk_gold(
@@ -76,11 +95,6 @@ def build_risk_gold(
     return scored.join(names, "mint", "left")
 
 
-def top_tokens(gold: DataFrame, k: int = 10) -> DataFrame:
-    """The dashboard's top-k safest tokens (``streamlit 1.3.txt:167``)."""
-    return top_k_by_safety(gold, key="mint", k=k)
-
-
 def write_gold(gold: DataFrame, path: str) -> None:
     """Gold is one row per mint — small at sf0.1, but the mint
     dimension is exactly what grows with the corpus, so a fixed
@@ -89,9 +103,12 @@ def write_gold(gold: DataFrame, path: str) -> None:
     (on in every engine session, ``session.RUNTIME_CONFS``), which
     sizes the write partitions from the shuffled bytes: one file for a
     small table, more as it grows. One write, with nothing persisted
-    or counted first; the dashboard reads the directory either way.
-    The table is replaced on every refresh."""
+    or counted first. ``path`` is a fresh version directory on every
+    refresh (:func:`refresh_gold`), so a write never replaces the table
+    a reader is on."""
     write_parquet(gold.hint("rebalance"), path, mode="overwrite")
+
+
 
 
 def refresh_gold(
@@ -100,15 +117,118 @@ def refresh_gold(
     gold_path: str,
     token_names: DataFrame | None = None,
 ) -> DataFrame:
-    """One dashboard refresh cycle: read silver, score, write gold.
+    """One refresh: read silver, score it, publish it as gold.
 
-    Returns a read of the just-written gold table, NOT the build
-    plan: nothing is persisted, so returning the build would make
-    every caller use (``.collect()``, a dashboard render) re-run the
-    full silver scan + risk aggregation — the small freshly-written
-    table serves the same rows from disk."""
+    The scores are written to a new version directory
+    ``gold_path/v<time_ns>-<id>``; then a pointer file of its own,
+    ``<silver_path>/_gold.v<time_ns>-<id>``, is published by renaming
+    a temp file to that name, which no file has yet, so readers move
+    from the previous version to this one in one step. Last, older
+    pointers and every other entry of ``gold_path`` are deleted except
+    the previous pointer and its version, which a reader may still be
+    collecting; that includes a table an older release wrote at the
+    root of ``gold_path``. A version loses its ``_SUCCESS`` marker
+    before its files (see :func:`gold_committed`). One writer refreshes
+    a gold path at a time.
+
+    Returns a read of the new version, NOT the build plan: nothing is
+    persisted, so returning the build would make every caller use
+    re-run the full silver scan + risk aggregation."""
     from solana_etl_pipeline_spark.pipelines.bronze_silver import read_silver
 
-    gold = build_risk_gold(read_silver(spark, silver_path), token_names)
-    write_gold(gold, gold_path)
-    return spark.read.parquet(gold_path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsc.hadoopConfiguration()
+    root = Path(gold_path)
+    fs = root.getFileSystem(conf)
+    root = fs.makeQualified(root)
+    name = f"v{time.time_ns()}-{uuid.uuid4().hex[:8]}"
+    version = Path(root, name).toString()
+    write_gold(
+        build_risk_gold(read_silver(spark, silver_path), token_names), version
+    )
+    older = _pointers(spark, silver_path)
+    _publish_pointer(spark, silver_path, name, version)
+    keep = {name}
+    if older:  # the previous version, named by its pointer's suffix
+        keep.add(older[-1].getName()[len(GOLD_POINTER) + 1:])
+    for pointer in older[:-1]:
+        pointer.getFileSystem(conf).delete(pointer, False)
+    for st in fs.listStatus(root):
+        if st.getPath().getName() not in keep:
+            if st.isDirectory():
+                fs.delete(Path(st.getPath(), "_SUCCESS"), False)
+            fs.delete(st.getPath(), True)
+    return spark.read.parquet(version)
+
+
+def published_gold(spark: SparkSession, silver_path: str) -> str:
+    """The qualified path of the gold version last published for
+    ``silver_path``, named by its greatest pointer;
+    ``FileNotFoundError`` when none is (no refresh yet, or silver was
+    rewritten since). A pointer deleted between the listing and its
+    read has a newer one, so the listing is taken again."""
+    while pointers := _pointers(spark, silver_path):
+        fs = pointers[-1].getFileSystem(spark._jsc.hadoopConfiguration())
+        try:
+            stream = fs.open(pointers[-1])
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getName() != (
+                "java.io.FileNotFoundException"
+            ):
+                raise
+            continue
+        jio = spark._jvm.java.io
+        try:
+            return jio.BufferedReader(
+                jio.InputStreamReader(stream, "UTF-8")
+            ).readLine()
+        finally:
+            stream.close()
+    raise FileNotFoundError(
+        f"no gold is published for silver {silver_path}: run "
+        "refresh_gold over it"
+    )
+
+
+def gold_committed(spark: SparkSession, version: str) -> bool:
+    """Whether the gold version still has its ``_SUCCESS`` marker.
+    :func:`refresh_gold` deletes a version's marker before its files,
+    so a read of ``version`` that finished while the marker was there
+    read the whole table; after it finds none, the read may have
+    missed files and must be taken again."""
+    marker = spark._jvm.org.apache.hadoop.fs.Path(version, "_SUCCESS")
+    return marker.getFileSystem(spark._jsc.hadoopConfiguration()).exists(
+        marker
+    )
+
+
+def _pointers(spark: SparkSession, silver_path: str) -> list:
+    """The gold pointers in silver, oldest first (Hadoop ``Path``s;
+    the 19-digit ``time_ns`` in their names sorts them)."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    pattern = Path(silver_path, f"{GOLD_POINTER}.v*")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    found = fs.globStatus(pattern) or []
+    return sorted((st.getPath() for st in found), key=lambda p: p.getName())
+
+
+def _publish_pointer(
+    spark: SparkSession, silver_path: str, name: str, target: str
+) -> None:
+    """Publish ``<silver_path>/_gold.<name>`` reading ``target``: write
+    a dot-prefixed temp file, then rename it to the pointer's name.
+    No file has that name, so the plain rename is atomic on a local
+    filesystem and on HDFS, and a reader sees no pointer or the whole
+    one."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    pointer = Path(silver_path, f"{GOLD_POINTER}.{name}")
+    tmp = Path(silver_path, f".{GOLD_POINTER}.{name}.tmp")
+    fs = pointer.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = fs.create(tmp, False)
+    try:
+        out.write(f"{target}\n".encode())
+    finally:
+        out.close()
+    if not fs.rename(tmp, pointer):
+        fs.delete(tmp, False)
+        raise OSError(f"could not publish the gold pointer {pointer}")

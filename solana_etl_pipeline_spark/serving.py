@@ -5,8 +5,12 @@ set; the engine parts — queries, caching, refresh — are identical).
 
 Surface parity with the reference:
 
+- per-mint risk from the gold table ``pipelines.gold.refresh_gold``
+  publishes for the silver path, not re-scored on every reload as the
+  reference's cache expiry does (``streamlit 1.3.txt:41-52,83-113``);
 - working set = most recent rows by ``ts`` (``streamlit 1.3.txt:49-52``
-  tail-100k + sort; here defined by timestamp, not file order);
+  tail-100k + sort; here defined by timestamp, not file order), the
+  source of the recent-transactions page and the token cards' rows;
 - NOT-IN filter of quote mints (``:17-21,53``);
 - top-100 recent transactions view (``:162``);
 - per-mint risk scores, top-10 by safety (``:165-167``);
@@ -18,14 +22,14 @@ Surface parity with the reference:
 - periodic refresh loop (``:183-185``) via :func:`serve_http`'s
   meta-refresh, or any caller polling :meth:`Dashboard.overview`.
 
-Like the reference's pandas frame, a snapshot is the working set's
-answers held in memory: a reload collects everything a view can return
-into a :class:`Snapshot` of plain Python rows and unpersists the
-working set before it returns, so no view starts a Spark job. The
-driver holds at most the gold table (one row per mint) plus
-:data:`CARD_TXNS` rows per mint; both are bounded by the working set's
+Like the reference's pandas frame, a snapshot is the answers held in
+memory: a reload collects everything a view can return into a
+:class:`Snapshot` of plain Python rows, so no view starts a Spark job.
+The driver holds the published gold table (one row per mint of all of
+silver), :data:`RECENT_ROWS` rows, and up to :data:`CARD_TXNS` rows per
+mint of the working set; the last two are bounded by the working set's
 size, ``Dashboard(working_set_rows=)``, as the reference's pandas
-tail-100k is.
+tail-100k is. Nothing is persisted.
 """
 
 from __future__ import annotations
@@ -36,15 +40,15 @@ import threading
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.functions.banding import risk_band
 from solana_etl_pipeline_spark.pipelines.bronze_silver import read_silver
 from solana_etl_pipeline_spark.pipelines.gold import (
     EXCLUDED_MINTS,
-    build_risk_gold,
-    top_tokens,
+    gold_committed,
+    published_gold,
 )
 
 #: Rows of the newest-transactions page (``streamlit 1.3.txt:162``),
@@ -135,12 +139,12 @@ class TTLCache:
 
 
 class Snapshot:
-    """One load of silver as plain Python rows (dicts), which every
-    view reads:
+    """One load of the published gold and of silver as plain Python
+    rows (dicts), which every view reads:
 
-    - ``gold``: every mint of the working set, safest first, with its
-      four ``*_verdict`` bands — the top-k table, and each token's
-      card (``cards``, by mint);
+    - ``gold``: every mint of the published gold version, safest
+      first, with its four ``*_verdict`` bands — the top-k table, and
+      each token's card (``cards``, by mint);
     - ``recent``: the newest :data:`RECENT_ROWS` rows, ts-descending;
     - ``txns``: each mint's newest :data:`CARD_TXNS` rows,
       ts-descending.
@@ -162,11 +166,20 @@ class Snapshot:
 
 
 class Dashboard:
-    """The read-side app: silver in, display pages out.
+    """The read-side app: silver and its published gold in, display
+    pages out.
+
+    Risk scores come from the gold version that ``refresh_gold``
+    published for ``silver_path`` (``pipelines.gold.published_gold``);
+    the dashboard never scores risk itself. With no gold published for
+    this silver — never refreshed, or rewritten by ``write_silver``
+    since — every view raises ``FileNotFoundError``.
 
     ``working_set_rows`` is the reference's tail-100k memory guard —
     but expressed as ``orderBy(desc(ts)).limit(n)`` (a TakeOrdered
     heap-merge), so "most recent" is defined by data, not file order.
+    It bounds the newest-rows and card-rows collects; gold lists every
+    mint of silver.
 
     A reload collects every page and card into a :class:`Snapshot`
     before readers can see it; views read that snapshot and start no
@@ -178,74 +191,87 @@ class Dashboard:
         self,
         spark: SparkSession,
         silver_path: str,
-        token_names: DataFrame | None = None,
         working_set_rows: int = 100_000,
         data_ttl_sec: float = 300.0,
         clock: Callable[[], float] = time.monotonic,
     ):
         self.spark = spark
         self.silver_path = silver_path
-        self.token_names = token_names
         self.working_set_rows = working_set_rows
         self._cache = TTLCache(data_ttl_sec, clock)
 
     # -- data ----------------------------------------------------------
 
     def _load(self) -> Snapshot:
-        silver = read_silver(self.spark, self.silver_path)
-        # the working set feeds all three collects below; it is
-        # persisted for their duration only
-        recent = (
-            silver.filter(~F.col("mint").isin(EXCLUDED_MINTS))
+        gold = self._published_rows()
+        newest = (
+            read_silver(self.spark, self.silver_path)
+            .filter(~F.col("mint").isin(EXCLUDED_MINTS))
             .orderBy(F.desc("ts"))
-            .limit(self.working_set_rows)
-            .persist()
         )
+        recent_rows = (
+            newest.select("ts", "mint", "token_name", "type",
+                          "token_amount", "from_account", "to_account")
+            .limit(min(RECENT_ROWS, self.working_set_rows))
+            .collect()
+        )
+        by_mint = Window.partitionBy("mint").orderBy(F.desc("ts"))
         txn_cols = ("ts", "type", "token_amount", "from_account", "to_account")
-        try:
-            gold = build_risk_gold(recent, token_names=self.token_names)
-            # a working set of N rows has at most N mints: all of gold
-            gold_rows = top_tokens(
-                gold.withColumns({
-                    "risk_verdict": risk_band(F.col("jeet_risk_score")),
-                    "ownership_verdict": risk_band(F.col("ownership_risk")),
-                    "liquidity_verdict": risk_band(F.col("liquidity_risk")),
-                    "concentration_verdict": risk_band(
-                        F.col("txn_concentration")
-                    ),
-                }),
-                k=self.working_set_rows,
-            ).collect()
-            recent_rows = (
-                recent.select("ts", "mint", "token_name", "type",
-                              "token_amount", "from_account", "to_account")
-                .limit(RECENT_ROWS)  # already ts-descending
-                .collect()
-            )
-            newest = Window.partitionBy("mint").orderBy(F.desc("ts"))
-            txn_rows = (
-                recent.withColumn("rank", F.row_number().over(newest))
-                .filter(F.col("rank") <= CARD_TXNS)
-                .select("mint", "rank", *txn_cols)
-                .collect()
-            )
-        finally:
-            recent.unpersist()
+        txn_rows = (
+            newest.limit(self.working_set_rows)
+            .withColumn("rank", F.row_number().over(by_mint))
+            .filter(F.col("rank") <= CARD_TXNS)
+            .select("mint", "rank", *txn_cols)
+            .collect()
+        )
         txns: dict[str, list[dict]] = {}
         for r in sorted(txn_rows, key=lambda r: r["rank"]):
             txns.setdefault(r["mint"], []).append({c: r[c] for c in txn_cols})
-        return Snapshot(
-            [r.asDict() for r in gold_rows],
-            [r.asDict() for r in recent_rows],
-            txns,
-        )
+        return Snapshot(gold, [r.asDict() for r in recent_rows], txns)
+
+    def _published_rows(self) -> list[dict]:
+        """The published gold version's rows with their verdicts,
+        safest first. A refresh deletes the version before the one it
+        publishes, so a read that fails, or finds the version's
+        ``_SUCCESS`` gone after it (``gold_committed``), is taken again
+        on the version the pointer names now; with the pointer unmoved,
+        it raises."""
+        version = published_gold(self.spark, self.silver_path)
+        while True:
+            try:
+                rows = (
+                    self.spark.read.parquet(version)
+                    .withColumns({
+                        "risk_verdict": risk_band(F.col("jeet_risk_score")),
+                        "ownership_verdict": risk_band(F.col("ownership_risk")),
+                        "liquidity_verdict": risk_band(F.col("liquidity_risk")),
+                        "concentration_verdict": risk_band(
+                            F.col("txn_concentration")
+                        ),
+                    })
+                    .collect()
+                )
+                if not gold_committed(self.spark, version):
+                    raise FileNotFoundError(f"gold {version} was deleted")
+            except Exception:
+                moved = published_gold(self.spark, self.silver_path)
+                if moved == version:
+                    raise
+                version = moved
+                continue
+            # top_k_by_safety's order, without a sort job
+            return sorted(
+                (r.asDict() for r in rows),
+                key=lambda r: (-r["safety_score"], r["mint"]),
+            )
 
     def _snapshot(self) -> Snapshot:
         return self._cache.get(self._load)
 
     def refresh(self) -> None:
-        """Invalidate so the next view re-reads silver; a request still
-        rendering the replaced snapshot keeps it until it finishes."""
+        """Invalidate so the next view re-reads the gold pointer and
+        silver; a request still rendering the replaced snapshot keeps it
+        until it finishes."""
         self._cache.invalidate()
 
     # -- views (each reads the snapshot; no Spark job) -----------------
@@ -338,7 +364,9 @@ def serve_http(
 ):
     """Serve the overview on localhost via stdlib http.server; returns
     the (started) server — caller owns shutdown. The page meta-refreshes
-    every ``refresh_sec``; data re-reads silver on the TTL cadence."""
+    every ``refresh_sec``; data re-reads the published gold and silver
+    on the TTL cadence. A view that raises (no gold published for the
+    silver, say) answers 500."""
     import http.server
 
     class Handler(http.server.BaseHTTPRequestHandler):

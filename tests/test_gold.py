@@ -5,6 +5,7 @@ over reference-true columns, plus malformed-record tolerance.
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -15,8 +16,9 @@ from solana_etl_pipeline_spark.pipelines.bronze_silver import (
 )
 from solana_etl_pipeline_spark.pipelines.gold import (
     build_risk_gold,
+    published_gold,
     refresh_gold,
-    top_tokens,
+    write_gold,
 )
 from solana_etl_pipeline_spark.schemas import CLEANED_TRANSACTIONS, EVENTS
 from solana_etl_pipeline_spark.sources.sinks import read_json_dir
@@ -80,8 +82,8 @@ def test_bronze_to_gold_end_to_end(spark, tmp_path):
     )
     assert rows["mintDiverse"].token_name == "Tok-mintDiverse"
 
-    top = top_tokens(spark.read.parquet(gold_path), k=1).collect()
-    assert top[0].mint == "mintDiverse"
+    top = gold.orderBy(F.desc("safety_score"), F.asc("mint")).first()
+    assert top.mint == "mintDiverse"
 
 
 def test_gold_token_name_enrichment(spark):
@@ -139,3 +141,58 @@ def test_gold_prefers_real_name_over_empty_pad(spark):
     )
     gold = build_risk_gold(silver)
     assert {r.token_name for r in gold.collect()} == {"RealName"}
+
+
+def _silver(spark, tmp_path) -> str:
+    """Silver of two wrapped documents and one websocket message."""
+    helius_raw = spark.createDataFrame(
+        [Row(raw=_wrapped_doc("m1", ["s1", "s2"], [("a", "b"), ("c", "d")])),
+         Row(raw=_wrapped_doc("m2", ["s3"], [("e", "f")]))]
+    )
+    ws_raw = spark.createDataFrame([Row(raw=json.dumps({"mint": "m3"}))])
+    path = str(tmp_path / "silver")
+    write_silver(build_silver(helius_raw, ws_raw), path)
+    return path
+
+
+def _versions(gold_path: str) -> list[str]:
+    return sorted(
+        n for n in os.listdir(gold_path)
+        if os.path.isdir(os.path.join(gold_path, n))
+    )
+
+
+def test_refresh_keeps_the_new_and_the_previous_version(spark, tmp_path):
+    """Each refresh publishes a new version directory and a pointer to
+    it; the version and pointer before them stay for readers still
+    collecting it, older ones go."""
+    silver_path, gold_path = _silver(spark, tmp_path), str(tmp_path / "gold")
+    published = []
+    for _ in range(3):
+        gold = refresh_gold(spark, silver_path, gold_path)
+        published.append(published_gold(spark, silver_path))
+        assert {r.mint for r in gold.collect()} == {"m1", "m2", "m3"}
+    assert len(set(published)) == 3
+    assert _versions(gold_path) == sorted(
+        p.rsplit("/", 1)[1] for p in published[1:]
+    )
+    # the pointers of those two versions stay, invisible to silver's
+    # readers
+    assert sorted(
+        n for n in os.listdir(silver_path) if n.startswith("_gold")
+    ) == ["_gold." + p.rsplit("/", 1)[1] for p in published[1:]]
+    assert spark.read.parquet(silver_path).count() == 4
+
+
+def test_refresh_over_a_gold_path_of_the_previous_release(spark, tmp_path):
+    """A gold path written in place (part files at its root, as the
+    previous release wrote it) still refreshes; the old table goes."""
+    silver_path, gold_path = _silver(spark, tmp_path), str(tmp_path / "gold")
+    write_gold(build_risk_gold(spark.read.parquet(silver_path)), gold_path)
+    assert any(n.startswith("part-") for n in os.listdir(gold_path))
+    gold = refresh_gold(spark, silver_path, gold_path)
+    assert {r.mint for r in gold.collect()} == {"m1", "m2", "m3"}
+    assert [n for n in os.listdir(gold_path) if not n.startswith(".")] == (
+        _versions(gold_path)
+    )
+    assert len(_versions(gold_path)) == 1

@@ -479,8 +479,9 @@ def test_full_pipeline_soak(spark, tmp_path):
     """SURVEY §3 lifecycle as ONE continuously-running system: live
     websocket fixture replay → landing files → bronze (continuous
     processingTime stream) → silver normalize + watermarked dedup
-    (second chained continuous stream) → gold/serving snapshot — over
-    several replay ticks, asserting
+    (second chained continuous stream) → ``refresh_gold`` on each tick
+    → serving snapshot of the published gold — over several replay
+    ticks, asserting
 
     * monotone gold growth (each tick's mints appear, nothing lost),
     * bounded streaming state (dedup state rows evicted by the
@@ -495,6 +496,7 @@ def test_full_pipeline_soak(spark, tmp_path):
     """
     import time as _time
 
+    from solana_etl_pipeline_spark.pipelines.gold import refresh_gold
     from solana_etl_pipeline_spark.pipelines.normalize import (
         normalize_websocket_messages,
     )
@@ -589,6 +591,7 @@ def test_full_pipeline_soak(spark, tmp_path):
             expected |= {f"MINT{100 * tick + i}" for i in range(12)}
             got = await_mints(expected)
             assert got == expected, f"tick {tick}: {got} != {expected}"
+            refresh_gold(spark, silver, str(tmp_path / "gold"))
 
             if dash is None:
                 dash = Dashboard(

@@ -1,22 +1,27 @@
-"""Serving-layer tests: the dashboard surface over silver→gold
-(``streamlit 1.3.txt`` parity — views, banded verdicts, TTL cache,
-HTTP refresh page)."""
+"""Serving-layer tests: the dashboard surface over silver and the gold
+table ``refresh_gold`` publishes for it (``streamlit 1.3.txt`` parity —
+views, banded verdicts, TTL cache, HTTP refresh page)."""
 
 from __future__ import annotations
 
 import datetime
 import itertools
 import json
+import os
+import threading
 import time
+import urllib.error
 import urllib.request
 
 import pytest
 from pyspark.sql import Row
 
+from solana_etl_pipeline_spark import serving
 from solana_etl_pipeline_spark.pipelines.bronze_silver import (
     build_silver,
     write_silver,
 )
+from solana_etl_pipeline_spark.pipelines.gold import refresh_gold
 from solana_etl_pipeline_spark.serving import (
     CARD_TXNS,
     RECENT_ROWS,
@@ -27,9 +32,11 @@ from solana_etl_pipeline_spark.serving import (
 from tests.test_gold import _wrapped_doc
 
 
-def _silver_fixture(spark, tmp_path, extra_docs=()) -> str:
+def _silver_fixture(spark, tmp_path, extra_docs=(), publish=True) -> str:
     """Write (or rewrite) silver at ``tmp_path/silver`` from two
-    wrapped documents, a websocket message and ``extra_docs``."""
+    wrapped documents, a websocket message and ``extra_docs``, and
+    publish its gold at ``tmp_path/gold`` unless ``publish`` is
+    false."""
     docs = [
         _wrapped_doc(
             "mintDiverse",
@@ -47,7 +54,49 @@ def _silver_fixture(spark, tmp_path, extra_docs=()) -> str:
     )
     path = str(tmp_path / "silver")
     write_silver(build_silver(helius_raw, ws_raw), path)
+    if publish:
+        refresh_gold(spark, path, str(tmp_path / "gold"))
     return path
+
+
+def _txn(mint: str, i: int, **cols) -> Row:
+    """A silver row of ``mint``, its ``i``-th transaction, minute ``i``
+    of 2024-01-01 unless ``cols`` say otherwise."""
+    row = dict(
+        description="", type="buy", source="websocket", fee=0,
+        fee_payer="", signature=f"{mint}-{i}", slot=0,
+        ts=datetime.datetime(2024, 1, 1, 0, i),
+        token_name="T", token_symbol="T",
+        from_account=f"a{i}", to_account=f"b{i}",
+        token_amount=float(i), mint=mint, token_standard="",
+    )
+    row.update(cols)
+    return Row(**row)
+
+
+def _publish_rows(spark, tmp_path, rows: list[Row]) -> str:
+    """Write silver from ``rows`` and publish its gold; returns the
+    silver path."""
+    path = str(tmp_path / "silver")
+    write_silver(spark.createDataFrame(rows), path)
+    refresh_gold(spark, path, str(tmp_path / "gold"))
+    return path
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts, counted under a job group of its
+    own."""
+    sc = spark.sparkContext
+    group = f"probe-{next(_probes)}"
+    sc.setJobGroup(group, "counted call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_probes = itertools.count()
 
 
 def test_ttl_cache_reloads_after_expiry():
@@ -121,8 +170,6 @@ def test_serve_http_renders_overview(spark, tmp_path):
 
 def test_ttl_cache_reloads_once_under_concurrent_gets():
     """Concurrent gets at expiry run the loader exactly once."""
-    import threading
-
     now = [0.0]
     loads = [0]
     cache = TTLCache(ttl_sec=10.0, clock=lambda: now[0])
@@ -149,8 +196,6 @@ def test_ttl_cache_serves_stale_value_during_refresh():
     """A reader arriving while another thread runs the loader is served
     the previous snapshot immediately instead of queueing behind the
     reload (the loader runs outside the lock — ADVICE r5)."""
-    import threading
-
     now = [0.0]
     in_loader = threading.Event()
     release_loader = threading.Event()
@@ -190,8 +235,6 @@ def test_ttl_cache_invalidate_keeps_serve_stale_path():
     in flight is served the previous snapshot immediately — the old
     ``_loaded_at = None`` form made every such reader block behind
     the reload (review r15)."""
-    import threading
-
     now = [0.0]
     in_loader = threading.Event()
     release_loader = threading.Event()
@@ -227,8 +270,6 @@ def test_ttl_cache_invalidate_racing_load_is_not_lost():
     be swallowed: the loader read pre-invalidation inputs, so its
     result installs EXPIRED and the next get() reloads instead of
     serving it as fresh for a full TTL (review r15)."""
-    import threading
-
     now = [0.0]
     in_loader = threading.Event()
     release_loader = threading.Event()
@@ -262,21 +303,12 @@ def test_overview_html_escapes_hostile_token_names(spark, tmp_path):
     named ``<script>...``); the HTML overview must escape every cell
     (review r15)."""
     payload = "<script>alert(1)</script>"
-    silver = spark.createDataFrame(
-        [
-            Row(
-                description="", type="buy", source="websocket", fee=0,
-                fee_payer="", signature=f"s{i}", slot=0,
-                ts=datetime.datetime(2024, 1, 1, 0, i),
-                token_name=payload, token_symbol="X",
-                from_account="a", to_account="b", token_amount=1.0,
-                mint=f"mint{i}", token_standard="",
-            )
-            for i in range(3)
-        ]
+    path = _publish_rows(
+        spark, tmp_path,
+        [_txn(f"mint{i}", i, token_name=payload, token_symbol="X",
+              from_account="a", to_account="b", token_amount=1.0)
+         for i in range(3)],
     )
-    path = str(tmp_path / "silver")
-    write_silver(silver, path)
     dash = Dashboard(spark, path, working_set_rows=100)
     page = dash.overview_html()
     assert "<script>" not in page
@@ -286,9 +318,6 @@ def test_overview_html_escapes_hostile_token_names(spark, tmp_path):
 def test_serve_http_404_for_non_root(spark, tmp_path):
     """Only the overview page exists; /favicon.ico must not run the
     full dashboard collects (review r15)."""
-    import urllib.error
-    import urllib.request
-
     silver_path = _silver_fixture(spark, tmp_path)
     dash = Dashboard(spark, silver_path, working_set_rows=1000)
     server = serve_http(dash, port=0)
@@ -312,8 +341,6 @@ def test_serve_http_404_for_non_root(spark, tmp_path):
 def test_serve_http_answers_500_when_overview_fails(spark, tmp_path):
     """A view that raises answers HTTP 500 with a plain-text body
     instead of dropping the connection."""
-    import urllib.error
-
     dash = Dashboard(spark, str(tmp_path / "no-such-silver"))
     server = serve_http(dash, port=0)
     try:
@@ -349,20 +376,16 @@ def test_views_collect_once_per_snapshot(spark, tmp_path):
         )
 
     first = views()
-    sc = spark.sparkContext
-    sc.setJobGroup("probe", "second request of every view")
-    try:
-        second = views()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup("probe")) == []
-    assert second == first
+    second = []
+    assert _jobs_of(spark, lambda: second.extend(views())) == 0
+    assert tuple(second) == first
 
     new_doc = _wrapped_doc(
         "mintNew", [f"n{i}" for i in range(3)],
         [(f"nb{i}", f"nh{i}") for i in range(3)],
     )
-    _silver_fixture(spark, tmp_path, [new_doc])  # rewrites silver_path
+    # rewrites silver_path, then publishes its gold
+    _silver_fixture(spark, tmp_path, [new_doc])
     dash.refresh()
     assert "mintNew" in {r["mint"] for r in dash.top_safest()}
     recent = dash.recent_transactions()
@@ -404,19 +427,15 @@ def test_token_detail_of_a_new_mint_starts_no_spark_job(spark, tmp_path):
     silver_path = _silver_fixture(spark, tmp_path)
     dash = Dashboard(spark, silver_path, working_set_rows=1000)
     dash._snapshot()
-    sc = spark.sparkContext
-    sc.setJobGroup("probe", "first request of each card")
-    try:
-        cards = [dash.token_detail(m) for m in ("mintDiverse", "mintWs")]
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup("probe")) == []
+    cards = []
+    assert _jobs_of(spark, lambda: cards.extend(
+        dash.token_detail(m) for m in ("mintDiverse", "mintWs")
+    )) == 0
     assert [c["card"]["mint"] for c in cards] == ["mintDiverse", "mintWs"]
 
 
 def test_load_leaves_nothing_persisted(spark, tmp_path):
-    """The working set is unpersisted before the load returns; a
-    snapshot holds Python rows only."""
+    """A load persists nothing; a snapshot holds Python rows only."""
     silver_path = _silver_fixture(spark, tmp_path)
     jsc = spark.sparkContext._jsc.sc()
     before = len(jsc.getRDDStorageInfo())
@@ -444,22 +463,10 @@ def test_card_lists_newest_transactions(spark, tmp_path):
     """A card lists min(CARD_TXNS, events) of the token's rows, the
     newest first."""
     events = {"mintMany": 25, "mintFew": 3}
-    silver = spark.createDataFrame(
-        [
-            Row(
-                description="", type="buy", source="websocket", fee=0,
-                fee_payer="", signature=f"{mint}-{i}", slot=0,
-                ts=datetime.datetime(2024, 1, 1, 0, i),
-                token_name="T", token_symbol="T",
-                from_account=f"a{i}", to_account=f"b{i}",
-                token_amount=float(i), mint=mint, token_standard="",
-            )
-            for mint, n in events.items()
-            for i in range(n)
-        ]
+    path = _publish_rows(
+        spark, tmp_path,
+        [_txn(mint, i) for mint, n in events.items() for i in range(n)],
     )
-    path = str(tmp_path / "silver")
-    write_silver(silver, path)
     dash = Dashboard(spark, path, working_set_rows=1000)
     for mint, n in events.items():
         txns = dash.token_detail(mint)["transactions"]
@@ -487,3 +494,141 @@ def test_overview_reads_one_snapshot(spark, tmp_path, monkeypatch):
     assert len(loads) == 1
     dash.overview_text()
     assert len(loads) == 2
+
+
+def test_snapshot_load_starts_four_jobs(spark, tmp_path):
+    """A load reads the published gold (a footer read and a collect)
+    and collects the newest rows and the card rows from silver: 4
+    Spark jobs, where scoring risk in the load took 8. Every load reads
+    the version the pointer names, moved or not."""
+    silver_path = _silver_fixture(spark, tmp_path)
+    dash = Dashboard(spark, silver_path, working_set_rows=1000)
+    assert _jobs_of(spark, dash._snapshot) == 4
+    dash.refresh()
+    assert _jobs_of(spark, dash._snapshot) == 4
+    refresh_gold(spark, silver_path, str(tmp_path / "gold"))
+    dash.refresh()
+    assert _jobs_of(spark, dash._snapshot) == 4
+
+
+def test_load_rereads_a_version_deleted_under_it(spark, tmp_path, monkeypatch):
+    """A load that resolved a version a later refresh is deleting reads
+    the version published since: a version without ``_SUCCESS`` (which
+    retention deletes first) is never served, and with the pointer
+    unmoved the load raises."""
+    silver_path = _silver_fixture(spark, tmp_path)
+    stale = serving.published_gold(spark, silver_path)
+    refresh_gold(spark, silver_path, str(tmp_path / "gold"))
+    current = serving.published_gold(spark, silver_path)
+    assert stale != current
+    os.remove(os.path.join(stale.removeprefix("file:"), "_SUCCESS"))
+    resolved = [stale, current]
+    monkeypatch.setattr(
+        serving, "published_gold", lambda *_: resolved.pop(0)
+    )
+    dash = Dashboard(spark, silver_path, working_set_rows=1000)
+    assert len(dash.top_safest(k=1000)) == 3
+    assert resolved == []
+    resolved.extend([stale, stale])
+    dash.refresh()
+    with pytest.raises(FileNotFoundError, match="deleted"):
+        dash.top_safest()
+
+
+def test_serving_does_not_score_risk():
+    """Risk is scored only by ``refresh_gold``."""
+    assert not {"build_risk_gold", "risk_scores"} & set(vars(serving))
+
+
+def _assert_unpublished(spark, dash: Dashboard) -> None:
+    """Every view raises ``FileNotFoundError`` naming refresh_gold, and
+    ``serve_http`` answers 500."""
+    views = (
+        dash.top_safest,
+        dash.recent_transactions,
+        lambda: dash.token_detail("mintConc"),
+        dash.overview_text,
+        dash.overview_html,
+    )
+    for view in views:
+        with pytest.raises(FileNotFoundError, match="refresh_gold"):
+            view()
+    server = serve_http(dash, port=0)
+    try:
+        host, port = server.server_address
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(f"http://{host}:{port}/", timeout=30)
+        assert err.value.code == 500
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def test_views_fail_without_published_gold(spark, tmp_path):
+    """Silver that no refresh has published gold for is not served."""
+    silver_path = _silver_fixture(spark, tmp_path, publish=False)
+    _assert_unpublished(spark, Dashboard(spark, silver_path))
+
+
+def test_rewritten_silver_serves_no_stale_gold(spark, tmp_path):
+    """``write_silver`` drops the gold pointer: after it rewrites
+    silver, the views fail until gold is refreshed, rather than serve
+    gold built from the old silver."""
+    silver_path = _silver_fixture(spark, tmp_path)
+    dash = Dashboard(spark, silver_path, working_set_rows=1000)
+    assert len(dash.top_safest()) == 3
+    new_doc = _wrapped_doc("mintNew", ["n0"], [("nb0", "nh0")])
+    _silver_fixture(spark, tmp_path, [new_doc], publish=False)
+    dash.refresh()
+    _assert_unpublished(spark, dash)
+    refresh_gold(spark, silver_path, str(tmp_path / "gold"))
+    assert "mintNew" in {r["mint"] for r in dash.top_safest()}
+
+
+def test_gold_lists_every_mint_beyond_the_working_set(spark, tmp_path):
+    """Gold covers all of silver; ``working_set_rows`` bounds only the
+    newest rows and the card rows, which come from the newest rows."""
+    rows = [_txn(f"mint{m}", 5 * m + i) for m in range(6) for i in range(5)]
+    path = _publish_rows(spark, tmp_path, rows)
+    dash = Dashboard(spark, path, working_set_rows=8)
+    mints = {f"mint{m}" for m in range(6)}
+    assert {r["mint"] for r in dash.top_safest(k=1000)} == mints
+    newest = sorted((r.ts for r in rows), reverse=True)[:8]
+    assert [r["ts"] for r in dash.recent_transactions()] == newest
+    card_rows = [
+        t["ts"] for m in mints for t in dash.token_detail(m)["transactions"]
+    ]
+    assert sorted(card_rows, reverse=True) == newest
+
+
+def test_dashboard_reads_while_gold_refreshes(spark, tmp_path):
+    """One thread refreshes gold ten times while another reloads the
+    dashboard and reads its full top list: every answer holds every
+    mint, and no read raises."""
+    silver_path = _silver_fixture(spark, tmp_path)
+    gold_path = str(tmp_path / "gold")
+    dash = Dashboard(spark, silver_path, working_set_rows=1000)
+    mints = {r["mint"] for r in dash.top_safest(k=1000)}
+    done = threading.Event()
+    errors = []
+
+    def refresher():
+        try:
+            for _ in range(10):
+                refresh_gold(spark, silver_path, gold_path)
+        except BaseException as e:  # reported by the asserting thread
+            errors.append(e)
+        finally:
+            done.set()
+
+    thread = threading.Thread(target=refresher)
+    thread.start()
+    answers = []
+    try:
+        while not done.is_set():
+            dash.refresh()
+            answers.append({r["mint"] for r in dash.top_safest(k=1000)})
+    finally:
+        thread.join(timeout=600)
+    assert not errors
+    assert answers and all(a == mints for a in answers)
