@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.operators.enrich import broadcast_enrich
 from solana_etl_pipeline_spark.operators.risk import risk_scores
+from solana_etl_pipeline_spark.schemas import RISK_GOLD
 from solana_etl_pipeline_spark.sources.sinks import write_parquet
 
 #: The reference's excluded quote mints (wSOL/USDT/USDC,
@@ -141,11 +142,16 @@ def refresh_gold(
     root = Path(gold_path)
     fs = root.getFileSystem(conf)
     root = fs.makeQualified(root)
+    gold = build_risk_gold(read_silver(spark, silver_path), token_names)
+    built, declared = _columns(gold.schema), _columns(RISK_GOLD)
+    if built != declared:
+        raise ValueError(
+            f"the gold built from {silver_path} has columns {built}, "
+            f"not schemas.RISK_GOLD's {declared}"
+        )
     name = f"v{time.time_ns()}-{uuid.uuid4().hex[:8]}"
     version = Path(root, name).toString()
-    write_gold(
-        build_risk_gold(read_silver(spark, silver_path), token_names), version
-    )
+    write_gold(gold, version)
     older = _pointers(spark, silver_path)
     _publish_pointer(spark, silver_path, name, version)
     keep = {name}
@@ -158,7 +164,13 @@ def refresh_gold(
             if st.isDirectory():
                 fs.delete(Path(st.getPath(), "_SUCCESS"), False)
             fs.delete(st.getPath(), True)
-    return spark.read.parquet(version)
+    return spark.read.schema(RISK_GOLD).parquet(version)
+
+
+def _columns(schema) -> list[tuple[str, str]]:
+    """A schema's (name, type) pairs in order; nullability aside, since
+    a Parquet read makes every column nullable."""
+    return [(f.name, f.dataType.simpleString()) for f in schema]
 
 
 def published_gold(spark: SparkSession, silver_path: str) -> str:

@@ -132,6 +132,26 @@ CLEANED_TRANSACTIONS = StructType(
     ]
 )
 
+#: The per-mint risk table ``pipelines.gold.build_risk_gold`` builds and
+#: ``refresh_gold`` publishes (``streamlit 1.3.txt:83-113``), in the
+#: order it writes. Readers of a published version read by this schema,
+#: so no read infers one from the files' footers; ``refresh_gold``
+#: refuses a build whose names or types differ from it.
+RISK_GOLD = StructType(
+    [
+        StructField("mint", StringType()),
+        StructField("unique_holders", LongType()),
+        StructField("unique_buyers", LongType()),
+        StructField("total_events", LongType()),
+        StructField("ownership_risk", DoubleType()),
+        StructField("liquidity_risk", DoubleType()),
+        StructField("txn_concentration", DoubleType()),
+        StructField("jeet_risk_score", DoubleType()),
+        StructField("safety_score", DoubleType()),
+        StructField("token_name", StringType()),
+    ]
+)
+
 # ---------------------------------------------------------------------------
 # Fixture schemas (TESTDATA.md / FIXTURES.md §A) — declared so readers can
 # enforce them instead of trusting inference.

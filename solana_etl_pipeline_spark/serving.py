@@ -29,7 +29,10 @@ The driver holds the published gold table (one row per mint of all of
 silver), :data:`RECENT_ROWS` rows, and up to :data:`CARD_TXNS` rows per
 mint of the working set; the last two are bounded by the working set's
 size, ``Dashboard(working_set_rows=)``, as the reference's pandas
-tail-100k is. Nothing is persisted.
+tail-100k is. A reload starts two Spark jobs: the gold collect, read by
+its declared schema (``schemas.RISK_GOLD``, so no job infers one), and
+one collect from silver that holds both the newest rows and the card
+rows. Nothing is persisted.
 """
 
 from __future__ import annotations
@@ -40,7 +43,7 @@ import threading
 import time
 from collections.abc import Callable
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.functions.banding import risk_band
@@ -50,12 +53,17 @@ from solana_etl_pipeline_spark.pipelines.gold import (
     gold_committed,
     published_gold,
 )
+from solana_etl_pipeline_spark.schemas import RISK_GOLD
 
 #: Rows of the newest-transactions page (``streamlit 1.3.txt:162``),
 #: the most :meth:`Dashboard.recent_transactions` can return.
 RECENT_ROWS = 100
 #: Newest transactions listed on a token card.
 CARD_TXNS = 20
+#: Columns of a newest-transactions row, and of a card's transaction.
+RECENT_COLS = ("ts", "mint", "token_name", "type", "token_amount",
+               "from_account", "to_account")
+TXN_COLS = ("ts", "type", "token_amount", "from_account", "to_account")
 
 _log = logging.getLogger(__name__)
 
@@ -145,9 +153,13 @@ class Snapshot:
     - ``gold``: every mint of the published gold version, safest
       first, with its four ``*_verdict`` bands — the top-k table, and
       each token's card (``cards``, by mint);
-    - ``recent``: the newest :data:`RECENT_ROWS` rows, ts-descending;
-    - ``txns``: each mint's newest :data:`CARD_TXNS` rows,
-      ts-descending.
+    - ``recent``: the newest :data:`RECENT_ROWS` rows, by (``ts``
+      descending, ``signature``, ``mint``);
+    - ``txns``: each mint's newest :data:`CARD_TXNS` rows, by (``ts``
+      descending, ``signature``).
+
+    Both come from one collect (``Dashboard._newest_rows``), split in
+    Python.
 
     Nothing in it changes after the load, so concurrent readers share
     it without a lock; views hand out copies.
@@ -176,14 +188,16 @@ class Dashboard:
     since — every view raises ``FileNotFoundError``.
 
     ``working_set_rows`` is the reference's tail-100k memory guard —
-    but expressed as ``orderBy(desc(ts)).limit(n)`` (a TakeOrdered
-    heap-merge), so "most recent" is defined by data, not file order.
-    It bounds the newest-rows and card-rows collects; gold lists every
-    mint of silver.
+    but expressed as ``orderBy(desc(ts), signature, mint).limit(n)`` (a
+    TakeOrdered heap-merge), so "most recent" is defined by data, not
+    file order. It bounds the newest rows and the card rows; gold lists
+    every mint of silver.
 
     A reload collects every page and card into a :class:`Snapshot`
-    before readers can see it; views read that snapshot and start no
-    Spark job, and an overview page reads one snapshot throughout.
+    before readers can see it, in two Spark jobs: the gold collect and
+    one silver collect of the newest rows and the card rows together.
+    Views read that snapshot and start no Spark job, and an overview
+    page reads one snapshot throughout.
     Every view returns fresh dicts, so a caller may mutate its result.
     """
 
@@ -203,31 +217,52 @@ class Dashboard:
     # -- data ----------------------------------------------------------
 
     def _load(self) -> Snapshot:
+        """Two Spark jobs: the gold collect, and one collect of the
+        silver rows the snapshot holds (:meth:`_newest_rows`)."""
         gold = self._published_rows()
-        newest = (
+        recent: list[dict] = []
+        txns: dict[str, list[dict]] = {}
+        for r in sorted(self._newest_rows().collect(), key=lambda r: r["pos"]):
+            if r["pos"] < RECENT_ROWS:
+                recent.append({c: r[c] for c in RECENT_COLS})
+            if r["rank"] <= CARD_TXNS:
+                txns.setdefault(r["mint"], []).append(
+                    {c: r[c] for c in TXN_COLS}
+                )
+        return Snapshot(gold, recent, txns)
+
+    def _newest_rows(self) -> DataFrame:
+        """The working set's newest :data:`RECENT_ROWS` rows and each
+        mint's newest :data:`CARD_TXNS` rows, as one query. The working
+        set is ``working_set_rows`` rows, newest first; ties on ``ts``
+        (the transfers of one transaction share it) fall to
+        ``signature`` then ``mint``, so every load takes the same rows.
+        Each row carries its position in the working set (``pos``, from
+        0) and within its mint (``rank``, from 1).
+
+        The limit's output is one partition in that order, so ``pos``
+        is its row number, ``monotonically_increasing_id`` on partition
+        0, and the mint window sorts that partition in the collect's
+        job, with no exchange. A ``row_number`` window for ``pos``
+        would have no partition key: the optimizer drops a constant
+        one, and Spark then warns on every load that the window moves
+        all data to one partition."""
+        order = (F.desc("ts"), F.asc("signature"), F.asc("mint"))
+        by_mint = Window.partitionBy("mint").orderBy(*order[:2])
+        return (
             read_silver(self.spark, self.silver_path)
             .filter(~F.col("mint").isin(EXCLUDED_MINTS))
-            .orderBy(F.desc("ts"))
+            .orderBy(*order)
+            .limit(self.working_set_rows)
+            .withColumn("pos", F.monotonically_increasing_id())
+            .select(
+                *RECENT_COLS, "pos",
+                F.row_number().over(by_mint).alias("rank"),
+            )
+            .filter(
+                (F.col("pos") < RECENT_ROWS) | (F.col("rank") <= CARD_TXNS)
+            )
         )
-        recent_rows = (
-            newest.select("ts", "mint", "token_name", "type",
-                          "token_amount", "from_account", "to_account")
-            .limit(min(RECENT_ROWS, self.working_set_rows))
-            .collect()
-        )
-        by_mint = Window.partitionBy("mint").orderBy(F.desc("ts"))
-        txn_cols = ("ts", "type", "token_amount", "from_account", "to_account")
-        txn_rows = (
-            newest.limit(self.working_set_rows)
-            .withColumn("rank", F.row_number().over(by_mint))
-            .filter(F.col("rank") <= CARD_TXNS)
-            .select("mint", "rank", *txn_cols)
-            .collect()
-        )
-        txns: dict[str, list[dict]] = {}
-        for r in sorted(txn_rows, key=lambda r: r["rank"]):
-            txns.setdefault(r["mint"], []).append({c: r[c] for c in txn_cols})
-        return Snapshot(gold, [r.asDict() for r in recent_rows], txns)
 
     def _published_rows(self) -> list[dict]:
         """The published gold version's rows with their verdicts,
@@ -240,7 +275,7 @@ class Dashboard:
         while True:
             try:
                 rows = (
-                    self.spark.read.parquet(version)
+                    self.spark.read.schema(RISK_GOLD).parquet(version)
                     .withColumns({
                         "risk_verdict": risk_band(F.col("jeet_risk_score")),
                         "ownership_verdict": risk_band(F.col("ownership_risk")),
@@ -375,9 +410,8 @@ def serve_http(
 
         def do_GET(self):
             # only the overview page exists; answering e.g.
-            # /favicon.ico with the full page would run the top-k +
-            # recent collects once more per browser refresh for
-            # output the client discards
+            # /favicon.ico with the full page would render it once
+            # more per browser refresh for output the client discards
             if self.path.split("?", 1)[0] not in ("/", "/index.html"):
                 self.send_response(404)
                 self.end_headers()

@@ -7,9 +7,11 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from solana_etl_pipeline_spark.pipelines import gold as gold_module
 from solana_etl_pipeline_spark.pipelines.bronze_silver import (
     build_silver,
     write_silver,
@@ -20,7 +22,11 @@ from solana_etl_pipeline_spark.pipelines.gold import (
     refresh_gold,
     write_gold,
 )
-from solana_etl_pipeline_spark.schemas import CLEANED_TRANSACTIONS, EVENTS
+from solana_etl_pipeline_spark.schemas import (
+    CLEANED_TRANSACTIONS,
+    EVENTS,
+    RISK_GOLD,
+)
 from solana_etl_pipeline_spark.sources.sinks import read_json_dir
 
 
@@ -196,3 +202,50 @@ def test_refresh_over_a_gold_path_of_the_previous_release(spark, tmp_path):
         _versions(gold_path)
     )
     assert len(_versions(gold_path)) == 1
+
+
+def _columns(schema) -> list[tuple]:
+    return [(f.name, f.dataType) for f in schema]
+
+
+def test_built_gold_has_the_declared_schema(spark, tmp_path):
+    """``build_risk_gold`` builds ``RISK_GOLD``'s columns, in its order
+    and with its types, with and without a names dim; a refresh's read
+    by ``RISK_GOLD`` gives the rows a read of the files' own schema
+    does."""
+    silver_path = _silver(spark, tmp_path)
+    silver = spark.read.parquet(silver_path)
+    dim = spark.createDataFrame([Row(mint="m1", token_name="FromAPI")])
+    assert _columns(build_risk_gold(silver).schema) == _columns(RISK_GOLD)
+    assert _columns(build_risk_gold(silver, dim).schema) == (
+        _columns(RISK_GOLD)
+    )
+    gold = refresh_gold(spark, silver_path, str(tmp_path / "gold"))
+    inferred = spark.read.parquet(published_gold(spark, silver_path))
+    assert _columns(inferred.schema) == _columns(RISK_GOLD)
+    assert sorted(gold.collect()) == sorted(inferred.collect())
+
+
+@pytest.mark.parametrize("drift", [
+    lambda g: g.withColumn("safety_score", F.col("safety_score").cast("int")),
+    lambda g: g.withColumnRenamed("token_name", "name"),
+    lambda g: g.withColumn("extra", F.lit(1)),
+], ids=["type", "name", "extra"])
+def test_refresh_refuses_a_drifted_build(spark, tmp_path, monkeypatch, drift):
+    """A build whose columns differ from ``RISK_GOLD`` raises before
+    anything is written: no Spark job, no version, no pointer."""
+    silver_path, gold_path = _silver(spark, tmp_path), str(tmp_path / "gold")
+    build = gold_module.build_risk_gold
+    monkeypatch.setattr(
+        gold_module, "build_risk_gold", lambda *a: drift(build(*a))
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("drifted-refresh", "refresh of a drifted build")
+    try:
+        with pytest.raises(ValueError, match="RISK_GOLD"):
+            refresh_gold(spark, silver_path, gold_path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("drifted-refresh") == []
+    assert not os.path.exists(gold_path)
+    assert not [n for n in os.listdir(silver_path) if "_gold" in n]

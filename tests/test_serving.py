@@ -21,7 +21,10 @@ from solana_etl_pipeline_spark.pipelines.bronze_silver import (
     build_silver,
     write_silver,
 )
-from solana_etl_pipeline_spark.pipelines.gold import refresh_gold
+from solana_etl_pipeline_spark.pipelines.gold import (
+    EXCLUDED_MINTS,
+    refresh_gold,
+)
 from solana_etl_pipeline_spark.serving import (
     CARD_TXNS,
     RECENT_ROWS,
@@ -60,12 +63,12 @@ def _silver_fixture(spark, tmp_path, extra_docs=(), publish=True) -> str:
 
 
 def _txn(mint: str, i: int, **cols) -> Row:
-    """A silver row of ``mint``, its ``i``-th transaction, minute ``i``
-    of 2024-01-01 unless ``cols`` say otherwise."""
+    """A silver row of ``mint``, its ``i``-th transaction, ``i`` minutes
+    into 2024-01-01 unless ``cols`` say otherwise."""
     row = dict(
         description="", type="buy", source="websocket", fee=0,
         fee_payer="", signature=f"{mint}-{i}", slot=0,
-        ts=datetime.datetime(2024, 1, 1, 0, i),
+        ts=datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=i),
         token_name="T", token_symbol="T",
         from_account=f"a{i}", to_account=f"b{i}",
         token_amount=float(i), mint=mint, token_standard="",
@@ -478,6 +481,77 @@ def test_card_lists_newest_transactions(spark, tmp_path):
         assert [t["ts"] for t in txns] == stamps[:CARD_TXNS]
 
 
+def _tied_rows(hot: bool) -> list[Row]:
+    """Silver rows whose timestamps tie: mints ``a``, ``b`` and ``c``
+    share each transaction's signature and ``ts``, and three of a
+    mint's transactions share a second; a quote-mint row is the newest
+    and a websocket row has no ``ts``. With ``hot``, mint ``hot`` owns
+    the newest 130 rows, two to a second, their signatures out of
+    time order."""
+    base = datetime.datetime(2024, 1, 1)
+    rows = [
+        _txn(m, i, signature=f"tx{i:02d}",
+             ts=base + datetime.timedelta(seconds=i // 3))
+        for m in "abc" for i in range(30)
+    ]
+    rows.append(_txn(EXCLUDED_MINTS[0], 0, ts=datetime.datetime(2025, 1, 1)))
+    rows.append(_txn("ws", 0, ts=None))
+    if hot:
+        rows.extend(
+            _txn("hot", i, signature=f"h{i * 7 % 130:03d}",
+                 ts=base + datetime.timedelta(hours=1, seconds=i // 2))
+            for i in range(130)
+        )
+    return rows
+
+
+def _reference_snapshot(rows: list[Row], working_set_rows: int):
+    """``recent`` and ``txns`` of a snapshot, computed in plain Python:
+    the working set is the newest rows by (ts descending, no ts last,
+    signature, mint)."""
+    live = sorted(
+        (r for r in rows if r.mint not in EXCLUDED_MINTS),
+        key=lambda r: (r.signature, r.mint),
+    )
+    live.sort(key=lambda r: r.ts or datetime.datetime.min, reverse=True)
+    working = live[:working_set_rows]
+    recent = [
+        {c: r[c] for c in serving.RECENT_COLS} for r in working[:RECENT_ROWS]
+    ]
+    txns: dict[str, list[dict]] = {}
+    for r in working:
+        card = txns.setdefault(r.mint, [])
+        if len(card) < CARD_TXNS:
+            card.append({c: r[c] for c in serving.TXN_COLS})
+    return recent, txns
+
+
+@pytest.mark.parametrize("hot, working_set_rows", [(True, 1000), (False, 7)])
+def test_snapshot_rows_match_a_python_reference(
+    spark, tmp_path, hot, working_set_rows
+):
+    """The one silver collect, split in Python, gives the newest rows
+    and every card row for row, ties on ``ts`` included: when one mint
+    owns the newest RECENT_ROWS rows, and when the working set is
+    smaller than RECENT_ROWS."""
+    rows = _tied_rows(hot)
+    path = _publish_rows(spark, tmp_path, rows)
+    snap = Dashboard(spark, path, working_set_rows=working_set_rows)._load()
+    recent, txns = _reference_snapshot(rows, working_set_rows)
+    assert snap.recent == recent
+    assert snap.txns == txns
+    assert [list(r) for r in snap.recent] == [
+        list(serving.RECENT_COLS)
+    ] * len(recent)
+    if hot:
+        assert len(snap.recent) == RECENT_ROWS
+        assert {r["mint"] for r in snap.recent} == {"hot"}
+        assert len(snap.txns["hot"]) == CARD_TXNS
+    else:
+        assert len(snap.recent) == working_set_rows
+        assert sum(map(len, snap.txns.values())) == working_set_rows
+
+
 def test_overview_reads_one_snapshot(spark, tmp_path, monkeypatch):
     """An overview page renders both tables from one load, even when
     the snapshot expires between them."""
@@ -496,19 +570,38 @@ def test_overview_reads_one_snapshot(spark, tmp_path, monkeypatch):
     assert len(loads) == 2
 
 
-def test_snapshot_load_starts_four_jobs(spark, tmp_path):
-    """A load reads the published gold (a footer read and a collect)
-    and collects the newest rows and the card rows from silver: 4
-    Spark jobs, where scoring risk in the load took 8. Every load reads
-    the version the pointer names, moved or not."""
+def test_snapshot_load_starts_two_jobs(spark, tmp_path):
+    """A load collects the published gold, read by its declared schema
+    (no footer job), and collects the newest rows and the card rows
+    from silver in one job: 2 Spark jobs, where a footer read and
+    separate silver collects took 4. Every load reads the version the
+    pointer names, moved or not."""
     silver_path = _silver_fixture(spark, tmp_path)
     dash = Dashboard(spark, silver_path, working_set_rows=1000)
-    assert _jobs_of(spark, dash._snapshot) == 4
+    assert _jobs_of(spark, dash._snapshot) == 2
     dash.refresh()
-    assert _jobs_of(spark, dash._snapshot) == 4
+    assert _jobs_of(spark, dash._snapshot) == 2
     refresh_gold(spark, silver_path, str(tmp_path / "gold"))
     dash.refresh()
-    assert _jobs_of(spark, dash._snapshot) == 4
+    assert _jobs_of(spark, dash._snapshot) == 2
+    # an unpartitioned window moves all rows to one partition and logs
+    # a warning on every load
+    windows = [
+        node for node in _plan_nodes(
+            dash._newest_rows()._jdf.queryExecution().sparkPlan()
+        )
+        if node.nodeName() == "Window"
+    ]
+    assert windows
+    assert all(not w.partitionSpec().isEmpty() for w in windows)
+
+
+def _plan_nodes(node):
+    """``node`` and every node under it, of a JVM Spark plan."""
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
 
 
 def test_load_rereads_a_version_deleted_under_it(spark, tmp_path, monkeypatch):
