@@ -67,30 +67,24 @@ def risk_scores(
         F.lit(100.0) / (F.lit(1.0) + F.col("unique_buyers")),
     ).otherwise(F.lit(100.0))
     concentration = F.col("total_events") / (F.lit(1.0) + F.col("unique_holders"))
+    # the jeet score and the safety score use the unrounded scores
+    jeet = 0.4 * ownership + 0.4 * liquidity + 0.2 * concentration
+    safety = F.greatest(F.lit(0.0), F.lit(100.0) - jeet)
 
-    scored = (
-        agg.withColumn("ownership_risk", ownership)
-        .withColumn("liquidity_risk", liquidity)
-        .withColumn("txn_concentration", concentration)
+    # one projection: a withColumn per score re-analyzes the whole plan
+    return agg.select(
+        "*",
+        *[
+            F.round(score, 6).alias(name)
+            for name, score in (
+                ("ownership_risk", ownership),
+                ("liquidity_risk", liquidity),
+                ("txn_concentration", concentration),
+                ("jeet_risk_score", jeet),
+                ("safety_score", safety),
+            )
+        ],
     )
-    jeet = (
-        0.4 * F.col("ownership_risk")
-        + 0.4 * F.col("liquidity_risk")
-        + 0.2 * F.col("txn_concentration")
-    )
-    scored = scored.withColumn("jeet_risk_score", jeet).withColumn(
-        "safety_score", F.greatest(F.lit(0.0), F.lit(100.0) - F.col("jeet_risk_score"))
-    )
-
-    for c in (
-        "ownership_risk",
-        "liquidity_risk",
-        "txn_concentration",
-        "jeet_risk_score",
-        "safety_score",
-    ):
-        scored = scored.withColumn(c, F.round(F.col(c), 6))
-    return scored
 
 
 def top_k_by_safety(scored: DataFrame, key: str, k: int = 10) -> DataFrame:

@@ -425,8 +425,8 @@ QUERIES: dict[str, QuerySpec] = {
         spark=events_gapfill_locf,
         oracle="""
             WITH hourly AS (
-              -- CAST ts to us-precision TIMESTAMP: Spark reads the
-              -- nanos fixture truncated to micros, DuckDB must match.
+              -- CAST ts to us-precision TIMESTAMP, the precision
+              -- Spark reads.
               SELECT event_type,
                      date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_ts,
                      count(*) AS n_events,
@@ -464,7 +464,7 @@ QUERIES: dict[str, QuerySpec] = {
         spark=events_time_weighted_avg,
         oracle="""
             WITH seg AS (
-              -- us-precision CAST mirrors Spark's nanos->micros read
+              -- us-precision CAST, the precision Spark reads
               SELECT event_type, value,
                      epoch_us(lead(CAST(ts AS TIMESTAMP)) OVER (
                        PARTITION BY user_id, event_type

@@ -21,11 +21,14 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     DoubleType,
+    FloatType,
+    IntegerType,
     LongType,
     MapType,
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -157,6 +160,89 @@ RISK_GOLD = StructType(
 # enforce them instead of trusting inference.
 # ---------------------------------------------------------------------------
 
+
+def _struct(*fields: tuple) -> StructType:
+    return StructType([StructField(name, dtype) for name, dtype in fields])
+
+
+#: The fixture tables ``sources.load_table`` reads (TESTDATA.md), each
+#: the schema Spark infers from the files' footers. Parquet timestamps
+#: stored with ``isAdjustedToUTC=false`` read as ``timestamp_ntz``.
+#: ``load_table`` reads by these, so no read starts a job to infer one;
+#: ``tests/test_tables.py`` checks them against the files.
+FIXTURE_TABLES = {
+    "region": _struct(("r_regionkey", IntegerType()), ("r_name", StringType())),
+    "nation": _struct(
+        ("n_nationkey", IntegerType()),
+        ("n_name", StringType()),
+        ("n_regionkey", IntegerType()),
+    ),
+    "customer": _struct(
+        ("c_custkey", LongType()),
+        ("c_name", StringType()),
+        ("c_nationkey", IntegerType()),
+        ("c_acctbal", DoubleType()),
+        ("c_mktsegment", StringType()),
+    ),
+    "supplier": _struct(
+        ("s_suppkey", LongType()),
+        ("s_name", StringType()),
+        ("s_nationkey", IntegerType()),
+        ("s_acctbal", DoubleType()),
+    ),
+    "part": _struct(
+        ("p_partkey", LongType()),
+        ("p_name", StringType()),
+        ("p_brand", StringType()),
+        ("p_type", StringType()),
+        ("p_size", IntegerType()),
+        ("p_retailprice", DoubleType()),
+    ),
+    "orders": _struct(
+        ("o_orderkey", LongType()),
+        ("o_custkey", LongType()),
+        ("o_orderstatus", StringType()),
+        ("o_totalprice", DoubleType()),
+        ("o_orderdate", TimestampNTZType()),
+        ("o_orderpriority", StringType()),
+    ),
+    "lineitem": _struct(
+        ("l_orderkey", LongType()),
+        ("l_partkey", LongType()),
+        ("l_suppkey", LongType()),
+        ("l_linenumber", IntegerType()),
+        ("l_quantity", DoubleType()),
+        ("l_extendedprice", DoubleType()),
+        ("l_discount", DoubleType()),
+        ("l_tax", DoubleType()),
+        ("l_returnflag", StringType()),
+        ("l_linestatus", StringType()),
+        ("l_shipdate", TimestampNTZType()),
+    ),
+    "events": _struct(
+        ("event_id", LongType()),
+        ("ts", TimestampNTZType()),
+        ("user_id", LongType()),
+        ("event_type", StringType()),
+        ("value", DoubleType()),
+        ("props", StringType()),
+    ),
+    "documents": _struct(
+        ("doc_id", LongType()),
+        ("text", StringType()),
+        ("lang", StringType()),
+        ("source", StringType()),
+        ("n_chars", LongType()),
+    ),
+    "embeddings": _struct(
+        ("vec_id", LongType()),
+        ("embedding", ArrayType(FloatType())),
+        ("label", IntegerType()),
+    ),
+}
+
+#: The JSON landing-file event shape the streaming queries read
+#: (``queries/streaming.py``); its ``ts`` is a session-zone timestamp.
 EVENTS = StructType(
     [
         StructField("event_id", LongType()),

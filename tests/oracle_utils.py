@@ -13,18 +13,9 @@ from typing import Iterable
 
 import duckdb
 
-FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from solana_etl_pipeline_spark import schemas
+
+FIXTURE_TABLES = tuple(schemas.FIXTURE_TABLES)
 
 
 def duckdb_connection(sf_dir: str) -> "duckdb.DuckDBPyConnection":
