@@ -30,8 +30,6 @@ rank.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -213,16 +211,6 @@ def bm25_topk(
         # unrounded score for the boundary canary (see tfidf docstring)
         cols.append(F.col("score").alias("_raw"))
     return top.withColumn("rank", F.row_number().over(w)).select(*cols)
-
-
-def idf_smooth(n_docs: int, df: int) -> float:
-    """Python twin of the smoothed idf, for tests."""
-    return math.log((n_docs + 1.0) / (df + 1.0)) + 1.0
-
-
-def idf_bm25(n_docs: int, df: int) -> float:
-    """Python twin of the BM25 idf, for tests."""
-    return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
 
 
 def inverted_index(

@@ -13,8 +13,8 @@ the knob exists. The pipeline/registry entry points
 (``queries/llm.py``) therefore pass these values, making the default
 driver-witnessed plan the 100 TB-shaped one.
 
-Derivation (tools/mega_bucket_rehearsal.py + fixture probes, recorded
-in COVERAGE.md item 16):
+Derivation (``git show 6eb1dfe:tools/mega_bucket_rehearsal.py`` +
+fixture probes, recorded in COVERAGE.md item 16):
 
 * ``MAX_BUCKET = 1000`` is the rehearsal-measured value: at 100 k docs
   with a planted clone cluster grown 5 k -> 20 k, the uncapped clique

@@ -666,10 +666,11 @@ def pq_fit(
     element-wise mean as ``dim/m`` avg columns. Empty cells keep
     their previous codeword.
 
-    Choosing ``m`` (measured, tools/recall_harness.py @ 100 k,
-    dim=64): m=8 (8-dim subspaces) reaches recall@5 ≈ 0.78 at
-    shortlist 200; m=16 reaches 0.92 at the same shortlist for 2×
-    the ADC lookup cost and 2× the stored code width. The default
+    Choosing ``m`` (measured,
+    ``git show 6eb1dfe:tools/recall_harness.py`` @ 100 k, dim=64):
+    m=8 (8-dim subspaces) reaches recall@5 ≈ 0.78 at shortlist 200;
+    m=16 reaches 0.92 at the same shortlist for 2× the ADC lookup
+    cost and 2× the stored code width. The default
     stays at the cheaper m=8 — raise m when the shortlist (see
     :func:`pq_cosine_topk`) stops buying recall.
     """
@@ -890,8 +891,9 @@ def pq_cosine_topk(
     sub-scan latency, use :func:`ivfpq_cosine_topk` — probe cells
     first, ADC only within the probed cells.
 
-    ``shortlist=200`` is measured, not guessed (tools/
-    recall_harness.py, 100 k corpus, recall@5 vs brute force): the
+    ``shortlist=200`` is measured, not guessed
+    (``git show 6eb1dfe:tools/recall_harness.py``, 100 k corpus,
+    recall@5 vs brute force): the
     shortlist is the binding recall knob — m=8 codebooks give
     0.32/0.51/0.78 at 50/100/200, m=16 gives 0.46/0.71/0.92 — while
     its cost (one 200-row exact re-rank per query) is negligible next
@@ -1009,8 +1011,9 @@ def ivfpq_cosine_topk(
     copy shares the query's cell AND its codes, so it reaches the
     shortlist and wins rank 1 at cosine 1.0.
 
-    Defaults are MEASURED, not guessed (tools/recall_harness.py,
-    100 k planted-cluster corpus, 250 cells, recall@5 vs brute-force
+    Defaults are MEASURED, not guessed
+    (``git show 6eb1dfe:tools/recall_harness.py``, 100 k
+    planted-cluster corpus, 250 cells, recall@5 vs brute-force
     ground truth): ``nprobe=1`` caps the composed recall at the IVF
     component's 0.90 — a query near a cell boundary misses true
     neighbors assigned to the adjacent cell — while ``nprobe=2``

@@ -1,23 +1,13 @@
 """Physical-plan audit surface (see ``plans.audit``)."""
 
 from solana_etl_pipeline_spark.plans.audit import (
-    assert_plan,
     capture_pre_checkpoint_plans,
-    context_thread,
     executed_plan,
-    formatted_explain,
-    plan_report,
     record_pre_checkpoint,
-    scan_info,
 )
 
 __all__ = [
-    "assert_plan",
     "capture_pre_checkpoint_plans",
-    "context_thread",
     "executed_plan",
-    "formatted_explain",
-    "plan_report",
     "record_pre_checkpoint",
-    "scan_info",
 ]

@@ -129,7 +129,8 @@ def trailing_zscore(ev: DataFrame) -> DataFrame:
     is its driver). A bounded range frame over the rollup still
     recomputes per position (178 s at 5 M); the shipped
     difference-of-prefix-sums form is O(rollup rows) — 7.5 s at 5 M
-    (tools/scale_rehearsal.py), 2.1 s for the sf0.1 registry query.
+    (``git show 6eb1dfe:tools/scale_rehearsal.py``), 2.1 s for the sf0.1
+    registry query.
 
     Second-level epoch keys (``unix_seconds``; the session is pinned
     UTC so the NTZ→instant cast is identity) are mirrored exactly by

@@ -96,114 +96,6 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-#: OSS Spark's RocksDB state-store provider (the rocksdbjni native
-#: bundle ships inside the Spark distribution — no extra install).
-ROCKSDB_STATE_STORE_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def rocksdb_state_store_confs(
-    changelog_checkpointing: bool = True,
-    max_memory_mb: int | None = None,
-    snapshot_cadence: int | None = None,
-) -> dict[str, str]:
-    """SQL confs selecting the RocksDB streaming state store.
-
-    The default HDFS-backed provider keeps EVERY live state key
-    (dedup keys within the watermark, open windows, join buffers) in
-    executor heap — at 100 TB-scale streaming state that is the same
-    executor-OOM class :func:`gc_java_opts` fences for Arrow, except
-    no GC tuning saves it: the fix is moving state off-heap.
-    RocksDB keeps the working set in native memory + local SST files
-    and spills to disk, bounding heap usage regardless of key count.
-
-    ``changelog_checkpointing=True`` uploads per-batch changelogs to
-    the checkpoint instead of full RocksDB snapshots — at large state
-    sizes the snapshot upload otherwise dominates micro-batch latency
-    (background snapshots still bound replay length). The conf is
-    emitted for BOTH values, so applying ``False`` on a session that
-    previously enabled it genuinely turns it off.
-
-    ``max_memory_mb`` additionally CAPS RocksDB's native usage
-    (block cache + memtables, shared across all state-store
-    instances on an executor) via the bounded-memory-usage knobs:
-    without it RocksDB's working set, while off-heap, can still grow
-    with hot state and evict the OS page cache. Size it alongside
-    ``spark.executor.memoryOverhead`` — the cap must fit inside the
-    overhead allowance or the container OOM-kills instead of the
-    JVM. Left off by default: the right number is a deployment
-    decision (state size × executor density), not an engine one.
-
-    ``snapshot_cadence`` sets ``spark.sql.streaming.stateStore.
-    minDeltasForSnapshot`` (build default 10): with changelog
-    checkpointing on, the maintenance thread uploads a full snapshot
-    only every N versions, and a restart replays up to N changelogs
-    on top of the latest snapshot. None leaves the build default.
-
-    **Checkpoint-bytes capacity guidance** (measured at the 4 M-event
-    churn point, 24 micro-batches, probe
-    ``git show 049cff9:tools/state_store_cadence.py``, log
-    ``git show dfebfb1:tools/logs/state_store_cadence_r15.log``,
-    2026-08-16):
-    within the retention window (``minBatchesToRetain``, default 100
-    versions) checkpoint bytes decompose as
-
-    * changelogs: per-batch inserts AND evictions — under churn the
-      eviction tombstones ~double changelog volume vs grow-only state
-      (r14 churn A/B); 106.5 MB here, identical across cadences;
-    * snapshots: a full copy of live state every ``cadence`` versions
-      — 246 MB at cadence 2, 100 MB at the default 10, zero at
-      changelog-only (cadence > versions retained).
-
-    So MORE frequent snapshots cost checkpoint storage (357 vs 208 vs
-    107 MB total) and buy restart latency: replay length 1 / 5 / 25
-    changelogs, restart batch 2.5 / 2.4 / 3.7 s (a real first batch:
-    snapshot load + changelog replay + fresh-key inserts). The build
-    default 10 was the balanced point; raise it only if checkpoint
-    storage (not executor memory) is the binding constraint and the
-    recovery SLO tolerates ``cadence × changelog-replay`` on restore.
-    Budget checkpoint capacity as ``retained_versions ×
-    churn_bytes_per_batch + (retained_versions / cadence) ×
-    live_state_bytes``, where ``retained_versions`` is
-    ``spark.sql.streaming.minBatchesToRetain`` (default 100), NOT run
-    length: maintenance cleanup purging versions older than
-    (newest − retain) is verified by the probe's ``--retain`` mode
-    (60-batch run, retain 8 → versions 50..61 on disk, bytes
-    plateaued; same log).
-
-    Both confs are runtime-settable (``spark.conf.set``) and are read
-    at streaming-query start, so an existing session can opt in
-    per-query; keep the provider consistent across restarts of the
-    same checkpoint. Verified against a real executor-JVM boundary by
-    ``tools/local_cluster_smoke.py`` and locally by
-    ``tests/test_streaming_rocksdb.py``.
-    """
-    confs = {
-        "spark.sql.streaming.stateStore.providerClass":
-            ROCKSDB_STATE_STORE_PROVIDER,
-        # Always emitted (never omitted-when-False): applying these
-        # confs to a session where changelog checkpointing was
-        # previously enabled must actually DISABLE it, not silently
-        # inherit the stale setting (ADVICE r14).
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled":
-            str(bool(changelog_checkpointing)).lower(),
-    }
-    if max_memory_mb is not None:
-        confs[
-            "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage"
-        ] = "true"
-        confs[
-            "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB"
-        ] = str(max_memory_mb)
-    if snapshot_cadence is not None:
-        confs[
-            "spark.sql.streaming.stateStore.minDeltasForSnapshot"
-        ] = str(snapshot_cadence)
-    return confs
-
-
 @functools.lru_cache(maxsize=1)
 def _java_version() -> str | None:
     """The ``java -version`` banner of the JVM Spark will launch, or

@@ -3,7 +3,6 @@ checkpoint-state batch readers (ops surface)."""
 
 from solana_etl_pipeline_spark.sources.state_reader import (
     dedup_state_keys,
-    read_state_changes,
     read_state_metadata,
     read_state_store,
 )
@@ -12,7 +11,6 @@ from solana_etl_pipeline_spark.sources.tables import load_table
 __all__ = [
     "dedup_state_keys",
     "load_table",
-    "read_state_changes",
     "read_state_metadata",
     "read_state_store",
 ]

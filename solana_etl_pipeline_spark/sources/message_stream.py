@@ -1,31 +1,13 @@
-"""Custom streaming source (SURVEY.md §2.1 S1) — the one genuinely
-custom connector in the project (SURVEY §7 "what's hard" #2).
+"""Message landing for the streaming source (SURVEY.md §2.1 S1).
 
 The reference holds a WebSocket open and writes one S3 object per
-message (``my_websocket.py:62-69,31-45``). Two Spark-native paths
-replace it:
-
-1. **Landing-writer indirection** (default, SURVEY §7 Step 6): a thin
-   non-Spark async writer lands messages as files; the engine only ever
-   sees ``spark.readStream.json(landing_dir)`` — see
-   :func:`write_messages_to_landing`. The engine never depends on a
-   live socket.
-2. **Python DataSource** (Spark 4 ``pyspark.sql.datasource``):
-   :class:`MessageReplayDataSource` — a ``SimpleDataSourceStreamReader``
-   that serves messages from a JSON-lines feed file with offset
-   tracking, exactly-once via Spark's own offset log. A production
-   deployment swaps the file tail for a socket client with the same
-   offset contract; the replay form keeps it deterministic and
-   testable offline.
-
-Register + use::
-
-    spark.dataSource.register(MessageReplayDataSource)
-    df = (spark.readStream.format("message_replay")
-          .option("path", feed_file).option("batchSize", 100)
-          .schema("mint string, txType string, solAmount double, "
-                  "name string, symbol string")
-          .load())
+message (``my_websocket.py:62-69,31-45``). The Spark-native path
+replaces it with a landing-writer indirection (SURVEY §7 Step 6): a
+thin non-Spark async writer lands messages as files, and the engine
+only ever sees ``spark.readStream.json(landing_dir)`` — see
+:func:`write_messages_to_landing`. The engine never depends on a live
+socket; :mod:`~solana_etl_pipeline_spark.sources.live_socket` feeds
+this writer from one.
 """
 
 from __future__ import annotations
@@ -35,127 +17,13 @@ import json
 import os
 from collections.abc import AsyncIterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    SimpleDataSourceStreamReader,
-)
-from pyspark.sql.types import StructType
-
-
-class _ReplayStreamReader(SimpleDataSourceStreamReader):
-    """Offset = ``{"line": N, "pos": BYTES}`` into the feed file.
-    ``read`` serves at most ``batch_size`` parseable lines past the
-    last offset; ``readBetweenOffsets`` re-serves a committed range
-    verbatim on recovery (exactly-once).
-
-    Robustness contract (review r15):
-
-    * ``pos`` lets each batch ``seek`` straight to its start instead
-      of re-enumerating every previously-served line — without it a
-      long-running stream is O(n^2) in total lines. Offsets from
-      older checkpoints (no ``pos``) fall back to the line skip once,
-      then regain the byte offset.
-    * Blank or unparseable COMPLETE lines are skipped but consumed
-      (their bytes are immutable, so recovery replays the same skip)
-      — the previous behavior raised inside ``read`` and crash-looped
-      the query on the same offset forever.
-    * A torn TRAILING line (no newline yet — a live producer mid-
-      append) is NOT consumed: its content will change when the
-      append completes, so consuming it would make recovery replay
-      different rows than the original batch.
-    """
-
-    def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("message_replay requires option 'path'")
-        self.batch_size = int(options.get("batchsize", 1000))
-        self.fields = [f.name for f in schema.fields]
-
-    def initialOffset(self) -> dict:
-        return {"line": 0, "pos": 0}
-
-    def _parse(self, line: bytes):
-        s = line.strip()
-        if not s:
-            return None
-        try:
-            doc = json.loads(s)
-        except json.JSONDecodeError:
-            return None
-        if not isinstance(doc, dict):
-            return None
-        return tuple(doc.get(c) for c in self.fields)
-
-    def _seek_to(self, f, start: dict) -> None:
-        pos = start.get("pos")
-        if pos is not None:
-            f.seek(pos)
-            return
-        for _ in range(start["line"]):  # pre-"pos" checkpoint offset
-            if not f.readline():
-                break
-
-    def read(self, start: dict):
-        rows = []
-        line_no = start["line"]
-        with open(self.path, "rb") as f:
-            self._seek_to(f, start)
-            pos = f.tell()
-            while len(rows) < self.batch_size:
-                line = f.readline()
-                if not line or not line.endswith(b"\n"):
-                    break  # EOF or torn tail: next batch retries it
-                line_no += 1
-                pos = f.tell()
-                row = self._parse(line)
-                if row is not None:
-                    rows.append(row)
-        return iter(rows), {"line": line_no, "pos": pos}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        rows = []
-        line_no = start["line"]
-        with open(self.path, "rb") as f:
-            self._seek_to(f, start)
-            while line_no < end["line"]:
-                line = f.readline()
-                if not line:
-                    break
-                line_no += 1
-                row = self._parse(line)
-                if row is not None:
-                    rows.append(row)
-        return iter(rows)
-
-
-class MessageReplayDataSource(DataSource):
-    """``format("message_replay")`` — streaming replay of a JSON-lines
-    message feed with offset tracking."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "message_replay"
-
-    def schema(self) -> str:
-        # caller normally passes .schema(...); this is the websocket
-        # message default (FIXTURES.md §B1)
-        return (
-            "mint string, txType string, solAmount double, "
-            "name string, symbol string"
-        )
-
-    def simpleStreamReader(self, schema: StructType):
-        return _ReplayStreamReader(schema, dict(self.options))
-
 
 async def write_messages_to_landing(
     messages: AsyncIterator[dict],
     landing_dir: str,
     prefix: str = "msg",
 ) -> int:
-    """Path 1: the thin landing writer (``my_websocket.py:31-45``
+    """The thin landing writer (``my_websocket.py:31-45``
     re-done without the engine in the loop). One JSON file per message,
     monotonically numbered — a live deployment passes an async iterator
     wrapping its socket client; tests pass a fake iterator. Returns the

@@ -9,28 +9,22 @@ operator look at the ledger" is Spark's state data source: batch
 DataFrames over a running (or stopped) query's checkpoint, no query
 restart, no custom tooling.
 
-At 100 TB this is the ops layer the capacity model needs:
+The ops layer is two reads (``dedup_state_keys`` flattens the second):
 
 * ``read_state_metadata`` — which stateful operators exist in a
   checkpoint, their operator/store names and batch-id ranges (the
   inputs to any offline inspection);
 * ``read_state_store`` — the LIVE state rows themselves (dedup keys
   within the watermark, open windows, join buffers) as ``key`` /
-  ``value`` structs + ``partition_id``.  ``live_state_bytes`` and
-  per-partition skew in the capacity formula
-  (:func:`~solana_etl_pipeline_spark.session.rocksdb_state_store_confs`)
-  stop being estimates: count/measure them directly, join them
-  against business tables, alert on growth — all without touching
-  the streaming query;
-* ``read_state_changes`` — the change feed (inserts/updates/deletes
-  per batch) when the checkpoint was written with RocksDB changelog
-  checkpointing: the eviction-tombstone flow measured by
-  ``git show 049cff9:tools/state_store_cadence.py``, queryable per batch.
+  ``value`` structs + ``partition_id``: count and measure them
+  directly, join them against business tables, alert on growth — all
+  without touching the streaming query.
 
-Provider-transparent: the same reads work on HDFS-backed and RocksDB
-checkpoints (pinned by ``tests/test_state_reader.py``); the change
-feed additionally requires changelog checkpointing (RocksDB), which
-is exactly the engine's deployment posture.
+The package's streams run on Spark's default HDFS-backed state store
+provider. The same reads work on a checkpoint written under another
+provider a deployment selects itself
+(``spark.sql.streaming.stateStore.providerClass``), as
+``tests/test_state_reader.py`` pins for RocksDB.
 """
 
 from __future__ import annotations
@@ -70,44 +64,6 @@ def read_state_store(
         reader = reader.option("batchId", batch_id)
     if operator_id is not None:
         reader = reader.option("operatorId", operator_id)
-    if store_name is not None:
-        reader = reader.option("storeName", store_name)
-    if join_side is not None:
-        reader = reader.option("joinSide", join_side)
-    return reader.load(checkpoint_dir)
-
-
-def read_state_changes(
-    spark: SparkSession,
-    checkpoint_dir: str,
-    start_batch_id: int,
-    end_batch_id: int | None = None,
-    *,
-    operator_id: int | None = None,
-    store_name: str | None = None,
-    join_side: str | None = None,
-) -> DataFrame:
-    """Change feed of a state store over a batch-id range:
-    ``change_type`` (update/delete) per key per ``batch_id``.
-
-    Requires the checkpoint to have been written with RocksDB
-    changelog checkpointing (the engine's posture —
-    :func:`~solana_etl_pipeline_spark.session.rocksdb_state_store_confs`);
-    per-batch deletes are the watermark-eviction tombstones whose
-    checkpoint cost ``git show 049cff9:tools/state_store_cadence.py``
-    measured.
-    """
-    reader = (
-        spark.read.format("statestore")
-        .option("readChangeFeed", "true")
-        .option("changeStartBatchId", start_batch_id)
-    )
-    if end_batch_id is not None:
-        reader = reader.option("changeEndBatchId", end_batch_id)
-    if operator_id is not None:
-        reader = reader.option("operatorId", operator_id)
-    # same store selectors as read_state_store — without them the
-    # change feed of a join buffer / non-default store is unreachable
     if store_name is not None:
         reader = reader.option("storeName", store_name)
     if join_side is not None:

@@ -124,18 +124,20 @@ def test_correctness_witnesses_not_stale():
 
 # ------------------------------------------------ tools/ citations
 
-# ``tools/<name>.py`` paths and ``tools.<name>`` imports. A citation in
-# git-object form (``<sha>:tools/<name>.py``) names a deleted script's
-# last version and is exempt, hence the ``:`` in the lookbehind.
+# ``tools/<name>.py`` paths, ``tools.<name>`` imports and
+# ``tools/logs/<file>`` paths. A citation in git-object form
+# (``<sha>:tools/<name>.py``) names a deleted file's last version and is
+# exempt, hence the ``:`` in the lookbehinds.
 _TOOLS_CITATION = re.compile(
     r"(?<![\w:.-])tools/(\w+)\.py|\b(?:from|import) tools\.(\w+)"
 )
+_LOGS_CITATION = re.compile(r"(?<![\w:.-])tools/logs/([\w.-]*\w)")
 
 
 def test_no_dangling_tools_citations():
-    """Every script under ``tools/`` that the package, the tests, the
-    other tools, the README or the verify skill cite must exist, so
-    deleting a script cannot leave a citation behind."""
+    """Every script or log under ``tools/`` that the package, the tests,
+    the other tools, the README or the verify skill cite must exist, so
+    deleting one cannot leave a citation behind."""
     root = Path(__file__).resolve().parent.parent
     files = [root / "README.md"]
     for top in ("solana_etl_pipeline_spark", "tests", "tools",
@@ -152,29 +154,38 @@ def test_no_dangling_tools_citations():
                 if not (root / "tools" / f"{name}.py").is_file():
                     rel = path.relative_to(root)
                     dangling.append(f"{rel}:{lineno}: tools/{name}.py")
-    assert not dangling, "citations of missing tools/ scripts:\n" + "\n".join(
+            for m in _LOGS_CITATION.finditer(line):
+                if not (root / "tools" / "logs" / m.group(1)).is_file():
+                    rel = path.relative_to(root)
+                    dangling.append(f"{rel}:{lineno}: tools/logs/{m.group(1)}")
+    assert not dangling, "citations of missing tools/ files:\n" + "\n".join(
         dangling
     )
 
 
-# ------------------------------------------- write-chain caller guard
+# ------------------------------------------------- package caller guard
 
-
-#: Write-chain modules whose public functions and classes need a caller.
-_CALLER_SCANNED = (
-    "streaming",
-    "pipelines",
-    "sources/sinks.py",
-    "serving.py",
-    "session.py",
-)
 
 #: Public names kept without a caller, each with its reason.
 _CALLER_ALLOWLIST = {
-    "build_silver": "batch write chain, ROADMAP item 3",
-    "write_silver": "batch write chain, ROADMAP item 3",
+    "build_silver": "batch write chain, ROADMAP item 2",
+    "write_silver": "batch write chain, ROADMAP item 2",
     "compact_parquet_dir": "SURVEY §2.11 surface",
     "stateful_running_totals": "SURVEY §2.11 surface",
+    "http_json_fetcher": "reference extract parity (helius.py)",
+    "fetch_batch_to_dataframe": "reference extract parity (helius.py)",
+    "run_live_ingest": "reference extract parity (my_websocket.py)",
+    "read_state_metadata": "ledger parity (my_websocket.py:101-105)",
+    "dedup_state_keys": "ledger parity (my_websocket.py:101-105)",
+    "minhash_near_dup_pairs": "composed-form reference of the "
+                              "minhash_verified_pairs parity tests",
+    "dedup_cache_scope": "release API of the dedup caching contract",
+    "capture_pre_checkpoint_plans": "reads the operators' "
+                                    "record_pre_checkpoint feed for "
+                                    "test_no_cartesian_products_anywhere",
+    "minhash_signatures_agg": "ROADMAP item 3 pair",
+    "simhash_agg": "ROADMAP item 3 pair",
+    "repetition_report_expr": "ROADMAP item 3 pair",
 }
 
 
@@ -201,17 +212,17 @@ def _references(tree) -> list[tuple[str | None, str]]:
     return out
 
 
-def test_write_chain_functions_have_a_caller():
-    """Every public top-level function or class of the write chain is
+def test_package_public_names_have_a_caller():
+    """Every public top-level function or class of the package is
     referenced, outside its own body, from the package,
-    ``__spark_entry__.py``, ``perfbench/`` or ``tools/``; a function
-    only tests reach is deleted, or named in the allowlist with its
-    reason."""
+    ``__spark_entry__.py`` or ``perfbench/``; a name only tests (or
+    scripts under ``tools/``) reach is deleted, or named in the
+    allowlist with its reason."""
     root = Path(__file__).resolve().parent.parent
     pkg = root / "solana_etl_pipeline_spark"
     callers = [root / "__spark_entry__.py"] + [
         p
-        for top in (pkg, root / "perfbench", root / "tools")
+        for top in (pkg, root / "perfbench")
         for p in sorted(top.rglob("*.py"))
         if "tests" not in p.relative_to(root).parts
     ]
@@ -219,24 +230,24 @@ def test_write_chain_functions_have_a_caller():
     for path in callers:
         for owner, name in _references(ast.parse(path.read_text("utf-8"))):
             sites[name].add((path, owner))
-    scanned = []
-    for entry in _CALLER_SCANNED:
-        target = pkg / entry
-        scanned += sorted(target.rglob("*.py")) if target.is_dir() else [target]
-    uncalled = []
-    for path in scanned:
+    uncalled, defined = [], set()
+    for path in sorted(pkg.rglob("*.py")):
         for node in ast.parse(path.read_text("utf-8")).body:
             if not isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ) or node.name.startswith("_"):
                 continue
+            defined.add(node.name)
             if node.name in _CALLER_ALLOWLIST:
                 continue
             if not sites[node.name] - {(path, node.name)}:
                 uncalled.append(f"{path.relative_to(root)}::{node.name}")
-    assert not uncalled, "public write-chain names no caller reaches:\n" + (
+    assert not uncalled, "public package names no caller reaches:\n" + (
         "\n".join(uncalled)
     )
+    stale = sorted(set(_CALLER_ALLOWLIST) - defined)
+    assert not stale, f"allowlisted names the package no longer defines: {stale}"
+    assert all(_CALLER_ALLOWLIST.values()), "an allowlist entry has no reason"
 
 
 # ------------------------------------------------- brute-force guard

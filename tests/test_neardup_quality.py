@@ -140,21 +140,78 @@ def test_simhash_banded_equals_bruteforce(spark, dup_corpus):
     assert pred == truth
 
 
+# ------------------------------------------------ ANN recall corpus
+
+
+def synthetic_corpus(spark, n=100_000, dim=64, n_clusters=200,
+                     noise=0.7, n_queries=50, seed=7):
+    """(corpus_df, queries_df): planted-cluster unit vectors, seeded
+    numpy with no wall-clock state.
+
+    corpus rows: vec_id 0..n-1, cluster = vec_id % n_clusters, each a
+    noise-perturbed unit center, renormalized. ``noise`` makes the
+    clusters OVERLAP, so a query's true top-k usually straddles cell
+    boundaries at nprobe=1. queries: vec_id 1_000_000+i, perturbed from
+    cluster i's center with the same noise — IN-distribution probes
+    that are NOT corpus rows, so ground truth holds no self-matches.
+    """
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((n_clusters, dim))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+
+    def _perturbed(cluster_ids, gen):
+        # per-component sigma noise/sqrt(dim): the noise VECTOR has
+        # expected norm ≈ `noise` relative to the unit center, so
+        # same-cluster cosine ≈ 1/sqrt(1+noise²) — structure survives
+        # (a raw `noise * standard_normal(dim)` would have norm
+        # noise*sqrt(dim) ≈ 8·noise and swamp the center entirely)
+        v = centers[cluster_ids] + (noise / np.sqrt(dim)) * (
+            gen.standard_normal((len(cluster_ids), dim))
+        )
+        return v / np.linalg.norm(v, axis=1, keepdims=True)
+
+    corpus_vecs = _perturbed(np.arange(n) % n_clusters, rng)
+    query_vecs = _perturbed(np.arange(n_queries) % n_clusters, rng)
+
+    def _df(ids, vecs):
+        pdf = pd.DataFrame(
+            {"vec_id": ids, "embedding": [v.tolist() for v in vecs]}
+        )
+        return spark.createDataFrame(pdf)
+
+    corpus = _df(np.arange(n), corpus_vecs).repartition(32, "vec_id")
+    queries = _df(np.arange(n_queries) + 1_000_000, query_vecs)
+    return corpus, queries
+
+
+def _topk_sets(df) -> dict[int, set[int]]:
+    out: dict[int, set[int]] = {}
+    for r in df.collect():
+        out.setdefault(r.query_id, set()).add(r.neighbor_id)
+    return out
+
+
+def recall_at_k(approx, exact: dict[int, set[int]], k: int) -> float:
+    """Mean over queries of |approx ∩ exact| / k. Queries the index
+    returns NOTHING for count as recall 0 (they stay in the mean)."""
+    got = _topk_sets(approx)
+    return sum(
+        len(got.get(q, set()) & hits) / k for q, hits in exact.items()
+    ) / len(exact)
+
+
 def test_ann_recall_floors_on_harness_corpus(spark):
-    """Recall floors for the ANN indexes on the recall-harness corpus
-    (tools/recall_harness.py — deterministic planted-cluster mixture,
-    the same generator behind the 100 k measurements in COVERAGE.md).
+    """Recall floors for the ANN indexes on ``synthetic_corpus`` — the
+    planted-cluster generator behind the 100 k measurements in
+    COVERAGE.md (``git show 6eb1dfe:tools/recall_harness.py``).
     The planted-twin oracles prove exact copies surface; these floors
     prove the indexes are USEFUL on organic neighbors. 20 k vectors
     keeps the suite fast; measured headroom at the pinned operating
     points: ivf(nprobe=2) 1.00, ivfpq(m=8, nprobe=4, shortlist=200)
     0.988, lsh(16 planes, 4 bands) ≈ 0.83 — floors sit well below."""
-    from tools.recall_harness import (
-        _topk_sets,
-        recall_at_k,
-        synthetic_corpus,
-    )
-
     from solana_etl_pipeline_spark.llm.similarity import (
         cosine_topk,
         ivf_cosine_topk,

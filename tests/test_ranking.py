@@ -13,10 +13,18 @@ from solana_etl_pipeline_spark.llm.ranking import (
     BM25_B,
     BM25_K1,
     bm25_topk,
-    idf_bm25,
-    idf_smooth,
     tfidf_top_terms,
 )
+
+
+def idf_smooth(n_docs: int, df: int) -> float:
+    """Plain-Python reference of the smoothed idf."""
+    return math.log((n_docs + 1.0) / (df + 1.0)) + 1.0
+
+
+def idf_bm25(n_docs: int, df: int) -> float:
+    """Plain-Python reference of the BM25 idf."""
+    return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
 
 
 @pytest.fixture(scope="module")

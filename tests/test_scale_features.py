@@ -15,12 +15,51 @@ from solana_etl_pipeline_spark.sources import load_table
 
 
 from solana_etl_pipeline_spark.plans import (
-    assert_plan,
     capture_pre_checkpoint_plans as _capture_plans,
     executed_plan as _executed_plan,
-    formatted_explain as _optimized_explain,
-    scan_info,
 )
+
+
+def formatted_explain(df) -> str:
+    """``explain("formatted")`` as a string (operators + detail blocks,
+    including ``PushedFilters`` / ``ReadSchema`` per scan)."""
+    jvm = df.sparkSession._jvm
+    return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def scan_info(df) -> list[dict[str, str]]:
+    """Per-parquet-scan ``PushedFilters`` and ``ReadSchema`` — the two
+    lines that decide whether a 100 TB scan reads 100 TB."""
+    scans: list[dict[str, str]] = []
+    current: dict[str, str] | None = None
+    for line in formatted_explain(df).splitlines():
+        stripped = line.strip()
+        if stripped.startswith("(") and "Scan parquet" in stripped:
+            current = {"scan": stripped}
+            scans.append(current)
+        elif current is not None and stripped.startswith("PushedFilters:"):
+            current["pushed_filters"] = stripped.removeprefix("PushedFilters:").strip()
+        elif current is not None and stripped.startswith("ReadSchema:"):
+            current["read_schema"] = stripped.removeprefix("ReadSchema:").strip()
+            current = None
+    return scans
+
+
+def assert_plan(
+    df,
+    require: tuple[str, ...] = (),
+    forbid: tuple[str, ...] = (),
+) -> str:
+    """Assert substrings (non-)present in the executed plan; returns the
+    plan text so callers can chain further checks."""
+    plan = _executed_plan(df)
+    for token in require:
+        assert token in plan, f"plan missing {token!r}:\n{plan}"
+    for token in forbid:
+        assert token not in plan, f"plan contains forbidden {token!r}:\n{plan}"
+    return plan
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):
@@ -70,7 +109,7 @@ def test_scan_pushdown_projection_and_filter(spark, sf_dir):
     """X1/X2: the narrow projection + equality predicate reach the
     parquet scan (PushedFilters + pruned ReadSchema)."""
     df = QUERIES["events_project_filter"].spark(spark, sf_dir)
-    plan = _optimized_explain(df)
+    plan = formatted_explain(df)
     assert "PushedFilters" in plan and "EqualTo(event_type,purchase)" in plan
     assert "ReadSchema" in plan
     # only the needed columns are read
@@ -81,7 +120,7 @@ def test_scan_pushdown_projection_and_filter(spark, sf_dir):
 
 
 def test_q6_predicates_all_pushed(spark, sf_dir):
-    plan = _optimized_explain(
+    plan = formatted_explain(
         QUERIES["tpch_q6_forecast_revenue"].spark(spark, sf_dir)
     )
     assert "PushedFilters" in plan
@@ -228,15 +267,15 @@ def test_pre_checkpoint_capture_is_thread_isolated(monkeypatch):
     audit.record_pre_checkpoint("outside", "x")
 
 
-def test_context_thread_carries_capture_scope(monkeypatch):
-    """Threaded query construction inside a capture scope must still
-    record when spawned via context_thread (VERDICT r11 task 4):
-    contextvars don't follow raw threads, so the helper runs the
-    worker body in a copy of the spawning context — the worker
-    appends to the same captured list the scope yielded. A bare
-    Thread, by contrast, records nothing (the documented and pinned
-    limitation, kept visible so a regression in either direction
-    trips)."""
+def test_capture_scope_follows_a_copied_context_only(monkeypatch):
+    """Threaded query construction inside a capture scope records only
+    when the worker runs in a copy of the spawning context
+    (``contextvars.copy_context``), which the capture docstring names:
+    contextvars don't follow raw threads, so the copied-context worker
+    appends to the same captured list the scope yielded, while a bare
+    Thread records nothing (the documented limitation, kept visible so
+    a regression in either direction trips)."""
+    import contextvars
     import threading
 
     from solana_etl_pipeline_spark.plans import audit
@@ -244,8 +283,10 @@ def test_context_thread_carries_capture_scope(monkeypatch):
     monkeypatch.setattr(audit, "executed_plan", lambda df: f"plan<{df}>")
 
     with audit.capture_pre_checkpoint_plans() as captured:
-        t = audit.context_thread(
-            audit.record_pre_checkpoint, "in-worker", "w"
+        ctx = contextvars.copy_context()
+        t = threading.Thread(
+            target=ctx.run,
+            args=(audit.record_pre_checkpoint, "in-worker", "w"),
         )
         bare = threading.Thread(
             target=audit.record_pre_checkpoint, args=("bare-worker", "b")
@@ -255,7 +296,7 @@ def test_context_thread_carries_capture_scope(monkeypatch):
         audit.record_pre_checkpoint("in-main", "m")
 
     stages = [r["stage"] for r in captured]
-    assert "in-worker" in stages  # context_thread: buffer followed
+    assert "in-worker" in stages  # copied context: buffer followed
     assert "in-main" in stages
     assert "bare-worker" not in stages  # raw threads stay blind
 

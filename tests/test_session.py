@@ -67,45 +67,6 @@ def test_java_probe_parses_this_boxes_jdk():
     assert major is not None and major >= 17
 
 
-_CHANGELOG_KEY = (
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-)
-
-
-def test_rocksdb_confs_emit_changelog_key_for_both_values():
-    # The False case must EMIT "false", not omit the key: applying the
-    # returned confs to a session where changelog checkpointing was
-    # previously enabled has to actually disable it (ADVICE r14).
-    on = session.rocksdb_state_store_confs(changelog_checkpointing=True)
-    off = session.rocksdb_state_store_confs(changelog_checkpointing=False)
-    assert on[_CHANGELOG_KEY] == "true"
-    assert off[_CHANGELOG_KEY] == "false"
-    for confs in (on, off):
-        assert (
-            confs["spark.sql.streaming.stateStore.providerClass"]
-            == session.ROCKSDB_STATE_STORE_PROVIDER
-        )
-    # Bounded-memory knobs only appear when a cap is requested.
-    assert not any("MemoryUsage" in k for k in on)
-    capped = session.rocksdb_state_store_confs(max_memory_mb=256)
-    assert (
-        capped["spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB"]
-        == "256"
-    )
-
-
-def test_rocksdb_confs_snapshot_cadence():
-    confs = session.rocksdb_state_store_confs(snapshot_cadence=25)
-    assert (
-        confs["spark.sql.streaming.stateStore.minDeltasForSnapshot"] == "25"
-    )
-    # None leaves the build default untouched (key absent)
-    assert not any(
-        "minDeltasForSnapshot" in k
-        for k in session.rocksdb_state_store_confs()
-    )
-
-
 def test_session_reports_the_partition_count_it_asked_for(spark):
     # conftest builds its session with shuffle_partitions=4
     assert spark.conf.get(_PARTITIONS) == "4"

@@ -1,11 +1,10 @@
-"""Tests for the custom streaming source (S1), landing writer, and the
-REST batch source (S2) — injectable transports, no network.
+"""Tests for the streaming source's landing writer (S1) and the REST
+batch source (S2) — injectable transports, no network.
 """
 
 from __future__ import annotations
 
 import asyncio
-import json
 import os
 
 from pyspark.sql.types import (
@@ -16,66 +15,9 @@ from pyspark.sql.types import (
 )
 
 from solana_etl_pipeline_spark.sources.message_stream import (
-    MessageReplayDataSource,
     write_messages_to_landing,
 )
 from solana_etl_pipeline_spark.sources.rest import fetch_batch_to_dataframe
-
-WS_SCHEMA = (
-    "mint string, txType string, solAmount double, name string, symbol string"
-)
-
-
-def _feed_file(path: str, n: int) -> None:
-    with open(path, "w") as f:
-        for i in range(n):
-            f.write(
-                json.dumps(
-                    {
-                        "mint": f"m{i}",
-                        "txType": "create",
-                        "solAmount": float(i),
-                        "name": f"N{i}",
-                        "symbol": "S",
-                    }
-                )
-                + "\n"
-            )
-
-
-def test_message_replay_datasource_streams_all_rows(spark, tmp_path):
-    feed = str(tmp_path / "feed.jsonl")
-    _feed_file(feed, 25)
-    spark.dataSource.register(MessageReplayDataSource)
-    stream = (
-        spark.readStream.format("message_replay")
-        .option("path", feed)
-        .option("batchSize", 10)  # 25 rows -> 3 micro-batches
-        .schema(WS_SCHEMA)
-        .load()
-    )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("replay_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    # poll until the feed is drained (3 micro-batches), then stop
-    import time as _time
-
-    deadline = _time.time() + 120
-    while (
-        spark.table("replay_sink").count() < 25 and _time.time() < deadline
-    ):
-        _time.sleep(1)
-    query.stop()
-    query.awaitTermination(30)
-    got = spark.table("replay_sink").collect()
-    assert len(got) == 25
-    assert {r.mint for r in got} == {f"m{i}" for i in range(25)}
-    assert {r.solAmount for r in got} == {float(i) for i in range(25)}
 
 
 def test_landing_writer_atomic_files(spark, tmp_path):
@@ -258,55 +200,6 @@ def test_retry_after_http_date_forms_parse_to_delays():
     assert _retry_after_seconds(past, 9.0) == 0.0
     # garbage falls back to exponential backoff
     assert _retry_after_seconds("soon-ish", 9.0) == 9.0
-
-
-def test_replay_reader_skips_bad_lines_and_torn_tail(tmp_path):
-    """Review r15: a blank/malformed COMPLETE line is skipped but
-    consumed (recovery replays the same skip); a torn trailing line
-    (live producer mid-append) is NOT consumed and is served once its
-    newline lands; offsets carry a byte position so batches seek
-    instead of re-scanning the whole feed."""
-    from pyspark.sql.types import StructType
-
-    from solana_etl_pipeline_spark.sources.message_stream import (
-        _ReplayStreamReader,
-    )
-
-    feed = tmp_path / "feed.jsonl"
-    feed.write_bytes(
-        b'{"mint": "A", "solAmount": 1.0}\n'
-        b"\n"                       # blank: skip, consume
-        b"{not json}\n"             # malformed: skip, consume
-        b'{"mint": "B", "solAmount": 2.0}\n'
-        b'{"mint": "C", "solAm'     # torn tail: do NOT consume
-    )
-    schema = StructType.fromDDL(
-        "mint string, txType string, solAmount double, "
-        "name string, symbol string"
-    )
-    reader = _ReplayStreamReader(schema, {"path": str(feed)})
-
-    rows, off = reader.read(reader.initialOffset())
-    rows = list(rows)
-    assert [r[0] for r in rows] == ["A", "B"]
-    assert off["line"] == 4  # four COMPLETE lines consumed
-    assert off["pos"] > 0
-
-    # the torn line completes -> served by the next batch
-    with open(feed, "ab") as f:
-        f.write(b'ount": 3.0}\n')
-    rows2, off2 = reader.read(off)
-    assert [r[0] for r in rows2] == ["C"]
-    assert off2["line"] == 5
-
-    # recovery replays the committed range identically
-    replay = list(reader.readBetweenOffsets(reader.initialOffset(), off))
-    assert [r[0] for r in replay] == ["A", "B"]
-    # legacy checkpoint offsets (no byte pos) still resolve
-    legacy = list(reader.readBetweenOffsets({"line": 0}, {"line": 4}))
-    assert [r[0] for r in legacy] == ["A", "B"]
-    rows3, _ = reader.read({"line": 4})
-    assert [r[0] for r in list(rows3)] == ["C"]
 
 
 def test_http_fetcher_object_page_and_header_case_and_quoting():

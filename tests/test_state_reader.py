@@ -9,10 +9,10 @@ surface: batch reads over the live ledger, no query restart. Pins:
 * the live state rows equal the EXPECTED ledger (unique keys within
   the watermark) after a multi-batch drain with a redelivery;
 * provider transparency: identical key sets from an HDFS-backed and
-  a RocksDB checkpoint of the same landing data;
-* the change feed (RocksDB + changelog checkpointing only) exposes
-  per-batch inserts and the watermark-eviction deletes — the
-  tombstone flow the cadence probe prices.
+  a RocksDB checkpoint of the same landing data (a deployment selects
+  the provider through ``spark.sql.streaming.stateStore.providerClass``;
+  the package's streams keep the default);
+* a stream-stream join's buffers read per side.
 """
 
 from __future__ import annotations
@@ -24,10 +24,8 @@ import time
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.schemas import EVENTS
-from solana_etl_pipeline_spark.session import rocksdb_state_store_confs
 from solana_etl_pipeline_spark.sources import (
     dedup_state_keys,
-    read_state_changes,
     read_state_metadata,
     read_state_store,
 )
@@ -39,6 +37,10 @@ from solana_etl_pipeline_spark.streaming.ingest import (
 _DEFAULT_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "HDFSBackedStateStoreProvider"
+)
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state."
+    "RocksDBStateStoreProvider"
 )
 
 
@@ -140,7 +142,8 @@ def test_state_reader_provider_transparent(spark, tmp_path):
     for label, confs in (
         ("default",
          {"spark.sql.streaming.stateStore.providerClass": _DEFAULT_PROVIDER}),
-        ("rocksdb", rocksdb_state_store_confs()),
+        ("rocksdb",
+         {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER}),
     ):
         ckpt = str(tmp_path / f"ckpt_{label}")
         saved = _with_provider(spark, confs)
@@ -157,53 +160,11 @@ def test_state_reader_provider_transparent(spark, tmp_path):
     }
 
 
-def test_state_change_feed_shows_inserts_and_evictions(spark, tmp_path):
-    """RocksDB + changelog checkpointing: the change feed exposes the
-    per-batch inserts AND the watermark-eviction tombstones (the churn
-    cost `git show 049cff9:tools/state_store_cadence.py` priced)."""
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    # batch 0: two keys at hour 0; batch 1: one key 3 hours later —
-    # the 1-hour watermark then evicts the hour-0 state; batch 2
-    # gives the eviction a batch to land in
-    _land(landing, "f1.json",
-          [_event(1, 7, "2024-01-01T00:00:00.000Z"),
-           _event(2, 7, "2024-01-01T00:05:00.000Z")], age=30)
-    _land(landing, "f2.json",
-          [_event(3, 8, "2024-01-01T03:00:00.000Z")], age=20)
-    _land(landing, "f3.json",
-          [_event(4, 8, "2024-01-01T03:10:00.000Z")], age=10)
-    ckpt = str(tmp_path / "ckpt")
-    saved = _with_provider(spark, rocksdb_state_store_confs())
-    try:
-        _drain_dedup(spark, landing, ckpt, watermark="1 hour")
-    finally:
-        _restore(spark, saved)
-
-    changes = read_state_changes(spark, ckpt, start_batch_id=0).select(
-        "batch_id", "change_type", F.col("key.*")
-    ).collect()
-    by_type: dict[str, set] = {}
-    for r in changes:
-        by_type.setdefault(r.change_type, set()).add(
-            (r.user_id, r.event_id)
-        )
-    assert by_type.get("update", set()) >= {(7, 1), (7, 2), (8, 3), (8, 4)}
-    # the hour-0 keys were deleted by watermark eviction
-    assert by_type.get("delete", set()) >= {(7, 1), (7, 2)}
-    # final ledger: only the live (post-eviction) keys
-    live = {
-        (r.user_id, r.event_id)
-        for r in dedup_state_keys(spark, ckpt).collect()
-    }
-    assert live == {(8, 3), (8, 4)}
-
-
 def test_state_reader_join_buffers(spark, tmp_path):
     """``join_side`` reads a stream-stream join's buffered state: the
     left buffer holds the signups, the right the purchases — the
-    third state layout (after dedup keys and change feed) the ops
-    surface must handle."""
+    second state layout (after dedup keys) the ops surface must
+    handle."""
     from solana_etl_pipeline_spark.streaming.ingest import (
         stream_interval_join,
     )

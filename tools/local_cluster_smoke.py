@@ -21,11 +21,11 @@ executor JVMs rather than the driver, and broadcast joins ship over the
 wire, so semantic drift between the modes would surface here.
 
 It also runs a checkpointed STATEFUL streaming dedup (build state →
-stop → restart with a replayed duplicate) in local-cluster under the
-RocksDB state-store provider: streaming state stores are instantiated
-in executor processes, so this proves cross-batch/cross-restart state
-survives in real executor JVMs (and that rocksdbjni's native lib loads
-there), with output identical to local mode on the default provider.
+stop → restart with a replayed duplicate) and a watermark-evicting
+dedup in local-cluster on the default state-store provider: streaming
+state stores are instantiated in executor processes, so this proves
+cross-batch/cross-restart state and its eviction work in real executor
+JVMs, with output identical to local mode.
 
 Run directly (exit 0 = pass)::
 
@@ -52,11 +52,7 @@ REPO = Path(__file__).resolve().parent.parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-from solana_etl_pipeline_spark.session import (
-    build_session,
-    gc_java_opts,
-    rocksdb_state_store_confs,
-)
+from solana_etl_pipeline_spark.session import build_session, gc_java_opts
 
 #: One banded near-dup (Arrow signature stage + band-bucket shuffle +
 #: verify join), one multi-join TPC-H aggregate (wide shuffles,
@@ -110,14 +106,13 @@ def _executor_cmdlines() -> list[str]:
     return out
 
 
-def _run_stateful(spark, work_dir: str, rocksdb: bool) -> list[tuple]:
+def _run_stateful(spark, work_dir: str) -> list[tuple]:
     """Checkpointed streaming dedup, run → restart-with-new-data → run.
 
     State stores live in EXECUTOR processes: in local-cluster the
     cross-batch dedup keys are maintained, checkpointed, and RESTORED
-    inside real executor JVMs (with ``rocksdb=True``, through the
-    rocksdbjni native lib loaded there) — the last executor-side code
-    path the suite otherwise only exercises driver-embedded. Returns
+    inside real executor JVMs — the last executor-side code path the
+    suite otherwise only exercises driver-embedded. Returns
     the canonical final sink rows; raises if the restart fails to
     drop the replayed duplicate (state did not survive).
     """
@@ -143,10 +138,6 @@ def _run_stateful(spark, work_dir: str, rocksdb: bool) -> list[tuple]:
             for r in rows:
                 f.write(json.dumps(r) + "\n")
         os.utime(path, (time.time() - age,) * 2)
-
-    if rocksdb:
-        for k, v in rocksdb_state_store_confs().items():
-            spark.conf.set(k, v)
 
     land("f1.json", [event(1, 10, "2024-01-01T00:05:00.000Z"),
                      event(2, 10, "2024-01-01T00:10:00.000Z")], 20)
@@ -175,19 +166,16 @@ def _run_stateful(spark, work_dir: str, rocksdb: bool) -> list[tuple]:
     return _canonical(sink.select("event_id", "user_id", "ts", "value"))
 
 
-def _run_evicting(spark, work_dir: str, rocksdb: bool) -> list[tuple]:
+def _run_evicting(spark, work_dir: str) -> list[tuple]:
     """Churn shape in real executor JVMs: the watermark advances file
     by file (event times an hour apart, 30-minute horizon,
     ``maxFilesPerTrigger=1``), so dedup state is inserted AND EVICTED
-    inside the executor processes — with ``rocksdb=True`` the eviction
-    tombstones flow through rocksdbjni into per-batch changelogs.
-    The r14 A/B measured this path only driver-embedded (VERDICT r14
-    task 7). Asserts from the query's own progress metrics that
-    eviction ran and shrank live state (final < peak, removed > 0);
-    for the RocksDB leg, that changelog artifacts exist in the
-    checkpoint (and no ``.delta`` — the provider engaged). Returns
-    canonical sink rows for cross-mode comparison: all duplicates are
-    within-horizon, so output is eviction-timing-independent.
+    inside the executor processes. The r14 A/B measured this path only
+    driver-embedded (VERDICT r14 task 7). Asserts from the query's own
+    progress metrics that eviction ran and shrank live state (final <
+    peak, removed > 0). Returns canonical sink rows for cross-mode
+    comparison: all duplicates are within-horizon, so output is
+    eviction-timing-independent.
     """
     from solana_etl_pipeline_spark.schemas import EVENTS
     from solana_etl_pipeline_spark.streaming.ingest import (
@@ -218,9 +206,6 @@ def _run_evicting(spark, work_dir: str, rocksdb: bool) -> list[tuple]:
                 f.write(json.dumps(r) + "\n")
         os.utime(path, (now - 40 + 10 * h,) * 2)
 
-    if rocksdb:
-        for k, v in rocksdb_state_store_confs().items():
-            spark.conf.set(k, v)
     stream = landing_stream(spark, landing, EVENTS, max_files_per_trigger=1)
     query = (
         deduplicated(stream, ["user_id", "event_id"],
@@ -254,18 +239,6 @@ def _run_evicting(spark, work_dir: str, rocksdb: bool) -> list[tuple]:
     print(
         f"  eviction metrics: peak={peak} final={final} removed={removed}"
     )
-    if rocksdb:
-        changelogs = glob.glob(
-            os.path.join(ckpt, "state", "**", "*.changelog"), recursive=True
-        )
-        deltas = glob.glob(
-            os.path.join(ckpt, "state", "**", "*.delta"), recursive=True
-        )
-        if not changelogs or deltas:
-            raise AssertionError(
-                f"rocksdb changelog artifacts wrong: "
-                f"{len(changelogs)} changelogs, {len(deltas)} deltas"
-            )
     sink = spark.read.parquet(out)
     keys = sorted(r.event_id for r in sink.collect())
     if keys != sorted({10 * h + i for h in range(4) for i in range(3)}):
@@ -336,25 +309,20 @@ def main(argv: list[str] | None = None) -> int:
         cluster_results = _run_queries(spark, args.sf_dir)
         for name, rows in cluster_results.items():
             print(f"{name}: {len(rows)} rows on local-cluster")
-        # Stateful streaming with the RocksDB provider: dedup state is
-        # built, checkpointed, and restored across a query RESTART
-        # inside the two real executor JVMs (rocksdbjni loading there,
-        # not in the driver).
+        # Stateful streaming: dedup state is built, checkpointed, and
+        # restored across a query RESTART inside the two real executor
+        # JVMs, not in the driver.
         with tempfile.TemporaryDirectory() as wd:
-            cluster_stateful = _run_stateful(spark, wd, rocksdb=True)
+            cluster_stateful = _run_stateful(spark, wd)
         print(
-            f"stateful dedup+restart (rocksdb): "
-            f"{len(cluster_stateful)} rows on local-cluster"
+            f"stateful dedup+restart: {len(cluster_stateful)} rows on "
+            "local-cluster"
         )
         # Churn/eviction path in the executor JVMs (VERDICT r14
-        # task 7): watermark-driven state eviction, tombstones into
-        # RocksDB changelogs.
+        # task 7): watermark-driven state eviction.
         with tempfile.TemporaryDirectory() as wd:
-            cluster_evicting = _run_evicting(spark, wd, rocksdb=True)
-        print(
-            f"evicting dedup (rocksdb): "
-            f"{len(cluster_evicting)} rows on local-cluster"
-        )
+            cluster_evicting = _run_evicting(spark, wd)
+        print(f"evicting dedup: {len(cluster_evicting)} rows on local-cluster")
     finally:
         spark.stop()
 
@@ -367,21 +335,18 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     try:
         local_results = _run_queries(spark, args.sf_dir)
-        # Baseline stateful run stays on the DEFAULT (HDFS-backed)
-        # provider: output equality below then pins semantic
-        # transparency across BOTH dimensions at once — execution mode
-        # (driver-embedded vs real executor JVMs) and state-store
-        # provider (heap vs RocksDB).
+        # Output equality below pins semantic transparency across
+        # execution modes: driver-embedded vs real executor JVMs.
         with tempfile.TemporaryDirectory() as wd:
-            local_stateful = _run_stateful(spark, wd, rocksdb=False)
+            local_stateful = _run_stateful(spark, wd)
         with tempfile.TemporaryDirectory() as wd:
-            local_evicting = _run_evicting(spark, wd, rocksdb=False)
+            local_evicting = _run_evicting(spark, wd)
     finally:
         spark.stop()
 
     rc = 0
     if cluster_stateful == local_stateful:
-        print("stateful dedup+restart: local-cluster/rocksdb == local/default  OK")
+        print("stateful dedup+restart: local-cluster == local  OK")
     else:
         print(
             f"FAIL: stateful dedup diverges across modes "
@@ -389,7 +354,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         rc = 1
     if cluster_evicting == local_evicting:
-        print("evicting dedup: local-cluster/rocksdb == local/default  OK")
+        print("evicting dedup: local-cluster == local  OK")
     else:
         print(
             f"FAIL: evicting dedup diverges across modes "
