@@ -79,8 +79,8 @@ def decontaminate(
         evals = F.broadcast(evals)
     # ``_sh`` is materialized by the shingle projection, so the
     # size() sibling of the explode() re-reads an array length per
-    # output row instead of re-deriving the gram construction (the
-    # sibling-of-generator trap — see repetition_report's docstring).
+    # output row instead of re-deriving the gram construction (an
+    # expression beside a generator is evaluated per output row).
     # explode_outer, not explode: InferFiltersFromGenerate turns inner
     # explode into a Filter(size(_sh)>0) pushed below the shingle
     # projection, which computes the whole set a second time per row.

@@ -9,14 +9,16 @@ Scale design (the part that matters at 100 TB):
   b bands of r rows → exact-match bucket join on (band, band-hash).
   Candidate generation is a self-equi-join on bucket keys — the only
   quadratic step is *within* a bucket, which is the whole point.
-  NEVER an all-pairs cross join.
+  NEVER an all-pairs cross join. Every pair generator here runs that
+  join, and its mega-bucket cap, through :func:`_bucket_pairs`.
 - **SimHash** (Charikar '02): 64-bit signature whose per-bit sign is
   the weighted majority of token-hash bits; near-dups have small
   Hamming distance. Candidates come from exact-match joins on 16-bit
   signature bands (Hamming ≤ 3 ⇒ at least one of 4 bands identical).
 
-All signature math is built-in integer/array expressions — JVM-side,
-codegen'd, no Python in the hot path.
+Signatures are map-only Arrow ``pandas_udf`` passes (one per document,
+no shuffle); shingles, band hashes, bucket joins and verifies are
+built-in expressions.
 
 Caching contract: the pair generators (`minhash_near_dup_pairs`,
 `ngram_jaccard_for_pairs`, `embedding_near_dup_pairs`,
@@ -266,19 +268,19 @@ def minhash_signatures(
     MAP-ONLY Arrow path: one base hash per shingle (crc32 → [0, 2^31)),
     then k universal permutations ``h_i(x) = (a_i·x + b_i) mod P``
     reduced with MIN — all inside one vectorized numpy outer-product
-    per document, no explode and NO SHUFFLE. The aggregate twin
-    (:func:`minhash_signatures_agg`, xxhash64 base + 64 codegen
-    min-aggregates) shuffles per-doc partial minima and measures ~2×
-    slower at sf0.1; structural parity between the two (doc coverage,
-    identical-text ⇒ identical sigs, near-dup estimates) is pinned by
-    tests. Signature VALUES differ between the twins (different base
-    hash) — signatures are an internal representation; anything
-    persisting them must pin the implementation (see
-    ``llm/incremental.py`` meta ``sig_impl``).
+    per document, no explode and NO SHUFFLE. A JVM form (explode, k
+    codegen min-aggregates) signs a bare corpus for fewer core-seconds,
+    yet made the registry queries dearer (sf0.1, 4 cores:
+    ``llm_minhash_near_dup`` 3.29 → 4.38 core-s): it needs a group-by
+    shuffle and a join back to the shingle sets, where this form is a
+    projection of them, so the fused verify
+    (:func:`minhash_verified_pairs`) reads both from one cache.
+    Signatures are an internal representation; anything persisting
+    them must pin the implementation (see ``llm/incremental.py`` meta
+    ``sig_impl``).
 
     Docs whose text yields no real shingle (null/empty text) get no
-    signature row — same coverage as the agg twin's post-explode
-    filter. ``shingles`` (a :func:`shingle_sets` result, ideally
+    signature row. ``shingles`` (a :func:`shingle_sets` result, ideally
     persisted) lets a pipeline that ALSO needs the shingle sets —
     e.g. LSH candidates followed by exact-Jaccard verify — parse and
     shingle the corpus text once instead of once per stage.
@@ -350,58 +352,6 @@ def minhash_signatures(
     return keyed.filter(F.col("sig").isNotNull())
 
 
-def minhash_signatures_agg(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 64,
-    shingle_len: int = 3,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Aggregate twin of :func:`minhash_signatures` — pure-JVM: xxhash64
-    base per exploded shingle, k codegen min-aggregates (map-side
-    partial fold, shuffle carries per-doc minima). Kept as the
-    no-Python-workers fallback and the parity reference; ~2× slower
-    than the vectorized map-only path at sf0.1."""
-    # explode_outer, not explode: InferFiltersFromGenerate turns inner
-    # explode into a Filter(size(expr)>0) that re-inlines the whole
-    # shingle expression (split included) per row — measured ~8× on
-    # this step. The shingle array is never empty (a short document
-    # is one whole-text shingle), so outer ≡ inner here.
-    shingle_df = (
-        shingles
-        if shingles is not None
-        else shingle_sets(df, id_col, text_col, shingle_len)
-    )
-    shingled = shingle_df.select(
-        "_id", F.explode_outer("_sh").alias("sh")
-    )
-    # Null/empty/whitespace-only text ⇒ a single degenerate '' or
-    # spaces-only shingle (split/slice null semantics; empty words
-    # joined by ' ') — drop it, or every such doc would share a
-    # signature and pair with each other. trim() is exact here: words
-    # from the \s+ split are whitespace-free, so any whitespace in a
-    # shingle is the ' ' joiner. A filter on the *generated* column
-    # does not trigger the InferFiltersFromGenerate re-inlining that
-    # filtering the array expression would.
-    shingled = shingled.filter(
-        F.col("sh").isNotNull() & (F.trim(F.col("sh")) != "")
-    )
-    base = F.pmod(F.xxhash64("sh"), F.lit(_P))
-    mins = [
-        F.min(
-            F.pmod((2 * i + 1) * base + F.lit(982_451_653) * i, F.lit(_P))
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sigs = shingled.groupBy("_id").agg(*mins)
-    return sigs.select(
-        F.col("_id").alias(id_col),
-        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"),
-    )
-
-
-
 def band_rows(
     sigs: DataFrame, id_col: str, bands: int, rows_per_band: int
 ) -> DataFrame:
@@ -435,6 +385,133 @@ def band_rows(
         ).alias("band_idx", "band_hash"),
     )
 
+
+def _bucket_pairs(
+    rows: DataFrame,
+    id_col: str,
+    key_cols: list[str],
+    max_bucket: int | None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate pairs of the banded-LSH bucket self-join that every
+    pair generator in this module runs.
+
+    ``rows`` holds ``(id, *key_cols, *carry)``: one row per document
+    and band, keyed by the band's bucket. Two documents that share a
+    bucket are a candidate. The result has one row per pair, ``(id_a,
+    <carry>_a..., id_b, <carry>_b...)`` with ``id_a < id_b``: carried
+    columns ride both ends, so a verify that needs them joins nothing
+    back. Only these skinny rows shuffle; callers join wide columns
+    (signatures, vectors) back for the surviving pairs alone.
+
+    ``max_bucket`` bounds the quadratic worst case. A bucket of s
+    members emits s·(s-1)/2 pairs, so one mega-bucket — boilerplate
+    duplicated across millions of documents, the classic web-corpus
+    pathology — turns the join into an O(s²) explosion that no
+    partitioning can save. A bucket of MORE than ``max_bucket``
+    members instead emits the s-1 STAR edges around its minimum id.
+    Dedup by connected components then sees the same component
+    whenever the verify passes the star edges, which is exact for the
+    mass duplication that makes mega-buckets (every member verifies
+    against the representative at similarity 1). Pairwise recall
+    inside an oversize bucket is the deliberate trade, the same cap
+    discipline production LSH dedups apply. ``None`` keeps the clique.
+
+    The cap costs one map-side-combined aggregate that sizes every
+    bucket. Only the oversize buckets, with their representative (and
+    its carried columns), are kept and BROADCAST: there are at most
+    bands·n/max_bucket of them by counting, so the broadcast is
+    bounded and the band rows are never re-shuffled (an equi-join
+    split measured +65% on the untriggered path). The aggregate is
+    persisted, so its broadcast build runs the count shuffle once, and
+    ONE left-outer probe tags every band row with its bucket's
+    representative (null = within the cap); the persisted tagged rows
+    split into clique and star rows by filter — one join execution
+    instead of three (anti×2 + star). ``rows`` is persisted for its
+    two readers unless the caller already did. On an untriggered
+    100 k-doc run the guard measured ~+25% wall (interleaved A/B, min
+    3.9 → 4.9 s), against an unbounded quadratic when the pathology
+    hits. The persists are scoped (:func:`dedup_cache_scope`).
+    """
+
+    def end(side: str) -> list[Column]:
+        return [F.col(id_col).alias(f"id_{side}")] + [
+            F.col(c).alias(f"{c}_{side}") for c in carry
+        ]
+
+    star = None
+    if max_bucket is not None:
+        if not rows.is_cached:
+            rows = _scoped_persist(rows)
+        # min over a struct would leave the hash aggregate, so a bucket
+        # with nothing to carry keeps the plain min id
+        rep = F.struct(id_col, *carry) if carry else F.col(id_col)
+        oversize = F.broadcast(
+            _scoped_persist(
+                rows.groupBy(*key_cols)
+                .agg(
+                    F.count(F.lit(1)).alias("_bsz"),
+                    F.min(rep).alias("_rep"),
+                )
+                .filter(F.col("_bsz") > max_bucket)
+                .select(*key_cols, "_rep")
+            )
+        )
+        flagged = _scoped_persist(rows.join(oversize, key_cols, "left"))
+        rep_id = F.col(f"_rep.{id_col}") if carry else F.col("_rep")
+        # rep < member always, so (id_a, id_b) is ordered
+        star = flagged.filter(
+            F.col("_rep").isNotNull() & (F.col(id_col) != rep_id)
+        ).select(
+            rep_id.alias("id_a"),
+            *[F.col(f"_rep.{c}").alias(f"{c}_a") for c in carry],
+            *end("b"),
+        )
+        rows = flagged.filter(F.col("_rep").isNull()).drop("_rep")
+
+    pairs = (
+        rows.select(*end("a"), *key_cols)
+        .join(rows.select(*end("b"), *key_cols), key_cols)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .drop(*key_cols)
+    )
+    if star is not None:
+        pairs = pairs.unionByName(star)
+    return pairs.dropDuplicates(["id_a", "id_b"])
+
+
+def _with_ends(
+    pairs: DataFrame, table: DataFrame, key: str, cols: list[str]
+) -> DataFrame:
+    """Join ``table``'s ``cols`` onto both ends of ``(id_a, id_b)``
+    pairs by its ``key`` column: column ``c`` arrives as ``c_a`` and
+    ``c_b``."""
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            table.select(
+                F.col(key).alias(f"id_{side}"),
+                *[F.col(c).alias(f"{c}_{side}") for c in cols],
+            ),
+            f"id_{side}",
+        )
+    return pairs
+
+
+def _est_jaccard(a: str, b: str) -> Column:
+    """MinHash Jaccard estimate: the fraction of equal entries of two
+    signatures."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    ) / F.size(a)
+
+
+def _exact_jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard |A∩B| / |A∪B| of two distinct-element arrays."""
+    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
+
+
 def minhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -455,132 +532,29 @@ def minhash_near_dup_pairs(
     ``shingles`` forwards a precomputed :func:`shingle_sets` frame to
     the signature stage (one corpus text parse for LSH + verify).
 
-    ``max_bucket`` bounds the quadratic worst case of the bucket
-    self-join. A band bucket of size s emits s·(s-1)/2 candidate
-    pairs, so ONE mega-bucket — boilerplate duplicated across
-    millions of documents, the classic web-corpus pathology — turns
-    the join into a job-killing O(s²) explosion no partitioning can
-    save. Buckets larger than ``max_bucket`` instead emit STAR edges
-    around the bucket's min id (s-1 pairs): for deduplication the
-    downstream connected-components resolution sees the same
-    component whenever the verify stage passes the star edges (exact
-    for the mass-duplication case that creates mega-buckets, since
-    every member verifies against the representative at jaccard 1.0);
-    pairwise recall inside an oversize bucket is deliberately traded
-    away — the same cap discipline production LSH dedups apply.
-    ``None`` (default) disables the cap and keeps exact clique
-    semantics; at 100 TB, set it (10³–10⁵) — the guard costs one
-    map-side-combined count over the skinny band rows plus two
-    broadcast probes (the oversize-bucket set is ≤ bands·n/max_bucket
-    rows by counting, so the broadcast is bounded and the band table
-    is never re-shuffled). Measured on an untriggered 100 k-doc run:
-    ~+25% wall (interleaved A/B, min 3.9 → 4.9 s) — the price of the
-    size scan — against an unbounded quadratic when the pathology
-    hits.
+    ``max_bucket`` stars band buckets larger than the cap around their
+    min id (:func:`_bucket_pairs`). ``None`` (default) keeps exact
+    clique semantics; at 100 TB, set it (10³–10⁵).
     """
     assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_len, shingles=shingles
-    )
     # The signature table feeds three plan branches (band explode +
-    # both sides of the candidate re-join). Without materialization
-    # Spark recomputes the shingle-explode + 64-way min aggregate per
-    # branch — the dominant cost. Persist is the single-job form; at
-    # cluster scale you'd write signatures to a table once and reuse
-    # them across dedup runs.
-    sigs = _scoped_persist(sigs, eager=True)
-
-    # Band rows carry ONLY (id, band_idx, band_hash) — never the full
-    # signature: the bucket join shuffles bands*|docs| skinny rows, and
-    # signatures re-join only for the (few) surviving candidate pairs.
-    band_entries = band_rows(sigs, id_col, bands, rows_per_band)
-
-    if max_bucket is not None:
-        # The guard adds three more consumers of the band projection
-        # (size agg, anti probe, star probe) on top of the self-join's
-        # two — persist the skinny band rows once instead of
-        # recomputing 16 band hashes per doc per consumer (scoped,
-        # same lifecycle as the sigs persist above).
-        band_entries = _scoped_persist(band_entries)
-        # One map-side-combined aggregate sizes every bucket; only the
-        # OVERSIZE buckets (with their min-id star representative) are
-        # kept and BROADCAST — there are at most bands·n/max_bucket of
-        # them by counting, so the broadcast is bounded and the band
-        # table itself is never re-shuffled (an equi-join split was
-        # measured +65% on the untriggered path). The tiny aggregate
-        # is persisted so its broadcast build never re-runs the count
-        # shuffle, and ONE left-outer broadcast probe tags every band
-        # row with its bucket's representative (NULL = within cap);
-        # the persisted tagged table then splits into small/star by
-        # filter — one join execution + cache reads instead of three
-        # (anti×2 + star), which is fixed-stage overhead at fixture
-        # scale and one fewer pass at any scale.
-        oversize = F.broadcast(
-            _scoped_persist(
-                band_entries.groupBy("band_idx", "band_hash")
-                .agg(
-                    F.count(F.lit(1)).alias("_bsz"),
-                    F.min(id_col).alias("_rep"),
-                )
-                .filter(F.col("_bsz") > max_bucket)
-                .select("band_idx", "band_hash", "_rep")
-            )
-        )
-        flagged = _scoped_persist(
-            band_entries.join(oversize, ["band_idx", "band_hash"], "left")
-        )
-        small = flagged.filter(F.col("_rep").isNull()).drop("_rep")
-        # oversize buckets: star around the min id — s-1 edges, never
-        # s², and rep < member always, so (id_a, id_b) is ordered
-        star = (
-            flagged.filter(
-                F.col("_rep").isNotNull() & (F.col(id_col) != F.col("_rep"))
-            )
-            .select(
-                F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b")
-            )
-        )
-    else:
-        small = band_entries
-        star = None
-
-    left = small.select(
-        F.col(id_col).alias("id_a"), "band_idx", "band_hash"
+    # both ends of the candidate re-join). Without materialization
+    # Spark recomputes the signatures per branch — the dominant cost.
+    # At cluster scale you'd write signatures to a table once and
+    # reuse them across dedup runs.
+    sigs = _scoped_persist(
+        minhash_signatures(
+            df, id_col, text_col, num_hashes, shingle_len, shingles=shingles
+        ),
+        eager=True,
     )
-    right = small.select(
-        F.col(id_col).alias("id_b"), "band_idx", "band_hash"
-    )
-    pair_ids = (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    if star is not None:
-        pair_ids = pair_ids.unionByName(star)
-    pair_ids = pair_ids.dropDuplicates(["id_a", "id_b"])
-    candidates = pair_ids.join(
-        sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a")),
-        "id_a",
-    ).join(
-        sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b")),
-        "id_b",
-    )
-
-    est = (
-        F.aggregate(
-            F.zip_with(
-                "sig_a",
-                "sig_b",
-                lambda x, y: F.when(x == y, 1).otherwise(0),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
-        / F.lit(num_hashes)
+    pair_ids = _bucket_pairs(
+        band_rows(sigs, id_col, bands, num_hashes // bands),
+        id_col, ["band_idx", "band_hash"], max_bucket,
     )
     return (
-        candidates.withColumn("est_jaccard", F.round(est, 6))
+        _with_ends(pair_ids, sigs, id_col, ["sig"])
+        .withColumn("est_jaccard", F.round(_est_jaccard("sig_a", "sig_b"), 6))
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
@@ -624,7 +598,6 @@ def minhash_verified_pairs(
     ``max_bucket`` is the mega-bucket star cap, forwarded unchanged.
     """
     assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
     sh = shingle_sets(df, id_col, text_col, shingle_len)
     # one cache, both stages: (id, sig, _sh) in a single projection of
     # the shingle frame (keep_shingles appends the column — no join).
@@ -635,87 +608,16 @@ def minhash_verified_pairs(
         ),
         eager=True,
     )
-    sig_side = combined.select(F.col(id_col), "sig")
-
-    band_entries = band_rows(sig_side, id_col, bands, rows_per_band)
-    if max_bucket is not None:
-        band_entries = _scoped_persist(band_entries)
-        oversize = F.broadcast(
-            _scoped_persist(
-                band_entries.groupBy("band_idx", "band_hash")
-                .agg(
-                    F.count(F.lit(1)).alias("_bsz"),
-                    F.min(id_col).alias("_rep"),
-                )
-                .filter(F.col("_bsz") > max_bucket)
-                .select("band_idx", "band_hash", "_rep")
-            )
-        )
-        flagged = _scoped_persist(
-            band_entries.join(oversize, ["band_idx", "band_hash"], "left")
-        )
-        small = flagged.filter(F.col("_rep").isNull()).drop("_rep")
-        star = (
-            flagged.filter(
-                F.col("_rep").isNotNull() & (F.col(id_col) != F.col("_rep"))
-            )
-            .select(
-                F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b")
-            )
-        )
-    else:
-        small = band_entries
-        star = None
-
-    left = small.select(
-        F.col(id_col).alias("id_a"), "band_idx", "band_hash"
-    )
-    right = small.select(
-        F.col(id_col).alias("id_b"), "band_idx", "band_hash"
-    )
-    pair_ids = (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    if star is not None:
-        pair_ids = pair_ids.unionByName(star)
-    pair_ids = pair_ids.dropDuplicates(["id_a", "id_b"])
-
-    cand = pair_ids.join(
-        combined.select(
-            F.col(id_col).alias("id_a"),
-            F.col("sig").alias("sig_a"),
-            F.col("_sh").alias("sh_a"),
-        ),
-        "id_a",
-    ).join(
-        combined.select(
-            F.col(id_col).alias("id_b"),
-            F.col("sig").alias("sig_b"),
-            F.col("_sh").alias("sh_b"),
-        ),
-        "id_b",
-    )
-    est = (
-        F.aggregate(
-            F.zip_with(
-                "sig_a",
-                "sig_b",
-                lambda x, y: F.when(x == y, 1).otherwise(0),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
-        / F.lit(num_hashes)
-    )
-    jaccard = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
+    pair_ids = _bucket_pairs(
+        band_rows(combined.select(id_col, "sig"), id_col, bands,
+                  num_hashes // bands),
+        id_col, ["band_idx", "band_hash"], max_bucket,
     )
     return (
-        cand.withColumn("est_jaccard", F.round(est, 6))
+        _with_ends(pair_ids, combined, id_col, ["sig", "_sh"])
+        .withColumn("est_jaccard", F.round(_est_jaccard("sig_a", "sig_b"), 6))
         .filter(F.col("est_jaccard") >= est_threshold)
-        .withColumn("jaccard", F.round(jaccard, 6))
+        .withColumn("jaccard", F.round(_exact_jaccard("_sh_a", "_sh_b"), 6))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -749,18 +651,9 @@ def ngram_jaccard_for_pairs(
             shingle_sets(df, id_col, text_col, shingle_len), eager=True
         )
     )  # feeds both sides of the pair join — compute shingles once
-    out = pairs.join(
-        sets_df.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")),
-        "id_a",
-    ).join(
-        sets_df.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")),
-        "id_b",
-    )
-    jaccard = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return out.select(
-        "id_a", "id_b", F.round(jaccard, 6).alias("jaccard")
+    return _with_ends(pairs, sets_df, "_id", ["_sh"]).select(
+        "id_a", "id_b",
+        F.round(_exact_jaccard("_sh_a", "_sh_b"), 6).alias("jaccard"),
     )
 
 
@@ -783,13 +676,11 @@ def embedding_near_dup_pairs(
     while candidate volume stays ~linear in corpus size, which is the
     property that matters at scale.
 
-    ``max_bucket`` bounds the self-join's per-bucket quadratic exactly
-    like :func:`minhash_near_dup_pairs`: oversize band buckets (mass-
-    duplicated embeddings — re-encoded boilerplate) emit star edges
-    around the bucket's min id instead of the clique; identical
-    vectors verify against the representative at cosine 1.0, so
-    connected-components dedup resolves the same survivors. ``None``
-    (default) keeps exact clique semantics."""
+    ``max_bucket`` stars oversize band buckets (mass-duplicated
+    embeddings — re-encoded boilerplate) around their min id
+    (:func:`_bucket_pairs`); identical vectors verify against the
+    representative at cosine 1.0. ``None`` (default) keeps exact
+    clique semantics."""
     from solana_etl_pipeline_spark.llm.similarity import (
         _as_double,
         lsh_bucket_assignments,
@@ -797,72 +688,18 @@ def embedding_near_dup_pairs(
     )
 
     buckets = lsh_bucket_assignments(emb, id_col, vec_col, n_planes, n_bands)
-    # skinny band join: only (id, band_idx, band_val) shuffles — the
-    # 64-double vectors would otherwise ship n_bands copies each; they
-    # re-join below for just the surviving candidate pairs
     # persist: the 32 sign-projections per vector are interpreted
     # higher-order expressions — compute once, not once per join side
     bands_only = _scoped_persist(
         buckets.select(F.col(id_col), "band_idx", "band_val"), eager=True
     )
-    if max_bucket is not None:
-        # same star discipline as minhash_near_dup_pairs: the (few,
-        # ≤ bands·n/max_bucket) oversize buckets broadcast (persisted —
-        # tiny — so the probes share one count shuffle); the band
-        # table is never re-shuffled. ONE left-outer broadcast probe
-        # tags every band row with its bucket's representative (NULL =
-        # bucket within cap), and the persisted tagged table splits
-        # into small/star by filter — one join execution + cache reads
-        # instead of three join executions (anti×2 + star), which is
-        # fixed-stage overhead at fixture scale and one fewer pass at
-        # any scale.
-        oversize = F.broadcast(
-            _scoped_persist(
-                bands_only.groupBy("band_idx", "band_val")
-                .agg(
-                    F.count(F.lit(1)).alias("_bsz"),
-                    F.min(id_col).alias("_rep"),
-                )
-                .filter(F.col("_bsz") > max_bucket)
-                .select("band_idx", "band_val", "_rep")
-            )
-        )
-        flagged = _scoped_persist(
-            bands_only.join(oversize, ["band_idx", "band_val"], "left")
-        )
-        small = flagged.filter(F.col("_rep").isNull()).drop("_rep")
-        star = (
-            flagged.filter(
-                F.col("_rep").isNotNull() & (F.col(id_col) != F.col("_rep"))
-            )
-            .select(
-                F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b")
-            )
-        )
-    else:
-        small = bands_only
-        star = None
-    pair_ids = (
-        small.select(F.col(id_col).alias("id_a"), "band_idx", "band_val")
-        .join(
-            small.select(F.col(id_col).alias("id_b"), "band_idx", "band_val"),
-            ["band_idx", "band_val"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+    pair_ids = _bucket_pairs(
+        bands_only, id_col, ["band_idx", "band_val"], max_bucket
     )
-    if star is not None:
-        pair_ids = pair_ids.unionByName(star)
-    pair_ids = pair_ids.dropDuplicates(["id_a", "id_b"])
     vecs = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    cand = pair_ids.join(
-        vecs.select(F.col(id_col).alias("id_a"), F.col("v").alias("va")), "id_a"
-    ).join(
-        vecs.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb")), "id_b"
-    )
-    cos = pair_cosine(F.col("va"), F.col("vb"))
     return (
-        cand.withColumn("cosine", F.round(cos, 6))
+        _with_ends(pair_ids, vecs, id_col, ["v"])
+        .withColumn("cosine", F.round(pair_cosine(F.col("v_a"), F.col("v_b")), 6))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -876,14 +713,14 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     MAP-ONLY Arrow path (same rationale as :func:`minhash_signatures`):
     per-doc token counting + one vectorized bit-matrix reduction in
-    numpy — no explode, no 64-aggregate shuffle. The token hash is a
-    crc32 pair (high/low 32 bits, distinct salts); signature VALUES
-    therefore differ from the JVM aggregate twin
-    (:func:`simhash_agg`, xxhash64 base) — signatures are internal,
-    and both twins' structural behavior (order-invariance, identical
-    text ⇒ hamming 0, unrelated text ⇒ large hamming) is pinned by
-    tests. Docs with no valid token (null/empty text) get no row, as
-    in the twin's post-explode filter.
+    numpy — no explode, no 64-aggregate shuffle (a JVM form with 64
+    conditional-sum aggregates measured 2.43 against this path's 2.14
+    core-s on ``llm_simhash_near_dup``, sf0.1, 4 cores). The token
+    hash is a crc32 pair (high/low 32 bits, distinct salts);
+    signatures are internal, and their structural behavior
+    (order-invariance, identical text ⇒ hamming 0, unrelated text ⇒
+    large hamming) is pinned by tests. Docs with no valid token
+    (null/empty text) get no row.
     """
     import zlib
     from collections import Counter
@@ -935,40 +772,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).filter(F.col("simhash").isNotNull())
 
 
-def simhash_agg(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Aggregate twin of :func:`simhash` — pure-JVM: xxhash64 per
-    exploded token, 64 conditional-sum aggregates (map-side
-    combinable). Kept as the no-Python-workers fallback and the
-    structural parity reference."""
-    words = df.select(
-        F.col(id_col).alias("_id"),
-        # outer: split() never yields an empty array, and inner explode
-        # would re-evaluate the split inside an inferred size()>0 filter
-        F.explode_outer(tokenize.words(F.col(text_col))).alias("w"),
-    ).filter(
-        # null/empty/whitespace-only text tokenizes to [''] — all such
-        # docs would share one signature and pair with each other.
-        # Drop the degenerate token (isNotNull kept for belt-and-
-        # braces). Filtering the generated column avoids the
-        # InferFiltersFromGenerate split re-inlining.
-        F.col("w").isNotNull() & (F.col("w") != "")
-    ).withColumn("h", F.xxhash64("w"))
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(64)
-    ]
-    agg = words.groupBy("_id").agg(*bit_sums)
-    sig = None
-    for i in range(64):
-        term = F.when(
-            F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-        sig = term if sig is None else sig.bitwiseOR(term)
-    return agg.select(F.col("_id").alias(id_col), sig.alias("simhash"))
-
-
 def simhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -980,16 +783,14 @@ def simhash_candidate_pairs(
     16-bit pieces (pigeonhole: hamming ≤ 3 ⇒ some band equal), join on
     equal bands, verify with bit_count(xor).
 
-    ``max_bucket`` bounds the bucket self-join's quadratic worst case
-    exactly like :func:`minhash_near_dup_pairs`: band buckets larger
-    than the cap emit star edges around the bucket's min id instead
-    of the full clique (mass-duplicated boilerplate shares one
+    ``max_bucket`` stars oversize band buckets around their min id
+    (:func:`_bucket_pairs`): mass-duplicated boilerplate shares one
     signature, so every member still verifies against the
-    representative at hamming 0 and connected-components dedup
-    resolves the same survivors). ``None`` keeps exact clique
-    semantics."""
-    # persist: the 64-way conditional-sum aggregate feeds both sides of
-    # the band self-join below
+    representative at hamming 0. ``None`` keeps exact clique
+    semantics. The signature rides the band rows to both pair ends,
+    so the verify joins nothing back."""
+    # persist: the Arrow signature pass feeds both sides of the band
+    # self-join below
     sigs = _scoped_persist(simhash(df, id_col, text_col), eager=True)
     banded = sigs.select(
         id_col,
@@ -1003,73 +804,14 @@ def simhash_candidate_pairs(
             )
         ).alias("band_idx", "band_val"),
     )
-    if max_bucket is not None:
-        # size every band bucket in one map-side-combined aggregate —
-        # hot buckets collapse per partition here, unlike in the
-        # self-join they would feed — and BROADCAST only the oversize
-        # ones (≤ bands·n/max_bucket by counting) with their min-id
-        # representative (struct carries the rep's signature for the
-        # star edges' verify); the banded table is never re-shuffled,
-        # the tiny aggregate is persisted so its broadcast build runs
-        # the count shuffle once, and ONE left-outer probe tags every
-        # band row (NULL _rep = within cap) — the persisted tagged
-        # table splits into small/star by filter, one join execution
-        # instead of three
-        oversize = F.broadcast(
-            _scoped_persist(
-                banded.groupBy("band_idx", "band_val")
-                .agg(
-                    F.count(F.lit(1)).alias("_bsz"),
-                    F.min(F.struct(id_col, "simhash")).alias("_rep"),
-                )
-                .filter(F.col("_bsz") > max_bucket)
-                .select("band_idx", "band_val", "_rep")
-            )
-        )
-        flagged = _scoped_persist(
-            banded.join(oversize, ["band_idx", "band_val"], "left")
-        )
-        small = flagged.filter(F.col("_rep").isNull()).drop("_rep")
-        star = (
-            flagged.filter(
-                F.col("_rep").isNotNull()
-                & (F.col(id_col) != F.col(f"_rep.{id_col}"))
-            )
-            .select(
-                F.col(f"_rep.{id_col}").alias("id_a"),
-                F.col("_rep.simhash").alias("sim_a"),
-                F.col(id_col).alias("id_b"),
-                F.col("simhash").alias("sim_b"),
-            )
-        )
-    else:
-        small = banded
-        star = None
-
-    left = small.select(
-        F.col(id_col).alias("id_a"),
-        F.col("simhash").alias("sim_a"),
-        "band_idx",
-        "band_val",
+    pairs = _bucket_pairs(
+        banded, id_col, ["band_idx", "band_val"], max_bucket,
+        carry=("simhash",),
     )
-    right = small.select(
-        F.col(id_col).alias("id_b"),
-        F.col("simhash").alias("sim_b"),
-        "band_idx",
-        "band_val",
-    )
-    pairs = (
-        left.join(right, ["band_idx", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "sim_a", "id_b", "sim_b")
-    )
-    if star is not None:
-        pairs = pairs.unionByName(star)
     return (
-        pairs.dropDuplicates(["id_a", "id_b"])
-        .withColumn(
+        pairs.withColumn(
             "hamming",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))),
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")

@@ -37,11 +37,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.llm.dedup import (
-    band_rows as _band_rows,
+    _est_jaccard,
+    band_rows,
     minhash_signatures,
 )
 
@@ -52,26 +53,6 @@ from solana_etl_pipeline_spark.llm.dedup import (
 #: silently degrades to noise. Bump when the representation changes.
 #: 1 = xxhash64 base (agg twin, pre-r5); 2 = crc32 base, map-only.
 _SIG_IMPL = 2
-
-
-def band_entries(
-    sigs: DataFrame, id_col: str, bands: int, rows_per_band: int
-) -> DataFrame:
-    """(id, band_idx, band_hash): skinny LSH bucket rows from full
-    signatures. Thin alias of :func:`...llm.dedup.band_rows` — the
-    ONE band-hash scheme: these hashes are persisted in the store's
-    ``bands/`` table, so batch and incremental mode must hash
-    identically (review r15)."""
-    return _band_rows(sigs, id_col, bands, rows_per_band)
-
-
-def _est_jaccard(a: str, b: str) -> Column:
-    """Fraction of equal signature entries (MinHash Jaccard estimate)."""
-    return (
-        F.size(F.filter(F.zip_with(F.col(a), F.col(b), lambda x, y: x == y),
-                        lambda eq: eq))
-        / F.size(F.col(a))
-    )
 
 
 def _path_exists(spark, path: str) -> bool:
@@ -183,7 +164,7 @@ def incremental_near_dup_batch(
     new_sigs = minhash_signatures(
         batch, id_col, text_col, num_hashes
     ).persist()
-    new_bands = band_entries(new_sigs, id_col, bands, rows_per_band)
+    new_bands = band_rows(new_sigs, id_col, bands, rows_per_band)
 
     sig_path = os.path.join(store_dir, "sigs")
     band_path = os.path.join(store_dir, "bands")

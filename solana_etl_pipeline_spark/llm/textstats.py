@@ -1,9 +1,10 @@
 """Text analysis operators: stats, token counts, language ID, quality
 scoring, document fingerprints.
 
-Everything is built-in string/array/higher-order expressions —
-single-pass, no shuffle, no Python — so the per-document cost is pure
-codegen'd CPU and the operators compose with any downstream groupBy.
+Everything but :func:`repetition_report`'s Arrow counting is built-in
+string/array/higher-order expressions — single-pass, no shuffle, no
+Python — so the per-document cost is pure codegen'd CPU and the
+operators compose with any downstream groupBy.
 """
 
 from __future__ import annotations
@@ -42,46 +43,11 @@ def _words(text: Column) -> Column:
     return tokenize.words(text)
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """Ordered word n-grams (with duplicates): the building block for
-    decontamination and repetition scoring.
-
-    Tokenization matches :func:`_words` (the ``llm.tokenize``
-    convention). Documents shorter than ``n`` words yield one
-    whole-text gram (``slice`` truncates past the end) — the same
-    short-doc convention as ``llm.dedup.shingle_sets``.
-    """
-    words = _words(text)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, n)))
-
-
-def _max_run_of_sorted(arr: Column) -> Column:
-    """Highest multiplicity of any element: sort, then one aggregate
-    pass tracking the longest run of equal neighbors — O(n log n) per
-    document, robust for arbitrarily long documents (a
-    count-via-nested-``filter`` formulation is O(n²))."""
-    init = F.struct(
-        F.lit("").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("best"),
-    )
-
-    def step(a: Column, x: Column) -> Column:
-        run = F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.greatest(a["best"], run).alias("best"),
-        )
-
-    return F.aggregate(F.array_sort(arr), init, step, lambda a: a["best"])
-
-
 def _py_word_ngrams(t: "str | None", n: int) -> list[str]:
-    """Plain-Python twin of :func:`word_ngrams` (ordered, with
-    duplicates; whole-text gram for short/None docs — the
-    ``_shingle_list`` conventions minus the distinct). Tokenization is
+    """Ordered word n-grams with duplicates, the building block of
+    :func:`repetition_report`; a document of at most ``n`` words
+    (null text included) is one whole-text gram — the
+    ``_shingle_list`` conventions minus the distinct. Tokenization is
     SHARED with every Python text path (``llm.tokenize.py_words``) so a
     convention fix lands in all of them at once."""
     words = tokenize.py_words(t)
@@ -103,13 +69,15 @@ def repetition_report(
     on both; curation pipelines drop or down-weight it.
 
     Arrow-batched ``pandas_udf`` for the counting (Counter/set over a
-    token list), mirroring the MinHash shingle pass: per-position
-    gram construction is where built-in expressions genuinely lose —
-    the expression twin (:func:`repetition_report_expr`) measures
-    ~6× slower at sf0.1 and the gap grows with document length.
-    Map-side only either way: no explode, no shuffle, embarrassingly
-    parallel at any corpus size. Parity between the twins is pinned
-    by ``tests/test_hygiene.py``.
+    token list): per-position gram construction is where built-in
+    expressions genuinely lose. A pure-expression form (``transform``
+    over ``slice`` for the grams, sort plus a longest-run
+    ``aggregate`` for the top count) measured 8.28 core-s against this
+    path's 0.68 on 5,000 documents (sf0.1, 4 cores), and 502 against
+    4.2 at 10× longer documents. Map-side only: no explode, no
+    shuffle, embarrassingly parallel at any corpus size. Pinned to the
+    ``llm_repetition_rules`` DuckDB oracle by ``tests/test_hygiene.py``
+    and ``tests/test_properties.py``.
     """
     from collections import Counter
 
@@ -152,41 +120,6 @@ def repetition_report(
         m["top_bi"].alias("top_bigram_count"),
         F.round(m["top_bi"] / m["n_bi"], 6).alias("top_bigram_frac"),
         F.round(m["dup_tri"] / m["n_tri"], 6).alias("dup_trigram_frac"),
-    )
-
-
-def repetition_report_expr(
-    df, id_col: str = "doc_id", text_col: str = "text"
-):
-    """Pure-expression twin of :func:`repetition_report` (JVM-side,
-    no Python workers) — the parity reference, and the pick where
-    Python worker startup outweighs the interpreted-closure cost.
-
-    The gram arrays are MATERIALIZED in their own projection and the
-    metrics reference that column: inlining ``word_ngrams(text, n)``
-    into a nested lambda (or next to a generator) makes Spark
-    re-derive the whole split→slice→concat tree per inner element /
-    per generator output row — measured 35× slower at sf0.01. The
-    top-count is a sort + longest-equal-run aggregate
-    (O(n log n)/doc; a count-via-nested-``filter`` formulation is
-    O(n²)).
-    """
-    text = F.col(text_col)
-    base = df.select(
-        F.col(id_col),
-        word_ngrams(text, 2).alias("_bi"),
-        word_ngrams(text, 3).alias("_tri"),
-    )
-    n_bi = F.size(F.col("_bi"))
-    top_bi = _max_run_of_sorted(F.col("_bi"))
-    n_tri = F.size(F.col("_tri"))
-    dup_tri = n_tri - F.size(F.array_distinct(F.col("_tri")))
-    return base.select(
-        F.col(id_col),
-        n_bi.cast("bigint").alias("n_bigrams"),
-        top_bi.cast("bigint").alias("top_bigram_count"),
-        F.round(top_bi / n_bi, 6).alias("top_bigram_frac"),
-        F.round(dup_tri / n_tri, 6).alias("dup_trigram_frac"),
     )
 
 

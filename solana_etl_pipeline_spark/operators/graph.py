@@ -102,7 +102,9 @@ def pagerank(
     # r16 broadcast min 2.06 / med 2.65, this form min 2.07 / med 2.52
     # — locally equal to r16's, and at 100 TB it removes a full second
     # scan+distinct of the edge table (the duplicate subtree grows with
-    # data; the extra checkpoint barrier does not).
+    # data; the extra checkpoint barrier does not). Once ``edged`` is
+    # checkpointed nothing reads ``und`` again, so its blocks are
+    # released there: one copy of the edge set stays pinned, not two.
     if broadcast_ranks:
         record_pre_checkpoint("pagerank:und", und)
         und = und.localCheckpoint(eager=True)
@@ -110,6 +112,9 @@ def pagerank(
     edged = und.join(F.broadcast(deg) if broadcast_ranks else deg, "src")
     record_pre_checkpoint("pagerank:edged", edged)
     edged = edged.localCheckpoint(eager=True)
+    if broadcast_ranks:
+        # a checkpointed frame's plan is the LogicalRDD over its blocks
+        und._jdf.queryExecution().logical().rdd().unpersist(False)
 
     nodes = edged.select(F.col("src").alias("node")).distinct()
     n_nodes = nodes.count()  # scalar probe: |V|, driver-trivial

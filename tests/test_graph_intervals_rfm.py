@@ -106,6 +106,36 @@ def test_pagerank_dedups_parallel_edges(spark):
     assert r1 == r2
 
 
+def test_pagerank_broadcast_ranks_pins_one_edge_copy(spark):
+    # broadcast_ranks=True materializes the symmetrized edge set once
+    # before the degree join; once the degree-carrying copy is
+    # checkpointed, that first copy must be released, so the run keeps
+    # the same persisted RDDs as broadcast_ranks=False. Counted right
+    # after pagerank returns: the result still reaches every RDD it
+    # needs, so only an unreleased copy can differ.
+    edges = spark.createDataFrame(
+        [("h", "a"), ("h", "b"), ("h", "c"), ("a", "b"), ("c", "d")],
+        ["src", "dst"],
+    )
+    jsc = spark.sparkContext._jsc
+
+    def run(broadcast_ranks):
+        before = set(jsc.getPersistentRDDs().keySet())
+        ranks = pagerank(edges, n_iter=2, broadcast_ranks=broadcast_ranks)
+        new = set(jsc.getPersistentRDDs().keySet()) - before
+        rows = {r.node: r.rank for r in ranks.collect()}
+        for rdd_id in new:
+            rdd = jsc.getPersistentRDDs().get(rdd_id)
+            if rdd is not None:
+                rdd.unpersist(True)
+        return len(new), rows
+
+    shuffled, ranks_shuffled = run(False)
+    broadcast, ranks_broadcast = run(True)
+    assert ranks_broadcast == ranks_shuffled
+    assert broadcast == shuffled
+
+
 # ------------------------------------------------------------------ basket
 
 

@@ -183,9 +183,6 @@ _CALLER_ALLOWLIST = {
     "capture_pre_checkpoint_plans": "reads the operators' "
                                     "record_pre_checkpoint feed for "
                                     "test_no_cartesian_products_anywhere",
-    "minhash_signatures_agg": "ROADMAP item 3 pair",
-    "simhash_agg": "ROADMAP item 3 pair",
-    "repetition_report_expr": "ROADMAP item 3 pair",
 }
 
 
@@ -450,17 +447,15 @@ def test_shingle_sets_matches_python_reference(spark):
         assert got == want, f"shingle_len={n}: {got} != {want}"
 
 
-# ------------------------------------- minhash twin + sig_impl pin
+# ------------------------------------- minhash contract + sig_impl pin
 
 
 def test_minhash_arrow_and_agg_twins_structural_parity(spark):
-    """The map-only Arrow path and the JVM aggregate twin use different
-    base hashes, so minima differ by design — but doc coverage,
-    identical-text determinism, and near-dup estimates must agree."""
-    from solana_etl_pipeline_spark.llm.dedup import (
-        minhash_signatures,
-        minhash_signatures_agg,
-    )
+    """The structural contract of minhash_signatures, which every
+    MinHash caller relies on: doc coverage (no row for null/empty
+    text), identical-text determinism, and near-dup estimates on the
+    right side of the threshold."""
+    from solana_etl_pipeline_spark.llm.dedup import minhash_signatures
 
     texts = [
         "the quick brown fox jumps over the lazy dog near the old wall",
@@ -473,15 +468,16 @@ def test_minhash_arrow_and_agg_twins_structural_parity(spark):
     df = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
     )
-    for fn in (minhash_signatures, minhash_signatures_agg):
-        sigs = {r.doc_id: list(r.sig) for r in fn(df, "doc_id", "text").collect()}
-        # null/empty text docs carry no signature in either impl
-        assert set(sigs) == {0, 1, 2, 3}
-        assert sigs[0] == sigs[2]  # identical text -> identical sig
-        est_near = sum(a == b for a, b in zip(sigs[0], sigs[1])) / 64
-        est_far = sum(a == b for a, b in zip(sigs[0], sigs[3])) / 64
-        assert est_near >= 0.5, f"{fn.__name__}: near-dup est {est_near}"
-        assert est_far < 0.3, f"{fn.__name__}: unrelated est {est_far}"
+    sigs = {
+        r.doc_id: list(r.sig)
+        for r in minhash_signatures(df, "doc_id", "text").collect()
+    }
+    assert set(sigs) == {0, 1, 2, 3}  # null/empty text: no signature
+    assert sigs[0] == sigs[2]  # identical text -> identical sig
+    est_near = sum(a == b for a, b in zip(sigs[0], sigs[1])) / 64
+    est_far = sum(a == b for a, b in zip(sigs[0], sigs[3])) / 64
+    assert est_near >= 0.5, f"near-dup est {est_near}"
+    assert est_far < 0.3, f"unrelated est {est_far}"
 
 
 def test_incremental_store_refuses_foreign_sig_impl(spark, tmp_path):
@@ -507,10 +503,10 @@ def test_incremental_store_refuses_foreign_sig_impl(spark, tmp_path):
 
 
 def test_simhash_arrow_and_agg_twins_structural_parity(spark):
-    """Map-only simhash vs the JVM aggregate twin: values differ by
-    design (different token hash), but both must be order-invariant,
-    deterministic on identical text, and far apart on unrelated text."""
-    from solana_etl_pipeline_spark.llm.dedup import simhash, simhash_agg
+    """The structural contract of simhash: order-invariant,
+    deterministic on identical text, far apart on unrelated text, and
+    no row for null/empty text."""
+    from solana_etl_pipeline_spark.llm.dedup import simhash
 
     texts = [
         "the quick brown fox jumps over the lazy dog near the wall",
@@ -522,12 +518,13 @@ def test_simhash_arrow_and_agg_twins_structural_parity(spark):
     df = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
     )
-    for fn in (simhash, simhash_agg):
-        sigs = {r.doc_id: r.simhash for r in fn(df, "doc_id", "text").collect()}
-        assert set(sigs) == {0, 1, 2}  # null/empty text: no row
-        assert sigs[0] == sigs[1], f"{fn.__name__} not order-invariant"
-        ham = bin(sigs[0] ^ sigs[2]).count("1")
-        assert ham > 10, f"{fn.__name__}: unrelated docs hamming {ham}"
+    sigs = {
+        r.doc_id: r.simhash for r in simhash(df, "doc_id", "text").collect()
+    }
+    assert set(sigs) == {0, 1, 2}  # null/empty text: no row
+    assert sigs[0] == sigs[1], "not order-invariant"
+    ham = bin(sigs[0] ^ sigs[2]).count("1")
+    assert ham > 10, f"unrelated docs hamming {ham}"
 
 
 # ------------------- near-dup oracles on a crafted adversarial corpus

@@ -14,25 +14,23 @@ from solana_etl_pipeline_spark.llm.curate import chunk_documents
 from solana_etl_pipeline_spark.llm.decontaminate import decontaminate
 from solana_etl_pipeline_spark.llm.mixture import mixture_plan, mixture_sample
 from solana_etl_pipeline_spark.llm.textstats import (
+    _py_word_ngrams,
     repetition_report,
-    repetition_report_expr,
-    word_ngrams,
 )
+from solana_etl_pipeline_spark.schemas import FIXTURE_TABLES
+from solana_etl_pipeline_spark.sources import load_table
+from tests.oracle_utils import assert_matches_oracle
 
 
-# --- word_ngrams ---------------------------------------------------------
+# --- word n-grams --------------------------------------------------------
 
 
-def test_word_ngrams_ordered_with_duplicates(spark):
-    df = spark.createDataFrame([Row(text="a b a b")])
-    [row] = df.select(word_ngrams(F.col("text"), 2).alias("g")).collect()
-    assert row.g == ["a b", "b a", "a b"]
+def test_word_ngrams_ordered_with_duplicates():
+    assert _py_word_ngrams("a b a b", 2) == ["a b", "b a", "a b"]
 
 
-def test_word_ngrams_short_doc_yields_whole_text(spark):
-    df = spark.createDataFrame([Row(text="only two")])
-    [row] = df.select(word_ngrams(F.col("text"), 5).alias("g")).collect()
-    assert row.g == ["only two"]
+def test_word_ngrams_short_doc_yields_whole_text():
+    assert _py_word_ngrams("only two", 5) == ["only two"]
 
 
 # --- decontamination -----------------------------------------------------
@@ -100,25 +98,46 @@ def test_repetition_report_hand_computed(spark):
     assert row.dup_trigram_frac == 0.5
 
 
-def test_repetition_twins_agree_on_fixture_and_edges(spark, sf_dir):
-    """Arrow default ≡ expression twin: fixture corpus plus crafted
-    edge docs (short, single-word, repeated, empty-ish)."""
+def test_repetition_twins_agree_on_fixture_and_edges(spark, sf_dir, tmp_path):
+    """repetition_report ≡ the ``llm_repetition_rules`` DuckDB oracle
+    on the fixture corpus plus crafted edge docs (short, single-word,
+    repeated, empty-ish, null), through the same QuerySpec the driver
+    runs."""
+    import duckdb
+
+    from solana_etl_pipeline_spark.queries import QUERIES
+
     crafted = spark.createDataFrame(
         [
-            Row(doc_id=9001, text="solo"),
-            Row(doc_id=9002, text="two words"),
-            Row(doc_id=9003, text="spam spam spam spam"),
-            Row(doc_id=9004, text=" leading and trailing "),
-        ]
+            (doc_id, text, "en", "crafted", len(text or ""))
+            for doc_id, text in [
+                (9001, "solo"),
+                (9002, "two words"),
+                (9003, "spam spam spam spam"),
+                (9004, " leading and trailing "),
+                (9005, ""),
+                (9006, None),
+            ]
+        ],
+        FIXTURE_TABLES["documents"],
     )
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .unionByName(crafted)
+    docs_dir = str(tmp_path)
+    load_table(spark, sf_dir, "documents").unionByName(crafted).write.parquet(
+        f"{docs_dir}/documents.parquet"
     )
-    a = sorted(map(tuple, repetition_report(docs).collect()))
-    b = sorted(map(tuple, repetition_report_expr(docs).collect()))
-    assert a == b
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{docs_dir}/documents.parquet/*.parquet')"
+        )
+        spec = QUERIES["llm_repetition_rules"]
+        assert_matches_oracle(
+            spec.spark(spark, docs_dir), con, spec.oracle,
+            name="llm_repetition_rules",
+        )
+    finally:
+        con.close()
 
 
 def test_repetition_report_unique_text_scores_zero_dup(spark):

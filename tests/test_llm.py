@@ -352,6 +352,49 @@ def test_embedding_near_dup_bucket_cap(spark):
     assert surv_star == surv_base
 
 
+def _cap_pairs(spark, generator, n, cap):
+    """(id_a, id_b) pairs of ``generator`` over ``n`` identical
+    documents (or vectors), which share every band bucket."""
+    from solana_etl_pipeline_spark.llm.dedup import (
+        embedding_near_dup_pairs,
+        minhash_verified_pairs,
+    )
+
+    if generator == "embedding":
+        emb = spark.createDataFrame(
+            [Row(vec_id=i, embedding=[1.0, 0.5, -0.25, 0.125] * 4)
+             for i in range(n)],
+            "vec_id long, embedding array<double>",
+        )
+        out = embedding_near_dup_pairs(emb, threshold=0.99, max_bucket=cap)
+    else:
+        docs = spark.createDataFrame(
+            [Row(doc_id=i, text=BASE) for i in range(n)],
+            "doc_id long, text string",
+        )
+        fn = {
+            "minhash": minhash_near_dup_pairs,
+            "minhash_verified": minhash_verified_pairs,
+            "simhash": simhash_candidate_pairs,
+        }[generator]
+        out = fn(docs, "doc_id", "text", max_bucket=cap)
+    return sorted((r.id_a, r.id_b) for r in out.collect())
+
+
+@pytest.mark.parametrize(
+    "generator", ["minhash", "minhash_verified", "simhash", "embedding"]
+)
+def test_bucket_cap_boundary(spark, generator):
+    """The star cap is strict: a bucket of exactly ``max_bucket``
+    members keeps its clique, one member more turns it into the star
+    around the minimum id (s-1 pairs)."""
+    cap = 4
+    clique = [(a, b) for a in range(cap) for b in range(a + 1, cap)]
+    assert _cap_pairs(spark, generator, cap, cap) == clique
+    star = [(0, b) for b in range(1, cap + 1)]
+    assert _cap_pairs(spark, generator, cap + 1, cap) == star
+
+
 def test_lsh_finds_planted_high_sim_neighbors(spark, sf_dir):
     """SRP-LSH's actual guarantee: high-cosine pairs collide with high
     probability. Plant an exact-duplicate neighbor (cosine 1.0, id+1000)

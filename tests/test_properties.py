@@ -227,32 +227,6 @@ def test_shingle_sets_match_python_reference_on_arbitrary_text(spark, texts):
     assert got == want
 
 
-@_SETTINGS
-@given(texts=_texts)
-def test_word_ngram_twins_agree_on_any_text(spark, texts):
-    """The Python n-gram builder behind the Arrow repetition path is
-    pinned to the expression twin for ANY text (nulls, tabs, unicode
-    whitespace-adjacent junk) — the same twin-fuzz discipline that
-    caught the shingle trim bug (llm/dedup.py docstring)."""
-    from solana_etl_pipeline_spark.llm.textstats import (
-        _py_word_ngrams,
-        word_ngrams,
-    )
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "i long, t string"
-    )
-    for n in (2, 3):
-        got = {
-            r.i: r.g
-            for r in df.select(
-                "i", word_ngrams(F.col("t"), n).alias("g")
-            ).collect()
-        }
-        for i, t in enumerate(texts):
-            assert got[i] == _py_word_ngrams(t, n), (n, repr(t))
-
-
 # Whitespace zoo for the three-engine tokenizer fuzz: every ASCII
 # separator in the convention, the ASCII controls adjacent to it, and
 # the Unicode whitespace/invisible family (NBSP, ogham, en/em spaces,
@@ -325,6 +299,42 @@ def test_tokenizer_three_engines_agree_on_any_text(spark, texts):
         expect = py_words(t)
         assert got_spark[i] == expect, (repr(t), got_spark[i], expect)
         assert got_duck[i] == expect, (repr(t), got_duck[i], expect)
+
+
+@_SETTINGS
+@given(texts=_ws_hostile_texts)
+def test_word_ngram_twins_agree_on_any_text(spark, texts):
+    """repetition_report, whose n-grams come from the Python builder
+    ``_py_word_ngrams``, matches the ``llm_repetition_rules`` DuckDB
+    oracle for ANY text the tokenizer fuzz can draw (nulls, tabs,
+    unicode whitespace-adjacent junk; İ and Σ excluded, see
+    ``_tok_alphabet``)."""
+    import duckdb
+    import pandas as pd
+
+    from solana_etl_pipeline_spark.llm.textstats import repetition_report
+    from solana_etl_pipeline_spark.queries import QUERIES
+    from tests.oracle_utils import assert_matches_oracle
+
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    con = duckdb.connect()
+    try:
+        con.register(
+            "documents",
+            pd.DataFrame(
+                {"doc_id": range(len(texts)), "source": "fuzz", "text": texts}
+            ),
+        )
+        oracle = QUERIES["llm_repetition_rules"].oracle
+        assert_matches_oracle(
+            repetition_report(df), con,
+            f"SELECT * EXCLUDE (repetitive) FROM ({oracle})",
+            name=repr(texts),
+        )
+    finally:
+        con.close()
 
 
 # ---------------------------------------------- interval merge (r7)
