@@ -130,12 +130,9 @@ def nb_score(
     label_stats: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    include_raw: bool = False,
     tokens: DataFrame | None = None,
 ) -> DataFrame:
     """Classify every target document: ``(id, predicted, nb_score)``.
-    ``include_raw`` appends the winner's UNROUNDED score as ``_raw``
-    (rounding-boundary canary only — changes the schema).
 
     ``model`` is :func:`nb_fit` output; ``label_stats`` is
     :func:`nb_label_stats` over the SAME training frame. The returned
@@ -198,10 +195,7 @@ def nb_score(
         + F.coalesce("s", F.lit(0.0))
         - F.col("n") * F.log((F.col("n_l") + F.col("v")).cast("double"))
     )
-    scored = base.select(
-        "doc", "label", F.round(score, 6).alias("_score"),
-        score.alias("_raw_score"),
-    )
+    scored = base.select("doc", "label", F.round(score, 6).alias("_score"))
     # r16: argmax as ONE hash aggregate (map-side partial) instead of a
     # row_number window — the window forces a per-doc sort and cannot
     # partial-aggregate, so every (doc × label) row shuffles; min(
@@ -215,14 +209,10 @@ def nb_score(
             (-F.col("_score")).alias("_neg"),
             F.col("label").alias("predicted"),
             F.col("_score").alias("nb_score"),
-            F.col("_raw_score").alias("_raw"),
         )
     ).alias("_w")
-    cols = [
+    return scored.groupBy("doc").agg(winner).select(
         F.col("doc").alias(id_col),
         F.col("_w.predicted").alias("predicted"),
         F.col("_w.nb_score").alias("nb_score"),
-    ]
-    if include_raw:
-        cols.append(F.col("_w._raw").alias("_raw"))
-    return scored.groupBy("doc").agg(winner).select(*cols)
+    )

@@ -32,7 +32,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Resolve an undirected edge list into components.
 
@@ -67,12 +66,11 @@ def connected_components(
         .select("_e.src", "_e.dst")
         .dropDuplicates(["src", "dst"])
     )
-    if checkpoint:
-        # materialize once: every iteration (and its convergence probe)
-        # re-reads edges — without this, an expensive upstream pair
-        # generator (MinHash-LSH) recomputes per round
-        record_pre_checkpoint("cc:edges", edges)
-        edges = edges.localCheckpoint(eager=True)
+    # materialize once: every iteration (and its convergence probe)
+    # re-reads edges — without this, an expensive upstream pair
+    # generator (MinHash-LSH) recomputes per round
+    record_pre_checkpoint("cc:edges", edges)
+    edges = edges.localCheckpoint(eager=True)
 
     # Round 1 folded into initialization: with identity starting labels
     # the edge⋈label join is a no-op, so the first propagation is just
@@ -85,9 +83,8 @@ def connected_components(
         .groupBy("id")
         .agg(F.min("component").alias("component"))
     )
-    if checkpoint:
-        record_pre_checkpoint("cc:init_labels", labels)
-        labels = labels.localCheckpoint(eager=False)
+    record_pre_checkpoint("cc:init_labels", labels)
+    labels = labels.localCheckpoint(eager=False)
 
     # Convergence probe: per vertex the label is min(self ∪ neighbors),
     # so it only ever DECREASES — the label sum is strictly monotone
@@ -112,11 +109,10 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("component").alias("component"))
         )
-        if checkpoint:
-            # eager=False: the probe below is the materializing action,
-            # so checkpoint + convergence test cost ONE job per round
-            record_pre_checkpoint("cc:iter_labels", new_labels)
-            new_labels = new_labels.localCheckpoint(eager=False)
+        # eager=False: the probe below is the materializing action,
+        # so checkpoint + convergence test cost ONE job per round
+        record_pre_checkpoint("cc:iter_labels", new_labels)
+        new_labels = new_labels.localCheckpoint(eager=False)
         cur_sum = _label_sum(new_labels)
         labels = new_labels
         if cur_sum == prev_sum:

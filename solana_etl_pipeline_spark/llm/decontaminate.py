@@ -17,9 +17,8 @@ Shape at scale:
 - The eval-side n-gram set is built once and is SMALL by nature —
   eval suites are thousands of documents, not billions — so it
   broadcasts and the overlap probe is a broadcast left join: the
-  100 TB training side never shuffles. ``broadcast_eval=False``
-  falls back to a hash-partitioned join keyed on the 8-byte n-gram
-  hash for pathological eval sets.
+  100 TB training side never shuffles. An eval set too large to
+  broadcast is outside this operator's contract.
 - Training-side n-grams are joined by ``xxhash64`` of the gram, not
   the gram string: shuffle/broadcast rows carry 8 bytes instead of
   ~40-char strings (same digest-key convention as exact dedup —
@@ -58,7 +57,6 @@ def decontaminate(
     text_col: str = "text",
     n: int = 5,
     threshold: float = 0.2,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Per-training-document eval overlap: ``(id, n_grams, n_hit,
     contamination, contaminated)``.
@@ -70,13 +68,13 @@ def decontaminate(
     to 1e-6), and ``contaminated`` whether the ratio meets
     ``threshold``. Callers drop or down-weight flagged documents; the
     full audit row is returned so the decision is re-checkable
-    downstream.
+    downstream. The eval side's n-gram hashes are broadcast (see the
+    module docstring), so the training side never shuffles for the
+    probe.
     """
-    evals = eval_ngram_hashes(eval_df, text_col, n).withColumn(
-        "_hit", F.lit(1)
+    evals = F.broadcast(
+        eval_ngram_hashes(eval_df, text_col, n).withColumn("_hit", F.lit(1))
     )
-    if broadcast_eval:
-        evals = F.broadcast(evals)
     # ``_sh`` is materialized by the shingle projection, so the
     # size() sibling of the explode() re-reads an array length per
     # output row instead of re-deriving the gram construction (an

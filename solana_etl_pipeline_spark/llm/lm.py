@@ -69,17 +69,15 @@ def unigram_score(
     vocab: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_vocab: bool = True,
     include_raw: bool = False,
 ) -> DataFrame:
     """Per-document cross-entropy under the fitted model:
     ``(id, n_tokens, avg_neg_logprob)`` — nats/token, add-one
     smoothed, rounded to 1e-6.
 
-    ``broadcast_vocab`` fits word-level vocabs (even web-scale
-    corpora rarely exceed tens of millions of distinct words after
-    lowercasing); pass ``False`` to shuffle-join a pathological
-    vocab on its 8-byte hash.
+    The vocab is broadcast into the probe join: word-level vocabs
+    fit (even web-scale corpora rarely exceed tens of millions of
+    distinct words after lowercasing).
 
     The vocab is persisted for the duration of the job (scoped to an
     enclosing ``dedup_cache_scope`` when one is active — the same
@@ -104,8 +102,6 @@ def unigram_score(
         F.sum("c").cast("bigint").alias("_n"),
         F.count(F.lit(1)).cast("bigint").alias("_v"),
     )
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
     toks = _tokens(target, id_col, text_col)
     neg_logprob = -F.ln(
         (F.coalesce(F.col("c"), F.lit(0)) + F.lit(1))
@@ -121,7 +117,7 @@ def unigram_score(
         # it changes the schema
         aggs.append(F.avg(neg_logprob).alias("_raw"))
     return (
-        toks.join(vocab, "_h", "left")
+        toks.join(F.broadcast(vocab), "_h", "left")
         .join(F.broadcast(totals))  # 1-row scalar combine
         .groupBy(F.col("doc").alias(id_col))
         .agg(*aggs)

@@ -89,41 +89,25 @@ def _pair_cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 def pair_cosine(a: Column, b: Column) -> Column:
     """Arrow-batched cosine between two vector columns — the verify
     kernel every candidate-pair path shares (LSH/IVF bands, semantic
-    in-cluster pairs, embedding near-dup, ADC re-rank, brute force).
+    in-cluster pairs, embedding near-dup, ADC re-rank).
 
-    The expression twin ``_dot(a,b)/(_norm(a)*_norm(b))`` evaluates
-    interpreted higher-order closures per element — ~3·dim closure
-    evaluations per pair — which dominates wide candidate sets (the
-    recall harness measured the LSH n_bands=8 sweep at 105.7 s on
-    100 k vectors, almost all of it the verify). The numpy kernel does
-    one ``einsum`` per Arrow batch. Null-propagation semantics match
-    the JVM twin: either side null, or length-mismatched pairs
-    (zip_with's null padding), yield NULL; zero-norm vectors (incl.
-    empty arrays) also yield NULL on both paths — Spark's Divide
-    returns NULL on a zero divisor, and the kernel mirrors that so
-    degenerate vectors never NaN-rank first in desc top-k (Spark
-    orders NaN above every double). Low-order float bits can differ from the
-    sequential JVM sum (numpy uses pairwise summation); every caller
-    rounds to 1e-6 before comparing or ranking, the same tolerance
-    already relied on for the JVM-vs-DuckDB engine difference.
-
-    Crossover (r10 interleaved A/B at sf0.1, local[32]): at ~10 k
-    pairs the kernels tie on min wall (0.59 s Arrow vs 0.62 s expr)
-    but the Arrow path has a noisier tail from Python-worker startup;
-    at 100 k-vector candidate sets Arrow wins ~3× (36.8 s vs 105.7 s
-    harness sweep). Callers with a tiny, statically-known pair volume
-    can pass the expr twin via ``pair_cosine_expr`` instead."""
+    The expression form ``_dot(a,b)/(_norm(a)*_norm(b))`` that
+    :func:`cosine_topk` uses evaluates interpreted higher-order
+    closures per element — ~3·dim closure evaluations per pair — which
+    dominates wide candidate sets (the recall harness measured the LSH
+    n_bands=8 sweep at 105.7 s on 100 k vectors, almost all of it the
+    verify). The numpy kernel does one ``einsum`` per Arrow batch.
+    Null-propagation semantics match the expression form: either side
+    null, or length-mismatched pairs (zip_with's null padding), yield
+    NULL; zero-norm vectors (incl. empty arrays) also yield NULL —
+    Spark's Divide returns NULL on a zero divisor, and the kernel
+    mirrors that so degenerate vectors never NaN-rank first in desc
+    top-k (Spark orders NaN above every double). Low-order float bits
+    can differ from the sequential JVM sum (numpy uses pairwise
+    summation); every caller rounds to 1e-6 before comparing or
+    ranking, the same tolerance already relied on for the
+    JVM-vs-DuckDB engine difference."""
     return _pair_cosine_udf(a, b)
-
-
-def pair_cosine_expr(a: Column, b: Column) -> Column:
-    """JVM expression twin of :func:`pair_cosine` — interpreted
-    higher-order closures, no Python worker. Preferable only for tiny
-    pair volumes (≲ tens of thousands) where Arrow transit + worker
-    startup dominates; identical null/zero-norm semantics (Divide
-    yields NULL on a zero divisor) pinned by
-    tests/test_llm.py::test_pair_cosine_zero_norm_parity_with_jvm_twin."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def cosine_topk(
@@ -133,7 +117,6 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_queries: int | None = 10_000,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Exact cosine top-k: for each query vector, the k nearest corpus
     vectors (self-matches excluded). Output: (query_id, neighbor_id,
@@ -149,14 +132,12 @@ def cosine_topk(
     — never a full count of an unexpectedly huge side); pass ``None``
     to opt out when the caller has already sized the query side.
 
-    ``kernel`` picks the cosine implementation: ``"arrow"`` (default)
-    is the batched numpy kernel — right whenever |q|·|corpus| is
-    large; ``"expr"`` is the JVM expression twin — steadier for tiny
-    statically-known pair volumes (see :func:`pair_cosine` crossover
-    note). Outputs are identical after the 1e-6 round (A/B-asserted).
+    The cosine is the JVM expression ``_dot(q,c)/(_norm(q)·_norm(c))``:
+    no Python worker, and a zero-norm side divides to NULL, which sorts
+    last. Its one registry caller (``llm_cosine_topk``, 5 queries) ran
+    it at 0.43 core-s against 0.53 for the Arrow :func:`pair_cosine`;
+    the candidate-pair paths keep the Arrow kernel.
     """
-    if kernel not in ("arrow", "expr"):  # pragma: no cover - guard
-        raise ValueError(f"kernel must be 'arrow' or 'expr': {kernel!r}")
     if max_queries is not None:
         probe = queries.limit(max_queries + 1).count()
         if probe > max_queries:
@@ -178,8 +159,8 @@ def cosine_topk(
         _as_double(F.col(vec_col)).alias("cvec"),
     )
     pairs = q.crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id"))
-    cos_fn = pair_cosine if kernel == "arrow" else pair_cosine_expr
-    cos = cos_fn(F.col("qvec"), F.col("cvec"))
+    qv, cv = F.col("qvec"), F.col("cvec")
+    cos = _dot(qv, cv) / (_norm(qv) * _norm(cv))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
     )

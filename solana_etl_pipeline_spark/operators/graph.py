@@ -10,9 +10,9 @@ Scale posture: each iteration is ONE equi-join (edges ⋈ ranks on the
 source key) plus ONE hash aggregate on the destination key — the
 textbook distributed PageRank shape. Degrees are computed once up
 front and ride the edge rows, so no per-iteration degree join. The
-rank frame stays (node, rank) — O(|V|) — and the loop is a fixed,
-small iteration count (dashboard-grade convergence), so lineage stays
-bounded without checkpointing. Ranks are ROUNDED to 1e-9 after every
+rank frame stays (node, rank) — O(|V|), broadcast into the join —
+and each iteration's ranks are local-checkpointed, so lineage stays
+one iteration deep. Ranks are ROUNDED to 1e-9 after every
 iteration: both engines then feed bit-identical inputs into the next
 round, which keeps the cross-engine float drift below the final 1e-6
 reporting grain no matter how many iterations run.
@@ -40,7 +40,6 @@ def pagerank(
     damping: float = 0.85,
     n_iter: int = 3,
     dedup_edges: bool = True,
-    broadcast_ranks: bool = False,
 ) -> DataFrame:
     """(src, dst) undirected edges -> (node, rank).
 
@@ -52,12 +51,12 @@ def pagerank(
     namespaces) — it skips a full shuffle of the edge set, which on
     string node ids is the single most expensive stage.
 
-    ``broadcast_ranks=True`` hash-broadcasts the (node, rank) frame
-    into each iteration's join, so the edge set never shuffles inside
-    the loop (only the map-side-combined contribution agg does). Valid
-    whenever |V| is dimension-bounded (e.g. bipartite over two
-    dimension tables); leave False for graphs whose node set scales
-    with the fact data.
+    The degree table and the (node, rank) frame are hash-broadcast
+    into their joins, so the edge set never shuffles, neither to pick
+    up degrees nor inside the loop (only the map-side-combined
+    contribution agg does). CONTRACT: |V| is dimension-bounded (e.g.
+    bipartite over two dimension tables), so an O(|V|) frame fits in
+    every executor.
     """
     # Both directions from ONE pass over ``edges`` (explode of a
     # 2-element array) — a union of two selects executes the upstream
@@ -84,37 +83,28 @@ def pagerank(
     # iteration's plan re-runs the distinct and the degree join from
     # the raw input, turning 3 iterations into ~3× redundant work and
     # an ever-deeper lineage (same discipline as llm/cluster.py:52).
-    # r16 (guide §3.1): when the caller asserts |V| is
-    # dimension-bounded (broadcast_ranks=True), the |V|-sized degree
-    # table broadcasts into this join too — the edge set then never
-    # shuffles even once to pick up degrees (previously this join
-    # hash-shuffled the full symmetrized edge set on src).
-    # r17: the broadcast degree build is its OWN plan subtree, so the
-    # r16 form executed the symmetrized(+distinct) edge plan TWICE —
-    # once for the degree aggregate's broadcast build, once for the
-    # probe side (the r15 shuffle join paid neither: Catalyst reused
-    # the probe side's src-exchange for the aggregate). Checkpointing
-    # ``und`` first restores single execution AND keeps the edge set
-    # unshuffled: degree aggregates over the materialized partitions
-    # and broadcast-joins back map-side. Interleaved 5-rep A/B at
-    # cpus=32 (``git show 232a0f9:tools/pagerank_ab.py``,
-    # tools/logs/r17_pagerank_ab.out): r15 shuffle min 2.64 / med 3.00,
-    # r16 broadcast min 2.06 / med 2.65, this form min 2.07 / med 2.52
-    # — locally equal to r16's, and at 100 TB it removes a full second
-    # scan+distinct of the edge table (the duplicate subtree grows with
-    # data; the extra checkpoint barrier does not). Once ``edged`` is
-    # checkpointed nothing reads ``und`` again, so its blocks are
-    # released there: one copy of the edge set stays pinned, not two.
-    if broadcast_ranks:
-        record_pre_checkpoint("pagerank:und", und)
-        und = und.localCheckpoint(eager=True)
+    # The broadcast degree build is its OWN plan subtree, so without
+    # the ``und`` checkpoint the symmetrized(+distinct) edge plan would
+    # execute TWICE — once for the degree aggregate's broadcast build,
+    # once for the probe side. Checkpointing ``und`` first keeps one
+    # execution AND keeps the edge set unshuffled: degree aggregates
+    # over the materialized partitions and broadcast-joins back
+    # map-side. Interleaved 5-rep A/B at cpus=32
+    # (``git show 232a0f9:tools/pagerank_ab.py``,
+    # tools/logs/r17_pagerank_ab.out): shuffle join min 2.64 / med 3.00,
+    # broadcast without the ``und`` checkpoint min 2.06 / med 2.65, this
+    # form min 2.07 / med 2.52 — and at 100 TB it removes a full second
+    # scan+distinct of the edge table. Once ``edged`` is checkpointed
+    # nothing reads ``und`` again, so its blocks are released there:
+    # one copy of the edge set stays pinned, not two.
+    record_pre_checkpoint("pagerank:und", und)
+    und = und.localCheckpoint(eager=True)
     deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edged = und.join(F.broadcast(deg) if broadcast_ranks else deg, "src")
+    edged = und.join(F.broadcast(deg), "src")
     record_pre_checkpoint("pagerank:edged", edged)
     edged = edged.localCheckpoint(eager=True)
-    if broadcast_ranks:
-        # a checkpointed frame's plan is the LogicalRDD over its blocks
-        und._jdf.queryExecution().logical().rdd().unpersist(False)
+    # a checkpointed frame's plan is the LogicalRDD over its blocks
+    und._jdf.queryExecution().logical().rdd().unpersist(False)
 
     nodes = edged.select(F.col("src").alias("node")).distinct()
     n_nodes = nodes.count()  # scalar probe: |V|, driver-trivial
@@ -123,7 +113,7 @@ def pagerank(
 
     teleport = (1.0 - damping) / float(n_nodes)
     for _ in range(n_iter):
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
+        rank_side = F.broadcast(ranks)
         contrib = (
             edged.join(rank_side, edged["src"] == rank_side["node"])
             .select(

@@ -418,7 +418,6 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         damping=PAGERANK_DAMPING,
         n_iter=PAGERANK_ITERS,
         dedup_edges=False,
-        broadcast_ranks=True,
     )
     label = F.when(
         F.col("node").bitwiseAND(1) == 0,

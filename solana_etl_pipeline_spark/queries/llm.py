@@ -444,10 +444,7 @@ def llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (vec_id < 5), so the guard's bounded count job would be a
     # redundant scan on every invocation; the guard protects callers
     # whose query side is data-dependent.
-    # kernel="expr": 5 queries x |corpus| is ~10k pairs at sf0.1 —
-    # below the Arrow kernel's crossover (see pair_cosine docstring),
-    # and the JVM expr avoids Python-worker startup jitter in bench.
-    return cosine_topk(emb, queries, k=5, max_queries=None, kernel="expr")
+    return cosine_topk(emb, queries, k=5, max_queries=None)
 
 
 def llm_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

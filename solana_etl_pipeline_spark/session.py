@@ -319,8 +319,8 @@ def build_session(
     ``extra_confs`` such as the warehouse dir) only take effect when
     this call starts the SparkContext. When one is already running and
     its value differs from the one asked for, a ``RuntimeWarning``
-    names the conf. ``$SPARK_GRAFT_CODEGEN_CACHE`` must be an integer;
-    anything else raises ``ValueError``.
+    names the conf. The codegen cache holds 5000 entries;
+    ``extra_confs`` overrides that as it does any conf here.
 
     A call that launches the driver JVM starts it from a dynamic
     class-data-sharing archive in ``~/.cache/solana_etl_pipeline_spark/
@@ -335,14 +335,6 @@ def build_session(
     global _archive_flags
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     cores = (os.cpu_count() or 1) if cpus == "*" else int(cpus)
-    codegen_cache = os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000")
-    try:
-        codegen_cache_entries = int(codegen_cache)
-    except ValueError:
-        raise ValueError(
-            "SPARK_GRAFT_CODEGEN_CACHE must be an integer entry count, "
-            f"got {codegen_cache!r}"
-        ) from None
     confs = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions or cores),
         # Local-mode niceties; harmless on a cluster.
@@ -387,9 +379,9 @@ def build_session(
         # CODE, never data or results — every execution still computes
         # from the parquet inputs. Memory cost is metaspace-resident
         # class objects (~100 KB/unit worst case); size to the distinct
-        # query count × ~10 units. Overridable for small-heap
-        # deployments via SPARK_GRAFT_CODEGEN_CACHE.
-        "spark.sql.codegen.cache.maxEntries": str(codegen_cache_entries),
+        # query count × ~10 units. A small-heap deployment overrides it
+        # through ``extra_confs``, which is merged last.
+        "spark.sql.codegen.cache.maxEntries": "5000",
         **RUNTIME_CONFS,
         **(extra_confs or {}),
     }

@@ -186,6 +186,20 @@ _CALLER_ALLOWLIST = {
 }
 
 
+_ROOT = Path(__file__).resolve().parent.parent
+
+
+def _caller_files() -> list[Path]:
+    """The package, ``__spark_entry__.py`` and ``perfbench/``: the code
+    whose calls count. Tests and ``tools/`` do not."""
+    return [_ROOT / "__spark_entry__.py"] + [
+        p
+        for top in (_ROOT / "solana_etl_pipeline_spark", _ROOT / "perfbench")
+        for p in sorted(top.rglob("*.py"))
+        if "tests" not in p.relative_to(_ROOT).parts
+    ]
+
+
 def _references(tree) -> list[tuple[str | None, str]]:
     """``(owner, name)`` for every name or attribute a module uses;
     ``owner`` is the top-level def or class whose body holds it, else
@@ -215,16 +229,9 @@ def test_package_public_names_have_a_caller():
     ``__spark_entry__.py`` or ``perfbench/``; a name only tests (or
     scripts under ``tools/``) reach is deleted, or named in the
     allowlist with its reason."""
-    root = Path(__file__).resolve().parent.parent
-    pkg = root / "solana_etl_pipeline_spark"
-    callers = [root / "__spark_entry__.py"] + [
-        p
-        for top in (pkg, root / "perfbench")
-        for p in sorted(top.rglob("*.py"))
-        if "tests" not in p.relative_to(root).parts
-    ]
+    root, pkg = _ROOT, _ROOT / "solana_etl_pipeline_spark"
     sites = defaultdict(set)  # name -> {(file, owner)} that load it
-    for path in callers:
+    for path in _caller_files():
         for owner, name in _references(ast.parse(path.read_text("utf-8"))):
             sites[name].add((path, owner))
     uncalled, defined = [], set()
@@ -245,6 +252,93 @@ def test_package_public_names_have_a_caller():
     stale = sorted(set(_CALLER_ALLOWLIST) - defined)
     assert not stale, f"allowlisted names the package no longer defines: {stale}"
     assert all(_CALLER_ALLOWLIST.values()), "an allowlist entry has no reason"
+
+
+#: ``function.parameter`` bool options kept although every caller passes
+#: one value, each with its reason.
+_BOOL_OPTION_ALLOWLIST = {
+    "unigram_score.include_raw": "rounding-boundary canary (COVERAGE "
+                                 "convention 8)",
+    "importance_weights.include_raw": "rounding-boundary canary (COVERAGE "
+                                      "convention 8)",
+    "tfidf_top_terms.include_raw": "rounding-boundary canary (COVERAGE "
+                                   "convention 8)",
+    "bm25_topk.include_raw": "rounding-boundary canary (COVERAGE "
+                             "convention 8)",
+    "pagerank.dedup_edges": "input contract for graphs with parallel edges",
+}
+
+
+def _bool_defaults(fn) -> dict[str, bool]:
+    args = fn.args
+    pos = args.posonlyargs + args.args
+    pairs = list(zip(pos[len(pos) - len(args.defaults):], args.defaults))
+    pairs += [(a, d) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d]
+    return {
+        a.arg: d.value
+        for a, d in pairs
+        if isinstance(d, ast.Constant) and isinstance(d.value, bool)
+    }
+
+
+def test_package_bool_options_take_two_values():
+    """A ``bool``-defaulted parameter of a public top-level package
+    function selects a second code path, so some call site in the
+    package, ``__spark_entry__.py`` or ``perfbench/`` must select it:
+    the calls must pass at least two values. An omitted argument
+    counts as the default; a non-literal one, or a ``*args`` /
+    ``**kwargs`` spread, as varying. Functions in
+    ``_CALLER_ALLOWLIST`` are skipped; an option kept anyway is named
+    in ``_BOOL_OPTION_ALLOWLIST`` with its reason."""
+    varying = object()
+    calls = defaultdict(list)  # callee name -> [ast.Call]
+    for path in _caller_files():
+        for node in ast.walk(ast.parse(path.read_text("utf-8"))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                calls[name].append(node)
+
+    def passed(call, params: list[str], name: str, default):
+        if any(isinstance(a, ast.Starred) for a in call.args) or any(
+            kw.arg is None for kw in call.keywords
+        ):
+            return varying
+        node = next((kw.value for kw in call.keywords if kw.arg == name), None)
+        if name in params and params.index(name) < len(call.args):
+            node = call.args[params.index(name)]
+        if node is None:
+            return default
+        return node.value if isinstance(node, ast.Constant) else varying
+
+    one_valued, options = [], set()
+    pkg = _ROOT / "solana_etl_pipeline_spark"
+    for path in sorted(pkg.rglob("*.py")):
+        for fn in ast.parse(path.read_text("utf-8")).body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or (
+                fn.name.startswith("_") or fn.name in _CALLER_ALLOWLIST
+            ):
+                continue
+            params = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+            for name, default in _bool_defaults(fn).items():
+                option = f"{fn.name}.{name}"
+                options.add(option)
+                values = {
+                    passed(call, params, name, default)
+                    for call in calls[fn.name]
+                }
+                if (
+                    varying not in values and len(values) < 2
+                    and option not in _BOOL_OPTION_ALLOWLIST
+                ):
+                    one_valued.append(option)
+    assert not one_valued, (
+        "bool options every caller passes one value (fold the unused "
+        f"path): {sorted(one_valued)}"
+    )
+    stale = sorted(set(_BOOL_OPTION_ALLOWLIST) - options)
+    assert not stale, f"allowlisted options the package no longer has: {stale}"
+    assert all(_BOOL_OPTION_ALLOWLIST.values()), "an entry has no reason"
 
 
 # ------------------------------------------------- brute-force guard

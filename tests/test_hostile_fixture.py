@@ -175,11 +175,11 @@ def test_query_matches_oracle_on_hostile_fixture(
 
 # --- degenerate-input end-to-end pins (r11, VERDICT r10 #4): the
 # zero-norm NaN-ranking bug lived 9 rounds because no GATE ran the
-# similarity kernels over degenerate corpus members — the registry
-# query pins the expr kernel only, and the kernel unit test isn't
-# end-to-end. These drive BOTH cosine kernels and the capped near-dup
-# path over the hostile corpus (null + zero-norm + zero-length +
-# duplicated vectors) through the real top-k/verify plans.
+# similarity kernels over degenerate corpus members — the kernel unit
+# test isn't end-to-end. These drive cosine_topk's expression kernel
+# and the capped near-dup path (the Arrow pair_cosine verify) over the
+# hostile corpus (null + zero-norm + zero-length + duplicated vectors)
+# through the real top-k/verify plans.
 
 _DEGENERATE_VEC_IDS = {20_000, 20_001, 20_003}  # null, zero-norm, empty
 
@@ -194,21 +194,13 @@ def test_cosine_topk_kernels_agree_on_degenerate_corpus(
 
     emb = load_table(spark, hostile_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    rows = {}
-    for kernel in ("arrow", "expr"):
-        out = cosine_topk(
-            emb, queries, k=5, max_queries=None, kernel=kernel
-        ).collect()
-        rows[kernel] = sorted(
-            (r.query_id, r.rank, r.neighbor_id, r.cosine) for r in out
-        )
-        # 5 query vectors × full top-5 (the corpus has >5 valid rows)
-        assert len(rows[kernel]) == 25
-        # a degenerate corpus member must never out-rank a real one:
-        # NaN would sort FIRST in desc order (the r10 bug); NULL
-        # sorts last and can't reach the top-5 here
-        assert not {r[2] for r in rows[kernel]} & _DEGENERATE_VEC_IDS
-    assert rows["arrow"] == rows["expr"]
+    rows = cosine_topk(emb, queries, k=5, max_queries=None).collect()
+    # 5 query vectors × full top-5 (the corpus has >5 valid rows)
+    assert len(rows) == 25
+    # a degenerate corpus member must never out-rank a real one:
+    # NaN would sort FIRST in desc order (the r10 bug); NULL
+    # sorts last and can't reach the top-5 here
+    assert not {r.neighbor_id for r in rows} & _DEGENERATE_VEC_IDS
 
 
 def test_capped_near_dup_handles_degenerate_corpus(spark, hostile_dir):

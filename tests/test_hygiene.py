@@ -69,22 +69,6 @@ def test_decontaminate_flags_verbatim_copy(spark, decon_frames):
     assert out[2].n_hit == 0 and not out[2].contaminated
 
 
-def test_decontaminate_shuffle_path_matches_broadcast(spark, decon_frames):
-    train, eval_df = decon_frames
-    a = sorted(
-        map(tuple, decontaminate(train, eval_df, n=3).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            decontaminate(
-                train, eval_df, n=3, broadcast_eval=False
-            ).collect(),
-        )
-    )
-    assert a == b
-
-
 # --- repetition rules ----------------------------------------------------
 
 
@@ -274,21 +258,6 @@ def test_unigram_lm_hand_computed(spark):
     assert got[11] == (1, exp_11)
     # fluent (in-vocab) text scores LOWER than gibberish
     assert got[10][1] < got[11][1]
-
-
-def test_unigram_lm_broadcast_matches_shuffle(spark, sf_dir):
-    from solana_etl_pipeline_spark.llm.lm import unigram_fit, unigram_score
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    vocab = unigram_fit(docs)
-    a = sorted(map(tuple, unigram_score(docs, vocab).collect()))
-    b = sorted(
-        map(
-            tuple,
-            unigram_score(docs, vocab, broadcast_vocab=False).collect(),
-        )
-    )
-    assert a == b and a
 
 
 def test_unigram_score_unscoped_vocab_bounded(spark):

@@ -626,24 +626,39 @@ def test_pair_cosine_zero_norm_parity_with_jvm_twin(spark):
 
 
 def test_cosine_topk_kernels_agree(spark):
-    """cosine_topk(kernel='expr') and (kernel='arrow') must emit
-    identical rows after the 1e-6 round — the expr kernel exists only
-    as a low-overhead dispatch for tiny pair volumes, never a
-    different answer."""
+    """cosine_topk's JVM expression kernel gives the exact top-5 a
+    numpy kernel computes over the same 200 vectors: the same
+    neighbours in the same order, cosines equal after the 1e-6
+    round."""
     import random
+
+    import numpy as np
 
     from solana_etl_pipeline_spark.llm.similarity import cosine_topk
 
     rng = random.Random(7)
-    rows = [
-        Row(vec_id=i, embedding=[rng.uniform(-1, 1) for _ in range(16)])
-        for i in range(200)
-    ]
+    vecs = [[rng.uniform(-1, 1) for _ in range(16)] for _ in range(200)]
+    rows = [Row(vec_id=i, embedding=v) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
     q = df.filter("vec_id < 4")
-    a = cosine_topk(df, q, k=5, max_queries=None, kernel="arrow").collect()
-    e = cosine_topk(df, q, k=5, max_queries=None, kernel="expr").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, e))
+    got = sorted(
+        map(tuple, cosine_topk(df, q, k=5, max_queries=None).collect())
+    )
+
+    m = np.asarray(vecs)
+    unit = m / np.linalg.norm(m, axis=1, keepdims=True)
+    want = []
+    for qi in range(4):
+        cos = np.round(unit @ unit[qi], 6)
+        order = sorted(
+            (i for i in range(len(vecs)) if i != qi),
+            key=lambda i: (-cos[i], i),
+        )
+        want += [
+            (qi, i, rank, float(cos[i]))
+            for rank, i in enumerate(order[:5], start=1)
+        ]
+    assert got == sorted(want)
 
 
 def test_lsh_dim_inference_tie_breaks_to_larger_length(spark):

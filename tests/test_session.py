@@ -121,12 +121,6 @@ def test_matching_static_confs_on_live_session_do_not_warn(spark):
         )
 
 
-def test_codegen_cache_env_must_be_an_integer(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", "5k")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_CODEGEN_CACHE"):
-        session.build_session()
-
-
 def test_apply_runtime_confs_warns_for_a_refused_conf():
     """A conf the session refuses warns by name; the rest still apply."""
     refused = "spark.sql.session.timeZone"
