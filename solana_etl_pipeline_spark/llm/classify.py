@@ -43,21 +43,10 @@ tokens and is classified purely by the prior).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.llm import tokenize
-
-# At most one UNSCOPED model persist survives at a time (the shared
-# single-slot discipline — see dedup.single_slot_persist).
-_UNSCOPED_LOCK = threading.Lock()
-_UNSCOPED_MODEL: list[DataFrame] = []
-# Same discipline for a caller-shared token frame (fit+score over the
-# same corpus tokenize once — see tokens=... below).
-_UNSCOPED_TOKS_LOCK = threading.Lock()
-_UNSCOPED_TOKS: list[DataFrame] = []
 
 
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -79,12 +68,11 @@ def shared_tokens(
     ``tokens=`` to BOTH :func:`nb_fit` and :func:`nb_score` when they
     run over the same corpus — one tokenize+explode pass instead of
     two (r16, guide §2.4: the explode is this pipeline's widest
-    map stage). Single-slot persisted (bounded unscoped cache)."""
-    from solana_etl_pipeline_spark.llm.dedup import single_slot_persist
+    map stage). Persisted for the session's cache lifetime (the dedup
+    family's ``_persist``)."""
+    from solana_etl_pipeline_spark.llm.dedup import _persist
 
-    return single_slot_persist(
-        _tokens(df, id_col, text_col), _UNSCOPED_TOKS, _UNSCOPED_TOKS_LOCK
-    )
+    return _persist(_tokens(df, id_col, text_col))
 
 
 def nb_fit(
@@ -140,14 +128,13 @@ def nb_score(
     rounded score break toward the lexicographically smallest label.
 
     The model is persisted for the job (three consumers: per-label
-    totals, vocabulary size, the scoring join) under the shared
-    single-slot discipline — scope the consume in
-    ``dedup_cache_scope`` for deterministic release, or rely on the
-    bounded unscoped slot (at most one stale model cached).
+    totals, vocabulary size, the scoring join) for the session's cache
+    lifetime (the dedup family's ``_persist``); the session's owner
+    releases it with ``spark.catalog.clearCache()``.
     """
-    from solana_etl_pipeline_spark.llm.dedup import single_slot_persist
+    from solana_etl_pipeline_spark.llm.dedup import _persist
 
-    model = single_slot_persist(model, _UNSCOPED_MODEL, _UNSCOPED_LOCK)
+    model = _persist(model)
     # per-label totals + global vocab, all from the model frame
     per_label = model.groupBy("label").agg(
         F.sum("c").cast("bigint").alias("n_l")

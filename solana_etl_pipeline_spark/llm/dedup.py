@@ -25,13 +25,13 @@ Caching contract: the pair generators (`minhash_near_dup_pairs`,
 `simhash_candidate_pairs`) ``persist()`` their signature/shingle
 intermediates because each feeds 2-3 plan branches. The returned
 DataFrames are lazy — unpersisting before return would just recompute
-the intermediate once per branch — so by default the cache is scoped to
-the SparkSession. Long-lived sessions have two cleanup options:
-
-- wrap the *consume* (build + action) in :func:`dedup_cache_scope`,
-  which unpersists everything those calls pinned when the block exits;
-- or ``spark.catalog.clearCache()`` between runs (``bench.py`` does,
-  per query).
+the intermediate once per branch — so every internal persist in the
+llm family (made through :func:`_persist`) lives as long as the
+session's cache. Its owner releases it with
+``spark.catalog.clearCache()`` between runs (``bench.py`` and
+``perfbench/`` do, per query). Spark keys a cached table by its
+analyzed plan, so re-running the same query reuses its entry instead
+of adding one.
 
 At cluster scale you'd write the signature table out once and re-read
 it instead (that is what ``llm/incremental.py`` does).
@@ -39,37 +39,16 @@ it instead (that is what ``llm/incremental.py`` does).
 
 from __future__ import annotations
 
-import contextlib
-import threading
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.llm import tokenize
 
-#: Active cache scopes (innermost last). Module-level because the pair
-#: generators are plain functions; a scope collects every DataFrame
-#: they persist so the context manager can release them deterministically.
-#: THREAD-LOCAL stack: with a plain module global, a scope opened on
-#: one thread would capture persists made concurrently by another
-#: (e.g. a parallel query harness sharing the session) and blocking-
-#: unpersist them mid-flight on exit.
-_CACHE_SCOPES = threading.local()
 
-
-def _scope_stack() -> "list[list[DataFrame]]":
-    stack = getattr(_CACHE_SCOPES, "stack", None)
-    if stack is None:
-        stack = _CACHE_SCOPES.stack = []
-    return stack
-
-
-def _scoped_persist(df: DataFrame, eager: bool = False) -> DataFrame:
-    """``persist()`` that registers with the innermost active
-    :func:`dedup_cache_scope` ON THIS THREAD (no-op registration
-    outside a scope — session-scoped cache, see the module
+def _persist(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``persist()`` for the llm family's internal frames: the one
+    place they cache, for the session's cache lifetime (see the module
     docstring).
 
     ``eager=True`` materializes the cache (one ``count()``) before
@@ -99,72 +78,10 @@ def _scoped_persist(df: DataFrame, eager: bool = False) -> DataFrame:
     is a map, not a second UDF pass.
     """
     df = df.persist()
-    stack = _scope_stack()
-    if stack:
-        stack[-1].append(df)
     if eager:
         df.count()
     return df
 
-
-def single_slot_persist(
-    df: DataFrame, slot: "list[DataFrame]", lock
-) -> DataFrame:
-    """Persist a lazily-consumed internal frame with BOUNDED unscoped
-    accumulation (the llm/lm.py vocab pattern, shared by any operator
-    whose registry path cannot wrap its consume in a scope).
-
-    Inside a :func:`dedup_cache_scope`: plain scoped persist — the
-    scope exit releases it. Outside a scope: the previous occupant of
-    ``slot`` is released FIRST, then the new frame is persisted and
-    parked in the slot — release-before-persist because Spark's cache
-    is keyed by analyzed-plan equality, so a plan-identical refit
-    shares ONE cache entry and the reversed order would evict the
-    fresh persist. Repeated unscoped calls therefore keep at most one
-    stale frame cached. Two concurrent unscoped calls on different
-    threads may evict each other mid-flight — a recompute-latency
-    blip, not a correctness issue; scope them to avoid it.
-    """
-    if _scope_stack():
-        return _scoped_persist(df)
-    with lock:
-        prev, slot[:] = slot[:], []
-    for old in prev:
-        old.unpersist()
-    df = _scoped_persist(df)
-    with lock:
-        slot.append(df)
-    return df
-
-
-@contextlib.contextmanager
-def dedup_cache_scope() -> Iterator[None]:
-    """Scope the dedup family's internal caches to a block::
-
-        with dedup_cache_scope():
-            pairs = minhash_near_dup_pairs(docs, "doc_id", "text")
-            result = pairs.collect()          # caches live here
-        # every intermediate persisted inside the block is unpersisted
-
-    Run ACTIONS inside the block: the returned DataFrames are lazy, so
-    an action executed after exit recomputes the (now-released)
-    intermediates — correct, just uncached. Scopes nest; each releases
-    only its own persists. Release is ``unpersist(blocking=True)`` so
-    that on exit the caches are deterministically gone (tests assert
-    emptiness immediately); the eviction of a few cached signature
-    tables is cheap relative to the jobs that built them.
-
-    Scopes are per-thread: a scope never captures (or releases)
-    persists made by other threads sharing the SparkSession."""
-    held: list[DataFrame] = []
-    stack = _scope_stack()
-    stack.append(held)
-    try:
-        yield
-    finally:
-        stack.pop()
-        for df in held:
-            df.unpersist(blocking=True)
 
 #: Mersenne prime 2^31-1: permutation-hash modulus (fits in a long
 #: with room for a*h+b before the mod).
@@ -431,7 +348,8 @@ def _bucket_pairs(
     two readers unless the caller already did. On an untriggered
     100 k-doc run the guard measured ~+25% wall (interleaved A/B, min
     3.9 → 4.9 s), against an unbounded quadratic when the pathology
-    hits. The persists are scoped (:func:`dedup_cache_scope`).
+    hits. The persists live for the session's cache (see the module
+    docstring).
     """
 
     def end(side: str) -> list[Column]:
@@ -442,12 +360,12 @@ def _bucket_pairs(
     star = None
     if max_bucket is not None:
         if not rows.is_cached:
-            rows = _scoped_persist(rows)
+            rows = _persist(rows)
         # min over a struct would leave the hash aggregate, so a bucket
         # with nothing to carry keeps the plain min id
         rep = F.struct(id_col, *carry) if carry else F.col(id_col)
         oversize = F.broadcast(
-            _scoped_persist(
+            _persist(
                 rows.groupBy(*key_cols)
                 .agg(
                     F.count(F.lit(1)).alias("_bsz"),
@@ -457,7 +375,7 @@ def _bucket_pairs(
                 .select(*key_cols, "_rep")
             )
         )
-        flagged = _scoped_persist(rows.join(oversize, key_cols, "left"))
+        flagged = _persist(rows.join(oversize, key_cols, "left"))
         rep_id = F.col(f"_rep.{id_col}") if carry else F.col("_rep")
         # rep < member always, so (id_a, id_b) is ordered
         star = flagged.filter(
@@ -542,7 +460,7 @@ def minhash_near_dup_pairs(
     # Spark recomputes the signatures per branch — the dominant cost.
     # At cluster scale you'd write signatures to a table once and
     # reuse them across dedup runs.
-    sigs = _scoped_persist(
+    sigs = _persist(
         minhash_signatures(
             df, id_col, text_col, num_hashes, shingle_len, shingles=shingles
         ),
@@ -601,7 +519,7 @@ def minhash_verified_pairs(
     sh = shingle_sets(df, id_col, text_col, shingle_len)
     # one cache, both stages: (id, sig, _sh) in a single projection of
     # the shingle frame (keep_shingles appends the column — no join).
-    combined = _scoped_persist(
+    combined = _persist(
         minhash_signatures(
             df, id_col, text_col, num_hashes, shingle_len,
             shingles=sh, keep_shingles=True,
@@ -642,12 +560,13 @@ def ngram_jaccard_for_pairs(
 
     ``shingles`` reuses a caller-persisted :func:`shingle_sets` frame
     (the caller owns its lifecycle); otherwise shingles are computed
-    and persisted here (scoped — see :func:`dedup_cache_scope`).
+    and persisted here for the session's cache (see the module
+    docstring).
     """
     sets_df = (
         shingles
         if shingles is not None
-        else _scoped_persist(
+        else _persist(
             shingle_sets(df, id_col, text_col, shingle_len), eager=True
         )
     )  # feeds both sides of the pair join — compute shingles once
@@ -690,7 +609,7 @@ def embedding_near_dup_pairs(
     buckets = lsh_bucket_assignments(emb, id_col, vec_col, n_planes, n_bands)
     # persist: the 32 sign-projections per vector are interpreted
     # higher-order expressions — compute once, not once per join side
-    bands_only = _scoped_persist(
+    bands_only = _persist(
         buckets.select(F.col(id_col), "band_idx", "band_val"), eager=True
     )
     pair_ids = _bucket_pairs(
@@ -791,7 +710,7 @@ def simhash_candidate_pairs(
     so the verify joins nothing back."""
     # persist: the Arrow signature pass feeds both sides of the band
     # self-join below
-    sigs = _scoped_persist(simhash(df, id_col, text_col), eager=True)
+    sigs = _persist(simhash(df, id_col, text_col), eager=True)
     banded = sigs.select(
         id_col,
         "simhash",

@@ -39,20 +39,12 @@ discrete ``doc_id`` tie-breaks — the repo's ln() discipline
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.llm import tokenize
 
 DEFAULT_BUCKETS = 4096
-
-# Single-slot persist for the raw pool's gram stream (two consumers —
-# see importance_weights; the shared dedup.single_slot_persist
-# discipline bounds unscoped cache accumulation to one frame).
-_UNSCOPED_GRAMS_LOCK = threading.Lock()
-_UNSCOPED_GRAMS: list[DataFrame] = []
 
 
 def _bucket(gram, n_buckets: int):
@@ -126,19 +118,16 @@ def importance_weights(
     Select with ``orderBy(desc(log_weight), id).limit(k)`` — the
     TakeOrdered top-k pattern, no global sort materialized.
     """
-    from solana_etl_pipeline_spark.llm.dedup import single_slot_persist
+    from solana_etl_pipeline_spark.llm.dedup import _persist
 
     # r16 (guide §2.4): the raw pool's gram stream feeds BOTH the
     # raw-side bucket counts and the final per-doc scoring join —
     # previously those were two independent gram-explode passes over
     # the raw corpus (bucket_counts(raw) + gram_buckets(raw)). One
-    # persisted gram frame halves the raw-side tokenize/explode work;
-    # at 100 TB the same reuse is a written gram table, not a cache.
-    grams = single_slot_persist(
-        gram_buckets(raw, id_col, text_col, n_buckets),
-        _UNSCOPED_GRAMS,
-        _UNSCOPED_GRAMS_LOCK,
-    )
+    # persisted gram frame (for the session's cache lifetime) halves
+    # the raw-side tokenize/explode work; at 100 TB the same reuse is
+    # a written gram table, not a cache.
+    grams = _persist(gram_buckets(raw, id_col, text_col, n_buckets))
     tc = bucket_counts(target, id_col, text_col, n_buckets)
     rc = grams.groupBy("bucket").agg(F.count(F.lit(1)).alias("c"))
     t_tot = tc.agg(F.sum("c").cast("bigint").alias("_nt"))

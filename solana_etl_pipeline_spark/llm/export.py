@@ -26,8 +26,6 @@ split.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -39,11 +37,6 @@ from solana_etl_pipeline_spark.llm.textstats import language_id, quality_score
 # compute identical BIGINT products with no overflow on either side.
 SHARD_P = 1_000_000_007
 KNUTH = 2654435761
-
-# Single-slot persist for corpus_filter's gated frame (two consumers;
-# see dedup.single_slot_persist for the bounded-unscoped discipline).
-_UNSCOPED_GATED_LOCK = threading.Lock()
-_UNSCOPED_GATED: list[DataFrame] = []
 
 
 def corpus_filter(
@@ -66,10 +59,7 @@ def corpus_filter(
     of whole documents (same design as ``exact_dedup_groups``;
     identical result up to sha256 collisions).
     """
-    from solana_etl_pipeline_spark.llm.dedup import (
-        content_hash,
-        single_slot_persist,
-    )
+    from solana_etl_pipeline_spark.llm.dedup import _persist, content_hash
 
     text = F.col(text_col)
     gated = (
@@ -82,11 +72,9 @@ def corpus_filter(
     # r16 (guide §5 caching-when-reused): the keepers aggregate AND the
     # semi-join probe both consume ``gated``, so the wide quality/
     # language expression trees evaluated TWICE per run. Persist the
-    # gated frame (single-slot — bounded unscoped cache); at 100 TB
-    # the same reuse is a written intermediate table, not a cache.
-    gated = single_slot_persist(
-        gated, _UNSCOPED_GATED, _UNSCOPED_GATED_LOCK
-    )
+    # gated frame for the session's cache lifetime; at 100 TB the same
+    # reuse is a written intermediate table, not a cache.
+    gated = _persist(gated)
     keepers = gated.groupBy("_key").agg(F.min(id_col).alias(id_col))
     return gated.join(keepers, ["_key", id_col], "left_semi").drop("_key")
 

@@ -29,17 +29,10 @@ under the repo's 1e-6 rounding convention (see the ``ln`` note in
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.llm import tokenize
-
-# At most one UNSCOPED vocab persist survives at a time (see
-# unigram_score's docstring).
-_UNSCOPED_LOCK = threading.Lock()
-_UNSCOPED_VOCAB: list[DataFrame] = []
 
 
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -79,25 +72,16 @@ def unigram_score(
     fit (even web-scale corpora rarely exceed tens of millions of
     distinct words after lowercasing).
 
-    The vocab is persisted for the duration of the job (scoped to an
-    enclosing ``dedup_cache_scope`` when one is active — the same
-    cache discipline as the dedup family): both the (N, V) totals and
-    the probe join read it, and an uncached vocab would re-run the
-    whole fit aggregation per consumer (measured 15.1 s → 4.4 s on a
-    50 k-doc corpus).
-
-    Callers that run many scoring jobs in one session should scope
-    them; UNSCOPED calls (the registry/driver path) are still
-    bounded — each unscoped call releases the previous unscoped
-    vocab, so repeated invocations keep at most one stale vocab
-    cached instead of accumulating one per run. (Two concurrent
-    unscoped calls on different threads may evict each other's vocab
-    mid-flight — a recompute-latency blip, not a correctness issue;
-    scope them to avoid it.)
+    The vocab is persisted (the dedup family's ``_persist``, for the
+    session's cache lifetime): both the (N, V) totals and the probe
+    join read it, and an uncached vocab would re-run the whole fit
+    aggregation per consumer (measured 15.1 s → 4.4 s on a 50 k-doc
+    corpus). Callers that run many scoring jobs in one session
+    release it with ``spark.catalog.clearCache()`` between them.
     """
-    from solana_etl_pipeline_spark.llm.dedup import single_slot_persist
+    from solana_etl_pipeline_spark.llm.dedup import _persist
 
-    vocab = single_slot_persist(vocab, _UNSCOPED_VOCAB, _UNSCOPED_LOCK)
+    vocab = _persist(vocab)
     totals = vocab.agg(
         F.sum("c").cast("bigint").alias("_n"),
         F.count(F.lit(1)).cast("bigint").alias("_v"),

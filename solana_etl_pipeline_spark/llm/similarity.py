@@ -594,14 +594,14 @@ def semantic_dedup(
         )
         .filter(_norm(F.col("_v")) > 0)
     )
-    from solana_etl_pipeline_spark.llm.dedup import _scoped_persist
+    from solana_etl_pipeline_spark.llm.dedup import _persist
 
     # both sides of the self-join read the assignment (a k-way
     # broadcast crossJoin + window per vector) — compute it once.
     # eager: the two join sides are concurrently-scheduled stages, and
     # a lazy persist lets them race to compute the cold cache (the
-    # assignment would run twice — see _scoped_persist's docstring)
-    assigned = _scoped_persist(assigned, eager=True)
+    # assignment would run twice — see _persist's docstring)
+    assigned = _persist(assigned, eager=True)
     a = assigned.select(
         F.col("_id").alias("keep_id"), F.col("_v").alias("_va"), "cluster_id"
     )

@@ -45,7 +45,7 @@ _CSV_SCHEMA = StructType(
 
 
 def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10/S11: append-mode parquet partitioned by event date, read
+    """S10/S11: overwrite-mode parquet partitioned by event date, read
     back with a partition predicate — the scan must prune to one
     partition directory (asserted via explain in tests)."""
     ev = load_table(spark, sf_dir, "events")

@@ -91,9 +91,7 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir, "events", lambda p: ev.write.mode("overwrite").json(p)
     )
 
-    stream = landing_stream(
-        spark, landing, EVENTS, max_files_per_trigger=None
-    )
+    stream = landing_stream(spark, landing, EVENTS)
     deduped = deduplicated(
         stream, keys=["user_id", "event_id"], watermark="24 hours"
     )
@@ -122,7 +120,7 @@ def streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir, "events", lambda p: ev.write.mode("overwrite").json(p)
     )
 
-    stream = landing_stream(spark, landing, EVENTS, max_files_per_trigger=None)
+    stream = landing_stream(spark, landing, EVENTS)
     windowed = sliding_window_counts(stream, size="1 hour", slide="30 minutes")
     table = run_available_now(
         windowed,
@@ -150,7 +148,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir, "events", lambda p: ev.write.mode("overwrite").json(p)
     )
 
-    stream = landing_stream(spark, landing, EVENTS, max_files_per_trigger=None)
+    stream = landing_stream(spark, landing, EVENTS)
     sess = session_window_counts(
         stream, key="user_id", ts_col="ts", gap="30 minutes"
     )
@@ -189,12 +187,10 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(p),
     )
 
-    signups = landing_stream(
-        spark, signup_landing, EVENTS, max_files_per_trigger=None
-    ).select("user_id", F.col("event_id").alias("signup_id"), "ts")
-    purchases = landing_stream(
-        spark, purchase_landing, EVENTS, max_files_per_trigger=None
-    ).select(
+    signups = landing_stream(spark, signup_landing, EVENTS).select(
+        "user_id", F.col("event_id").alias("signup_id"), "ts"
+    )
+    purchases = landing_stream(spark, purchase_landing, EVENTS).select(
         F.col("user_id").alias("_r_user_id"),
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("p_ts"),
@@ -285,11 +281,8 @@ def streaming_interval_join_outer(
         .json(p),
     )
 
-    signups = (
-        landing_stream(
-            spark, signup_landing, EVENTS, max_files_per_trigger=None
-        )
-        .select("user_id", F.col("event_id").alias("signup_id"), "ts")
+    signups = landing_stream(spark, signup_landing, EVENTS).select(
+        "user_id", F.col("event_id").alias("signup_id"), "ts"
     )
     # no event_type filter here: the landing dir is already
     # purchase-only + the sentinel, and filtering the sentinel out
@@ -297,9 +290,7 @@ def streaming_interval_join_outer(
     # watermark at the last real purchase — the join's global
     # watermark is the min of both sides, so the outer flush would
     # never fire
-    purchases = landing_stream(
-        spark, purchase_landing, EVENTS, max_files_per_trigger=None
-    ).select(
+    purchases = landing_stream(spark, purchase_landing, EVENTS).select(
         F.col("user_id").alias("_r_user_id"),
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("p_ts"),

@@ -41,16 +41,20 @@ def landing_stream(
     spark: SparkSession,
     landing_dir: str,
     schema: StructType,
-    max_files_per_trigger: int | None = 999,
+    max_files_per_trigger: int | None = None,
     clean_source: str | None = None,
     archive_dir: str | None = None,
 ) -> DataFrame:
     """Unbounded DataFrame over a JSON landing directory (T1/T2/T6).
 
-    ``max_files_per_trigger`` is the reference's BATCH_SIZE admission
-    cap; ``clean_source='delete'|'archive'`` is its delete-after-consume
-    (kept optional — checkpointing alone already guarantees
-    exactly-once, so the default leaves sources in place).
+    ``max_files_per_trigger`` caps the files one micro-batch admits;
+    ``None`` (the default) lets an availableNow drain read the whole
+    backlog in one micro-batch, which keeps the watermark
+    deterministic. Passing 999 reproduces the reference's BATCH_SIZE
+    cap (``cleandata1.py:11``). ``clean_source='delete'|'archive'`` is
+    the reference's delete-after-consume (kept optional —
+    checkpointing alone already guarantees exactly-once, so the
+    default leaves sources in place).
     """
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:

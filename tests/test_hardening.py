@@ -1,6 +1,7 @@
 """Round-5 hardening contracts: scale-aware gold writes, the
-parquet table sink, the brute-force query-side guard, scoped
-dedup caches, and compaction over the incremental signature store."""
+parquet table sink, the brute-force query-side guard, the session
+lifetime of the curation operators' caches, and compaction over the
+incremental signature store."""
 
 from __future__ import annotations
 
@@ -14,17 +15,21 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from tests.oracle_utils import assert_matches_oracle
+from solana_etl_pipeline_spark.llm import classify, dsir, lm
 from solana_etl_pipeline_spark.llm.dedup import (
-    dedup_cache_scope,
     embedding_near_dup_pairs,
-    minhash_near_dup_pairs,
+    minhash_verified_pairs,
     ngram_jaccard_for_pairs,
     simhash_candidate_pairs,
 )
+from solana_etl_pipeline_spark.llm.export import corpus_filter
 from solana_etl_pipeline_spark.llm.incremental import (
     incremental_near_dup_batch,
 )
-from solana_etl_pipeline_spark.llm.similarity import cosine_topk
+from solana_etl_pipeline_spark.llm.similarity import (
+    cosine_topk,
+    semantic_dedup,
+)
 from solana_etl_pipeline_spark.pipelines.gold import write_gold
 from solana_etl_pipeline_spark.sources.sinks import (
     compact_parquet_dir,
@@ -179,7 +184,6 @@ _CALLER_ALLOWLIST = {
     "dedup_state_keys": "ledger parity (my_websocket.py:101-105)",
     "minhash_near_dup_pairs": "composed-form reference of the "
                               "minhash_verified_pairs parity tests",
-    "dedup_cache_scope": "release API of the dedup caching contract",
     "capture_pre_checkpoint_plans": "reads the operators' "
                                     "record_pre_checkpoint feed for "
                                     "test_no_cartesian_products_anywhere",
@@ -370,7 +374,7 @@ def test_cosine_topk_small_or_opted_out_query_side_runs(spark):
     )
 
 
-# --------------------------------------------------- dedup cache scope
+# ------------------------------------------- internal cache lifetime
 
 
 def _cached_rdd_ids(spark) -> set[int]:
@@ -385,42 +389,72 @@ def _docs(spark):
         "completely different text about rivers mountains and valleys",
     ]
     return spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
+        [
+            Row(doc_id=i, text=t, source=f"s{i % 2}")
+            for i, t in enumerate(texts)
+        ]
     )
 
 
-@pytest.mark.parametrize("api", ["minhash", "jaccard", "simhash", "embedding"])
-def test_dedup_cache_scope_releases_persists(spark, api):
-    """Every pair generator pins intermediates; consuming inside
-    dedup_cache_scope must leave zero NEW cached RDDs behind (delta
-    check: the shared session may legitimately hold other caches)."""
-    docs = _docs(spark)
-    before = _cached_rdd_ids(spark)
-    with dedup_cache_scope():
-        if api == "minhash":
-            out = minhash_near_dup_pairs(docs, "doc_id", "text")
-        elif api == "jaccard":
-            pairs = spark.createDataFrame([Row(id_a=0, id_b=1)])
-            out = ngram_jaccard_for_pairs(docs, pairs, "doc_id", "text")
-        elif api == "simhash":
-            out = simhash_candidate_pairs(docs, "doc_id", "text")
-        else:
-            out = embedding_near_dup_pairs(_embeddings(spark, 20))
-        out.count()  # action inside the scope: caches are live here
-        assert _cached_rdd_ids(spark) - before  # something WAS pinned
-    assert _cached_rdd_ids(spark) - before == set()
+def _nb_scores(docs):
+    toks = classify.shared_tokens(docs)
+    model = classify.nb_fit(docs, tokens=toks)
+    return classify.nb_score(
+        docs, model, classify.nb_label_stats(docs), tokens=toks
+    )
 
 
-def test_dedup_cache_scopes_nest(spark):
-    docs = _docs(spark)
+def _axis_centroids(spark, dim: int = 8):
+    return spark.createDataFrame(
+        [
+            Row(cluster_id=c, embedding=[float(i == c) for i in range(dim)])
+            for c in range(3)
+        ]
+    )
+
+
+#: Every operator that persists an internal frame, each as a builder of
+#: a lazy result from (spark, docs).
+_PERSISTING_OPS = {
+    "minhash_verified_pairs": lambda spark, docs: minhash_verified_pairs(
+        docs, "doc_id", "text"
+    ),
+    "ngram_jaccard_for_pairs": lambda spark, docs: ngram_jaccard_for_pairs(
+        docs, spark.createDataFrame([Row(id_a=0, id_b=1)]), "doc_id", "text"
+    ),
+    "simhash_candidate_pairs": lambda spark, docs: simhash_candidate_pairs(
+        docs, "doc_id", "text"
+    ),
+    "embedding_near_dup_pairs": lambda spark, docs: embedding_near_dup_pairs(
+        _embeddings(spark, 20)
+    ),
+    "semantic_dedup": lambda spark, docs: semantic_dedup(
+        _embeddings(spark, 20), _axis_centroids(spark), threshold=0.9
+    ),
+    "unigram_score": lambda spark, docs: lm.unigram_score(
+        docs, lm.unigram_fit(docs)
+    ),
+    "nb_score": lambda spark, docs: _nb_scores(docs),
+    "importance_weights": lambda spark, docs: dsir.importance_weights(
+        docs, docs.filter(F.col("doc_id") < 2)
+    ),
+    "corpus_filter": lambda spark, docs: corpus_filter(docs),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PERSISTING_OPS))
+def test_internal_persists_release_with_clear_cache(spark, op):
+    """An operator's internal ``persist()`` lives as long as the
+    session's cache: the action pins a new cached RDD, and the session
+    owner's ``clearCache()`` (what ``bench.py`` and ``perfbench/`` run
+    after each query) leaves none behind. Delta check: the shared
+    session may hold local checkpoints, which ``clearCache()`` does not
+    own."""
+    spark.catalog.clearCache()
     before = _cached_rdd_ids(spark)
-    with dedup_cache_scope():
-        minhash_near_dup_pairs(docs, "doc_id", "text").count()
-        outer_pinned = _cached_rdd_ids(spark) - before
-        with dedup_cache_scope():
-            simhash_candidate_pairs(docs, "doc_id", "text").count()
-        # inner scope released only its own persists
-        assert _cached_rdd_ids(spark) - before == outer_pinned
+    _PERSISTING_OPS[op](spark, _docs(spark)).count()
+    assert _cached_rdd_ids(spark) - before  # something WAS pinned
+    spark.catalog.clearCache()
     assert _cached_rdd_ids(spark) - before == set()
 
 
@@ -676,47 +710,6 @@ def test_near_dup_oracles_hold_on_short_docs_and_adjacent_ids(spark, tmp_path):
         for r in QUERIES["llm_minhash_near_dup"].spark(spark, sf_dir).collect()
     }
     assert (0, 1) in pairs and (3, 4) in pairs
-
-
-def test_cache_scope_is_thread_local(spark):
-    """A scope on one thread must not capture (and later blocking-
-    unpersist) persists made concurrently by another thread."""
-    import threading
-
-    from solana_etl_pipeline_spark.llm.dedup import (
-        _scoped_persist,
-        dedup_cache_scope,
-    )
-
-    other_df = []
-    entered = threading.Event()
-    release = threading.Event()
-
-    def scoped_holder():
-        with dedup_cache_scope():
-            entered.set()
-            release.wait(timeout=30)
-
-    t = threading.Thread(target=scoped_holder)
-    t.start()
-    try:
-        assert entered.wait(timeout=30)
-        # main thread persists OUTSIDE any scope of its own while the
-        # other thread's scope is open
-        df = _scoped_persist(
-            spark.range(10).select((F.col("id") * 2).alias("v"))
-        )
-        other_df.append(df)
-        df.count()
-        release.set()
-        t.join(timeout=30)
-        # the other thread's scope exit must NOT have unpersisted it
-        assert df.storageLevel.useMemory or df.storageLevel.useDisk
-    finally:
-        release.set()
-        t.join(timeout=30)
-        for df in other_df:
-            df.unpersist(blocking=True)
 
 
 # ------------------------------------- memoized-fixture idempotence

@@ -206,18 +206,15 @@ def test_cosine_topk_kernels_agree_on_degenerate_corpus(
 def test_capped_near_dup_handles_degenerate_corpus(spark, hostile_dir):
     from pyspark.sql import functions as F
 
-    from solana_etl_pipeline_spark.llm.dedup import (
-        dedup_cache_scope,
-        embedding_near_dup_pairs,
-    )
+    from solana_etl_pipeline_spark.llm.dedup import embedding_near_dup_pairs
     from solana_etl_pipeline_spark.llm.scale import MAX_BUCKET
     from solana_etl_pipeline_spark.sources import load_table
 
     emb = load_table(spark, hostile_dir, "embeddings")
-    with dedup_cache_scope():
-        pairs = embedding_near_dup_pairs(
-            emb, threshold=0.9, max_bucket=MAX_BUCKET
-        ).collect()
+    pairs = embedding_near_dup_pairs(
+        emb, threshold=0.9, max_bucket=MAX_BUCKET
+    ).collect()
+    spark.catalog.clearCache()
     ids_in_pairs = {r.id_a for r in pairs} | {r.id_b for r in pairs}
     # null/zero-norm/zero-length vectors never pair with anything...
     assert not ids_in_pairs & _DEGENERATE_VEC_IDS

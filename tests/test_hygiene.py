@@ -260,54 +260,6 @@ def test_unigram_lm_hand_computed(spark):
     assert got[10][1] < got[11][1]
 
 
-def test_unigram_score_unscoped_vocab_bounded(spark):
-    """Unscoped unigram_score calls (the registry/driver path, which
-    never opens a dedup_cache_scope) must not accumulate persisted
-    vocab DataFrames: each call releases the previous unscoped vocab,
-    so at most one stale vocab stays cached (ADVICE r5)."""
-    from solana_etl_pipeline_spark.llm import lm
-    from solana_etl_pipeline_spark.llm.dedup import dedup_cache_scope
-
-    df1 = spark.createDataFrame(
-        [(i, "alpha beta gamma") for i in range(6)],
-        "doc_id long, text string",
-    )
-    df2 = spark.createDataFrame(
-        [(i, "delta epsilon") for i in range(6)],
-        "doc_id long, text string",
-    )
-
-    lm.unigram_score(df1, lm.unigram_fit(df1)).count()
-    first = lm._UNSCOPED_VOCAB[0]
-    assert first.storageLevel.useMemory or first.storageLevel.useDisk
-
-    # distinct-plan refit: the previous unscoped vocab is released,
-    # only the new one stays cached
-    lm.unigram_score(df2, lm.unigram_fit(df2)).count()
-    second = lm._UNSCOPED_VOCAB[0]
-    assert second is not first
-    assert not (first.storageLevel.useMemory or first.storageLevel.useDisk)
-    assert second.storageLevel.useMemory or second.storageLevel.useDisk
-
-    # plan-IDENTICAL refit (bench reps): Spark caches by analyzed-plan
-    # equality, so old and new share one cache entry — the release must
-    # happen before the re-persist or the shared entry would be evicted
-    # and the fresh vocab left uncached
-    lm.unigram_score(df2, lm.unigram_fit(df2)).count()
-    third = lm._UNSCOPED_VOCAB[0]
-    assert len(lm._UNSCOPED_VOCAB) == 1
-    assert third.storageLevel.useMemory or third.storageLevel.useDisk
-
-    # a SCOPED call must not touch the unscoped slot (its vocab is
-    # released by the scope exit instead)
-    with dedup_cache_scope():
-        lm.unigram_score(df1, lm.unigram_fit(df1)).count()
-    assert lm._UNSCOPED_VOCAB[0] is third
-    assert third.storageLevel.useMemory or third.storageLevel.useDisk
-    third.unpersist(blocking=True)
-    lm._UNSCOPED_VOCAB.clear()
-
-
 @pytest.mark.parametrize(
     "fixture_sf",
     ["/root/testdata/sf0.001", "/root/testdata/sf0.01"],
@@ -339,8 +291,7 @@ def test_lm_scores_off_rounding_boundary(spark, fixture_sf):
             f"raw LM score {r['_raw']!r} sits on the 1e-6 rounding "
             "boundary (COVERAGE.md convention 8)"
         )
-    lm._UNSCOPED_VOCAB and lm._UNSCOPED_VOCAB[0].unpersist(blocking=True)
-    lm._UNSCOPED_VOCAB.clear()
+    spark.catalog.clearCache()
 
 
 # --------------------------------------------------- DSIR selection
