@@ -121,6 +121,51 @@ def test_matching_static_confs_on_live_session_do_not_warn(spark):
         )
 
 
+def checkpoint_manager(spark, uri: str):
+    """The checkpoint manager Spark's streaming logs use for ``uri`` on
+    this session."""
+    jvm = spark._jvm
+    factory = getattr(getattr(
+        jvm.org.apache.spark.sql.execution.streaming.checkpointing,
+        "CheckpointFileManager$"), "MODULE$")
+    return factory.create(
+        jvm.org.apache.hadoop.fs.Path(uri),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+
+
+def test_engine_session_writes_checkpoints_through_filesystem_api(
+    spark, tmp_path
+):
+    manager = checkpoint_manager(spark, tmp_path.as_uri())
+    assert manager.getClass().getSimpleName() == (
+        "FileSystemBasedCheckpointFileManager")
+
+
+def test_unregistered_sql_conf_on_live_session_is_judged_by_its_value():
+    """``isModifiable`` is False for a SQL conf Spark registers no entry
+    for; ``getOrCreate`` applies it all the same, so no warning. A
+    core conf whose session copy holds the asked value but whose
+    context was started with another still warns."""
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    asked = {manager: "Manager", "spark.driver.memory": "3g"}
+    stub = types.SimpleNamespace(
+        conf=types.SimpleNamespace(
+            isModifiable=lambda key: False,
+            get=lambda key, default=None: asked.get(key, default),
+        ),
+        sparkContext=types.SimpleNamespace(
+            getConf=lambda: {"spark.driver.memory": "8g"}),
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        session._warn_unapplied_static_confs(stub, asked)
+    assert [str(w.message) for w in caught] == [
+        "spark.driver.memory='3g' not applied: the live session has '8g' "
+        "and the conf is static"
+    ]
+
+
 def test_apply_runtime_confs_warns_for_a_refused_conf():
     """A conf the session refuses warns by name; the rest still apply."""
     refused = "spark.sql.session.timeZone"

@@ -24,7 +24,7 @@ from solana_etl_pipeline_spark.streaming.ingest import (
     sliding_window_counts,
     stateful_running_totals,
 )
-from tests.test_session import _session_partitions
+from tests.test_session import _session_partitions, checkpoint_manager
 
 
 def _write_landing_file(path: str, rows: list[dict], mtime: float) -> None:
@@ -354,6 +354,71 @@ def test_checkpoint_written_under_32_partitions_restarts(spark, tmp_path):
     rows = spark.read.parquet(out).select("mint", "signature").collect()
     assert len(rows) == len(set(rows))
     assert sorted(r.mint for r in rows) == sorted(m["mint"] for m in msgs)
+
+
+def test_drain_starts_no_readlink_process(spark, tmp_path):
+    """A checkpointed drain on the engine's session starts no `readlink`
+    process: the FileContext checkpoint manager ran one per rename of
+    a checkpoint file on the local filesystem. The JDK's flight
+    recorder logs every process the driver JVM starts."""
+    jvm = spark._jvm
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    now = time.time()
+    for i in range(4):
+        _write_landing_file(
+            str(landing / f"f{i}.json"),
+            [_event(i, 1, f"2024-01-01T10:0{i}:00.000Z")],
+            now - 40 + 10 * i,
+        )
+    recording = jvm.jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try:
+        query = run_available_now_to_parquet(
+            deduplicated(
+                landing_stream(spark, str(landing), EVENTS,
+                               max_files_per_trigger=2),
+                ["user_id", "event_id"],
+            ),
+            str(tmp_path / "out"),
+            str(tmp_path / "ckpt"),
+        )
+        # a process of our own shows the recorder sees process starts
+        argv = spark.sparkContext._gateway.new_array(jvm.java.lang.String, 1)
+        argv[0] = "true"
+        jvm.java.lang.Runtime.getRuntime().exec(argv).waitFor()
+    finally:
+        recording.stop()
+    dump = jvm.java.io.File(str(tmp_path / "drain.jfr")).toPath()
+    recording.dump(dump)
+    recording.close()
+    commands = [
+        event.getString("command")
+        for event in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    ]
+    assert [p["numInputRows"] for p in query.recentProgress][:2] == [2, 2]
+    assert "true" in commands
+    assert [c for c in commands if c.startswith("readlink")] == []
+
+
+def test_checkpoint_log_refuses_a_second_write_of_a_batch(spark, tmp_path):
+    """The offset and commit logs write batch N with a no-overwrite
+    atomic create, which is what stops a second writer on the same
+    checkpoint: on the engine's checkpoint manager the second create's
+    close raises and the first write's bytes stay."""
+    offsets = tmp_path / "offsets"
+    manager = checkpoint_manager(spark, offsets.as_uri())
+    path = spark._jvm.org.apache.hadoop.fs.Path((offsets / "0").as_uri())
+    manager.mkdirs(path.getParent())  # as the log does when it opens
+    first = manager.createAtomic(path, False)
+    first.write(b"first")
+    first.close()
+    second = manager.createAtomic(path, False)
+    second.write(b"second")
+    with pytest.raises(Exception, match="FileAlreadyExists|FAILED_RENAME_PATH"):
+        second.close()
+    assert (offsets / "0").read_bytes() == b"first"
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):
