@@ -1,17 +1,15 @@
-"""Batch ETL pipelines: raw semi-structured documents → silver tables.
+"""ETL pipelines: raw semi-structured documents → silver → gold.
 
 Re-expresses the reference's 374-line ``clean_data.py`` transform layer
 as declarative DataFrame compositions (SURVEY.md §3.3, §7 Step 5).
-``write_silver`` replaces the silver table with a batch; only the
-streaming drain (``streaming.ingest``) appends to it, and its dedup
-state is silver's one cross-run dedup. Compaction is
-``sources.sinks.compact_parquet_dir``.
+Silver has one writer, the drain: ``build_silver`` over streaming feeds,
+run by ``streaming.ingest.run_available_now_to_parquet``; its dedup
+state is silver's one cross-run dedup.
 """
 
 from solana_etl_pipeline_spark.pipelines.bronze_silver import (
     build_silver,
     read_silver,
-    write_silver,
 )
 from solana_etl_pipeline_spark.pipelines.gold import (
     build_risk_gold,
@@ -29,5 +27,4 @@ __all__ = [
     "normalize_websocket_messages",
     "read_silver",
     "refresh_gold",
-    "write_silver",
 ]

@@ -1,25 +1,24 @@
-"""Bronze → silver batch pipeline (SURVEY.md §3.3, §7 Step 5).
+"""Bronze → silver: the silver write chain (SURVEY.md §3.3, §7 Step 5).
 
 The reference's ``clean_data.py`` main (374 lines): list raw JSON →
 per-file dict walking → pandas concat → CSV archive hop → rename dance →
 incremental Parquet with manual harmonize. Here the same data flow is
-one declarative job:
+one declarative stream:
 
     raw Helius JSON (both shapes)  ─┐
                                     ├─ normalize → unionByName
     websocket landing JSON         ─┘
-      → dropDuplicates(mint, signature)      (the intended ledger)
-      → parquet partitioned by event date    (the one true table)
+      → dropDuplicatesWithinWatermark(mint, signature)   (the ledger)
+      → run_available_now_to_parquet                      (silver)
 
 No intermediate materialization (X12), no renames (S14 — ordering is a
-*column*), no delete-commits (S13). At 100 TB the date partitioning
-gives per-day pruning and the dedup is a hash shuffle on (mint,
-signature) — the only wide stage in the job.
+*column*), no delete-commits (S13).
 
-This batch job replaces the table. Only the streaming drain
-(``streaming.ingest``: landing → normalize → watermarked dedup →
-``run_available_now_to_parquet``) appends to silver; its checkpointed
-dedup state is silver's one cross-run dedup.
+Silver has one writer, the drain: ``build_silver`` over streaming feeds,
+run by ``streaming.ingest.run_available_now_to_parquet``. Its
+checkpointed dedup state is silver's one cross-run dedup, and the file
+sink's ``_spark_metadata`` log records the committed files. Rebuilding
+silver is a drain into a fresh checkpoint and directory.
 """
 
 from __future__ import annotations
@@ -32,45 +31,50 @@ from solana_etl_pipeline_spark.pipelines.normalize import (
     normalize_websocket_messages,
 )
 from solana_etl_pipeline_spark.schemas import CLEANED_TRANSACTIONS
-from solana_etl_pipeline_spark.sources.sinks import write_parquet
+from solana_etl_pipeline_spark.streaming.ingest import (
+    deduplicated_within_watermark,
+)
+
+#: Dedup horizon, wider than the data's time span: the dedup is exact,
+#: like the reference's ledger (``my_websocket.py:71-87``), and its
+#: state grows with the keys (see ``streaming.ingest.MAX_STATE_PARTITIONS``).
+WATERMARK = "3650 days"
+#: Event time of websocket rows, which carry no timestamp. A fixed
+#: value keeps every redelivery of a message in one dedup key; an
+#: ingest-time stamp would split copies that land in different
+#: micro-batches (tests/test_pipeline.py::test_full_pipeline_soak).
+WS_EVENT_TIME = "2024-03-01 00:00:00"
 
 
 def build_silver(helius_raw: DataFrame, websocket_raw: DataFrame) -> DataFrame:
-    """Normalize both raw feeds, merge, and deduplicate on
-    ``(mint, signature)``."""
-    helius = dispatch_and_flatten(helius_raw)
-    ws = normalize_websocket_messages(websocket_raw)
-    merged = helius.unionByName(ws)
-    return merged.dropDuplicates(["mint", "signature"])
+    """The silver chain over two streaming feeds of landing text (one
+    document per row, in column ``raw``): normalize both, merge, and
+    drop every repeat of a ``(mint, signature)`` within ``WATERMARK``.
 
-
-def write_silver(silver: DataFrame, path: str) -> None:
-    """Overwrite the silver table with a batch-built ``silver``,
-    partitioned by event date (null dates — websocket rows carry no
-    timestamp — land in the Hive default partition and stay
-    queryable).
-
-    The table is replaced, never appended to: ``build_silver`` dedups
-    only within its batch, so an append could re-add a
-    ``(mint, signature)`` already on disk. Silver grows incrementally
-    only through the streaming drain, whose dedup state is the one
-    cross-run dedup (exactly-once by checkpoint replay and the file
-    sink's ``_spark_metadata`` log).
+    The feeds are the caller's, so the landing layout and
+    ``maxFilesPerTrigger`` stay with it. Batch frames are refused: an
+    action over them raises ``AnalysisException`` for
+    ``dropDuplicatesWithinWatermark``. The operator order is the one
+    the committed restart fixtures' checkpoints hold (Helius is
+    ``sources/0``), so changing it breaks their restart.
     """
-    write_parquet(
-        silver.withColumn("event_date", F.to_date("ts")),
-        path,
-        partition_cols=["event_date"],
-        mode="overwrite",
+    merged = dispatch_and_flatten(helius_raw).unionByName(
+        normalize_websocket_messages(websocket_raw)
+    ).withColumn(
+        "event_time",
+        F.coalesce("ts", F.lit(WS_EVENT_TIME).cast("timestamp")),
     )
+    return deduplicated_within_watermark(
+        merged, ["mint", "signature"], ts_col="event_time",
+        watermark=WATERMARK,
+    ).drop("event_time")
 
 
 def read_silver(spark: SparkSession, path: str) -> DataFrame:
     """Read the silver table by its declared schema
-    (``schemas.CLEANED_TRANSACTIONS``) plus the discovered
-    ``event_date`` partition column, with partition pruning on
-    ``event_date`` predicates. No footer is opened to plan the read,
-    so it starts no Spark job; a file written without one of the
-    declared columns reads it as null. A missing path raises
-    ``PATH_NOT_FOUND``; an empty directory reads as no rows."""
+    (``schemas.CLEANED_TRANSACTIONS``). No footer is opened to plan the
+    read, so it starts no Spark job; a file written without one of the
+    declared columns reads it as null. A drained silver is read through
+    its sink log, so only committed files are seen. A missing path
+    raises ``PATH_NOT_FOUND``; an empty directory reads as no rows."""
     return spark.read.schema(CLEANED_TRANSACTIONS).parquet(path)

@@ -17,9 +17,9 @@ path, then publishes a one-line pointer file of its own,
 the greatest pointer names the published version. Readers resolve it
 (:func:`published_gold`) and, with :func:`gold_committed`, never keep
 a missing or partial table. The pointers live in silver so that a
-reader needs only the silver path; Spark's file listing skips
-``_``-prefixed names, and ``write_silver``'s overwrite drops them, so
-gold built from an older silver is never served.
+reader needs only the silver path; silver's reads never see them, since
+its sink log names only parquet files and a plain listing skips
+``_``-prefixed names.
 """
 
 from __future__ import annotations
@@ -176,9 +176,9 @@ def _columns(schema) -> list[tuple[str, str]]:
 def published_gold(spark: SparkSession, silver_path: str) -> str:
     """The qualified path of the gold version last published for
     ``silver_path``, named by its greatest pointer;
-    ``FileNotFoundError`` when none is (no refresh yet, or silver was
-    rewritten since). A pointer deleted between the listing and its
-    read has a newer one, so the listing is taken again."""
+    ``FileNotFoundError`` when none is (no refresh yet). A pointer
+    deleted between the listing and its read has a newer one, so the
+    listing is taken again."""
     while pointers := _pointers(spark, silver_path):
         fs = pointers[-1].getFileSystem(spark._jsc.hadoopConfiguration())
         try:

@@ -1,19 +1,18 @@
-"""Driver-visible streaming query (SURVEY.md §2.9).
+"""Driver-visible streaming queries (SURVEY.md §2.9).
 
-One end-to-end Structured Streaming pipeline the oracle CAN check:
-events → JSON landing dir → ``readStream`` → watermarked dedup →
-tumbling-window aggregate → ``availableNow`` drain into a memory sink.
-Processed in one batch (single landing file), nothing is late, so the
-result must equal the batch twin — the same oracle SQL as
+Five Structured Streaming pipelines the oracle CAN check, each drained
+``availableNow`` into a memory sink: the tumbling, sliding and session
+window rollups, and the inner and left-outer stream-stream interval
+joins. Each drains a landed input of the events fixture to a result
+that must equal a batch twin; the tumbling rollup's is
 ``events_hourly_rollup`` minus the distinct-user metric (distinct
 aggregation is unsupported in streaming; ``hourly_window_counts``
-carries ``approx_count_distinct`` instead, dropped here and exercised
-in tests).
+carries ``approx_count_distinct`` instead, dropped here).
 
-The richer streaming surface (sliding/session windows, stateful
-applyInPandasWithState, checkpoint idempotence, watermark late-drop,
-cross-batch dedup) lives in tests/test_streaming.py — state-dependent
-behavior needs multi-batch orchestration no single SQL string models.
+The state-dependent surface (applyInPandasWithState, checkpoint
+idempotence, watermark late-drop, cross-batch dedup) lives in
+tests/test_streaming.py: it needs multi-batch orchestration no single
+SQL string models.
 """
 
 from __future__ import annotations

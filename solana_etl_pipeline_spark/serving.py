@@ -184,8 +184,7 @@ class Dashboard:
     Risk scores come from the gold version that ``refresh_gold``
     published for ``silver_path`` (``pipelines.gold.published_gold``);
     the dashboard never scores risk itself. With no gold published for
-    this silver — never refreshed, or rewritten by ``write_silver``
-    since — every view raises ``FileNotFoundError``.
+    this silver, every view raises ``FileNotFoundError``.
 
     ``working_set_rows`` is the reference's tail-100k memory guard —
     but expressed as ``orderBy(desc(ts), signature, mint).limit(n)`` (a

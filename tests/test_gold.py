@@ -12,15 +12,15 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.pipelines import gold as gold_module
-from solana_etl_pipeline_spark.pipelines.bronze_silver import (
-    build_silver,
-    write_silver,
-)
 from solana_etl_pipeline_spark.pipelines.gold import (
     build_risk_gold,
     published_gold,
     refresh_gold,
     write_gold,
+)
+from solana_etl_pipeline_spark.pipelines.normalize import (
+    dispatch_and_flatten,
+    normalize_websocket_messages,
 )
 from solana_etl_pipeline_spark.schemas import (
     CLEANED_TRANSACTIONS,
@@ -28,6 +28,7 @@ from solana_etl_pipeline_spark.schemas import (
     RISK_GOLD,
 )
 from solana_etl_pipeline_spark.sources.sinks import read_json_dir
+from tests.conftest import drain_silver
 
 
 def _wrapped_doc(mint: str, sigs: list[str], accounts: list[tuple[str, str]]):
@@ -70,13 +71,9 @@ def test_bronze_to_gold_end_to_end(spark, tmp_path):
             [("whale", "whale")] * 4,
         ),
     ]
-    helius_raw = spark.createDataFrame([Row(raw=d) for d in docs])
-    ws_raw = spark.createDataFrame(
-        [Row(raw=json.dumps({"mint": "mintWs", "txType": "create"}))]
-    )
-    silver = build_silver(helius_raw, ws_raw)
-    silver_path = str(tmp_path / "silver")
-    write_silver(silver, silver_path)
+    silver_path = drain_silver(
+        spark, tmp_path, helius=docs,
+        ws=[json.dumps({"mint": "mintWs", "txType": "create"})])
 
     gold_path = str(tmp_path / "gold")
     gold = refresh_gold(spark, silver_path, gold_path)
@@ -93,11 +90,12 @@ def test_bronze_to_gold_end_to_end(spark, tmp_path):
 
 
 def test_gold_token_name_enrichment(spark):
-    helius_raw = spark.createDataFrame(
+    # silver-shaped rows in memory: no dedup is under test, and the
+    # silver chain (build_silver) only runs as a stream
+    silver = dispatch_and_flatten(spark.createDataFrame(
         [Row(raw=_wrapped_doc("m1", ["s1"], [("a", "b")]))]
-    )
-    ws_raw = spark.createDataFrame([Row(raw=json.dumps({"mint": "zz"}))])
-    silver = build_silver(helius_raw, ws_raw)
+    )).unionByName(normalize_websocket_messages(
+        spark.createDataFrame([Row(raw=json.dumps({"mint": "zz"}))])))
     dim = spark.createDataFrame([Row(mint="m1", token_name="FromAPI")])
     gold = build_risk_gold(silver, token_names=dim)
     rows = {r.mint: r.token_name for r in gold.collect()}
@@ -151,14 +149,11 @@ def test_gold_prefers_real_name_over_empty_pad(spark):
 
 def _silver(spark, tmp_path) -> str:
     """Silver of two wrapped documents and one websocket message."""
-    helius_raw = spark.createDataFrame(
-        [Row(raw=_wrapped_doc("m1", ["s1", "s2"], [("a", "b"), ("c", "d")])),
-         Row(raw=_wrapped_doc("m2", ["s3"], [("e", "f")]))]
-    )
-    ws_raw = spark.createDataFrame([Row(raw=json.dumps({"mint": "m3"}))])
-    path = str(tmp_path / "silver")
-    write_silver(build_silver(helius_raw, ws_raw), path)
-    return path
+    return drain_silver(
+        spark, tmp_path,
+        helius=[_wrapped_doc("m1", ["s1", "s2"], [("a", "b"), ("c", "d")]),
+                _wrapped_doc("m2", ["s3"], [("e", "f")])],
+        ws=[json.dumps({"mint": "m3"})])
 
 
 def _versions(gold_path: str) -> list[str]:

@@ -173,8 +173,8 @@ def test_no_dangling_tools_citations():
 
 #: Public names kept without a caller, each with its reason.
 _CALLER_ALLOWLIST = {
-    "build_silver": "batch write chain, ROADMAP item 2",
-    "write_silver": "batch write chain, ROADMAP item 2",
+    "build_silver": "the silver chain; perfbench/ingest.py's silver_stream "
+                    "moves onto it in the next benchmark PR",
     "compact_parquet_dir": "SURVEY §2.11 surface",
     "stateful_running_totals": "SURVEY §2.11 surface",
     "http_json_fetcher": "reference extract parity (helius.py)",

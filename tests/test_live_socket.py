@@ -1,5 +1,5 @@
 """Live-ingest shim tests: an in-process RFC 6455 server feeds the
-socket→landing→readStream→silver path end-to-end (reference
+socket→landing→``build_silver``→silver path end-to-end (reference
 ``my_websocket.py:47-69`` semantics, exactly-once included)."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from solana_etl_pipeline_spark.schemas import WEBSOCKET_MESSAGE
 from solana_etl_pipeline_spark.sources.live_socket import (
     OP_CLOSE,
     OP_PING,
@@ -21,9 +20,9 @@ from solana_etl_pipeline_spark.sources.live_socket import (
     run_live_ingest,
 )
 from solana_etl_pipeline_spark.streaming.ingest import (
-    landing_stream,
     run_available_now_to_parquet,
 )
+from tests.conftest import dropped_duplicates, silver_stream
 
 
 def _msg(i: int, pad: str = "") -> dict:
@@ -124,37 +123,40 @@ def test_live_socket_to_silver_exactly_once(spark, tmp_path):
     # batch 1 — includes a >125-byte message to cover the 16-bit
     # frame-length path
     batch1 = [_msg(i, pad="x" * 150 if i == 3 else "") for i in range(20)]
-    n, subs = _ingest(batch1, landing, prefix="a")
+    n, subs = _ingest(batch1, f"{landing}/ws", prefix="a")
     assert n == 20
     assert subs == [{"method": "subscribeRaydiumLiquidity"}]
 
     def drain():
-        stream = landing_stream(
-            spark, landing, WEBSOCKET_MESSAGE, max_files_per_trigger=None
-        )
-        run_available_now_to_parquet(stream, silver, ckpt)
-        return spark.read.parquet(silver)
+        query = run_available_now_to_parquet(
+            silver_stream(spark, landing), silver, ckpt)
+        return spark.read.parquet(silver), query
 
-    got = drain()
+    got, _ = drain()
     assert got.count() == 20
     assert {r.mint for r in got.select("mint").collect()} == {
         f"MINT{i}" for i in range(20)
     }
-    # the long-name message survived frame re-assembly intact
-    long_name = got.filter(F.col("mint") == "MINT3").collect()[0].name
+    # the long-name message survived frame re-assembly intact, and
+    # silver holds it normalized
+    assert "name" not in got.columns
+    long_name = got.filter(F.col("mint") == "MINT3").collect()[0].token_name
     assert long_name == "Token 3" + "x" * 150
 
     # re-drain with the same checkpoint: nothing reprocessed (T5)
-    assert drain().count() == 20
+    assert drain()[0].count() == 20
 
     # batch 2 over a fresh socket session lands alongside batch 1; the
-    # checkpointed source picks up ONLY the new files
-    n2, _ = _ingest([_msg(100 + i) for i in range(5)], landing, prefix="b")
-    assert n2 == 5
-    final = drain()
+    # checkpointed source picks up ONLY the new files, and the dedup
+    # drops the exact redelivery of a batch-1 message among them
+    n2, _ = _ingest([_msg(100 + i) for i in range(5)] + [batch1[0]],
+                    f"{landing}/ws", prefix="b")
+    assert n2 == 6
+    final, query = drain()
     assert final.count() == 25
-    # exactly-once across the whole path: no duplicate (mint, txType)
-    assert final.select("mint").distinct().count() == 25
+    assert dropped_duplicates(query) == 1
+    # exactly-once across the whole path: no duplicate (mint, signature)
+    assert final.select("mint", "signature").distinct().count() == 25
 
 
 def _self_signed_cert(tmp_path):
@@ -212,7 +214,7 @@ def _self_signed_cert(tmp_path):
 def test_live_socket_wss_tls_to_silver(spark, tmp_path):
     """The production path shape: wss:// with a verifying SSLContext
     (here trusting the test server's self-signed cert as its root),
-    full socket -> landing -> readStream -> silver."""
+    full socket -> landing -> ``build_silver`` -> silver."""
     import ssl
 
     pytest.importorskip("cryptography")
@@ -231,25 +233,25 @@ def test_live_socket_wss_tls_to_silver(spark, tmp_path):
     silver = str(tmp_path / "silver")
     ckpt = str(tmp_path / "ckpt")
     msgs = [_msg(i) for i in range(7)]
+    # the last message is an exact redelivery, which silver drops
     n, subs = _ingest(
-        msgs,
-        landing,
+        msgs + [msgs[0]],
+        f"{landing}/ws",
         prefix="tls",
         server_ssl=server_ssl,
         client_ssl=client_ssl,
         host="localhost",
     )
-    assert n == 7
+    assert n == 8
     assert subs == [{"method": "subscribeRaydiumLiquidity"}]
 
-    stream = landing_stream(
-        spark, landing, WEBSOCKET_MESSAGE, max_files_per_trigger=None
-    )
-    run_available_now_to_parquet(stream, silver, ckpt)
+    query = run_available_now_to_parquet(
+        silver_stream(spark, landing), silver, ckpt)
     got = spark.read.parquet(silver)
     assert got.count() == 7
-    assert {r.mint for r in got.select("mint").collect()} == {
-        f"MINT{i}" for i in range(7)
+    assert dropped_duplicates(query) == 1
+    assert {(r.mint, r.token_name) for r in got.collect()} == {
+        (f"MINT{i}", f"Token {i}") for i in range(7)
     }
 
 

@@ -1,26 +1,34 @@
-"""Bronze→silver pipeline tests: end-to-end build, dedup, partitioned
-write, partition pruning, and schema harmonization on append.
+"""Bronze→silver pipeline tests: the silver chain drained end to end,
+its dedup, its refusal of batch input, and schema harmonization on
+append.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import sys
+from pathlib import Path
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from solana_etl_pipeline_spark.pipelines.bronze_silver import (
     build_silver,
     read_silver,
-    write_silver,
 )
 from solana_etl_pipeline_spark.schemas import CLEANED_TRANSACTIONS
 from solana_etl_pipeline_spark.sources.sinks import (
     read_parquet_merged,
     write_parquet,
 )
+from solana_etl_pipeline_spark.streaming.ingest import (
+    run_available_now_to_parquet,
+)
+from tests.conftest import drain_silver, dropped_duplicates, silver_stream
 
 WRAPPED = json.dumps(
     {
@@ -46,7 +54,7 @@ WRAPPED = json.dumps(
             },
             {
                 "signature": "sig2",
-                "timestamp": 1700090000,  # next day -> second partition
+                "timestamp": 1700090000,  # next day
                 "tokenTransfers": [
                     {"fromUserAccount": "c", "toUserAccount": "d",
                      "tokenAmount": 3.0, "mint": "mintX",
@@ -63,10 +71,9 @@ WS_MSG = json.dumps(
 )
 
 
-def test_build_silver_merges_and_dedups(spark):
-    helius_raw = spark.createDataFrame([Row(raw=WRAPPED)])
-    ws_raw = spark.createDataFrame([Row(raw=WS_MSG)])
-    silver = build_silver(helius_raw, ws_raw)
+def test_build_silver_merges_and_dedups(spark, tmp_path):
+    silver = read_silver(
+        spark, drain_silver(spark, tmp_path, helius=[WRAPPED], ws=[WS_MSG]))
     rows = silver.collect()
     assert len(rows) == 3  # sig1 kept once, sig2, websocket row
     sigs = sorted(r.signature for r in rows)
@@ -74,26 +81,50 @@ def test_build_silver_merges_and_dedups(spark):
     # websocket rows carry a content-derived signature so the
     # (mint, signature) dedup cannot collapse distinct ws events
     assert sigs[2].startswith("ws:") and len(sigs[2]) == 3 + 64
-    assert silver.columns == CLEANED_TRANSACTIONS.fieldNames()
+    # the websocket row keeps its null ts: the chain's fixed event time
+    # is dropped after the dedup
+    assert [r.ts for r in rows if r.source == "websocket"] == [None]
+    assert spark.read.parquet(str(tmp_path / "silver")).columns == (
+        CLEANED_TRANSACTIONS.fieldNames())
 
 
-def test_write_silver_partitions_and_prunes(spark, tmp_path):
-    helius_raw = spark.createDataFrame([Row(raw=WRAPPED)])
-    ws_raw = spark.createDataFrame([Row(raw=WS_MSG)])
-    silver = build_silver(helius_raw, ws_raw)
-    out = str(tmp_path / "silver")
-    write_silver(silver, out)
+def test_build_silver_refuses_batch_frames(spark):
+    """The chain is streaming only: over batch frames the first action
+    fails, so no silent batch fallback can creep back in."""
+    silver = build_silver(
+        spark.createDataFrame([Row(raw=WRAPPED)]),
+        spark.createDataFrame([Row(raw=WS_MSG)]),
+    )
+    with pytest.raises(AnalysisException, match="dropDuplicatesWithinWatermark"):
+        silver.collect()
 
-    back = read_silver(spark, out)
-    assert back.count() == 3
-    # null-date (websocket) rows stay queryable
-    assert back.filter(F.col("event_date").isNull()).count() == 1
 
-    # 1700000000 is 2023-11-14 UTC; sig2 (1700090000) is 2023-11-15
-    pruned = back.filter(F.col("event_date") == "2023-11-14")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert {r.signature for r in pruned.collect()} == {"sig1"}
+def test_perfbench_chain_is_the_package_chain(spark, tmp_path):
+    """Drift guard: the benchmark's ``silver_stream`` builds the same
+    analyzed plan as ``build_silver`` over feeds built the same way,
+    watermark delay and websocket event time included. Expression ids
+    and the watermark node's id differ per build and are stripped. The
+    benchmark change that makes ``silver_stream`` call
+    ``build_silver`` deletes this test, the only one that imports
+    ``perfbench/ingest.py``."""
+    sys.path.insert(0, str(Path(__file__).parents[1] / "perfbench"))
+    try:
+        import ingest
+    finally:
+        sys.path.pop(0)
+    landing = str(tmp_path / "landing")
+    ours = silver_stream(spark, landing, ingest.HELIUS_PER_BATCH,
+                         ingest.WS_PER_BATCH)
+
+    def plan(df) -> str:
+        text = df._jdf.queryExecution().analyzed().toString()
+        text = re.sub(r"EventTimeWatermark [0-9a-f-]{36}",
+                      "EventTimeWatermark", text)
+        return re.sub(r"#\d+", "", text)
+
+    theirs = plan(ingest.silver_stream(spark, landing))
+    assert plan(ours) == theirs
+    assert "3650 days" in theirs and "2024-03-01 00:00:00" in theirs
 
 
 def test_parquet_append_schema_harmonize(spark, tmp_path):
@@ -341,6 +372,7 @@ def test_compact_parquet_dir_refuses_a_streaming_sink(spark, tmp_path):
         (landing / name).write_text(
             "".join(json.dumps(_msg(i)) + "\n" for i in ids)
         )
+        # any file sink's table will do: the refusal reads only its log
         stream = landing_stream(
             spark, str(landing), WEBSOCKET_MESSAGE, max_files_per_trigger=None
         )
@@ -373,6 +405,7 @@ def test_compact_parquet_dir_refuses_a_partitioned_sink_leaf(spark, tmp_path):
         (landing / name).write_text(
             "".join(json.dumps(_msg(i)) + "\n" for i in ids)
         )
+        # not the silver chain: its drain writes no partition leaves
         stream = landing_stream(
             spark, str(landing), WEBSOCKET_MESSAGE, max_files_per_trigger=None
         )
@@ -458,21 +491,30 @@ def test_write_zordered_localizes_both_dimensions(spark, tmp_path):
     assert back.count() == 64 * 64
 
 
-def test_build_silver_keeps_distinct_websocket_events(spark):
+def test_build_silver_keeps_distinct_websocket_events(spark, tmp_path):
     """Two different websocket messages for the SAME mint must both
     survive the (mint, signature) dedup — a constant '' signature
-    would collapse them (the reference's pad is a trap here)."""
-    ws_rows = [
-        Row(raw=json.dumps({"mint": "mintX", "txType": "buy", "solAmount": 1.0})),
-        Row(raw=json.dumps({"mint": "mintX", "txType": "buy", "solAmount": 2.0})),
+    would collapse them (the reference's pad is a trap here) — while
+    an exact redelivery in a later micro-batch is dropped."""
+    msgs = [
+        json.dumps({"mint": "mintX", "txType": "buy", "solAmount": 1.0}),
+        json.dumps({"mint": "mintX", "txType": "buy", "solAmount": 2.0}),
         # exact redelivery of the first message: MUST dedup
-        Row(raw=json.dumps({"mint": "mintX", "txType": "buy", "solAmount": 1.0})),
+        json.dumps({"mint": "mintX", "txType": "buy", "solAmount": 1.0}),
     ]
-    helius_raw = spark.createDataFrame([], "raw string")
-    silver = build_silver(helius_raw, spark.createDataFrame(ws_rows))
-    rows = silver.collect()
+    ws = tmp_path / "landing" / "ws"
+    ws.mkdir(parents=True)
+    for i, msg in enumerate(msgs):
+        (ws / f"{i}.json").write_text(msg + "\n")
+        os.utime(ws / f"{i}.json", (1_700_000_000 + i,) * 2)
+    query = run_available_now_to_parquet(
+        silver_stream(spark, str(tmp_path / "landing"), ws_per_batch=1),
+        str(tmp_path / "silver"), str(tmp_path / "ckpt"))
+    rows = read_silver(spark, str(tmp_path / "silver")).collect()
     assert len(rows) == 2
     assert {r.token_amount for r in rows} == {1.0, 2.0}
+    assert [p.numInputRows for p in query.recentProgress][:3] == [1, 1, 1]
+    assert dropped_duplicates(query) == 1
 
 
 def test_full_pipeline_soak(spark, tmp_path):
@@ -532,6 +574,8 @@ def test_full_pipeline_soak(spark, tmp_path):
         # used here previously let a redelivery pass whenever load
         # split the two copies of a message across stage-B
         # micro-batches (each copy stamped with its own batch time).
+        # Not build_silver: this stage pins an ingest-time stamp where
+        # the chain has a fixed event time.
         raw = spark.readStream.schema("value string").parquet(bronze)
         silver_stream = (
             normalize_websocket_messages(raw, json_col="value")
@@ -705,6 +749,8 @@ def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
 
     base_epoch = 1_750_000_000
 
+    # Not build_silver: the stamps here are ingest times from file
+    # names, and the horizon is 5 s, where the chain has neither.
     def stream(dedup_fn):
         raw = (
             spark.readStream.option("maxFilesPerTrigger", "1")
@@ -796,19 +842,9 @@ def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
             q.stop()
 
 
-def _partitioned_silver(spark, tmp_path) -> str:
-    out = str(tmp_path / "silver")
-    silver = build_silver(
-        spark.createDataFrame([Row(raw=WRAPPED)]),
-        spark.createDataFrame([Row(raw=WS_MSG)]),
-    )
-    write_silver(silver, out)
-    return out
-
-
 def test_read_silver_starts_no_spark_job(spark, tmp_path):
     """The declared schema plans the read: no footer merge job."""
-    out = _partitioned_silver(spark, tmp_path)
+    out = drain_silver(spark, tmp_path, helius=[WRAPPED], ws=[WS_MSG])
     sc = spark.sparkContext
     sc.setJobGroup("probe:read_silver", "plan a silver read")
     try:
@@ -818,27 +854,26 @@ def test_read_silver_starts_no_spark_job(spark, tmp_path):
     assert list(sc.statusTracker().getJobIdsForGroup("probe:read_silver")) == []
 
 
-def test_read_silver_has_declared_columns_and_partition(spark, tmp_path):
-    back = read_silver(spark, _partitioned_silver(spark, tmp_path))
-    assert back.columns == CLEANED_TRANSACTIONS.fieldNames() + ["event_date"]
-    assert back.schema["event_date"].dataType.simpleString() == "date"
+def test_read_silver_has_the_declared_columns(spark, tmp_path):
+    back = read_silver(
+        spark, drain_silver(spark, tmp_path, helius=[WRAPPED], ws=[WS_MSG]))
+    assert [(f.name, f.dataType) for f in back.schema] == [
+        (f.name, f.dataType) for f in CLEANED_TRANSACTIONS]
     assert back.count() == 3
 
 
 def test_read_silver_null_fills_a_missing_column(spark, tmp_path):
     """A file written before a column existed reads it as null."""
-    out = _partitioned_silver(spark, tmp_path)
-    src = (
-        read_silver(spark, out)
-        .filter(F.col("signature") == "sig2")
-        .drop("token_standard", "event_date")
+    src = read_silver(
+        spark, drain_silver(spark, tmp_path, helius=[WRAPPED], ws=[WS_MSG]))
+    out = str(tmp_path / "plain")
+    write_parquet(src, out)
+    old = (
+        src.filter(F.col("signature") == "sig2")
+        .drop("token_standard")
         .withColumn("signature", F.lit("sig-old"))
     )
-    old = spark.createDataFrame(src.collect(), src.schema)
-    write_parquet(
-        old.withColumn("event_date", F.to_date("ts")), out,
-        partition_cols=["event_date"], mode="append",
-    )
+    write_parquet(old, out, mode="append")
     back = read_silver(spark, out)
     rows = {r.signature: r for r in back.collect()}
     assert rows["sig-old"].token_standard is None

@@ -3,11 +3,11 @@
 Each directory under ``tests/fixtures/`` with a ``manifest.json`` holds
 a 2-batch drain of the silver write chain that an earlier version
 wrote with ``tools/write_restart_fixture.py``: its landing files,
-checkpoint and silver. The test restarts it with today's chain (the
-one ``perfbench/ingest.py``'s ``silver_stream`` builds) after landing
-redeliveries of the fixture's keys and new rows, and checks that no key
-is lost or duplicated, that every redelivered row is dropped, and that
-the checkpoint's state partition count is kept.
+checkpoint and silver. The test restarts it with today's chain,
+``pipelines.bronze_silver.build_silver`` over the two landing feeds,
+after landing redeliveries of the fixture's keys and new rows. It
+checks that no key is lost or duplicated, that every redelivered row
+is dropped, and that the checkpoint's state partition count is kept.
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import sys
 from pathlib import Path
 
 import pytest
@@ -27,6 +26,7 @@ from solana_etl_pipeline_spark.pipelines.normalize import (
 from solana_etl_pipeline_spark.streaming.ingest import (
     run_available_now_to_parquet,
 )
+from tests.conftest import silver_stream
 
 FIXTURES = Path(__file__).parent / "fixtures"
 MANIFESTS = sorted(FIXTURES.glob("*/manifest.json"))
@@ -35,15 +35,6 @@ MANIFESTS = sorted(FIXTURES.glob("*/manifest.json"))
 REDELIVERED = ("helius/000002.json", "ws/000003.json", "ws/000020.json")
 #: Fixture landing files landed with every signature changed: new keys.
 CHANGED = ("helius/000005.json", "ws/000011.json")
-
-
-def _silver_stream(spark, landing: str):
-    sys.path.insert(0, str(Path(__file__).parents[1] / "perfbench"))
-    try:
-        from ingest import silver_stream
-    finally:
-        sys.path.pop(0)
-    return silver_stream(spark, landing)
 
 
 def _relocate(src: Path, dst: Path, root: str) -> None:
@@ -122,7 +113,7 @@ def test_fixture_checkpoint_restarts_without_loss_or_duplicates(
         meta["landing_rows"][rel] for rel in CHANGED)
 
     query = run_available_now_to_parquet(
-        _silver_stream(spark, str(landing)), str(silver), str(ckpt))
+        silver_stream(spark, str(landing)), str(silver), str(ckpt))
     progress = [p for p in query.recentProgress if p.numInputRows]
     ops = [op for p in progress for op in p.stateOperators]
 

@@ -17,10 +17,6 @@ import pytest
 from pyspark.sql import Row
 
 from solana_etl_pipeline_spark import serving
-from solana_etl_pipeline_spark.pipelines.bronze_silver import (
-    build_silver,
-    write_silver,
-)
 from solana_etl_pipeline_spark.pipelines.gold import (
     EXCLUDED_MINTS,
     refresh_gold,
@@ -32,14 +28,17 @@ from solana_etl_pipeline_spark.serving import (
     TTLCache,
     serve_http,
 )
+from solana_etl_pipeline_spark.sources.sinks import write_parquet
+from tests.conftest import drain_silver
 from tests.test_gold import _wrapped_doc
 
 
 def _silver_fixture(spark, tmp_path, extra_docs=(), publish=True) -> str:
-    """Write (or rewrite) silver at ``tmp_path/silver`` from two
-    wrapped documents, a websocket message and ``extra_docs``, and
-    publish its gold at ``tmp_path/gold`` unless ``publish`` is
-    false."""
+    """Drain silver at ``tmp_path/silver`` from two wrapped documents,
+    a websocket message and ``extra_docs``, and publish its gold at
+    ``tmp_path/gold`` unless ``publish`` is false. Called again on the
+    same ``tmp_path``, it lands all of them again, and the drain's
+    dedup appends only the new ``extra_docs``' rows."""
     docs = [
         _wrapped_doc(
             "mintDiverse",
@@ -51,12 +50,9 @@ def _silver_fixture(spark, tmp_path, extra_docs=(), publish=True) -> str:
         ),
         *extra_docs,
     ]
-    helius_raw = spark.createDataFrame([Row(raw=d) for d in docs])
-    ws_raw = spark.createDataFrame(
-        [Row(raw=json.dumps({"mint": "mintWs", "txType": "create"}))]
-    )
-    path = str(tmp_path / "silver")
-    write_silver(build_silver(helius_raw, ws_raw), path)
+    path = drain_silver(
+        spark, tmp_path, helius=docs,
+        ws=[json.dumps({"mint": "mintWs", "txType": "create"})])
     if publish:
         refresh_gold(spark, path, str(tmp_path / "gold"))
     return path
@@ -81,7 +77,7 @@ def _publish_rows(spark, tmp_path, rows: list[Row]) -> str:
     """Write silver from ``rows`` and publish its gold; returns the
     silver path."""
     path = str(tmp_path / "silver")
-    write_silver(spark.createDataFrame(rows), path)
+    write_parquet(spark.createDataFrame(rows), path)
     refresh_gold(spark, path, str(tmp_path / "gold"))
     return path
 
@@ -387,7 +383,7 @@ def test_views_collect_once_per_snapshot(spark, tmp_path):
         "mintNew", [f"n{i}" for i in range(3)],
         [(f"nb{i}", f"nh{i}") for i in range(3)],
     )
-    # rewrites silver_path, then publishes its gold
+    # appends to silver_path, then publishes its gold
     _silver_fixture(spark, tmp_path, [new_doc])
     dash.refresh()
     assert "mintNew" in {r["mint"] for r in dash.top_safest()}
@@ -661,21 +657,6 @@ def test_views_fail_without_published_gold(spark, tmp_path):
     """Silver that no refresh has published gold for is not served."""
     silver_path = _silver_fixture(spark, tmp_path, publish=False)
     _assert_unpublished(spark, Dashboard(spark, silver_path))
-
-
-def test_rewritten_silver_serves_no_stale_gold(spark, tmp_path):
-    """``write_silver`` drops the gold pointer: after it rewrites
-    silver, the views fail until gold is refreshed, rather than serve
-    gold built from the old silver."""
-    silver_path = _silver_fixture(spark, tmp_path)
-    dash = Dashboard(spark, silver_path, working_set_rows=1000)
-    assert len(dash.top_safest()) == 3
-    new_doc = _wrapped_doc("mintNew", ["n0"], [("nb0", "nh0")])
-    _silver_fixture(spark, tmp_path, [new_doc], publish=False)
-    dash.refresh()
-    _assert_unpublished(spark, dash)
-    refresh_gold(spark, silver_path, str(tmp_path / "gold"))
-    assert "mintNew" in {r["mint"] for r in dash.top_safest()}
 
 
 def test_gold_lists_every_mint_beyond_the_working_set(spark, tmp_path):

@@ -24,6 +24,7 @@ from solana_etl_pipeline_spark.streaming.ingest import (
     sliding_window_counts,
     stateful_running_totals,
 )
+from tests.conftest import silver_stream
 from tests.test_session import _session_partitions, checkpoint_manager
 
 
@@ -164,27 +165,10 @@ def test_deduplicated_within_watermark_drops_cross_batch_retry(spark, tmp_path):
     ) == [7, 7, 8]
 
 
-def _silver_dedup_stream(spark, landing: str):
-    """Websocket landing text → normalized rows deduplicated on
-    (mint, signature), the silver write chain's dedup stage."""
-    from solana_etl_pipeline_spark.pipelines.normalize import (
-        normalize_websocket_messages,
-    )
-    from solana_etl_pipeline_spark.streaming.ingest import (
-        deduplicated_within_watermark,
-    )
-
-    raw = spark.readStream.option("maxFilesPerTrigger", 1).text(landing)
-    rows = normalize_websocket_messages(raw, json_col="value").withColumn(
-        "event_time", F.lit("2024-01-01 00:00:00").cast("timestamp")
-    )
-    return deduplicated_within_watermark(
-        rows, ["mint", "signature"], ts_col="event_time"
-    ).drop("event_time")
-
-
 def _land_messages(landing, name: str, msgs: list[dict], mtime: float) -> None:
-    path = landing / f"{name}.txt"
+    """Land ``msgs`` as one file of ``landing``'s websocket feed."""
+    (landing / "ws").mkdir(exist_ok=True)
+    path = landing / "ws" / f"{name}.txt"
     path.write_text("".join(json.dumps(m) + "\n" for m in msgs))
     os.utime(path, (mtime, mtime))
 
@@ -208,7 +192,7 @@ def test_drain_helper_sizes_state_stores(spark, tmp_path):
     _land_messages(landing, "a", [_msg(i) for i in range(3)], time.time())
     with _session_partitions(spark, "7"):
         query = run_available_now_to_parquet(
-            _silver_dedup_stream(spark, str(landing)),
+            silver_stream(spark, str(landing), ws_per_batch=1),
             str(tmp_path / "out"),
             str(tmp_path / "ckpt"),
         )
@@ -331,7 +315,7 @@ def test_checkpoint_written_under_32_partitions_restarts(spark, tmp_path):
 
     with _session_partitions(spark, "32"):
         first = (
-            _silver_dedup_stream(spark, str(landing))
+            silver_stream(spark, str(landing), ws_per_batch=1)
             .writeStream.format("parquet")
             .outputMode("append")
             .option("path", out)
@@ -347,7 +331,7 @@ def test_checkpoint_written_under_32_partitions_restarts(spark, tmp_path):
     _land_messages(landing, "c", msgs[0:2] + msgs[6:8] + [msgs[6]], now - 10)
     _land_messages(landing, "d", msgs[4:6] + msgs[8:9], now)
     restarted = run_available_now_to_parquet(
-        _silver_dedup_stream(spark, str(landing)), out, ckpt
+        silver_stream(spark, str(landing), ws_per_batch=1), out, ckpt
     )
     assert _state_partition_counts(restarted) == {32}
 

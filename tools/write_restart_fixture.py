@@ -1,7 +1,8 @@
 """Write a checkpoint-restart fixture: a 2-batch dedup drain of the
 silver write chain, with its landing files, checkpoint and silver.
 
-The chain is the one ``perfbench/ingest.py``'s ``silver_stream`` builds:
+The chain is the package's, ``pipelines.bronze_silver.build_silver``
+over the two landing feeds, admitted at the benchmark's per-batch caps:
 
     landing text -> dispatch_and_flatten / normalize_websocket_messages
       -> deduplicated_within_watermark(mint, signature)
@@ -33,8 +34,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
 import gen  # noqa: E402
-from ingest import HELIUS_PER_BATCH, WS_PER_BATCH, silver_stream  # noqa: E402
+from ingest import HELIUS_PER_BATCH, WS_PER_BATCH  # noqa: E402
 
+from solana_etl_pipeline_spark.pipelines.bronze_silver import (  # noqa: E402
+    build_silver,
+)
 from solana_etl_pipeline_spark.pipelines.normalize import (  # noqa: E402
     dispatch_and_flatten,
     normalize_websocket_messages,
@@ -48,6 +52,13 @@ BATCHES = 2
 #: Transactions per Helius document: the benchmark's 100 would make the
 #: landing files about 740 KB; 2 keeps them near 24 KB.
 TX_PER_DOC = 2
+
+
+def feed(spark, landing: str, sub: str, per_batch: int):
+    """The stream of ``landing/sub``'s files, ``per_batch`` at a time."""
+    return (spark.readStream.option("maxFilesPerTrigger", per_batch)
+            .text(os.path.join(landing, sub))
+            .withColumnRenamed("value", "raw"))
 
 
 def file_rows(spark, path: str) -> int:
@@ -85,7 +96,9 @@ def main() -> None:
     spark = build_session(app_name="write-restart-fixture", master="local[2]")
     spark.sparkContext.setLogLevel("ERROR")
     query = run_available_now_to_parquet(
-        silver_stream(spark, landing), os.path.join(out, "silver"),
+        build_silver(feed(spark, landing, "helius", HELIUS_PER_BATCH),
+                     feed(spark, landing, "ws", WS_PER_BATCH)),
+        os.path.join(out, "silver"),
         os.path.join(out, "checkpoint"))
     progress = [p for p in query.recentProgress if p.numInputRows]
     ops = [op for p in progress for op in p.stateOperators]
